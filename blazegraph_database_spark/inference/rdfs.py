@@ -12,7 +12,8 @@ Scale notes:
   one scan of the data with map-side joins; no data shuffle at all except
   the final distinct.
 - Transitive closures (rdfs5/11 on the schema, TransitiveProperty on data)
-  use semi-naive delta iteration: only the delta joins per round.
+  run through the property-path closure (operators/paths), so both share
+  one driver tier and one set of distributed tiers.
 - The outer loop reaches fixpoint in <= 3 passes for standard RDFS rule
   interaction (type triples produced by rdfs2/3/9 only feed rdfs9 again);
   at 100 TB one would run delta-driven maintenance instead (see
@@ -25,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blazegraph_database_spark.model.store import TripleStore
+from blazegraph_database_spark.operators import gas, paths
+from blazegraph_database_spark.operators.driver_tier import _chk
 
 RDF_TYPE = "rdf:type"
 RDFS_SUBCLASS = "rdfs:subClassOf"
@@ -53,106 +56,15 @@ OWL_INVFUNCTIONAL = "owl:InverseFunctionalProperty"
 MAX_ITERS = 32
 
 
-def _chk(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
-# Inputs at most this many edges are closed on the driver in one collect —
-# the schema-hierarchy case (subClassOf/subPropertyOf are ≪ data by
-# definition; the reference likewise keeps its schema closure in memory).
-SMALL_CLOSURE_MAX_EDGES = 20_000
-# ...unless the resulting closure explodes (adversarially dense small input):
-SMALL_CLOSURE_MAX_PAIRS = 2_000_000
-
-
-def _arrow_head(df: DataFrame, n: int) -> list[tuple]:
-    """First n rows as plain tuples via the Arrow path: toPandas() transfers
-    columnar batches where collect() pickles row objects one by one — the
-    driver-transfer discipline of guide §6 for every driver-tier closure
-    read (r11 optimization)."""
-    pdf = df.limit(n).toPandas()
-    return list(pdf.itertuples(index=False, name=None))
-
-
-def _arrow_pairs_df(spark, rows: list[tuple], schema) -> DataFrame:
-    """Re-parallelize a driver-computed pair list through Arrow. The
-    closure tier can emit up to SMALL_CLOSURE_MAX_PAIRS rows; pickling
-    those back one tuple at a time cost ~1 s per 200k pairs where the
-    Arrow batch path is tens of milliseconds."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(pdf, schema)
-
-
-def _closure_local(rows: list) -> list[tuple] | None:
-    """In-memory closure of collected (src, dst) edges; None if the pair set
-    blows past SMALL_CLOSURE_MAX_PAIRS (caller falls back to distributed)."""
-    adj: dict = {}
-    for r in rows:
-        adj.setdefault(r[0], set()).add(r[1])
-    out: list[tuple] = []
-    for start in adj:
-        seen, stack = set(), list(adj[start])
-        while stack:
-            n = stack.pop()
-            if n in seen:
-                continue
-            seen.add(n)
-            stack.extend(adj.get(n, ()))
-        out.extend((start, d) for d in seen)
-        if len(out) > SMALL_CLOSURE_MAX_PAIRS:
-            return None
-    return out
-
-
-def transitive_closure(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFrame:
-    """Transitive closure of (src, dst). Schema-sized inputs (≤
-    SMALL_CLOSURE_MAX_EDGES) close on the driver in ONE job — collect,
-    in-memory BFS, re-parallelize — because per-round job overhead dominates
-    at that size. Larger inputs use iterative doubling: each round joins the
-    closure-so-far with itself, so a depth-d graph closes in ceil(log2 d)
-    rounds; the right trade for deep/narrow hierarchies at data scale."""
-    all_e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    head = _arrow_head(all_e, SMALL_CLOSURE_MAX_EDGES + 1)
-    if len(head) <= SMALL_CLOSURE_MAX_EDGES:
-        if head:
-            # functional (parent-pointer) fast path: the numpy level walk
-            # (operators/paths, r12) beats the per-node python DFS on the
-            # dominant hierarchy shape; cycles/non-functional fall through
-            import pandas as pd
-
-            from blazegraph_database_spark.operators.paths import (
-                _functional_closure_driver,
-            )
-
-            pdf = pd.DataFrame(head, columns=["s", "o"])
-            if not pdf.isnull().values.any():
-                fn_pdf = _functional_closure_driver(pdf)
-                if fn_pdf is not None:
-                    return edges.sparkSession.createDataFrame(
-                        fn_pdf.rename(columns={"s": "src", "o": "dst"}),
-                        all_e.schema,
-                    )
-        closed = _closure_local(head)
-        if closed is not None:
-            if not closed:
-                return all_e  # no edges → empty closure, keep schema
-            return _arrow_pairs_df(edges.sparkSession, closed, all_e.schema)
-    for _ in range(max_iters):
-        grown = (
-            all_e.alias("a")
-            .join(all_e.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-            .distinct()
-        )
-        new = _chk(grown.join(all_e, on=["src", "dst"], how="left_anti"))
-        if new.isEmpty():
-            break
-        # new is checkpointed; the union stays a shallow wrapper over
-        # materialized pieces — no second job per round.
-        all_e = all_e.unionByName(new)
-    return all_e
+def transitive_closure(edges: DataFrame) -> DataFrame:
+    """Transitive closure of (src, dst): the shared property-path closure
+    (operators/paths.transitive_closure — driver tier, then the distributed
+    chain / doubling / semi-naive tiers) under the rule engine's column
+    names."""
+    pairs = edges.select(F.col("src").alias("s"), F.col("dst").alias("o"))
+    return paths.transitive_closure(pairs).select(
+        F.col("s").alias("src"), F.col("o").alias("dst")
+    )
 
 
 def tc_retract(
@@ -853,37 +765,10 @@ def property_chain_closure(df: DataFrame, max_iters: int = 8) -> DataFrame:
 
 def same_as_components(df: DataFrame) -> DataFrame:
     """(node, canon): owl:sameAs equivalence classes via min-label connected
-    components. Same guarded driver tier as transitive_closure: sameAs link
-    sets are schema-or-entity-resolution sized (≪ data by construction —
-    every link was DERIVED from a functional/IFP/explicit assertion), so up
-    to SMALL_CLOSURE_MAX_EDGES they union-find in ONE collect instead of
-    diameter-many CC rounds whose per-round job overhead dominates; larger
-    link sets keep the distributed GAS CC kernel."""
-    from blazegraph_database_spark.operators import gas
-
+    components (gas.connected_components — sameAs link sets are
+    entity-resolution sized, so they usually take its driver-tier
+    union-find)."""
     edges = _edges(df, OWL_SAMEAS)
-    sample = edges.limit(SMALL_CLOSURE_MAX_EDGES + 1).collect()
-    if len(sample) <= SMALL_CLOSURE_MAX_EDGES:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in sample:
-            a, b = find(r[0]), find(r[1])
-            if a != b:
-                parent[max(a, b)] = min(a, b)  # min-label union
-        rows = [(n, find(n)) for n in set(parent)] + [
-            (n, find(n)) for r in sample for n in (r[0], r[1]) if n not in parent
-        ]
-        rows = sorted(set(rows))
-        spark = df.sparkSession
-        return spark.createDataFrame(rows or [], "node string, canon string")
     return gas.connected_components(edges).select(F.col("node"), F.col("comp").alias("canon"))
 
 

@@ -1,0 +1,63 @@
+"""The driver tier shared by the iterative operators (GAS, property-path and
+RDFS closures).
+
+At driver-sized inputs the per-round fixed cost of a distributed loop — a
+Catalyst compile plus a few AQE stage jobs per ``localCheckpoint`` round —
+dwarfs the data work, so the whole input comes to the driver in ONE bounded
+Arrow collect, a python/numpy kernel runs over it, and the answer goes back
+as one Arrow batch. The rule is the same for every operator:
+
+* one gate, :data:`DRIVER_TIER_MAX_ROWS`, checked by the collect itself
+  (``limit(gate + 1)``), so driver memory is bounded by the gate even
+  when the input turns out too big — no separate ``count()`` job;
+* the collect reads a lazy local checkpoint of the input, so the same job
+  also materializes it: a call that falls through to its distributed loop
+  reads that checkpoint and never computes the input a second time;
+* the call falls through when the input is over the gate, holds a null id,
+  or the kernel bails (cycle / explosion guards), and the distributed loops
+  are unchanged past the gate, so the 100 TB path never routes through the
+  driver. Its one extra cost over a plain checkpoint is the bounded collect:
+  at most ``gate + 1`` rows per partition through one shuffle, and
+  ``gate + 1`` rows to the driver.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+
+DRIVER_TIER_MAX_ROWS = 500_000
+
+
+def _chk(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=True)
+
+
+def collect_bounded(df: DataFrame):
+    """``(frame, pdf)``: ``frame`` is ``df`` locally checkpointed, and
+    ``pdf`` is it as a pandas frame from one Arrow collect, or None when it
+    holds more than :data:`DRIVER_TIER_MAX_ROWS` rows (read at call time) or
+    a null in any column. The collect is the job that materializes
+    ``frame``; a gate of 0 turns the tier off and checkpoints eagerly."""
+    if DRIVER_TIER_MAX_ROWS <= 0:
+        return _chk(df), None
+    frame = df.localCheckpoint(eager=False)
+    # gate and null checks on the Arrow table: an over-gate input skips the
+    # pandas conversion of its gate + 1 rows
+    table = frame.limit(DRIVER_TIER_MAX_ROWS + 1).toArrow()
+    if table.num_rows > DRIVER_TIER_MAX_ROWS or any(c.null_count for c in table.columns):
+        return frame, None
+    return frame, table.to_pandas()
+
+
+def to_frame(spark, data, schema) -> DataFrame:
+    """Driver-computed rows (a list of tuples or a pandas frame, columns in
+    ``schema`` order) back to Spark as one Arrow batch; pickling tuples one
+    by one costs ~1 s per 200k rows. Empty input yields an empty frame with
+    the declared schema."""
+    import pandas as pd
+
+    if len(data) == 0:
+        return spark.createDataFrame([], schema)
+    if not isinstance(data, pd.DataFrame):
+        data = pd.DataFrame(data)
+    return spark.createDataFrame(data, schema)

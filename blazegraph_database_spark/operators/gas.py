@@ -20,84 +20,34 @@ longs (dictionary-encoded) — the algorithms are agnostic.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.operators.driver_tier import _chk, collect_bounded, to_frame
+
 MAX_ITERS = 64
 
-# Edge sets at most this size run the whole traversal on the driver in one
-# Arrow collect (the tier pattern of inference/rdfs.py SMALL_CLOSURE_MAX_EDGES
-# and paths.transitive_closure): at driver-sized inputs the per-round fixed
-# cost of the distributed loop — a Catalyst compile plus ~6 AQE stage jobs per
-# localCheckpoint round — dwarfs the data work (measured r12: label-prop CC on
-# the 11k-edge sf0.1 bipartite graph spends 8 rounds x ~0.36 s of fixed
-# overhead where a driver union-find needs ~0.05 s). Env-parameterized so a
-# cluster deployment can shrink or grow the tier; every distributed loop below
-# is unchanged and takes over past the threshold, so the 100 TB path never
-# routes through the driver.
-GAS_DRIVER_TIER_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_GAS_DRIVER_TIER", "500000"))
+# Every entry point below first tries the shared driver tier
+# (operators/driver_tier.py): edge sets within its gate come to the driver in
+# one bounded Arrow collect and a python/numpy kernel answers the call. At
+# that size the distributed loop's per-round fixed cost dominates (measured
+# r12: label-prop CC on the 11k-edge sf0.1 bipartite graph spends 8 rounds x
+# ~0.36 s of fixed overhead where a driver union-find needs ~0.05 s). The
+# kernels take the collected pandas frame and return plain rows; past the
+# gate the distributed loops are unchanged.
 
 
-# Iterative loops re-shuffle a state table whose size is known up front; the
-# session-wide shuffle width (sized for full-table scans) then just buys
-# per-round task-scheduling overhead. Target rows/partition for state
-# shuffles — measured 2-2.5× on the sf0.1 GAS bench (pagerank 9.9s → 3.9s).
-ITER_ROWS_PER_PARTITION = 2_000
-
-
-# Shuffle width for iterative rounds is sized by AQE at runtime
-# (coalescePartitions with parallelismFirst=false + 8m advisory target in
-# session.py) instead of mutating session-global shuffle.partitions under a
-# lock — concurrent iterative queries (two REST path closures) no longer
-# serialize, and every round's exchange still coalesces to the state's
-# actual size. _iter_shuffle survives as a no-op context manager so loop
-# bodies keep a single `with` indentation (and a hook if a per-plan width
-# override is ever needed again).
-
-
-def _iter_shuffle(spark, n_rows: int):
-    from contextlib import nullcontext
-
-    return nullcontext()
-
-
-def _chk(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
-def _driver_edges(e: DataFrame):
-    """Materialized edge frame -> pandas via the Arrow path (guide §6), or
-    None when the rows carry nulls (the python tiers compare/um keys directly,
-    so null ids fall back to the distributed loops, which treat them as
-    ordinary join keys)."""
-    pdf = e.toPandas()
-    if pdf.isnull().values.any():
-        return None
-    return pdf
-
-
-def _rows_df(spark, rows: list[tuple], schema) -> DataFrame:
-    """Re-parallelize driver-computed rows through one Arrow batch (the
-    inverse transfer; pickling tuples one by one costs ~1 s per 200k rows)."""
-    import pandas as pd
-
-    names = [f.name for f in schema.fields] if hasattr(schema, "fields") else None
-    pdf = pd.DataFrame(rows, columns=names)
-    return spark.createDataFrame(pdf, schema)
-
-
-def _bfs_driver(e: DataFrame, sources: list[str], max_depth: int) -> DataFrame | None:
-    """Driver-tier BFS: same level-by-level expansion as _general_bfs (pred =
-    min src among the frontier parents that discover a node), one job to
-    collect the edges and one Arrow batch back."""
-    pdf = _driver_edges(e)
-    if pdf is None:
-        return None
+def _adjacency(pdf) -> dict:
     adj: dict = {}
     for s, d in zip(pdf["src"].values, pdf["dst"].values):
         adj.setdefault(s, []).append(d)
+    return adj
+
+
+def _bfs_driver(pdf, sources: list[str], max_depth: int) -> list[tuple]:
+    """Driver-tier BFS: same level-by-level expansion as _general_bfs (pred =
+    min src among the frontier parents that discover a node)."""
+    adj = _adjacency(pdf)
     depth = {s: 0 for s in sources}
     reached: list[tuple] = []
     frontier = list(depth)
@@ -116,18 +66,14 @@ def _bfs_driver(e: DataFrame, sources: list[str], max_depth: int) -> DataFrame |
             depth[v] = dcur
             reached.append((v, dcur, p))
         frontier = list(nxt)
-    rows = [(s, 0, None) for s in sources] + reached
-    return _rows_df(e.sparkSession, rows, "node string, depth int, pred string")
+    return [(s, 0, None) for s in sources] + reached
 
 
-def _sssp_driver(e: DataFrame, sources: list[str], max_iters: int) -> DataFrame | None:
+def _sssp_driver(pdf, sources: list[str], max_iters: int) -> list[tuple]:
     """Driver-tier SSSP: the same frontier relaxation as _general_sssp (per
     round, min over frontier of dist+weight; a node re-enters the frontier
     only when its distance improves) on plain floats — identical IEEE
     arithmetic, identical per-round minima."""
-    pdf = _driver_edges(e)
-    if pdf is None:
-        return None
     adj: dict = {}
     for s, d, w in zip(pdf["src"].values, pdf["dst"].values, pdf["weight"].values):
         adj.setdefault(s, []).append((d, float(w)))
@@ -146,10 +92,10 @@ def _sssp_driver(e: DataFrame, sources: list[str], max_iters: int) -> DataFrame 
             break
         dist.update(improved)
         frontier = [v for v, _ in improved]
-    return _rows_df(e.sparkSession, list(dist.items()), "node string, dist double")
+    return list(dist.items())
 
 
-def _pagerank_driver(e: DataFrame, damping: float, iters: int) -> DataFrame | None:
+def _pagerank_driver(pdf, damping: float, iters: int):
     """Driver-tier PageRank: the same per-round recurrence as the distributed
     loop (dangling mass redistributed uniformly, identical double arithmetic
     per term) vectorized over numpy float64 arrays. Summation order inside
@@ -161,13 +107,10 @@ def _pagerank_driver(e: DataFrame, damping: float, iters: int) -> DataFrame | No
     import numpy as np
     import pandas as pd
 
-    pdf = _driver_edges(e)
-    if pdf is None:
-        return None
     uniq = pd.unique(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True))
     n = len(uniq)
     if n == 0:
-        return _rows_df(e.sparkSession, [], "node string, rank double")
+        return []
     pos = pd.Series(np.arange(n), index=uniq)
     s = pos[pdf["src"]].values
     d = pos[pdf["dst"]].values
@@ -180,30 +123,14 @@ def _pagerank_driver(e: DataFrame, damping: float, iters: int) -> DataFrame | No
         inflow = np.zeros(n)
         np.add.at(inflow, d, rank[s] / deg[s])
         rank = base + damping * (inflow + dmass / n)
-    out = pd.DataFrame({"node": uniq, "rank": rank})
-    # node keeps the input id type (string lexicals or dictionary longs)
-    schema = (
-        e.select(F.col("src").alias("node"))
-        .withColumn("rank", F.lit(0.0))
-        .schema
-    )
-    return e.sparkSession.createDataFrame(out, schema)
+    return pd.DataFrame({"node": uniq, "rank": rank})
 
 
-def _bfs_from_df_driver(e: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame | None:
+def _bfs_from_df_driver(pdf, seeds, max_depth: int) -> list[tuple]:
     """Driver-tier multi-source BFS (bfs_from_df): min depth per node from
-    the seed set. The seed frame is traversal-state-sized (path nodes /
-    probe sets), collected with the edges in the same tier."""
-    pdf = _driver_edges(e)
-    if pdf is None:
-        return None
-    seed_pdf = seeds.select("node").distinct().toPandas()
-    if seed_pdf.isnull().values.any():
-        return None
-    adj: dict = {}
-    for s, d in zip(pdf["src"].values, pdf["dst"].values):
-        adj.setdefault(s, []).append(d)
-    depth = {s: 0 for s in seed_pdf["node"].values}
+    the seed set."""
+    adj = _adjacency(pdf)
+    depth = {s: 0 for s in seeds}
     frontier = list(depth)
     for dcur in range(1, max_depth + 1):
         if not frontier:
@@ -215,21 +142,14 @@ def _bfs_from_df_driver(e: DataFrame, seeds: DataFrame, max_depth: int) -> DataF
                     depth[v] = dcur
                     nxt.append(v)
         frontier = nxt
-    return _rows_df(e.sparkSession, list(depth.items()), "node string, depth int")
+    return list(depth.items())
 
 
-def _paths_driver(
-    e: DataFrame, source: str, target: str, max_length: int
-) -> DataFrame | None:
+def _paths_driver(pdf, source: str, target: str, max_length: int) -> list[tuple]:
     """Driver-tier bounded path enumeration: the same level-by-level
     expansion as the distributed loop (grow every partial path one hop,
     drop revisits, bank paths that hit the target, stop extending them)."""
-    pdf = _driver_edges(e)
-    if pdf is None:
-        return None
-    adj: dict = {}
-    for s, d in zip(pdf["src"].values, pdf["dst"].values):
-        adj.setdefault(s, []).append(d)
+    adj = _adjacency(pdf)
     found: list[tuple] = []
     active = [(source, (source,))]
     for depth in range(1, max_length + 1):
@@ -244,17 +164,14 @@ def _paths_driver(
         active = [(head, nodes) for head, nodes in grown if head != target]
         if not active:
             break
-    return _rows_df(e.sparkSession, found, "path string, hops int")
+    return found
 
 
-def _cc_driver(e: DataFrame) -> DataFrame | None:
+def _cc_driver(pdf) -> list[tuple]:
     """Driver-tier connected components: union-find with union-by-min and
-    path compression over the (already undirected) edge list. Labels are the
-    component minimum — exactly label_prop's fixpoint — because the root of
-    every union is the smaller id."""
-    pdf = _driver_edges(e)
-    if pdf is None:
-        return None
+    path compression over the edge list. Labels are the component minimum —
+    exactly label_prop's fixpoint — because the root of every union is the
+    smaller id."""
     parent: dict = {}
 
     def find(x):
@@ -278,8 +195,12 @@ def _cc_driver(e: DataFrame) -> DataFrame | None:
     # the same node set label_prop seeds with on the undirected edge set
     nodes = set(srcs)
     nodes.update(dsts)
-    schema = e.select(F.col("src").alias("node"), F.col("src").alias("comp")).schema
-    return _rows_df(e.sparkSession, [(x, find(x)) for x in nodes], schema)
+    return [(x, find(x)) for x in nodes]
+
+
+def _cc_schema(edges: DataFrame):
+    """(node, comp) keeping the input id type (string lexicals or longs)."""
+    return edges.select(F.col("src").alias("node"), F.col("src").alias("comp")).schema
 
 
 def undirect(edges: DataFrame) -> DataFrame:
@@ -393,11 +314,10 @@ def bfs(
     """
     spark = edges.sparkSession
     sel = edges.select("src", "dst")
-    e = _chk(sel)  # edges re-join every round: materialize once
-    if e.count() <= GAS_DRIVER_TIER_MAX_EDGES:
-        out = _bfs_driver(e, sources, max_depth)
-        if out is not None:
-            return out
+    e, pdf = collect_bounded(sel)
+    if pdf is not None:
+        rows = _bfs_driver(pdf, sources, max_depth)
+        return to_frame(spark, rows, "node string, depth int, pred string")
     if functional is None:
         functional = _is_functional(sel)
     if functional:
@@ -495,11 +415,9 @@ def sssp(
     """
     spark = edges.sparkSession
     sel = edges.select("src", "dst", F.col("weight").cast("double").alias("weight"))
-    e = _chk(sel)
-    if e.count() <= GAS_DRIVER_TIER_MAX_EDGES:
-        out = _sssp_driver(e, sources, max_iters)
-        if out is not None:
-            return out
+    e, pdf = collect_bounded(sel)
+    if pdf is not None:
+        return to_frame(spark, _sssp_driver(pdf, sources, max_iters), "node string, dist double")
     if functional is None:
         functional = _is_functional(sel.select("src", "dst"))
     if functional:
@@ -624,15 +542,14 @@ def connected_components_bipartite(edges: DataFrame, max_iters: int = MAX_ITERS)
     node and the contracted labels are already the final labels. Measured
     3.8s vs 5.4s for label_prop on the sf0.1 part↔supplier bench graph.
     """
-    e = _chk(edges.select("src", "dst").distinct())
+    sel = edges.select("src", "dst").distinct()
     # driver-sized bipartite graphs skip the contraction AND the attach
     # joins: union-find over the raw edge list labels every endpoint with
     # the component minimum directly (left ids sort below right ids, but
     # union-by-min doesn't even need that)
-    if e.count() <= GAS_DRIVER_TIER_MAX_EDGES:
-        out = _cc_driver(e)
-        if out is not None:
-            return out
+    e, pdf = collect_bounded(sel)
+    if pdf is not None:
+        return to_frame(edges.sparkSession, _cc_driver(pdf), _cc_schema(sel))
     star_min = e.groupBy("dst").agg(F.min("src").alias("m"))
     left_graph = (
         e.join(star_min, on="dst")
@@ -669,11 +586,10 @@ def connected_components_label_prop(edges: DataFrame, max_iters: int = MAX_ITERS
     jump through the label table (comp := min(comp, comp[comp])), so label
     distance to the component minimum shrinks superlinearly.
     """
-    e = _chk(undirect(edges))
-    if e.count() <= GAS_DRIVER_TIER_MAX_EDGES:
-        out = _cc_driver(e)
-        if out is not None:
-            return out
+    sel = undirect(edges)
+    e, pdf = collect_bounded(sel)
+    if pdf is not None:
+        return to_frame(edges.sparkSession, _cc_driver(pdf), _cc_schema(sel))
     state = _chk(
         e.select(F.col("src").alias("node")).distinct().select("node", F.col("node").alias("comp"))
     )
@@ -724,11 +640,12 @@ def pagerank(edges: DataFrame, damping: float = 0.85, iters: int = 20) -> DataFr
     materializing job: contribution join+agg, with the dangling-mass scalar
     folded in as a one-row crossJoin instead of a driver-side collect.
     """
-    e = _chk(edges.select("src", "dst"))
-    if e.count() <= GAS_DRIVER_TIER_MAX_EDGES:
-        out = _pagerank_driver(e, damping, iters)
-        if out is not None:
-            return out
+    sel = edges.select("src", "dst")
+    # node keeps the input id type (string lexicals or dictionary longs)
+    schema = sel.select(F.col("src").alias("node"), F.lit(0.0).alias("rank")).schema
+    e, pdf = collect_bounded(sel)
+    if pdf is not None:
+        return to_frame(edges.sparkSession, _pagerank_driver(pdf, damping, iters), schema)
     deg = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     nodes = _chk(
         e.select(F.col("src").alias("node"))
@@ -738,38 +655,40 @@ def pagerank(edges: DataFrame, damping: float = 0.85, iters: int = 20) -> DataFr
         .select("node", F.coalesce(F.col("deg"), F.lit(0)).alias("deg"))
     )
     n = nodes.count()
+    if n == 0:
+        return edges.sparkSession.createDataFrame([], schema)
     state = _chk(nodes.select("node", "deg", F.lit(1.0 / n).alias("rank")))
     for i in range(iters):
-            dangling = state.filter(F.col("deg") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
+        dangling = state.filter(F.col("deg") == 0).agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
+        )
+        contribs = (
+            state.filter(F.col("deg") > 0)
+            .join(e, state.node == e.src)
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.col("rank") / F.col("deg")).alias("inflow"))
+        )
+        # Intermediate rounds checkpoint LAZILY: lineage still truncates
+        # (downstream plans see the checkpointed leaf, and both per-round
+        # references — dangling agg + contribution join — read the same
+        # materialized partitions), but the separate eager materialization
+        # barrier per round is gone; each round computes inside the next
+        # round's job. Only the last round is eager so callers get a
+        # materialized result. Identical ranks, measured 13.0 → 10.9 s
+        # at sf1.0 and ~9 fewer driver jobs (r11, guide §2.4/§1).
+        state = (
+            nodes.join(contribs, on="node", how="left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "node",
+                "deg",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col("dmass") / F.lit(float(n)))
+                ).alias("rank"),
             )
-            contribs = (
-                state.filter(F.col("deg") > 0)
-                .join(e, state.node == e.src)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("inflow"))
-            )
-            # Intermediate rounds checkpoint LAZILY: lineage still truncates
-            # (downstream plans see the checkpointed leaf, and both per-round
-            # references — dangling agg + contribution join — read the same
-            # materialized partitions), but the separate eager materialization
-            # barrier per round is gone; each round computes inside the next
-            # round's job. Only the last round is eager so callers get a
-            # materialized result. Identical ranks, measured 13.0 → 10.9 s
-            # at sf1.0 and ~9 fewer driver jobs (r11, guide §2.4/§1).
-            state = (
-                nodes.join(contribs, on="node", how="left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    "deg",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col("dmass") / F.lit(float(n)))
-                    ).alias("rank"),
-                )
-            ).localCheckpoint(eager=(i == iters - 1))
+        ).localCheckpoint(eager=(i == iters - 1))
     return state.select("node", "rank")
 
 
@@ -781,11 +700,10 @@ def paths(edges: DataFrame, source: str, target: str, max_length: int = 8) -> Da
     an array column — no driver loops; each expansion is one join).
     """
     spark = edges.sparkSession
-    e = _chk(edges.select("src", "dst"))
-    if e.count() <= GAS_DRIVER_TIER_MAX_EDGES:
-        out = _paths_driver(e, source, target, max_length)
-        if out is not None:
-            return out
+    sel = edges.select("src", "dst")
+    e, pdf = collect_bounded(sel)
+    if pdf is not None:
+        return to_frame(spark, _paths_driver(pdf, source, target, max_length), "path string, hops int")
     active = _chk(
         spark.createDataFrame([(source, [source])], "head string, nodes array<string>")
     )
@@ -815,12 +733,14 @@ def reachable(edges: DataFrame, sources: list[str], max_iters: int = MAX_ITERS) 
 def bfs_from_df(edges: DataFrame, seeds: DataFrame, max_depth: int = MAX_ITERS) -> DataFrame:
     """BFS seeded from a DataFrame of (node) rows — multi-source frontier
     expansion giving each node its MIN depth from the seed set."""
-    e = _chk(edges.select("src", "dst"))
-    if e.count() <= GAS_DRIVER_TIER_MAX_EDGES:
-        out = _bfs_from_df_driver(e, seeds, max_depth)
-        if out is not None:
-            return out
-    seed = _chk(seeds.select("node").distinct().select("node", F.lit(0).alias("depth")))
+    sel = edges.select("src", "dst")
+    seeds = seeds.select("node").distinct()
+    e, pdf = collect_bounded(sel)
+    seeds, seed_pdf = collect_bounded(seeds) if pdf is not None else (seeds, None)
+    if seed_pdf is not None:
+        rows = _bfs_from_df_driver(pdf, seed_pdf["node"].values, max_depth)
+        return to_frame(edges.sparkSession, rows, "node string, depth int")
+    seed = _chk(seeds.select("node", F.lit(0).alias("depth")))
     parts = [seed]
     visited = seed.select("node")
     frontier = visited

@@ -14,12 +14,11 @@ same machinery evaluates paths inside GRAPH ?var — closure joins then include
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blazegraph_database_spark.model.store import TripleStore
+from blazegraph_database_spark.operators.driver_tier import collect_bounded, to_frame
 from blazegraph_database_spark.plans import algebra as A
 
 MAX_ITERS = 64  # diameter guard; 100 TB graphs rarely exceed ~30 rounds
@@ -31,20 +30,16 @@ MAX_ITERS = 64  # diameter guard; 100 TB graphs rarely exceed ~30 rounds
 # reference's ALP operator is semi-naive for the same reason.
 DOUBLING_MAX_PAIRS = 100_000
 
-# Functional (parent-pointer) bases at most this size close on the driver in
-# one Arrow collect + numpy level walk (the GAS-driver-tier discipline,
-# operators/gas.py): a few MB of pairs against log2(d) distributed rounds of
-# ~6 AQE stage jobs each. Acyclic only — the cycle pre-check bails to the
-# distributed chain tier. Env-tunable; past the threshold the r11 chain tier
-# is unchanged (sf1.0 ancestor closure: 6.1 s chain tier vs 2.8 s here,
-# identical 2.29M pairs).
-DRIVER_FUNCTIONAL_MAX_PAIRS = int(
-    os.environ.get("SPARK_GRAFT_PATHS_DRIVER_TIER", "500000")
-)
-# Emitted-pair bail-out for the driver walk (a 500k-node chain would emit
-# ~125G pairs — no tier can hold that; the distributed fallbacks at least
-# spill). Walks past this emit count abandon the driver tier.
+# Emitted-pair bail-out for the driver functional walk (a 500k-node chain
+# would emit ~125G pairs — no tier can hold that; the distributed fallbacks
+# at least spill). Walks past this emit count abandon the driver tier.
 DRIVER_FUNCTIONAL_MAX_OUT = 50_000_000
+
+# Non-functional (or cyclic) driver-tier bases at most this many pairs close
+# with the python DFS of _closure_local, which bails once the closure passes
+# DRIVER_DFS_MAX_OUT pairs (an adversarially dense small input).
+DRIVER_DFS_MAX_PAIRS = 20_000
+DRIVER_DFS_MAX_OUT = 2_000_000
 
 
 def _gcols(with_graph: bool) -> list[str]:
@@ -134,6 +129,28 @@ def _functional_closure_driver(pdf) -> "object | None":
     return pd.DataFrame({"s": uniq[nodes], "o": uniq[ancs]})
 
 
+def _closure_local(rows) -> list[tuple] | None:
+    """In-memory closure of collected (s, o) pairs by a DFS per start node;
+    None once the closure passes DRIVER_DFS_MAX_OUT pairs (the caller falls
+    back to the distributed tiers)."""
+    adj: dict = {}
+    for s, o in rows:
+        adj.setdefault(s, set()).add(o)
+    out: list[tuple] = []
+    for start in adj:
+        seen, stack = set(), list(adj[start])
+        while stack:
+            n = stack.pop()
+            if n in seen:
+                continue
+            seen.add(n)
+            stack.extend(adj.get(n, ()))
+        out.extend((start, d) for d in seen)
+        if len(out) > DRIVER_DFS_MAX_OUT:
+            return None
+    return out
+
+
 def _functional_direction(known: DataFrame, keys: list[str]) -> str | None:
     """'fwd' when every ([g,] s) has at most one o (parent pointers:
     trees/forests/chains), 'rev' when every ([g,] o) has at most one s —
@@ -212,34 +229,27 @@ def transitive_closure(
     ALP operator evaluates semi-naive; we keep doubling for the small/deep
     inputs (schema hierarchies) where it measurably wins."""
     keys = keys or []
-    known = pairs.select(*keys, "s", "o").distinct().localCheckpoint()
-    n_pairs = known.count()
-    if not keys and n_pairs <= DRIVER_FUNCTIONAL_MAX_PAIRS:
-        # driver tier: one Arrow collect. Functional acyclic bases (the
-        # dominant hierarchy/chain shape) close with the numpy level walk
-        # regardless of size within the tier; anything else up to the
-        # schema-sized 20k bound keeps the r11 python closure. Both fall
-        # through to the distributed tiers on cycles / explosion / nulls.
-        pdf = known.toPandas()
-        if not pdf.isnull().values.any():
-            if len(pdf):
-                # functional fast path first at every size in the tier
-                # (the dominant hierarchy shape; ~5x over the python DFS)
-                closed_pdf = _functional_closure_driver(pdf)
-                if closed_pdf is not None:
-                    return pairs.sparkSession.createDataFrame(closed_pdf, known.schema)
-            if n_pairs <= 20_000:
-                # small cyclic / non-functional graphs: python DFS closure
-                from blazegraph_database_spark.inference.rdfs import (
-                    _arrow_pairs_df,
-                    _closure_local,
-                )
-
-                closed = _closure_local(list(pdf.itertuples(index=False, name=None)))
-                if closed is not None:
-                    if not closed:
-                        return known
-                    return _arrow_pairs_df(pairs.sparkSession, closed, known.schema)
+    distinct = pairs.select(*keys, "s", "o").distinct()
+    # driver tier (operators/driver_tier.py): one bounded Arrow collect.
+    # Functional acyclic bases (the dominant hierarchy/chain shape) close
+    # with the numpy level walk at every size within the gate (sf1.0 ancestor
+    # closure: 2.8 s against 6.1 s for the chain tier, identical 2.29M
+    # pairs); anything else up to the schema-sized DRIVER_DFS_MAX_PAIRS
+    # keeps the python DFS. Both fall through to the distributed tiers on
+    # cycles / explosion, as do nulls and over-gate inputs, and read the
+    # checkpoint the collect materialized. Keyed (per-graph) closures stay
+    # distributed.
+    if keys:
+        known, pdf = distinct.localCheckpoint(), None
+    else:
+        known, pdf = collect_bounded(distinct)
+    if pdf is not None:
+        closed = _functional_closure_driver(pdf)
+        if closed is None and len(pdf) <= DRIVER_DFS_MAX_PAIRS:
+            closed = _closure_local(zip(pdf["s"].values, pdf["o"].values))
+        if closed is not None:
+            return to_frame(pairs.sparkSession, closed, distinct.schema)
+    n_pairs = known.count() if pdf is None else len(pdf)
     # Functional bases (parent-pointer shape — the dominant hierarchy/chain
     # case) close in ceil(log2 d) array-doubling rounds instead of d
     # semi-naive rounds or |closure|-self-joining doubling; inverse-

@@ -672,13 +672,15 @@ def _ccache() -> dict:
     """The Column cache, invalidated when the active SparkContext changes:
     cached Columns hold py4j refs into a specific gateway, and a JVM
     restart in the same process would leave them pointing at a dead one
-    (ADVICE r11). The identity check is pure-python, no roundtrip."""
+    (ADVICE r11). The check holds the context object itself and compares
+    identity — an ``id()`` tag could be reused by a later context — and is
+    pure-python, no roundtrip."""
     from pyspark import SparkContext
 
-    tag = id(SparkContext._active_spark_context)
-    if _CCACHE.get("__ctx") != tag:
+    sc = SparkContext._active_spark_context
+    if "__ctx" not in _CCACHE or _CCACHE["__ctx"] is not sc:
         _CCACHE.clear()
-        _CCACHE["__ctx"] = tag
+        _CCACHE["__ctx"] = sc
     return _CCACHE
 
 

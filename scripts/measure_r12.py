@@ -1,4 +1,4 @@
-"""Round-11 optimization measurement harness (guide §1).
+"""Optimization measurement harness (guide §1).
 
 For each named query: run once untimed (JIT/footer warm), then time the
 computation with the noop sink (guide §1.4 — every column of every row,

@@ -85,6 +85,20 @@ def spark() -> SparkSession:
     yield s
 
 
+@pytest.fixture()
+def force_distributed(monkeypatch):
+    """Returns a switch that pins the shared driver-tier gate
+    (operators/driver_tier.DRIVER_TIER_MAX_ROWS) to 0 for the rest of the
+    test, so gas, paths and rdfs take their distributed loops. Parity tests
+    compute the driver-tier answer first, then call it."""
+    from blazegraph_database_spark.operators import driver_tier
+
+    def force():
+        monkeypatch.setattr(driver_tier, "DRIVER_TIER_MAX_ROWS", 0)
+
+    return force
+
+
 @pytest.fixture(scope="session")
 def tiny_store(spark):
     """Hand-built RDF fixture for algebra edge cases."""

@@ -137,7 +137,7 @@ def test_cc_bipartite_matches_label_prop(spark):
         assert got == want, edges
 
 
-def test_concurrent_iterative_queries_no_lock(spark, monkeypatch):
+def test_concurrent_iterative_queries_no_lock(spark, force_distributed):
     """VERDICT r4 items 8/9: with the _iter_shuffle conf lock gone,
     concurrent iterative queries (two path closures, as two REST clients
     would issue) run in parallel and both return correct closures.
@@ -148,9 +148,7 @@ def test_concurrent_iterative_queries_no_lock(spark, monkeypatch):
     import threading
     import time
 
-    from blazegraph_database_spark.operators import paths as _paths
-
-    monkeypatch.setattr(_paths, "DRIVER_FUNCTIONAL_MAX_PAIRS", 0)
+    force_distributed()
 
     from blazegraph_database_spark.model.store import TripleStore
     from blazegraph_database_spark.plans import algebra as A

@@ -830,3 +830,15 @@ def test_contamination_bloom_plan_no_probe_broadcast(spark):
     assert "CartesianProduct" not in p
     # exact-verify join side keeps the shuffle hint (no broadcast of grams)
     assert "ShuffledHashJoin" in p or "SortMergeJoin" in p
+
+
+def test_lsh_duplicate_id_in_bucket_emits_no_self_pairs(spark):
+    """An id repeated within one LSH bucket (duplicate signature rows) must
+    not pair with itself: candidate pairs stay strictly a < b."""
+    sig = list(range(dedup.NUM_PERM))
+    dup_only = spark.createDataFrame([(1, sig), (1, sig)], "id long, sig array<long>")
+    assert dedup.lsh_candidate_pairs(dup_only).collect() == []
+    mixed = spark.createDataFrame(
+        [(1, sig), (1, sig), (2, sig)], "id long, sig array<long>"
+    )
+    assert {(r.a, r.b) for r in dedup.lsh_candidate_pairs(mixed).collect()} == {(1, 2)}

@@ -699,3 +699,16 @@ def test_ntriples_parse_plan_stays_linear(spark, tmp_path):
     )
     # the calendar-validation regex likewise appears once
     assert plan.count("0[13578]") == 1
+
+
+def test_column_cache_clears_on_new_spark_context(spark, monkeypatch):
+    """The compiler's cached Columns belong to one SparkContext: a new
+    active context (even one CPython placed at a reused id) clears them."""
+    from pyspark import SparkContext
+
+    from blazegraph_database_spark.plans import compiler
+
+    compiler._ccache()["__probe"] = "stale"
+    assert compiler._ccache().get("__probe") == "stale"
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    assert "__probe" not in compiler._ccache()

@@ -7,8 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from blazegraph_database_spark.inference.rdfs import _closure_local
 from blazegraph_database_spark.operators import fulltext, paths
+from blazegraph_database_spark.operators.paths import _closure_local
 from blazegraph_database_spark.operators.text import word_shingles, words
 
 
@@ -47,7 +47,7 @@ class TestChainClosureTier:
         )
         assert got == _py_closure(edges)
 
-    def test_transitive_closure_dispatches_to_chain_tier(self, spark, monkeypatch):
+    def test_transitive_closure_dispatches_to_chain_tier(self, spark, monkeypatch, force_distributed):
         # a >20k-pair functional base must take the chain tier, not the
         # semi-naive loop (the sf1.0 scale-suite path)
         import pandas as pd
@@ -67,7 +67,7 @@ class TestChainClosureTier:
         monkeypatch.setattr(paths, "_chain_closure", spy)
         # force past the r12 numpy driver tier so the distributed chain
         # tier (the >500k-pair path) is what answers
-        monkeypatch.setattr(paths, "DRIVER_FUNCTIONAL_MAX_PAIRS", 0)
+        force_distributed()
         out = paths.transitive_closure(base)
         assert called.get("hit"), "functional base did not gear into the chain tier"
         # spot-check: ancestors of 12 are 6, 3, 1

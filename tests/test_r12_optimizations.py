@@ -5,7 +5,6 @@ size gate so at-scale inputs keep the distributed path."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from blazegraph_database_spark.operators import gas
@@ -32,17 +31,11 @@ def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
-@pytest.fixture()
-def distributed(monkeypatch):
-    """Force the distributed loops by zeroing the driver-tier gate."""
-    monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
-
-
 class TestCcDriverTier:
-    def test_matches_distributed_label_prop(self, spark, monkeypatch):
+    def test_matches_distributed_label_prop(self, spark, force_distributed):
         df = spark.createDataFrame(CC_EDGES, "src string, dst string")
         tier = _rows(gas.connected_components(df))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = _rows(gas.connected_components(df))
         assert tier == dist
         # labels are the component minimum
@@ -50,15 +43,15 @@ class TestCcDriverTier:
         assert comp["d"] == "a" and comp["r"] == "p" and comp["z"] == "z"
         assert comp["x3"] == "h" and comp["h"] == "h"
 
-    def test_bipartite_short_circuit_matches_distributed(self, spark, monkeypatch):
+    def test_bipartite_short_circuit_matches_distributed(self, spark, force_distributed):
         edges = [(f"p:{i}", f"s:{i % 3}") for i in range(12)] + [("p:0", "s:9")]
         df = spark.createDataFrame(edges, "src string, dst string")
         tier = _rows(gas.connected_components_bipartite(df))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = _rows(gas.connected_components_bipartite(df))
         assert tier == dist
 
-    def test_dispatch_spy(self, spark, monkeypatch):
+    def test_dispatch_spy(self, spark, monkeypatch, force_distributed):
         df = spark.createDataFrame(CC_EDGES, "src string, dst string")
         called = {}
         orig = gas._cc_driver
@@ -71,66 +64,66 @@ class TestCcDriverTier:
         gas.connected_components(df).collect()
         assert called.get("tier")
         called.clear()
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         gas.connected_components(df).collect()
         assert "tier" not in called
 
 
 class TestBfsDriverTier:
-    def test_matches_general_bfs(self, spark, monkeypatch):
+    def test_matches_general_bfs(self, spark, force_distributed):
         df = spark.createDataFrame(BFS_EDGES, "src string, dst string")
         tier = _rows(gas.bfs(df, ["1"]))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = _rows(gas.bfs(df, ["1"]))
         assert tier == dist
         # node 6 is reached at depth 2 via min-pred "3" (not depth-3 via 5)
         assert ("6", 2, "3") in tier
 
-    def test_matches_functional_pointer_doubling(self, spark, monkeypatch):
+    def test_matches_functional_pointer_doubling(self, spark, force_distributed):
         edges = [(str(k // 2), str(k)) for k in range(2, 200)]
         df = spark.createDataFrame(edges, "src string, dst string")
         tier = _rows(gas.bfs(df, ["1"]))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = _rows(gas.bfs(df, ["1"], functional=True))
         assert tier == dist
 
-    def test_max_depth_bound(self, spark, monkeypatch):
+    def test_max_depth_bound(self, spark, force_distributed):
         df = spark.createDataFrame(BFS_EDGES, "src string, dst string")
         tier = _rows(gas.bfs(df, ["1"], max_depth=1))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = _rows(gas.bfs(df, ["1"], max_depth=1))
         assert tier == dist
         assert {r[0] for r in tier} == {"1", "2", "3"}
 
-    def test_multi_source(self, spark, monkeypatch):
+    def test_multi_source(self, spark, force_distributed):
         df = spark.createDataFrame(BFS_EDGES, "src string, dst string")
         tier = _rows(gas.bfs(df, ["2", "9"]))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = _rows(gas.bfs(df, ["2", "9"]))
         assert tier == dist
 
 
 class TestSsspDriverTier:
-    def test_matches_general_sssp(self, spark, monkeypatch):
+    def test_matches_general_sssp(self, spark, force_distributed):
         edges = [
             ("a", "b", 1.0), ("b", "c", 1.0), ("a", "c", 5.0),  # shorter 2-hop
             ("c", "d", 2.5), ("x", "y", 0.5),
         ]
         df = spark.createDataFrame(edges, "src string, dst string, weight double")
         tier = _rows(gas.sssp(df, ["a"]))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = _rows(gas.sssp(df, ["a"]))
         assert tier == dist
         assert ("c", 2.0) in tier and ("d", 4.5) in tier
 
-    def test_hop_bound_parity(self, spark, monkeypatch):
+    def test_hop_bound_parity(self, spark, force_distributed):
         # cheaper-but-longer path beyond the hop bound must be cut in both
         edges = [("a", "e", 10.0)] + [
             (u, v, 1.0) for u, v in [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
         ]
         df = spark.createDataFrame(edges, "src string, dst string, weight double")
         tier = _rows(gas.sssp(df, ["a"], max_iters=2))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = _rows(gas.sssp(df, ["a"], max_iters=2))
         assert tier == dist
         assert ("e", 10.0) in tier  # 4-hop unit path cut at max_iters=2
@@ -145,20 +138,20 @@ class TestPagerankDriverTier:
             ).collect()
         )
 
-    def test_matches_distributed_at_ppb(self, spark, monkeypatch):
+    def test_matches_distributed_at_ppb(self, spark, force_distributed):
         edges = [(str(k // 2), str(k)) for k in range(2, 300)]
         df = spark.createDataFrame(edges, "src string, dst string")
         tier = self._ppb(gas.pagerank(df, iters=10))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = self._ppb(gas.pagerank(df, iters=10))
         assert tier == dist
 
-    def test_dangling_mass_graph(self, spark, monkeypatch):
+    def test_dangling_mass_graph(self, spark, force_distributed):
         # hub + many dangling leaves: dmass dominates the recurrence
         edges = [("h", f"l{i}") for i in range(50)]
         df = spark.createDataFrame(edges, "src string, dst string")
         tier = self._ppb(gas.pagerank(df, iters=10))
-        monkeypatch.setattr(gas, "GAS_DRIVER_TIER_MAX_EDGES", 0)
+        force_distributed()
         dist = self._ppb(gas.pagerank(df, iters=10))
         assert tier == dist
 
@@ -167,7 +160,7 @@ class TestFunctionalClosureDriverTier:
     def _pairs(self, df):
         return sorted(tuple(r) for r in df.collect())
 
-    def test_matches_chain_tier_above_schema_bound(self, spark, monkeypatch):
+    def test_matches_chain_tier_above_schema_bound(self, spark, force_distributed):
         from blazegraph_database_spark.operators import paths
         import pandas as pd
 
@@ -177,7 +170,7 @@ class TestFunctionalClosureDriverTier:
         )
         base = spark.createDataFrame(pdf)
         tier = self._pairs(paths.transitive_closure(base))
-        monkeypatch.setattr(paths, "DRIVER_FUNCTIONAL_MAX_PAIRS", 0)
+        force_distributed()
         dist = self._pairs(paths.transitive_closure(base))
         assert tier == dist
 
