@@ -15,7 +15,7 @@ frontier join is a co-partitioned shuffle-hash join; hub skew is handled by
 AQE skew-join (enabled in session defaults).
 
 Edges: DataFrame(src, dst[, weight]). All ids are strings (term lexicals) or
-longs (dictionary-encoded) — the algorithms are agnostic.
+longs (dictionary-encoded) — every analytic is agnostic to the id type.
 """
 
 from __future__ import annotations
@@ -126,25 +126,6 @@ def _pagerank_driver(pdf, damping: float, iters: int):
     return pd.DataFrame({"node": uniq, "rank": rank})
 
 
-def _bfs_from_df_driver(pdf, seeds, max_depth: int) -> list[tuple]:
-    """Driver-tier multi-source BFS (bfs_from_df): min depth per node from
-    the seed set."""
-    adj = _adjacency(pdf)
-    depth = {s: 0 for s in seeds}
-    frontier = list(depth)
-    for dcur in range(1, max_depth + 1):
-        if not frontier:
-            break
-        nxt = []
-        for u in frontier:
-            for v in adj.get(u, ()):
-                if v not in depth:
-                    depth[v] = dcur
-                    nxt.append(v)
-        frontier = nxt
-    return list(depth.items())
-
-
 def _paths_driver(pdf, source: str, target: str, max_length: int) -> list[tuple]:
     """Driver-tier bounded path enumeration: the same level-by-level
     expansion as the distributed loop (grow every partial path one hop,
@@ -204,65 +185,54 @@ def _cc_schema(edges: DataFrame):
 
 
 def undirect(edges: DataFrame) -> DataFrame:
-    """Make an edge set symmetric (ref CC treats the graph as undirected)."""
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return edges.select("src", "dst").unionByName(rev).distinct()
+    """Make an edge set symmetric (ref CC treats the graph as undirected).
+    Columns past ``src, dst`` (a link weight) ride along in both
+    directions."""
+    rest = [c for c in edges.columns if c not in ("src", "dst")]
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *rest)
+    return edges.select("src", "dst", *rest).unionByName(rev).distinct()
 
 
-# Verdicts of the in-degree probe keyed by the edge plan's semanticHash, so
-# repeated traversals over the same edge set don't re-scan it (a full edge
-# aggregation per bfs/sssp call would be an extra corpus scan at 100 TB).
-# semanticHash identifies the PLAN, not the data: like Spark's own relation
-# caches, a source mutated under the same path is not detected — pass
-# ``functional=`` explicitly (or reload after REFRESH) when data can change
-# mid-session. Size-bounded so long-lived sessions don't leak entries.
-_FUNCTIONAL_CACHE: dict[int, bool] = {}
-_FUNCTIONAL_CACHE_MAX = 256
+def _unique_parents(e: DataFrame) -> bool:
+    """True when no dst has two incoming edges — the graph of parent
+    pointers (trees, forests, linked chains). Callers pass ``e`` as the
+    checkpoint the bounded collect already materialized, so the probe never
+    recomputes the input."""
+    return e.groupBy("dst").count().filter("count > 1").isEmpty()
 
 
-def _is_functional(e: DataFrame) -> bool:
-    """True when every dst has exactly one incoming edge (unique parent) —
-    the graph of parent pointers (trees, forests, linked chains)."""
-    try:
-        key = e.semanticHash()
-    except Exception:  # pragma: no cover - semanticHash is best-effort
-        key = None
-    if key is not None and key in _FUNCTIONAL_CACHE:
-        return _FUNCTIONAL_CACHE[key]
-    row = e.groupBy("dst").agg(F.count(F.lit(1)).alias("c")).agg(F.max("c").alias("m")).first()
-    verdict = row is not None and row["m"] == 1
-    if key is not None:
-        if len(_FUNCTIONAL_CACHE) >= _FUNCTIONAL_CACHE_MAX:
-            _FUNCTIONAL_CACHE.clear()
-        _FUNCTIONAL_CACHE[key] = verdict
-    return verdict
+def _pointer_jump(e: DataFrame, sources: list[str], max_hops: int, weight) -> DataFrame:
+    """Distances over a parent-pointer (in-degree ≤ 1) graph by pointer doubling.
 
+    Each node has a unique parent, so its distance is a sum along its unique
+    upward chain to the nearest source — computable in ⌈log2 max_hops⌉
+    rounds of pointer jumping (the classic PRAM shortcut) instead of one
+    round per hop of frontier expansion. Per round every node carries one
+    (anc, d, h) pointer row: total work O(n log d), rows never grow. Jumps
+    stop at sources so multi-source semantics (nearest source on the chain)
+    are preserved. ``d`` sums ``weight`` and ``h`` counts hops, so the
+    result honors the same hop bound as the frontier loops (a node more
+    than ``max_hops`` hops from its source is unreached in both).
 
-def _functional_bfs(e: DataFrame, sources: list[str], max_depth: int) -> DataFrame:
-    """BFS over a functional (in-degree ≤ 1) graph by pointer doubling.
-
-    Each node has a unique parent, so its depth is the length of its unique
-    upward chain to the nearest source — computable in ⌈log2 depth⌉ rounds
-    of pointer jumping (the classic PRAM shortcut) instead of depth rounds
-    of frontier expansion. Per round every node carries one (anc, d) pointer
-    row: total work O(n log d), rows never grow. Jumps stop at sources so
-    multi-source semantics (nearest source on the chain) are preserved.
-    Result is identical to frontier BFS: (node, depth, pred=unique parent).
+    Returns (node, pred, d, h) for every non-source node reached; pred is
+    the node's unique parent.
     """
-    spark = e.sparkSession
-    # child → parent pointer rows; pred is the unique parent itself
     ptr = _chk(
         e.select(
             F.col("dst").alias("node"),
             F.col("src").alias("pred"),
             F.col("src").alias("anc"),
-            F.lit(1).alias("d"),
+            weight.alias("d"),
+            F.lit(1).alias("h"),
         )
     )
-    rounds = max(1, (max_depth - 1).bit_length())  # ⌈log2 max_depth⌉
+    rounds = max(1, (max_hops - 1).bit_length())  # ⌈log2 max_hops⌉
     for _ in range(rounds):
         jump = ptr.select(
-            F.col("node").alias("j_node"), F.col("anc").alias("j_anc"), F.col("d").alias("j_d")
+            F.col("node").alias("j_node"),
+            F.col("anc").alias("j_anc"),
+            F.col("d").alias("j_d"),
+            F.col("h").alias("j_h"),
         )
         # only chains not yet anchored at a source keep jumping
         can_jump = ~F.col("anc").isin(sources) & F.col("j_anc").isNotNull()
@@ -273,62 +243,51 @@ def _functional_bfs(e: DataFrame, sources: list[str], max_depth: int) -> DataFra
             "pred",
             F.when(can_jump, F.col("j_anc")).otherwise(F.col("anc")).alias("anc"),
             F.when(can_jump, F.col("d") + F.col("j_d")).otherwise(F.col("d")).alias("d"),
+            F.when(can_jump, F.col("h") + F.col("j_h")).otherwise(F.col("h")).alias("h"),
             can_jump.alias("jumped"),
         ).localCheckpoint(eager=False)
-        ptr = ptr2.select("node", "pred", "anc", "d")
+        ptr = ptr2.select("node", "pred", "anc", "d", "h")
         if ptr2.filter("jumped").isEmpty():
             break
-    seed = spark.createDataFrame(
-        [(s, 0, None) for s in sources], "node string, depth int, pred string"
+    seeds = e.sparkSession.createDataFrame([(s,) for s in sources], "node string")
+    return (
+        ptr.filter(F.col("anc").isin(sources) & (F.col("h") <= max_hops))
+        .join(seeds, on="node", how="left_anti")  # sources stay at 0
+        .select("node", "pred", "d", "h")
     )
-    reached = (
-        ptr.filter(F.col("anc").isin(sources) & (F.col("d") <= max_depth))
-        .join(seed.select("node"), on="node", how="left_anti")  # sources stay depth 0
-        .select("node", F.col("d").cast("int").alias("depth"), "pred")
-    )
-    return seed.unionByName(reached)
 
 
-def bfs(
-    edges: DataFrame,
-    sources: list[str],
-    max_depth: int = MAX_ITERS,
-    functional: bool | None = None,
-) -> DataFrame:
+def bfs(edges: DataFrame, sources: list[str], max_depth: int = MAX_ITERS) -> DataFrame:
     """Breadth-first search: (node, depth, predecessor).
 
     Ref: analytics/BFS.java (depth + predecessor per visited vertex).
     Predecessor choice among equal-depth parents is min(), deterministic.
 
-    Strategy is chosen from the graph's in-degree profile (one cheap agg):
-    functional graphs (every node a unique parent — trees/forests/chains)
-    use pointer doubling (⌈log2 d⌉ rounds, O(n log d) work); general graphs
-    use delta-frontier expansion, one materializing job per round — only
-    the frontier delta is checkpointed; the visited set stays a shallow
-    union of already-checkpointed deltas, so unioning it costs nothing
-    extra and the anti-join reads materialized data.
-
-    Pass ``functional=True/False`` to skip the probe entirely when the
-    caller knows the graph shape; otherwise the probe's verdict is cached
-    per edge plan so repeated traversals don't re-scan the edges.
+    Past the driver tier the strategy is chosen from the graph's in-degree
+    profile (one agg over the materialized edges): parent-pointer graphs (every
+    node a unique parent — trees/forests/chains) use pointer doubling
+    (⌈log2 d⌉ rounds, O(n log d) work); general graphs use the frontier
+    loop of :func:`_general_bfs`.
     """
     spark = edges.sparkSession
-    sel = edges.select("src", "dst")
-    e, pdf = collect_bounded(sel)
+    e, pdf = collect_bounded(edges.select("src", "dst"))
     if pdf is not None:
         rows = _bfs_driver(pdf, sources, max_depth)
         return to_frame(spark, rows, "node string, depth int, pred string")
-    if functional is None:
-        functional = _is_functional(sel)
-    if functional:
-        return _functional_bfs(e, sources, max_depth)
-    return _general_bfs(spark, e, sources, max_depth)
+    seed = spark.createDataFrame([(s, 0, None) for s in sources], "node string, depth int, pred string")
+    if _unique_parents(e):
+        reached = _pointer_jump(e, sources, max_depth, F.lit(1))
+        return seed.unionByName(reached.select("node", F.col("h").alias("depth"), "pred"))
+    return _general_bfs(e, seed, max_depth)
 
 
-def _general_bfs(spark, e: DataFrame, sources: list[str], max_depth: int) -> DataFrame:
-    seed = _chk(
-        spark.createDataFrame([(s, 0, None) for s in sources], "node string, depth int, pred string")
-    )
+def _general_bfs(e: DataFrame, seed: DataFrame, max_depth: int) -> DataFrame:
+    """Delta-frontier BFS from a (node, depth=0, pred) seed frame: one
+    materializing job per round — only the frontier delta is checkpointed;
+    the visited set stays a shallow union of already-checkpointed deltas,
+    so unioning it costs nothing extra and the anti-join reads materialized
+    data."""
+    seed = _chk(seed)
     parts = [seed]
     visited = seed.select("node")
     frontier = visited
@@ -352,60 +311,10 @@ def _general_bfs(spark, e: DataFrame, sources: list[str], max_depth: int) -> Dat
     return out
 
 
-def _functional_sssp(e: DataFrame, sources: list[str], max_iters: int) -> DataFrame:
-    """SSSP on a functional (in-degree ≤ 1) graph by pointer doubling: the
-    unique upward chain means dist = SUM of weights along it — the same
-    ⌈log2 d⌉-round jump loop as _functional_bfs with (+, weight)
-    accumulation alongside a hop counter, so the result honors the same
-    max_iters hop bound the general Bellman-Ford path enforces (a node
-    more than max_iters hops from its source is unreached in both)."""
-    spark = e.sparkSession
-    ptr = _chk(
-        e.select(
-            F.col("dst").alias("node"),
-            F.col("src").alias("anc"),
-            F.col("weight").alias("d"),
-            F.lit(1).alias("h"),
-        )
-    )
-    rounds = max(1, (max_iters - 1).bit_length())
-    for _ in range(rounds):
-        jump = ptr.select(
-            F.col("node").alias("j_node"),
-            F.col("anc").alias("j_anc"),
-            F.col("d").alias("j_d"),
-            F.col("h").alias("j_h"),
-        )
-        can_jump = ~F.col("anc").isin(sources) & F.col("j_anc").isNotNull()
-        # lazy checkpoint: same barrier-removal as _functional_bfs (r11)
-        ptr2 = ptr.join(jump, ptr.anc == F.col("j_node"), "left").select(
-            "node",
-            F.when(can_jump, F.col("j_anc")).otherwise(F.col("anc")).alias("anc"),
-            F.when(can_jump, F.col("d") + F.col("j_d")).otherwise(F.col("d")).alias("d"),
-            F.when(can_jump, F.col("h") + F.col("j_h")).otherwise(F.col("h")).alias("h"),
-            can_jump.alias("jumped"),
-        ).localCheckpoint(eager=False)
-        ptr = ptr2.select("node", "anc", "d", "h")
-        if ptr2.filter("jumped").isEmpty():
-            break
-    seed = spark.createDataFrame([(s, 0.0) for s in sources], "node string, dist double")
-    reached = (
-        ptr.filter(F.col("anc").isin(sources) & (F.col("h") <= max_iters))
-        .join(seed.select("node"), on="node", how="left_anti")
-        .select("node", F.col("d").alias("dist"))
-    )
-    return seed.unionByName(reached)
-
-
-def sssp(
-    edges: DataFrame,
-    sources: list[str],
-    max_iters: int = MAX_ITERS,
-    functional: bool | None = None,
-) -> DataFrame:
+def sssp(edges: DataFrame, sources: list[str], max_iters: int = MAX_ITERS) -> DataFrame:
     """Single-source shortest paths over weighted edges: (node, dist).
 
-    Ref: analytics/SSSP.java. Functional graphs (unique parent — the path
+    Ref: analytics/SSSP.java. Parent-pointer graphs (unique parent — the path
     is forced, so "shortest" is the only path) use pointer doubling like
     BFS; general graphs use Bellman-Ford-style frontier relaxation: only
     vertices whose distance improved scatter in the next round. One
@@ -418,10 +327,10 @@ def sssp(
     e, pdf = collect_bounded(sel)
     if pdf is not None:
         return to_frame(spark, _sssp_driver(pdf, sources, max_iters), "node string, dist double")
-    if functional is None:
-        functional = _is_functional(sel.select("src", "dst"))
-    if functional:
-        return _functional_sssp(e, sources, max_iters)
+    if _unique_parents(e):
+        seed = spark.createDataFrame([(s, 0.0) for s in sources], "node string, dist double")
+        reached = _pointer_jump(e, sources, max_iters, F.col("weight"))
+        return seed.unionByName(reached.select("node", F.col("d").alias("dist")))
     return _general_sssp(spark, e, sources, max_iters)
 
 
@@ -446,157 +355,24 @@ def _general_sssp(spark, e: DataFrame, sources: list[str], max_iters: int) -> Da
     return state
 
 
-def _cc_nbrs(E: DataFrame) -> DataFrame:
-    return E.select("u", "v").unionByName(
-        E.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-
-
-def _cc_mins(nb: DataFrame) -> DataFrame:
-    """(u, m): min over Γ(u) ∪ {u} for the current edge set."""
-    return nb.groupBy("u").agg(F.min("v").alias("mv")).select(
-        "u", F.least(F.col("mv"), F.col("u")).alias("m")
-    )
-
-
-def connected_components(
-    edges: DataFrame, max_iters: int = MAX_ITERS, algorithm: str = "label_prop"
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFrame:
     """Undirected connected components: (node, component=min reachable id).
 
     Ref: analytics/CC.java (label = min vertex id, propagated to fixpoint).
-    Two physical strategies with identical output:
-
-    * ``label_prop`` (default): min-label propagation with pointer-jump
-      shortcutting — cheapest per round (one materializing job), wins on
-      the hub-dominated low-diameter graphs that dominate real workloads
-      (measured 3.9s vs 6.0s for two-star on the sf0.1 bipartite bench).
-    * ``two_star``: alternating large-star/small-star contraction (Kiveris
-      et al., "Connected Components in MapReduce and Beyond") — O(log² n)
-      phase bound regardless of diameter; the scale path for deep/chain
-      graphs where per-hop propagation would need diameter-many rounds
-      (shortcutting helps but two-star's bound is structural).
+    Min-label propagation with pointer-jump shortcutting: one materializing
+    job per round — the changed-flag rides along in the checkpointed state
+    so convergence is a filter, not a plan re-execution. Each round combines
+    one edge-hop of label propagation with one pointer jump through the
+    label table (comp := min(comp, comp[comp])), so label distance to the
+    component minimum shrinks superlinearly.
     """
-    if algorithm == "label_prop":
-        return connected_components_label_prop(edges, max_iters)
-    if algorithm != "two_star":
-        raise ValueError(f"unknown CC algorithm {algorithm!r}")
-    raw = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    nodes = _chk(  # before the self-loop filter: loop-only nodes keep a label
-        raw.select(F.col("u").alias("node"))
-        .unionByName(raw.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    E = _chk(raw.filter(F.col("u") != F.col("v")).distinct())
-    n_edges = E.count()
-    return _cc_two_star_loop(E, nodes, n_edges, max_iters)
-
-
-def _cc_two_star_loop(E, nodes, n_edges, max_iters):
-    for _ in range(max_iters):
-        # large-star
-        nb = _cc_nbrs(E)
-        mins = _cc_mins(nb)
-        large = (
-            nb.filter(F.col("v") > F.col("u"))
-            .join(mins, on="u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        # small-star over the large-star output
-        nb2 = _cc_nbrs(large)
-        mins2 = _cc_mins(nb2)
-        small = (
-            nb2.filter(F.col("v") < F.col("u"))
-            .join(mins2, on="u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins2.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        new_E = small.localCheckpoint(eager=False)  # count() materializes (r11)
-        n_new = new_E.count()
-        if n_new == n_edges and new_E.join(E, on=["u", "v"], how="left_anti").isEmpty():
-            E = new_E
-            break
-        E, n_edges = new_E, n_new
-    # fixpoint is a star per component: non-roots carry (u → component min);
-    # roots (and isolated self-loop nodes) label themselves
-    return (
-        nodes.join(E.select(F.col("u").alias("node"), F.col("v").alias("c")), on="node", how="left")
-        .select("node", F.coalesce(F.col("c"), F.col("node")).alias("comp"))
-    )
-
-
-def connected_components_bipartite(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFrame:
-    """CC specialization for BIPARTITE graphs where every edge runs
-    left→right and left ids sort below right ids (e.g. `p:*` parts vs
-    `s:*` suppliers): contract the right side away, solve CC on the
-    left-side graph (half the diameter → half the propagation rounds),
-    then attach right nodes with one join+agg.
-
-    Contraction: for each right node r, star its left neighborhood onto
-    min(Γ(r)) — |E| rows, one shuffle. Left nodes sharing any right node
-    become directly connected, so components are preserved; because left
-    ids sort below right ids, each component's global minimum is a left
-    node and the contracted labels are already the final labels. Measured
-    3.8s vs 5.4s for label_prop on the sf0.1 part↔supplier bench graph.
-    """
-    sel = edges.select("src", "dst").distinct()
-    # driver-sized bipartite graphs skip the contraction AND the attach
-    # joins: union-find over the raw edge list labels every endpoint with
-    # the component minimum directly (left ids sort below right ids, but
-    # union-by-min doesn't even need that)
-    e, pdf = collect_bounded(sel)
-    if pdf is not None:
-        return to_frame(edges.sparkSession, _cc_driver(pdf), _cc_schema(sel))
-    star_min = e.groupBy("dst").agg(F.min("src").alias("m"))
-    left_graph = (
-        e.join(star_min, on="dst")
-        .select("src", F.col("m").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    left_cc = connected_components_label_prop(left_graph, max_iters)
-    # isolated-star left nodes (their right neighbors connect them only to
-    # themselves) fall out of left_graph; they label themselves
-    lone = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .join(left_cc.select("node"), on="node", how="left_anti")
-        .select("node", F.col("node").alias("comp"))
-    )
-    left_all = left_cc.unionByName(lone)
-    right_cc = (
-        e.join(left_all.withColumnRenamed("node", "src"), on="src")
-        .groupBy("dst")
-        .agg(F.min("comp").alias("comp"))
-        .withColumnRenamed("dst", "node")
-    )
-    return left_all.unionByName(right_cc)
-
-
-def connected_components_label_prop(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFrame:
-    """Min-label propagation CC with pointer-jump shortcutting (the default
-    strategy behind :func:`connected_components`).
-
-    One materializing job per round: the changed-flag rides along in the
-    checkpointed state so convergence is a filter, not a plan re-execution.
-    Each round combines one edge-hop of label propagation with one pointer
-    jump through the label table (comp := min(comp, comp[comp])), so label
-    distance to the component minimum shrinks superlinearly.
-    """
-    sel = undirect(edges)
+    sel = undirect(edges.select("src", "dst"))
     e, pdf = collect_bounded(sel)
     if pdf is not None:
         return to_frame(edges.sparkSession, _cc_driver(pdf), _cc_schema(sel))
     state = _chk(
         e.select(F.col("src").alias("node")).distinct().select("node", F.col("node").alias("comp"))
     )
-    return _cc_label_prop_loop(e, state, max_iters)
-
-
-def _cc_label_prop_loop(e, state, max_iters):
     for _ in range(max_iters):
         msgs = (
             state.join(e, state.node == e.src)
@@ -629,6 +405,54 @@ def _cc_label_prop_loop(e, state, max_iters):
         if merged.filter("changed").isEmpty():
             break
     return state
+
+
+def connected_components_bipartite(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFrame:
+    """CC specialization for BIPARTITE graphs where every edge runs
+    left→right and left ids sort below right ids (e.g. `p:*` parts vs
+    `s:*` suppliers): contract the right side away, solve CC on the
+    left-side graph (half the diameter → half the propagation rounds),
+    then attach right nodes with one join+agg.
+
+    Contraction: for each right node r, star its left neighborhood onto
+    min(Γ(r)) — |E| rows, one shuffle. Left nodes sharing any right node
+    become directly connected, so components are preserved; because left
+    ids sort below right ids, each component's global minimum is a left
+    node and the contracted labels are already the final labels. Measured
+    3.8s vs 5.4s for label_prop on the sf0.1 part↔supplier bench graph.
+    """
+    sel = edges.select("src", "dst").distinct()
+    # driver-sized bipartite graphs skip the contraction AND the attach
+    # joins: union-find over the raw edge list labels every endpoint with
+    # the component minimum directly (left ids sort below right ids, but
+    # union-by-min doesn't even need that)
+    e, pdf = collect_bounded(sel)
+    if pdf is not None:
+        return to_frame(edges.sparkSession, _cc_driver(pdf), _cc_schema(sel))
+    star_min = e.groupBy("dst").agg(F.min("src").alias("m"))
+    left_graph = (
+        e.join(star_min, on="dst")
+        .select("src", F.col("m").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+    left_cc = connected_components(left_graph, max_iters)
+    # isolated-star left nodes (their right neighbors connect them only to
+    # themselves) fall out of left_graph; they label themselves
+    lone = (
+        e.select(F.col("src").alias("node"))
+        .distinct()
+        .join(left_cc.select("node"), on="node", how="left_anti")
+        .select("node", F.col("node").alias("comp"))
+    )
+    left_all = left_cc.unionByName(lone)
+    right_cc = (
+        e.join(left_all.withColumnRenamed("node", "src"), on="src")
+        .groupBy("dst")
+        .agg(F.min("comp").alias("comp"))
+        .withColumnRenamed("dst", "node")
+    )
+    return left_all.unionByName(right_cc)
 
 
 def pagerank(edges: DataFrame, damping: float = 0.85, iters: int = 20) -> DataFrame:
@@ -732,34 +556,17 @@ def reachable(edges: DataFrame, sources: list[str], max_iters: int = MAX_ITERS) 
 
 def bfs_from_df(edges: DataFrame, seeds: DataFrame, max_depth: int = MAX_ITERS) -> DataFrame:
     """BFS seeded from a DataFrame of (node) rows — multi-source frontier
-    expansion giving each node its MIN depth from the seed set."""
-    sel = edges.select("src", "dst")
+    expansion giving each node its MIN depth from the seed set: (node,
+    depth). The same driver kernel and frontier loop as :func:`bfs`."""
+    e, pdf = collect_bounded(edges.select("src", "dst"))
     seeds = seeds.select("node").distinct()
-    e, pdf = collect_bounded(sel)
     seeds, seed_pdf = collect_bounded(seeds) if pdf is not None else (seeds, None)
     if seed_pdf is not None:
-        rows = _bfs_from_df_driver(pdf, seed_pdf["node"].values, max_depth)
-        return to_frame(edges.sparkSession, rows, "node string, depth int")
-    seed = _chk(seeds.select("node", F.lit(0).alias("depth")))
-    parts = [seed]
-    visited = seed.select("node")
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        msgs = frontier.join(e, frontier.node == e.src).select(F.col("dst").alias("node")).distinct()
-        new = (
-            msgs.join(visited, on="node", how="left_anti")
-            .select("node", F.lit(d).alias("depth"))
-            .localCheckpoint(eager=False)  # probe materializes (r11)
-        )
-        if new.isEmpty():
-            break
-        parts.append(new)
-        visited = visited.unionByName(new.select("node"))
-        frontier = new.select("node")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        rows = _bfs_driver(pdf, list(seed_pdf["node"].values), max_depth)
+        return to_frame(edges.sparkSession, [(n, d) for n, d, _ in rows], "node string, depth int")
+    no_pred = F.lit(None).cast(e.schema["src"].dataType)
+    seed = seeds.select("node", F.lit(0).alias("depth"), no_pred.alias("pred"))
+    return _general_bfs(e, seed, max_depth).select("node", "depth")
 
 
 def fuzzy_sssp(

@@ -215,9 +215,22 @@ def _chain_closure(known: DataFrame, keys: list[str]) -> DataFrame:
     return ptr.select(*keys, F.col("node").alias("s"), F.explode("ancs").alias("o"))
 
 
-def transitive_closure(
-    pairs: DataFrame, max_iters: int = MAX_ITERS, keys: list[str] | None = None
-) -> DataFrame:
+def _doubling(known: DataFrame, keys: list[str]) -> DataFrame:
+    """Close ``known`` by iterative doubling: each round joins the closure
+    so far with itself, so a diameter-d base closes in ceil(log2 d) rounds.
+    Lazy round checkpoints: the emptiness probe's job materializes each
+    round (local-checkpoint completion), removing the stand-alone eager
+    barrier per round (r11, same as the GAS loops)."""
+    for _ in range(MAX_ITERS):
+        grown = _join_through(known, known, keys)
+        new = grown.join(known, on=keys + ["s", "o"], how="left_anti").localCheckpoint(eager=False)
+        if new.isEmpty():
+            break
+        known = known.unionByName(new)
+    return known
+
+
+def transitive_closure(pairs: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """All (s, o) connected by 1+ hops of `pairs` (per graph key if given).
 
     Strategy is chosen from the base-pair count (available for free from the
@@ -265,37 +278,20 @@ def transitive_closure(
             *keys, F.col("o").alias("s"), F.col("s").alias("o")
         )
 
-    # lazy round checkpoints throughout: the emptiness probe's job
-    # materializes each round (local-checkpoint completion), removing the
-    # stand-alone eager barrier per round (r11, same as the GAS loops)
     if n_pairs <= DOUBLING_MAX_PAIRS:
-        for _ in range(max_iters):
-            grown = _join_through(known, known, keys)
-            new = grown.join(known, on=keys + ["s", "o"], how="left_anti").localCheckpoint(eager=False)
-            if new.isEmpty():
-                break
-            known = known.unionByName(new)
-        return known
-    base = known
-    delta = known
-    deep = True
-    for _ in range(max_iters):
+        return _doubling(known, keys)
+    # semi-naive: each round joins only the last round's new pairs (lazy
+    # checkpoints, as in _doubling)
+    base = delta = known
+    for _ in range(MAX_ITERS):
         grown = _join_through(delta, base, keys)
         delta = grown.join(known, on=keys + ["s", "o"], how="left_anti").localCheckpoint(eager=False)
         if delta.isEmpty():
-            deep = False
-            break
+            return known
         known = known.unionByName(delta)
-    if deep and not delta.isEmpty():
-        # diameter > max_iters: finish with doubling (log-round
-        # completion) instead of silently truncating a deep chain
-        for _ in range(max_iters):
-            grown = _join_through(known, known, keys)
-            new = grown.join(known, on=keys + ["s", "o"], how="left_anti").localCheckpoint(eager=False)
-            if new.isEmpty():
-                break
-            known = known.unionByName(new)
-    return known
+    # diameter > MAX_ITERS: finish with doubling (log-round completion)
+    # instead of silently truncating a deep chain
+    return _doubling(known, keys)
 
 
 # Frontier walks past their soft round budget keep walking (per-round cost

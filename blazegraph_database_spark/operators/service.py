@@ -217,13 +217,7 @@ def gas_service(store, patterns) -> DataFrame:
         flip = [F.col("dst").alias("src"), F.col("src").alias("dst")]
         edges = edges.select(*flip, *(["weight"] if lat is not None else []))
     elif opts["direction"] == "Undirected":
-        if lat is not None:  # weight-preserving symmetrization
-            rev = edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
-            )
-            edges = edges.unionByName(rev).distinct()
-        else:
-            edges = gas.undirect(edges)
+        edges = gas.undirect(edges)  # a link weight rides along
 
     mi = opts.get("maxIterations")
     if cls == "BFS":

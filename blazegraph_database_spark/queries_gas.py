@@ -77,11 +77,9 @@ def _tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def gas_bfs_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BFS levels + predecessors from the tree root (ref: BFS.java).
-    functional=True: the k → k//2 parent map is a tree by construction, so
-    the in-degree probe scan is skipped (the caller-knowledge hint)."""
+    """BFS levels + predecessors from the tree root (ref: BFS.java)."""
     edges = _tree_edges(spark, sf_dir)
-    out = gas.bfs(edges, ["1"], functional=True)
+    out = gas.bfs(edges, ["1"])
     return out.select(
         F.col("node").cast("long").alias("node_id"),
         F.col("depth").cast("int").alias("depth"),
@@ -106,7 +104,7 @@ def gas_sssp_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _tree_edges(spark, sf_dir).withColumn(
         "weight", (F.lit(1) + F.col("dst").cast("long") % 3).cast("double")
     )
-    out = gas.sssp(edges, ["1"], functional=True)
+    out = gas.sssp(edges, ["1"])
     return out.select(F.col("node").cast("long").alias("node_id"), F.round("dist", 1).alias("dist"))
 
 

@@ -99,6 +99,28 @@ def force_distributed(monkeypatch):
     return force
 
 
+@pytest.fixture(params=["driver", "distributed"])
+def tier(request, force_distributed):
+    """Runs the test once per tier: as is, then with the driver tier off."""
+    if request.param == "distributed":
+        force_distributed()
+    return request.param
+
+
+@pytest.fixture()
+def each_tier(force_distributed):
+    """The same two tiers inside one test, for tests whose ids predate the
+    ``tier`` fixture: ``for _ in each_tier(): ...`` runs the body on the
+    driver tier, then again with the driver tier off."""
+
+    def tiers():
+        yield "driver"
+        force_distributed()
+        yield "distributed"
+
+    return tiers
+
+
 @pytest.fixture(scope="session")
 def tiny_store(spark):
     """Hand-built RDF fixture for algebra edge cases."""

@@ -18,13 +18,6 @@ def _fields(df):
     return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
 
 
-@pytest.fixture(params=["driver", "distributed"])
-def tier(request, force_distributed):
-    if request.param == "distributed":
-        force_distributed()
-    return request.param
-
-
 @pytest.fixture()
 def edges(spark):
     return spark.createDataFrame(EDGES, "src string, dst string")
@@ -123,8 +116,13 @@ def test_collect_bounded_gate_and_nulls(spark, monkeypatch):
         lambda e: gas.pagerank(e, iters=3),
         lambda e: gas.paths(e, "2", "1", 4),
         lambda e: paths.transitive_closure(e.select(F.col("src").alias("s"), F.col("dst").alias("o"))),
+        lambda e: gas.bfs(e, ["8"], 4),
+        # flipped, the k -> k div 2 edges are a tree: the pointer-jump loop
+        lambda e: gas.bfs(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), ["1"], 4),
+        lambda e: gas.sssp(e.withColumn("weight", F.lit(1.0)), ["8"], 4),
+        lambda e: gas.bfs_from_df(e, e.sparkSession.createDataFrame([("8",)], "node string"), 4),
     ],
-    ids=["pagerank", "paths", "closure"],
+    ids=["pagerank", "paths", "closure", "bfs", "bfs_tree", "sssp", "bfs_from_df"],
 )
 def test_over_gate_input_is_computed_once(spark, monkeypatch, run):
     """An input over the gate falls through to the distributed loop, which
@@ -137,14 +135,19 @@ def test_over_gate_input_is_computed_once(spark, monkeypatch, run):
         computed.add(1)
         return v
 
-    edges = spark.range(2, 12).select(
-        tick(F.col("id").cast("string")).alias("src"),
-        F.expr("cast(id div 2 as string)").alias("dst"),
+    # both endpoints come from the ticked id, so a job reading either one
+    # off the input (the in-degree probe reads only dst) counts
+    edges = (
+        spark.range(2, 12)
+        .select(tick(F.col("id").cast("string")).alias("k"))
+        .select(F.col("k").alias("src"), F.expr("cast(cast(k as bigint) div 2 as string)").alias("dst"))
     )
     monkeypatch.setattr(driver_tier, "DRIVER_TIER_MAX_ROWS", 3)
     out = run(edges).collect()
     assert out
     assert computed.value == 10
+
+
 def test_driver_tier_bfs_runs_one_job(spark, edges):
     """The driver tier reads the edges in one bounded collect: no
     checkpoint job and no separate count job before the result exists."""

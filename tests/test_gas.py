@@ -16,125 +16,121 @@ def diamond(spark):
     )
 
 
-def test_bfs_depths_and_pred(diamond):
-    out = {r["node"]: (r["depth"], r["pred"]) for r in gas.bfs(diamond, ["a"]).collect()}
-    assert out == {"a": (0, None), "b": (1, "a"), "c": (1, "a"), "d": (2, "b")}
+def test_bfs_depths_and_pred(diamond, each_tier):
+    for _ in each_tier():
+        out = {r["node"]: (r["depth"], r["pred"]) for r in gas.bfs(diamond, ["a"]).collect()}
+        assert out == {"a": (0, None), "b": (1, "a"), "c": (1, "a"), "d": (2, "b")}
 
 
-def test_sssp_weighted(spark):
+def test_sssp_weighted(spark, each_tier):
     edges = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "c", 1.0), ("a", "c", 5.0), ("c", "d", 1.0)],
         "src string, dst string, weight double",
     )
-    out = {r["node"]: r["dist"] for r in gas.sssp(edges, ["a"]).collect()}
-    assert out == {"a": 0.0, "b": 1.0, "c": 2.0, "d": 3.0}
+    for _ in each_tier():
+        out = {r["node"]: r["dist"] for r in gas.sssp(edges, ["a"]).collect()}
+        assert out == {"a": 0.0, "b": 1.0, "c": 2.0, "d": 3.0}
 
 
-def test_functional_sssp_hop_bound(spark):
+def test_functional_sssp_hop_bound(spark, each_tier):
     """On a functional chain, max_iters bounds hops exactly as the general
     Bellman-Ford path does: nodes beyond max_iters hops are unreached
-    (ADVICE r3 — pointer doubling used to overshoot the bound)."""
+    (ADVICE r3 — pointer doubling used to overshoot the bound). Past the
+    driver tier the chain takes the pointer-jump loop."""
+    schema = "src string, dst string, weight double"
     chain = spark.createDataFrame(
-        [("a", "b", 1.0), ("b", "c", 1.0), ("c", "d", 1.0), ("d", "e", 1.0)],
-        "src string, dst string, weight double",
+        [("a", "b", 1.0), ("b", "c", 1.0), ("c", "d", 1.0), ("d", "e", 1.0)], schema
     )
-    out = {r["node"]: r["dist"] for r in gas.sssp(chain, ["a"], max_iters=2).collect()}
-    assert out == {"a": 0.0, "b": 1.0, "c": 2.0}
-    # general path on the same graph + bound must agree
-    gen = {
-        r["node"]: r["dist"]
-        for r in gas.sssp(chain, ["a"], max_iters=2, functional=False).collect()
-    }
-    assert gen == out
+    # a second parent for c, unreachable from a: no longer functional
+    # (general path), every distance unchanged
+    general = chain.unionByName(spark.createDataFrame([("z", "c", 1.0)], schema))
+    for _ in each_tier():
+        out = {r["node"]: r["dist"] for r in gas.sssp(chain, ["a"], max_iters=2).collect()}
+        assert out == {"a": 0.0, "b": 1.0, "c": 2.0}
+        # general path on the same graph + bound must agree
+        gen = {r["node"]: r["dist"] for r in gas.sssp(general, ["a"], max_iters=2).collect()}
+        assert gen == out
 
 
-def test_bfs_functional_hint_skips_probe(spark, monkeypatch):
-    chain = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "src string, dst string"
-    )
-
-    def boom(_e):  # pragma: no cover - called only on regression
-        raise AssertionError("probe should be skipped when functional= is given")
-
-    monkeypatch.setattr(gas, "_is_functional", boom)
-    out = {r["node"]: r["depth"] for r in gas.bfs(chain, ["a"], functional=True).collect()}
-    assert out == {"a": 0, "b": 1, "c": 2}
+def test_cc_two_components(diamond, each_tier):
+    for _ in each_tier():
+        out = {r["node"]: r["comp"] for r in gas.connected_components(diamond).collect()}
+        assert out == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e", "f": "e"}
 
 
-def test_cc_two_components(diamond):
-    out = {r["node"]: r["comp"] for r in gas.connected_components(diamond).collect()}
-    assert out == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e", "f": "e"}
-
-
-def test_cc_two_star_agrees_with_label_prop(spark, diamond):
-    """The large-star/small-star contraction (diameter-independent scale
-    path) must produce identical labels to min-label propagation."""
-    two = {r["node"]: r["comp"] for r in gas.connected_components(diamond, algorithm="two_star").collect()}
-    assert two == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e", "f": "e"}
-    # deep chain — the diameter-dominated case two-star exists for
+def test_cc_chain_and_self_loop(spark, each_tier):
+    # deep chain: one component labelled by its minimum
     chain = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i+1:03d}") for i in range(50)], "src string, dst string"
     )
-    out = gas.connected_components(chain, algorithm="two_star").collect()
-    assert {r["comp"] for r in out} == {"n000"} and len(out) == 51
     # self-loop-only nodes keep a label
     sl = spark.createDataFrame([("x", "x"), ("a", "b")], "src string, dst string")
-    got = {r["node"]: r["comp"] for r in gas.connected_components(sl, algorithm="two_star").collect()}
-    assert got == {"x": "x", "a": "a", "b": "a"}
+    for _ in each_tier():
+        out = gas.connected_components(chain).collect()
+        assert {r["comp"] for r in out} == {"n000"} and len(out) == 51
+        got = {r["node"]: r["comp"] for r in gas.connected_components(sl).collect()}
+        assert got == {"x": "x", "a": "a", "b": "a"}
 
 
-def test_pagerank_sums_to_one_and_ranks_sink_highest(diamond):
-    ranks = {r["node"]: r["rank"] for r in gas.pagerank(diamond, iters=15).collect()}
-    assert abs(sum(ranks.values()) - 1.0) < 1e-6
-    assert ranks["d"] == max(ranks[n] for n in "abcd")
+def test_pagerank_sums_to_one_and_ranks_sink_highest(diamond, each_tier):
+    for _ in each_tier():
+        ranks = {r["node"]: r["rank"] for r in gas.pagerank(diamond, iters=15).collect()}
+        assert abs(sum(ranks.values()) - 1.0) < 1e-6
+        assert ranks["d"] == max(ranks[n] for n in "abcd")
 
 
-def test_pagerank_two_node_cycle(spark):
+def test_pagerank_two_node_cycle(spark, each_tier):
     edges = spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string")
-    ranks = {r["node"]: r["rank"] for r in gas.pagerank(edges, iters=30).collect()}
-    assert abs(ranks["a"] - 0.5) < 1e-9 and abs(ranks["b"] - 0.5) < 1e-9
+    for _ in each_tier():
+        ranks = {r["node"]: r["rank"] for r in gas.pagerank(edges, iters=30).collect()}
+        assert abs(ranks["a"] - 0.5) < 1e-9 and abs(ranks["b"] - 0.5) < 1e-9
 
 
-def test_paths_enumeration(diamond):
-    rows = {(r["path"], r["hops"]) for r in gas.paths(diamond, "a", "d").collect()}
-    assert rows == {("a->b->d", 2), ("a->c->d", 2)}
+def test_paths_enumeration(diamond, each_tier):
+    for _ in each_tier():
+        rows = {(r["path"], r["hops"]) for r in gas.paths(diamond, "a", "d").collect()}
+        assert rows == {("a->b->d", 2), ("a->c->d", 2)}
 
 
-def test_paths_cycle_safe(spark):
+def test_paths_cycle_safe(spark, each_tier):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string"
     )
-    rows = {r["path"] for r in gas.paths(edges, "a", "c", max_length=5).collect()}
-    assert rows == {"a->b->c"}
+    for _ in each_tier():
+        rows = {r["path"] for r in gas.paths(edges, "a", "c", max_length=5).collect()}
+        assert rows == {"a->b->c"}
 
 
-def test_reachable(diamond):
-    assert sorted(r["node"] for r in gas.reachable(diamond, ["b"]).collect()) == ["b", "d"]
+def test_reachable(diamond, each_tier):
+    for _ in each_tier():
+        assert sorted(r["node"] for r in gas.reachable(diamond, ["b"]).collect()) == ["b", "d"]
 
 
-def test_cc_bipartite_matches_label_prop(spark):
+def test_cc_bipartite_matches_label_prop(spark, each_tier):
     """The bipartite-contracted CC strategy must produce exactly the
     label-prop labels on random bipartite graphs (left ids sort below
     right ids), including isolated stars and multi-right bridges."""
     import random
 
-    from blazegraph_database_spark.operators import gas
-
     random.seed(11)
-    for _ in range(4):
-        edges = list(
+    graphs = [
+        list(
             {
                 (f"a{random.randint(0, 12)}", f"b{random.randint(0, 12)}")
                 for _ in range(random.randint(2, 30))
             }
         )
-        df = spark.createDataFrame(edges, "src string, dst string")
-        want = {(r["node"], r["comp"]) for r in gas.connected_components(df).collect()}
-        got = {
-            (r["node"], r["comp"])
-            for r in gas.connected_components_bipartite(df).collect()
-        }
-        assert got == want, edges
+        for _ in range(4)
+    ]
+    for _ in each_tier():
+        for edges in graphs:
+            df = spark.createDataFrame(edges, "src string, dst string")
+            want = {(r["node"], r["comp"]) for r in gas.connected_components(df).collect()}
+            got = {
+                (r["node"], r["comp"])
+                for r in gas.connected_components_bipartite(df).collect()
+            }
+            assert got == want, edges
 
 
 def test_concurrent_iterative_queries_no_lock(spark, force_distributed):

@@ -180,15 +180,12 @@ class TestLazyCheckpointLoops:
             assert out[k] == pytest.approx(v, abs=1e-12), k
 
     def test_label_prop_cc_and_bfs_depths(self, spark):
-        from blazegraph_database_spark.operators.gas import (
-            bfs,
-            connected_components_label_prop,
-        )
+        from blazegraph_database_spark.operators.gas import bfs, connected_components
 
         edges = spark.createDataFrame(
             [("1", "2"), ("2", "3"), ("4", "5")], "src string, dst string"
         )
-        comp = {r["node"]: r["comp"] for r in connected_components_label_prop(edges).collect()}
+        comp = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
         assert comp == {"1": "1", "2": "1", "3": "1", "4": "4", "5": "4"}
         out = {r["node"]: r["depth"] for r in bfs(edges, ["1"]).collect()}
         assert out == {"1": 0, "2": 1, "3": 2}

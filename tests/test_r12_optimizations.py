@@ -84,7 +84,7 @@ class TestBfsDriverTier:
         df = spark.createDataFrame(edges, "src string, dst string")
         tier = _rows(gas.bfs(df, ["1"]))
         force_distributed()
-        dist = _rows(gas.bfs(df, ["1"], functional=True))
+        dist = _rows(gas.bfs(df, ["1"]))
         assert tier == dist
 
     def test_max_depth_bound(self, spark, force_distributed):
