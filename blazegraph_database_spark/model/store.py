@@ -7,27 +7,28 @@ role (fast lookup by predicate) is played by disk partitioning on ``p`` plus
 Catalyst partition pruning; per-predicate stats drive BGP join ordering the
 way the reference's B+Tree range counts drive its static join optimizer
 (reference: bigdata-core/bigdata-rdf/.../sparql/ast/optimizers/ASTStaticJoinOptimizer.java).
+
+Views and memos. A store's DATA is built lazily and kept in one memo dict
+that every view of the store shares: the melted union ``df``, the
+per-predicate stats, the virtual-index sources and the full-text surfaces.
+Per-query compile flags (datatype tracking, id-join vars, dataset scope,
+named solution sets, ...) live on the view: ``view(**flags)`` is a shallow
+copy that sets flags and shares the memo, so whatever one query builds,
+every later query on the same store reuses — the way every reference query
+reads the one ``AbstractTripleStore``'s indices. A memo lives as long as its
+store: a version kept in ``UpdatableStore.versions`` keeps its memo.
 """
 
 from __future__ import annotations
 
+import copy
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TRIPLE_COLS = ["s", "p", "o_lex", "o_dt"]
-
-
-def _accepts_kwarg(fn, name: str) -> bool:
-    """Capability probe by signature — never by trial call, which would
-    swallow genuine TypeErrors from inside the factory and run it twice."""
-    import inspect
-
-    try:
-        return name in inspect.signature(fn).parameters
-    except (TypeError, ValueError):  # builtins/partials without signatures
-        return False
 
 
 @dataclass
@@ -48,8 +49,8 @@ class TripleStore:
     analog, and the difference between scanning one column of one table and
     scanning every triple at 100 TB. The melted ``df`` remains the general
     path (variable predicates, CONSTRUCT output, closure results); when a
-    ``df_factory`` is given, that union view is built only on first access,
-    so stores whose queries stay on the virtual indices never pay for it.
+    ``df_factory`` is given, that union view is built on first access, once
+    per store, and shared by every view of it.
     """
 
     def __init__(
@@ -64,14 +65,21 @@ class TripleStore:
     ):
         if df is None and df_factory is None:
             raise ValueError("TripleStore needs df or df_factory")
-        self._df = df
         self._df_factory = df_factory
-        self._stats = _stats
-        # Whether per-predicate counts in _stats are EXACT (safe to answer
-        # COUNT(*) / ESTCARD from; ref: fast range counts are exact in the
-        # reference's B+Tree). Lazily-computed stats are exact; injected
+        # The data memo, shared by every view (see the module docstring).
+        # "stats_exact": whether per-predicate counts are EXACT (safe to
+        # answer COUNT(*) / ESTCARD from; ref: fast range counts are exact in
+        # the reference's B+Tree). Lazily-computed stats are exact; injected
         # stats default to estimates until the injector marks them.
-        self._stats_exact = _stats is None
+        self._memo: dict = {"stats_exact": _stats is None}
+        if df is not None:
+            self._memo["df"] = df
+        if _stats is not None:
+            self._memo["stats"] = _stats
+        # serializes memo builds: concurrent REST requests share the memo,
+        # and a build (a union, a checkpointed index) runs Spark jobs.
+        # Re-entrant: a full-text build reads the union through memo() too.
+        self._memo_lock = threading.RLock()
         self.pred_sources = pred_sources
         # Star-fusion hooks (see plans/compiler._compile_bgp): pred_table maps
         # predicate → base table; star_factory([preds]) returns one scan with
@@ -79,6 +87,8 @@ class TripleStore:
         self.star_factory = star_factory
         self.pred_table = pred_table
         self.pred_dt = pred_dt  # predicate → o_dt tag (constant per predicate)
+
+        # ---- per-view flags: the only attributes view() may set ----
         # When True, the compiler binds a companion `<var>__dt` column for
         # object-position variables so CONSTRUCT/UPDATE preserve term type
         # (ref keeps IV type through construct; see ADVICE round 1).
@@ -97,101 +107,92 @@ class TripleStore:
         # FROM / FROM NAMED scoping (None = no dataset declared)
         self.dataset_default: tuple | None = None
         self.dataset_named: tuple | None = None
+        # named solution sets (Blazegraph named subqueries: WITH {...} AS
+        # %set ... INCLUDE %set; ref: NamedSubqueryRoot.java /
+        # NamedSubqueryInclude.java), name -> DataFrame
+        self.named_sets: dict = {}
         # the quad store a graph()-restricted view came from — a nested
         # GRAPH term must resolve against the ORIGINAL dataset, never the
         # already-restricted view (SPARQL active-graph override)
         self.parent_quads: "TripleStore | None" = None
-        self._src_cache: dict = {}
+        # the UpdatableStore serving this view (SERVICE <bd:rdrhistory>)
+        self.updatable = None
+        # SERVICE fts:search transport override, (endpoint, query, params)
+        self.fts_transport = None
+        # False exposes the raw quad multiset as the default graph
+        # (hint:defaultGraphDistinctFilter "false")
+        self.default_graph_distinct = True
+        # explain_trace's per-BGP optimizer record, when tracing
+        self._trace: list | None = None
 
-    def with_dt_tracking(self) -> "TripleStore":
-        """Shallow view of this store with datatype tracking on."""
-        import copy
-
+    def view(self, **flags) -> "TripleStore":
+        """Shallow view of this store with the given per-view flags set. The
+        view shares this store's data memo."""
         out = copy.copy(self)
-        out.track_dt = True
-        return out
-
-    def with_id_join_vars(self, id_vars: frozenset) -> "TripleStore":
-        """Shallow view whose pattern compiler binds these vars as term ids."""
-        import copy
-
-        out = copy.copy(self)
-        out.id_join_vars = frozenset(id_vars)
-        return out
-
-    def with_native_typed_vars(self, native: dict) -> "TripleStore":
-        """Shallow view whose pattern compiler binds these vars natively."""
-        import copy
-
-        out = copy.copy(self)
-        out.native_typed_vars = dict(native)
+        for name, value in flags.items():
+            if name not in vars(self) or name in ("_memo", "_memo_lock"):
+                raise TypeError(f"unknown store view flag {name!r}")
+            setattr(out, name, value)
         return out
 
     def with_dataset(self, default: tuple = (), named: tuple = ()) -> "TripleStore":
-        """Shallow view scoped by FROM/USING (default) and FROM NAMED/
-        USING NAMED (named). SPARQL dataset semantics: once ANY dataset
-        clause is present the dataset is FULLY specified — FROM without
-        FROM NAMED means the named-graph set is EMPTY (GRAPH patterns
-        yield zero solutions), and FROM NAMED without FROM means the
-        default graph is empty. Both sides therefore become concrete
-        (possibly-empty) tuples together; None = no dataset clause."""
-        import copy
-
-        out = copy.copy(self)
+        """View scoped by FROM/USING (default) and FROM NAMED/USING NAMED
+        (named). SPARQL dataset semantics: once ANY dataset clause is
+        present the dataset is FULLY specified — FROM without FROM NAMED
+        means the named-graph set is EMPTY (GRAPH patterns yield zero
+        solutions), and FROM NAMED without FROM means the default graph is
+        empty. Both sides therefore become concrete (possibly-empty) tuples
+        together; None = no dataset clause."""
         if default or named:
-            out.dataset_default = tuple(default)
-            out.dataset_named = tuple(named)
-        else:
-            out.dataset_default = None
-            out.dataset_named = None
-        # the shallow copy would carry the UNRESTRICTED store's memoized
-        # full-text surfaces into the dataset view — drop them so they
-        # rebuild over the restricted dataset
-        for memo in ("_ft_literal_texts", "_ft_literal_index",
-                     "_ft_value_index", "_ft_subject_index"):
-            out.__dict__.pop(memo, None)
-        return out
+            return self.view(dataset_default=tuple(default), dataset_named=tuple(named))
+        return self.view(dataset_default=None, dataset_named=None)
 
-    def with_named_sets(self, sets: dict) -> "TripleStore":
-        """Shallow view carrying named solution sets (Blazegraph named
-        subqueries: WITH {...} AS %set ... INCLUDE %set; ref:
-        NamedSubqueryRoot.java / NamedSubqueryInclude.java)."""
-        import copy
-
-        out = copy.copy(self)
-        out.named_sets = {**getattr(self, "named_sets", {}), **sets}
-        return out
+    def memo(self, key, build):
+        """The shared memo entry ``key``, built by ``build()`` on first use."""
+        memo = self._memo
+        if key not in memo:
+            with self._memo_lock:
+                if key not in memo:
+                    memo[key] = build()
+        return memo[key]
 
     @property
     def df(self) -> DataFrame:
-        if self._df is None:
-            self._df = self._df_factory()
-        return self._df
+        return self.memo("df", self._df_factory)
 
     @df.setter
     def df(self, value: DataFrame) -> None:
-        self._df = value
+        self._memo["df"] = value
+
+    @property
+    def _stats(self) -> dict[str, PredStat] | None:
+        return self._memo.get("stats")
+
+    @_stats.setter
+    def _stats(self, value: dict[str, PredStat] | None) -> None:
+        self._memo["stats"] = value
+
+    @property
+    def _stats_exact(self) -> bool:
+        return self._memo["stats_exact"]
+
+    @_stats_exact.setter
+    def _stats_exact(self, value: bool) -> None:
+        self._memo["stats_exact"] = value
 
     def pattern_source(self, pred: str, typed: bool = False) -> DataFrame | None:
         """Virtual-index DataFrame for a constant predicate, if registered.
 
         ``typed=True`` asks for the object column in its NATIVE parquet type
-        (no lexical string cast) — factories that predate the typed path
-        ignore the flag and the compiler falls back to casting the lexical
-        column, which is semantically identical."""
+        (no lexical string cast)."""
         if not self.pred_sources or pred not in self.pred_sources:
             return None
-        key = (pred, typed)
-        if key not in self._src_cache:
-            factory = self.pred_sources[pred]
-            use_typed = typed and _accepts_kwarg(factory, "typed")
-            self._src_cache[key] = factory(typed=True) if use_typed else factory()
-        return self._src_cache[key]
+        return self.memo(("source", pred, typed), lambda: self.pred_sources[pred](typed=typed))
 
     @property
     def spark(self) -> SparkSession:
-        if self._df is not None:
-            return self._df.sparkSession
+        if "df" in self._memo:
+            return self._memo["df"].sparkSession
         # Don't force the lazy union view just to get a session handle.
         active = SparkSession.getActiveSession()
         return active if active is not None else self.df.sparkSession
@@ -208,7 +209,7 @@ class TripleStore:
         stats would be persisted next to the parquet at load time — see
         sources/parquet_store.py which does exactly that.
         """
-        if self._stats is None:
+        def build() -> dict[str, PredStat]:
             rows = (
                 self.df.groupBy("p")
                 .agg(
@@ -218,9 +219,9 @@ class TripleStore:
                 )
                 .collect()
             )
-            self._stats = {r["p"]: PredStat(r["c"], max(r["ds"], 1), max(r["do"], 1)) for r in rows}
-            self._stats_exact = True
-        return self._stats
+            return {r["p"]: PredStat(r["c"], max(r["ds"], 1), max(r["do"], 1)) for r in rows}
+
+        return self.memo("stats", build)
 
     def stats_are_exact(self) -> bool:
         """True when per-predicate counts can answer COUNT(*)/ESTCARD

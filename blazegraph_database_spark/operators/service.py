@@ -994,7 +994,7 @@ def bd_history_service(store, sps) -> DataFrame:
 
     from blazegraph_database_spark.model.terms import Var, const_lex, is_const
 
-    us = getattr(store, "updatable", None)
+    us = store.updatable
     if us is None:
         raise ValueError(
             "SERVICE <bd:history> needs an updatable store (query via "
@@ -1423,7 +1423,7 @@ def label_service_join(store, ldf: DataFrame, sps) -> DataFrame:
             # missing label ("Q42" when no rdfs:label matches)
             val = F.coalesce(val, F.regexp_extract(F.col(evar), r"([^/#]*)$", 1))
         ldf = ldf.withColumn(ovar, val)
-        if getattr(store, "track_dt", False):
+        if store.track_dt:
             # the label keeps its language tag; the local-name fallback is a
             # plain string; an unbound Description/AltLabel stays untyped
             dt = F.when(F.col("__lab").isNotNull(), F.col("__labdt"))

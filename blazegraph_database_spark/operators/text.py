@@ -13,8 +13,6 @@ identical arithmetic (list_reduce), giving the driver an exact SQL oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -25,10 +23,8 @@ from pyspark.sql import functions as F
 # sf0.1 corpus the materialization costs ~0.6-0.9 s MORE than the rescans it
 # saves (r11 addendum; r12 floor fix). Gated on the source plan's estimated
 # size — free to read, no job — with the threshold between those two
-# measured points; env-tunable for other storage/CPU profiles.
-TF_CHECKPOINT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TF_CHECKPOINT_MIN_BYTES", "2000000")
-)
+# measured points.
+TF_CHECKPOINT_MIN_BYTES = 2_000_000
 
 
 def _fanout_materialize(tf: DataFrame, source: DataFrame) -> DataFrame | None:

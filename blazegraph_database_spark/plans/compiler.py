@@ -49,11 +49,12 @@ def evaluate(store: TripleStore, node) -> DataFrame:
         return fast
     native = _native_typed_vars(node, store)
     id_vars = _id_join_vars(node) - set(native)
+    flags = {}
     if id_vars:
-        store = store.with_id_join_vars(id_vars)
+        flags["id_join_vars"] = frozenset(id_vars)
     if native:
-        store = store.with_native_typed_vars(native)
-    return _compile(node, store)
+        flags["native_typed_vars"] = native
+    return _compile(node, store.view(**flags) if flags else store)
 
 
 # ------------------------------------------------- fast range-count scan --
@@ -104,7 +105,7 @@ def _fast_scan_rewrite(store: TripleStore, node):
         return None
     if not store.stats_are_exact():
         return None
-    if getattr(store, "track_dt", False):
+    if store.track_dt:
         return None  # dt-tracked consumers expect __dt companion columns
 
     def count_df(alias: str, m) -> DataFrame:
@@ -446,7 +447,7 @@ def _native_typed_vars(root, store) -> dict[str, str]:
     equality; Spark treats NaN as equal in join keys, matching the lexical
     'NaN' self-join.
     """
-    pred_dt = getattr(store, "pred_dt", None) or {}
+    pred_dt = store.pred_dt or {}
     if not pred_dt:
         return {}
     bind_tags: dict[str, set] = {}
@@ -716,7 +717,7 @@ def _pattern_df(sp: A.SP, store: TripleStore) -> DataFrame:
     if isinstance(sp.s, A.Emb) or isinstance(sp.o, A.Emb):
         return _emb_pattern_df(sp, store)
     df = None
-    native = getattr(store, "native_typed_vars", {})
+    native = store.native_typed_vars
     if sp.p is not None and is_const(sp.p):
         aliases = _pred_aliases(const_lex(sp.p))
         stats = store._stats
@@ -782,8 +783,8 @@ def _pattern_df(sp: A.SP, store: TripleStore) -> DataFrame:
     # concrete set means "match nothing" (FROM without FROM NAMED leaves
     # the named-graph set empty, and vice versa) — not "unrestricted".
     if "g" in cols:
-        dd = getattr(store, "dataset_default", None)
-        dn = getattr(store, "dataset_named", None)
+        dd = store.dataset_default
+        dn = store.dataset_named
         if sp.g is None and dd is not None:
             conds.append(_cc("g").isin(list(dd)) if dd else F.lit(False))
         if isinstance(sp.g, Var) and dn is not None:
@@ -798,7 +799,7 @@ def _pattern_df(sp: A.SP, store: TripleStore) -> DataFrame:
         df = df.filter(allc)
     if (
         sp.g is None and "g" in cols and store.has_graphs
-        and getattr(store, "default_graph_distinct", True)
+        and store.default_graph_distinct
     ):
         # DEFAULT-graph pattern over a quad store: the default graph is the
         # RDF MERGE of the graphs — dedup at the TRIPLE level (the
@@ -808,7 +809,7 @@ def _pattern_df(sp: A.SP, store: TripleStore) -> DataFrame:
         # triples binding the same var value stay two solutions)
         df = df.dropDuplicates(["s", "p", "o_lex", "o_dt"])
     sel, seen = [], {}
-    id_vars = getattr(store, "id_join_vars", frozenset())
+    id_vars = store.id_join_vars
     for col, pos in (("s", sp.s), ("p", sp.p), ("o_lex", sp.o), ("g", sp.g)):
         if isinstance(pos, Var):
             if pos.name in seen:  # repeated var within one pattern: equality filter
@@ -914,19 +915,14 @@ def _star_fuse(patterns: list, store: TripleStore):
         preds = [const_lex(patterns[i].p) for i in uniq]
         if store.track_dt and not (store.pred_dt and all(p in store.pred_dt for p in preds)):
             continue  # need per-pred dt tags to bind companions; join path handles it
-        native = getattr(store, "native_typed_vars", {})
+        native = store.native_typed_vars
         native_preds = frozenset(
             const_lex(patterns[i].p) for i in uniq if patterns[i].o.name in native
         )
-        from blazegraph_database_spark.model.store import _accepts_kwarg
-
-        if _accepts_kwarg(store.star_factory, "native"):
-            df = store.star_factory(preds, native=native_preds)
-        else:  # star factory without native support
-            df = store.star_factory(preds)
+        df = store.star_factory(preds, native=native_preds)
         if df is None:
             continue
-        id_vars = getattr(store, "id_join_vars", frozenset())
+        id_vars = store.id_join_vars
 
         def var_col(col: F.Column, vname: str) -> F.Column:
             if vname in id_vars:
@@ -1051,7 +1047,7 @@ def _compile_bgp(node: A.BGP, store: TripleStore) -> DataFrame:
         idx = joinable[0] if joinable else 0
         ordered.append(entries.pop(idx))
         bound |= ordered[-1][2]
-    trace = getattr(store, "_trace", None)
+    trace = store._trace
     if trace is not None:
         trace.append(
             {
@@ -1066,9 +1062,9 @@ def _compile_bgp(node: A.BGP, store: TripleStore) -> DataFrame:
                     }
                     for k, (_df, est, vs) in enumerate(ordered)
                 ],
-                "id_join_vars": sorted(getattr(store, "id_join_vars", ())),
+                "id_join_vars": sorted(store.id_join_vars),
                 "native_typed_vars": dict(
-                    sorted(getattr(store, "native_typed_vars", {}).items())
+                    sorted(store.native_typed_vars.items())
                 ),
             }
         )
@@ -1247,7 +1243,7 @@ def _compile_bgp_hinted(patterns: list, hints: dict, store: TripleStore) -> Data
             (_pattern_df(sp, store), _measured_estimate(sp, store), _vars_of(sp))
             for sp in patterns
         ]
-        trace = getattr(store, "_trace", None)
+        trace = store._trace
         if len(entries) <= RTO_MAX_SAMPLED_PATTERNS and len(entries) > 2:
             ordered = _rto_order(entries, trace)
         else:
@@ -1314,7 +1310,7 @@ def _(node: A.BGP, store: TripleStore) -> DataFrame:
         from blazegraph_database_spark.operators import service as _svc
 
         out = None
-        idv = getattr(store, "id_join_vars", frozenset())
+        idv = store.id_join_vars
         deferred = []
         for _var, pats in geo_magic.items():
             if _svc.geo_param_vars(pats):
@@ -1360,7 +1356,7 @@ def _(node: A.BGP, store: TripleStore) -> DataFrame:
         # binds the MATCHED LITERAL, which then joins object-position
         # patterns naturally.
         out = None
-        idv = getattr(store, "id_join_vars", frozenset())
+        idv = store.id_join_vars
         for var, pats in magic.items():
             # GRAPH-scoped search (the SPs carry g after _push_graph /
             # GRAPH <g>): a hit counts once per graph holding the matched
@@ -1383,7 +1379,7 @@ def _(node: A.BGP, store: TripleStore) -> DataFrame:
                 if is_const(gterm):
                     pairs = pairs.filter(F.col("g") == const_lex(gterm)).drop("g")
                 else:
-                    dn = getattr(store, "dataset_named", None)
+                    dn = store.dataset_named
                     if dn is not None:
                         pairs = pairs.filter(
                             F.col("g").isin(list(dn)) if dn else F.lit(False)
@@ -1471,6 +1467,12 @@ def _split_bds_magic(patterns):
     return magic, rest
 
 
+def _scoped_memo(store: TripleStore, name: str, build) -> DataFrame:
+    """A full-text surface from the store's shared memo, one entry per
+    dataset scope: a FROM / FROM NAMED view builds over its own graphs."""
+    return store.memo((name, store.dataset_default, store.dataset_named), build)
+
+
 def _dataset_scoped_df(store: TripleStore, named_scope: bool = False) -> DataFrame:
     """The store's statements restricted to its FROM dataset (if any) —
     every full-text surface builds over THIS view so a search under
@@ -1482,13 +1484,13 @@ def _dataset_scoped_df(store: TripleStore, named_scope: bool = False) -> DataFra
     still find :g1's literals (search-named-graphs2/4/5)."""
     df = store.df
     if named_scope:
-        dn = getattr(store, "dataset_named", None)
+        dn = store.dataset_named
         if "g" in df.columns:
             df = df.filter(F.col("g").isNotNull() & (F.col("g") != ""))
             if dn is not None:
                 df = df.filter(F.col("g").isin(list(dn)) if dn else F.lit(False))
         return df
-    dd = getattr(store, "dataset_default", None)
+    dd = store.dataset_default
     if dd is not None and "g" in df.columns:
         df = df.filter(F.col("g").isin(list(dd)) if dd else F.lit(False))
     return df
@@ -1502,9 +1504,7 @@ def _store_literal_value_index(store: TripleStore, named_scope: bool = False) ->
     per dataset scope (default-graph vs GRAPH-pattern/NAMED view)."""
     from blazegraph_database_spark.operators import fulltext
 
-    attr = "_ft_value_index_named" if named_scope else "_ft_value_index"
-    cached = getattr(store, attr, None)
-    if cached is None:
+    def build() -> DataFrame:
         docs = (
             _dataset_scoped_df(store, named_scope)
             .filter(F.col("o_dt") == "string")
@@ -1512,9 +1512,9 @@ def _store_literal_value_index(store: TripleStore, named_scope: bool = False) ->
             .distinct()
             .select("s", F.col("s").alias("text"))
         )
-        cached = fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
-        setattr(store, attr, cached)
-    return cached
+        return fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
+
+    return _scoped_memo(store, "ft_value_index_named" if named_scope else "ft_value_index", build)
 
 
 def _bds_inline_search(store: TripleStore, pats, named_scope: bool = False) -> DataFrame:
@@ -2675,7 +2675,7 @@ def _(node: A.GraphScope, store: TripleStore) -> DataFrame:
     # against g2 of the ORIGINAL dataset, never the g1-restricted view
     # (store.graph() records its source as parent_quads; ref: ticket_832c —
     # the reference resolves every GRAPH term against the full quad store).
-    base = getattr(store, "parent_quads", None) or store
+    base = store.parent_quads or store
     if not base.has_graphs:
         if isinstance(node.g, Var):
             # TRIPLES-MODE parity (ref: ticket_bg1760 — the reference's
@@ -2688,9 +2688,9 @@ def _(node: A.GraphScope, store: TripleStore) -> DataFrame:
         # constant graph: with ZERO named graphs the pattern has zero
         # solutions (a triples-only store's named-graph set is empty)
         return _compile(node.child, store).limit(0)
-    dn = getattr(store, "dataset_named", None)
+    dn = store.dataset_named
     if dn is None and base is not store:
-        dn = getattr(base, "dataset_named", None)
+        dn = base.dataset_named
 
     def _named_graphs(alias: str) -> DataFrame:
         # the named graphs of the dataset (one row per graph; the default
@@ -2852,13 +2852,13 @@ def _(node: A.WithNamed, store: TripleStore) -> DataFrame:
             )
         for name in ready:
             sets[name] = _compile(pending.pop(name), scoped).localCheckpoint(eager=True)
-            scoped = store.with_named_sets(sets)
+            scoped = store.view(named_sets={**store.named_sets, **sets})
     return _compile(node.child, scoped)
 
 
 @_compile.register
 def _(node: A.NamedInclude, store: TripleStore) -> DataFrame:
-    sets = getattr(store, "named_sets", None) or {}
+    sets = store.named_sets
     if node.name not in sets:
         raise ValueError(f"INCLUDE of undeclared named subquery %{node.name}")
     return sets[node.name]
@@ -2869,17 +2869,19 @@ def _store_literal_index(store: TripleStore) -> DataFrame:
     = concatenated literal values (the reference's text index likewise
     indexes the lexicon's literals; ref: search/FullTextIndex.java).
 
-    Memoized ON the store instance (not a module dict keyed by id(store):
-    CPython reuses ids after GC, which could hand a stale checkpointed index
-    to an unrelated store, and the module dict never shrank — ADVICE r2)."""
+    Memoized in the store's shared memo (not a module dict keyed by
+    id(store): CPython reuses ids after GC, which could hand a stale
+    checkpointed index to an unrelated store, and the module dict never
+    shrank — ADVICE r2)."""
     from blazegraph_database_spark.operators import fulltext
 
-    cached = getattr(store, "_ft_literal_index", None)
-    if cached is None:
-        docs = _store_literal_texts(store)
-        cached = fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
-        store._ft_literal_index = cached
-    return cached
+    return _scoped_memo(
+        store,
+        "ft_literal_index",
+        lambda: fulltext.inverted_index(
+            _store_literal_texts(store), id_col="s", text_col="text"
+        ).localCheckpoint(),
+    )
 
 
 def _store_subject_index(store: TripleStore) -> DataFrame:
@@ -2888,15 +2890,14 @@ def _store_subject_index(store: TripleStore) -> DataFrame:
     lexical form, tokenized like any literal."""
     from blazegraph_database_spark.operators import fulltext
 
-    cached = getattr(store, "_ft_subject_index", None)
-    if cached is None:
+    def build() -> DataFrame:
         docs = (
             _dataset_scoped_df(store).select("s").distinct()
             .select("s", F.col("s").alias("text"))
         )
-        cached = fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
-        store._ft_subject_index = cached
-    return cached
+        return fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
+
+    return _scoped_memo(store, "ft_subject_index", build)
 
 
 def _store_literal_texts(store: TripleStore) -> DataFrame:
@@ -2904,16 +2905,16 @@ def _store_literal_texts(store: TripleStore) -> DataFrame:
     surface behind the full-text index; bds:matchExact / bds:matchRegex
     post-filter against it (ref: BDS.java MATCH_EXACT/MATCH_REGEX filter
     the matched literal's text)."""
-    cached = getattr(store, "_ft_literal_texts", None)
-    if cached is None:
-        cached = (
+    return _scoped_memo(
+        store,
+        "ft_literal_texts",
+        lambda: (
             _dataset_scoped_df(store).filter(F.col("o_dt") == "string")
             .groupBy("s")
             .agg(F.concat_ws(" ", F.collect_list("o_lex")).alias("text"))
             .localCheckpoint()
-        )
-        store._ft_literal_texts = cached
-    return cached
+        ),
+    )
 
 
 def _parse_bds_common(sp, pred: str | None, opts: dict, flags: dict) -> bool:
@@ -3052,7 +3053,7 @@ def _(node: A.Service, store: TripleStore) -> DataFrame:
         # and queried with ORDINARY SPARQL-star patterns: the block compiles
         # unchanged against the history store view (ever-existed statements
         # + metadata rows), so sid joins, accessors and filters all work.
-        us = getattr(store, "updatable", None)
+        us = store.updatable
         if us is None:
             raise ValueError(
                 "SERVICE <bd:rdrhistory> needs an updatable store (query via "
@@ -3061,7 +3062,7 @@ def _(node: A.Service, store: TripleStore) -> DataFrame:
         return _compile(node.pattern, us.history_store())
     if svc_iri == "fts:search":  # ref: fts/FulltextSearchServiceFactory.java
         return service.fts_search_service(
-            store, collect_sps(node.pattern), transport=getattr(store, "fts_transport", None)
+            store, collect_sps(node.pattern), transport=store.fts_transport
         )
     if service.stored_query_lookup(node.iri) is not None:
         # ref: storedquery/StoredQueryService.java — app-registered IRIs
@@ -3231,7 +3232,7 @@ def _(node: A.PathPattern, store: TripleStore) -> DataFrame:
     elif node.g is None and store.has_graphs:
         # FROM dataset scoping for default-graph paths (same rule the SP
         # compiler applies): an empty concrete default set matches nothing
-        dd = getattr(store, "dataset_default", None)
+        dd = store.dataset_default
         if dd is not None:
             cond = F.col("g").isin(list(dd)) if dd else F.lit(False)
             scoped = TripleStore(store.df.filter(cond))
@@ -3241,7 +3242,7 @@ def _(node: A.PathPattern, store: TripleStore) -> DataFrame:
     if with_graph:
         if not store.has_graphs:
             raise ValueError("path inside GRAPH ?var over a triples-only store")
-        named = getattr(store, "dataset_named", None)
+        named = store.dataset_named
         if named is not None:
             cond = F.col("g").isin(list(named)) if named else F.lit(False)
             scoped = TripleStore(store.df.filter(cond))
@@ -3405,10 +3406,7 @@ def explain_trace(store: TripleStore, node) -> list[dict]:
     decisions, star-fusion count, and the id-join variable set. Building
     the plan runs no Spark job beyond the stats/probes the compiler itself
     uses."""
-    import copy
-
-    traced = copy.copy(store)
-    traced._trace = []
+    traced = store.view(_trace=[])
     evaluate(traced, node)
     return traced._trace
 
@@ -3422,7 +3420,7 @@ def construct(store: TripleStore, node, template: list[tuple]) -> DataFrame:
     """CONSTRUCT: instantiate (s,p,o) templates per solution, preserving the
     bound term's datatype via the compiler's `<var>__dt` companion columns
     (the reference keeps IV type through ConstructNode). Ref: ConstructNode."""
-    sol = evaluate(store.with_dt_tracking(), node)
+    sol = evaluate(store.view(track_dt=True), node)
     return instantiate_template(sol, template)
 
 

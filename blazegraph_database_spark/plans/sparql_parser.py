@@ -2709,20 +2709,17 @@ def run_sparql(store, src: str):
     # companions: with `__dt` riding the plan, =/!= and SUM/AVG take the
     # typed open-world value model (ref: internal/constraints/CompareBOp.java,
     # MathBOp.java) instead of the lexical-first default.
-    dt_mode = bool(_DT_FUNC_RE.search(src)) or getattr(store, "track_dt", False)
+    dt_mode = bool(_DT_FUNC_RE.search(src)) or store.track_dt
+    auto_dt = dt_mode and not store.track_dt
+    flags = {"track_dt": True} if auto_dt else {}
     if re.search(r"defaultGraphDistinctFilter\W+(\"false\"|false)", src):
         # hint:Query hint:defaultGraphDistinctFilter "false" (ref:
         # QueryHints.DEFAULT_GRAPH_DISTINCT_FILTER; fixture
         # default-graphs-01k): expose the raw quad multiset instead of the
         # default graph's RDF-merge distinct
-        import copy as _copy
-
-        store = _copy.copy(store)
-        store.default_graph_distinct = False
-    auto_dt = False
-    if dt_mode and not getattr(store, "track_dt", False):
-        store = store.with_dt_tracking()
-        auto_dt = True
+        flags["default_graph_distinct"] = False
+    if flags:
+        store = store.view(**flags)
 
     parsed = parse_sparql_query(src, dt_mode=dt_mode)
     if parsed[0] == "select":

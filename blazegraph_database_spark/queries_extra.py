@@ -2080,7 +2080,7 @@ def typed_sum_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    st = TripleStore(qty.unionByName(tainted)).with_dt_tracking()
+    st = TripleStore(qty.unionByName(tainted)).view(track_dt=True)
     out = run_sparql(
         st,
         "SELECT ?o (SUM(?q) AS ?total) WHERE { ?o <li#qty> ?q } GROUP BY ?o",
@@ -2124,7 +2124,7 @@ def typed_open_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("double"))
         .alias("o_dt"),
     )
-    st = TripleStore(a.unionByName(b)).with_dt_tracking()
+    st = TripleStore(a.unionByName(b)).view(track_dt=True)
     out = run_sparql(
         st,
         """
@@ -2292,7 +2292,7 @@ def decimal_exact_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("o_lex"),
         F.lit("string").alias("o_dt"),
     )
-    st = TripleStore(prices.unionByName(flags).distinct()).with_dt_tracking()
+    st = TripleStore(prices.unionByName(flags).distinct()).view(track_dt=True)
     out = run_sparql(
         st,
         "SELECT ?f (SUM(?p) AS ?total) WHERE "
@@ -2336,7 +2336,7 @@ def float_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
         bal.alias("o_lex"),
         F.lit("double").alias("o_dt"),
     )
-    st = TripleStore(f_side.unionByName(d_side)).with_dt_tracking()
+    st = TripleStore(f_side.unionByName(d_side)).view(track_dt=True)
     out = run_sparql(
         st,
         """

@@ -455,7 +455,7 @@ class SparqlEndpoint:
             # through projection so serializers type terms (uri / literal /
             # lang); subject/join-position vars have no companion and
             # default to plain literals (documented subset)
-            return 200, ctype, ser(compiler.evaluate(store.with_dt_tracking(), parsed[1]), self.max_result_rows)
+            return 200, ctype, ser(compiler.evaluate(store.view(track_dt=True), parsed[1]), self.max_result_rows)
         if form == "ask":
             return 200, SRJ, json.dumps(
                 {"head": {}, "boolean": compiler.ask(store, parsed[1])}

@@ -144,7 +144,7 @@ class SolutionSetManager:
 
     def sets(self) -> dict[str, DataFrame]:
         """All sets as name → DataFrame (feed to
-        TripleStore.with_named_sets so INCLUDE %name resolves). One
+        TripleStore.view(named_sets=...) so INCLUDE %name resolves). One
         manifest read total; DataFrame handles are memoized, so attaching
         the sets to every query's store is cheap whether or not the query
         INCLUDEs anything (review r5-8)."""

@@ -233,35 +233,17 @@ class UpdatableStore:
         through the solution-set cache). Query-local WITH %name shadows a
         persisted set of the same name (WithNamed merges on top).
 
-        The returned view is MEMOIZED per (version, solution-set names):
-        repeated queries against the same commit point reuse ONE
-        TripleStore instance, so its lazily-built memos (predicate stats
-        for join ordering, the checkpointed full-text indexes) survive
-        across requests instead of being rebuilt per call. A new commit
-        or solution-set change invalidates the memo by key mismatch.
-        We never hand out ``self.current`` itself: versions can be shared
-        across tx shadows, and the ``updatable`` back-pointer (needed by
-        SERVICE <bd:history> — the MVCC version list IS the history
-        index) must belong to THIS UpdatableStore."""
-        base = self.current
+        The view is a fresh shallow view of the current version on every
+        call, so it costs nothing; the DATA memos (predicate stats for join
+        ordering, the lazily built union, the checkpointed full-text
+        indexes) live on the version and every view of it shares them, so
+        they survive across requests until a new commit. We never hand out
+        ``self.current`` itself: versions can be shared across tx shadows,
+        and the ``updatable`` back-pointer (needed by SERVICE <bd:history> —
+        the MVCC version list IS the history index) must belong to THIS
+        UpdatableStore."""
         sets = self.solutions.sets() if self.solutions is not None else {}
-        # set dirs are immutable and their reader handles memoized, so the
-        # handle identity fingerprints set CONTENT (a put repoints to a
-        # new dir -> new handle); the memo pins the dict so ids can't be
-        # recycled while the entry lives
-        key = tuple(sorted((n, id(df)) for n, df in sets.items()))
-        cached = getattr(self, "_qstore_memo", None)
-        if cached is not None and cached[0] is base and cached[1] == key:
-            return cached[3]
-        if sets:
-            out = base.with_named_sets(sets)
-        else:
-            import copy
-
-            out = copy.copy(base)
-        out.updatable = self
-        self._qstore_memo = (base, key, sets, out)
-        return out
+        return self.current.view(updatable=self, named_sets=sets)
 
     @property
     def explicit_store(self) -> TripleStore:
@@ -474,10 +456,8 @@ class UpdatableStore:
         # named_sets attached so `INCLUDE %set` works inside UPDATE WHERE
         # clauses too — the reference's primary solution-set use case
         # (compute once, then modify the graph; review r5-4)
-        where_store = cur.with_dt_tracking()
-        if self.solutions is not None and self.solutions.names():
-            where_store = where_store.with_named_sets(self.solutions.sets())
-        bindings = evaluate(where_store, where_plan)
+        sets = self.solutions.sets() if self.solutions is not None else {}
+        bindings = evaluate(cur.view(track_dt=True, named_sets=sets), where_plan)
         df = cur.df
         if delete_template:
             del_triples = instantiate_template(

@@ -157,7 +157,7 @@ def test_reference_manifest_fixture(spark, rq, data, srx, check_order, request):
     expected = parse_srx(open(f"{EVAL}/{srx}").read())
     st = TripleStore(_load(spark, data))
     if jf in _DT_TRACKED_FILES or case in _DT_TRACKED_CASES:
-        st = st.with_dt_tracking()
+        st = st.view(track_dt=True)
     if case in _STORE_SETUP:
         st = _STORE_SETUP[case](spark, st)
     if jf in _FILE_SETUP:
@@ -207,7 +207,7 @@ _DT_TRACKED_CASES = {
 def _setup_include_03a(spark, st):
     # TestInclude.test_include_03a builds %solutionSet1 = {(x=:Mike,y=2),
     # (x=:Bryan,y=4), (x=:DC,y=1)} through the solution-set manager before
-    # running the query — mirror it through with_named_sets
+    # running the query — mirror it through view(named_sets=...)
     rows = spark.createDataFrame(
         [
             ("http://www.bigdata.com/Mike", "2"),
@@ -216,7 +216,7 @@ def _setup_include_03a(spark, st):
         ],
         "x string, y string",
     ).coalesce(1)
-    return st.with_named_sets({"solutionSet1": rows})
+    return st.view(named_sets={"solutionSet1": rows})
 
 
 

@@ -94,7 +94,7 @@ def test_reference_fixture(spark, name, datafile):
         df = rdf_formats.read_turtle(spark, path)
     st = TripleStore(df)
     if name in _TYPED_MODEL:
-        st = st.with_dt_tracking()
+        st = st.view(track_dt=True)
     got_df = run_sparql(st, query)
     varnames = [c for c in got_df.columns if not c.endswith("__dt")]
     got = [{v: r[v] for v in varnames} for r in got_df.collect()]
@@ -119,7 +119,7 @@ def _run_fixture(spark, name, datafile):
         df = rdf_formats.read_turtle(spark, path)
     st = TripleStore(df)
     if name in _TYPED_MODEL:
-        st = st.with_dt_tracking()
+        st = st.view(track_dt=True)
     if name in _STORE_SETUP:
         st = _STORE_SETUP[name](spark, st)
     got_df = run_sparql(st, query)
@@ -207,11 +207,11 @@ def _solutions_mike(spark):
 
 # per-fixture STORE transforms (programmatic named solution sets — the
 # Java tests install them through SolutionSetManager; this engine's
-# analog is TripleStore.with_named_sets)
+# analog is TripleStore.view(named_sets=...))
 _STORE_SETUP = {
-    "include_01": lambda spark, st: st.with_named_sets({"solutionSet1": _solutions_123(spark)}),
-    "include_02": lambda spark, st: st.with_named_sets({"solutionSet1": _solutions_123(spark)}),
-    "include_03": lambda spark, st: st.with_named_sets({"solutionSet1": _solutions_mike(spark)}),
+    "include_01": lambda spark, st: st.view(named_sets={"solutionSet1": _solutions_123(spark)}),
+    "include_02": lambda spark, st: st.view(named_sets={"solutionSet1": _solutions_123(spark)}),
+    "include_03": lambda spark, st: st.view(named_sets={"solutionSet1": _solutions_mike(spark)}),
 }
 
 

@@ -756,9 +756,10 @@ def test_bd_history_constant_filters(spark):
 
 
 def test_query_store_memoized_per_version(spark):
-    """query_store returns ONE memoized view per commit point, so per-store
-    memos (join stats, full-text indexes) survive across requests; a new
-    commit or a solution-set change invalidates it (review r5 finding)."""
+    """query_store hands out a fresh view per call, but the data memos (join
+    stats, full-text indexes) live on the version every view shares, so they
+    survive across requests; a new commit starts a fresh memo and a
+    solution-set change shows up in the next view (review r5 finding)."""
     from blazegraph_database_spark.model.store import TripleStore
     from blazegraph_database_spark.update.update import UpdatableStore
 
@@ -767,20 +768,145 @@ def test_query_store_memoized_per_version(spark):
     )
     us = UpdatableStore.from_store(TripleStore(df))
     qs1 = us.query_store
-    assert us.query_store is qs1  # memoized
     assert qs1.updatable is us
     assert qs1 is not us.current  # back-pointer never lands on a shared version
+    stats1 = qs1.stats()
+    assert us.query_store.stats() is stats1  # built once, seen by the next view
     us.insert_data(spark.createDataFrame([("b", "p", "2", "long")], df.schema))
-    qs2 = us.query_store
-    assert qs2 is not qs1  # new commit point invalidates
-    assert us.query_store is qs2
-    # solution-set content change invalidates too
+    stats2 = us.query_store.stats()
+    assert stats2 is not stats1 and stats2["p"].count == 2  # new commit, fresh memo
+    assert us.query_store.stats() is stats2
     mgr = us.solutions_manager()
     mgr.put("st", spark.createDataFrame([("x",)], "v string"))
-    qs3 = us.query_store
-    assert qs3 is not qs2 and us.query_store is qs3
+    assert [r.v for r in us.query_store.named_sets["st"].collect()] == ["x"]
     mgr.put("st", spark.createDataFrame([("y",)], "v string"))
-    assert us.query_store is not qs3
+    assert [r.v for r in us.query_store.named_sets["st"].collect()] == ["y"]
+
+
+def test_store_memo_builds_once_across_concurrent_views():
+    """Concurrent requests share one memo: threads asking their own views of
+    one store for the same entry run its build once and all get its result."""
+    import sys
+    import threading
+    import time
+
+    from blazegraph_database_spark.model.store import TripleStore
+
+    st = TripleStore(df_factory=lambda: None)
+    builds, got = [], []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.01)
+        return object()
+
+    threads = [
+        threading.Thread(target=lambda: got.append(st.view(track_dt=True).memo("k", build)))
+        for _ in range(16)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1 and len(got) == 16 and all(g is got[0] for g in got)
+
+
+def test_rest_queries_share_the_lazy_union(spark, tmp_path, monkeypatch):
+    """The melted union of a cached_store is built once per store, not once
+    per REST query: the per-query views share the store's memo."""
+    import shutil
+
+    from conftest import SF_DIR
+
+    from blazegraph_database_spark.server.rest import SparqlEndpoint
+    from blazegraph_database_spark.sources import relational
+    from blazegraph_database_spark.update.update import UpdatableStore
+
+    for t in ("region", "nation"):
+        shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    calls = []
+    load = relational.load_tables
+    monkeypatch.setattr(
+        relational, "load_tables", lambda *a, **k: calls.append(a) or load(*a, **k)
+    )
+    store = relational.cached_store(spark, str(tmp_path), ("region", "nation"))
+    ep = SparqlEndpoint(spark, UpdatableStore.from_store(store))
+    for q in (
+        "SELECT ?n WHERE { ?r <region#r_name> ?n }",
+        "SELECT ?n WHERE { ?x <nation#n_name> ?n } LIMIT 3",
+        "SELECT ?s ?p WHERE { ?s ?p <region:0> }",
+    ):
+        status, _ctype, _body = ep.query("kb", q)
+        assert status == 200
+    assert len(calls) == 1
+
+
+def test_rest_selects_on_written_version_build_stats_once(spark, monkeypatch):
+    """Two REST SELECTs on one written version compute the predicate stats
+    once: the stats live on the version, not on the per-query view."""
+    from blazegraph_database_spark.model.store import TripleStore
+    from blazegraph_database_spark.server.rest import SparqlEndpoint
+    from blazegraph_database_spark.update.update import UpdatableStore
+
+    df = spark.createDataFrame(
+        [("a", "p", "b", "iri"), ("b", "q", "1", "long")],
+        "s string, p string, o_lex string, o_dt string",
+    )
+    ep = SparqlEndpoint(spark, UpdatableStore.from_store(TripleStore(df)))
+    assert ep.update("kb", "INSERT DATA { <c> <p> <b> }")[0] == 200
+    builds = []
+    stats = TripleStore.stats
+
+    def counting(self):
+        if self._stats is None:
+            builds.append(self)
+        return stats(self)
+
+    monkeypatch.setattr(TripleStore, "stats", counting)
+    q = "SELECT ?x ?n WHERE { ?x <p> ?y . ?y <q> ?n }"
+    for _ in range(2):
+        status, _ctype, body = ep.query("kb", q)
+        assert status == 200 and b'"1"' in body
+    assert len(builds) == 1
+
+
+def test_rest_bds_search_index_built_once_per_scope(spark, monkeypatch):
+    """A bds:search sent twice through REST builds its full-text index once;
+    the same search under FROM NAMED is a different dataset scope and gets
+    its own memo entry, built once too."""
+    from blazegraph_database_spark.model.store import TripleStore
+    from blazegraph_database_spark.operators import fulltext
+    from blazegraph_database_spark.server.rest import SparqlEndpoint
+    from blazegraph_database_spark.update.update import UpdatableStore
+
+    df = spark.createDataFrame(
+        [("d1", "title", "spark engine", "string"), ("d2", "title", "cooking", "string")],
+        "s string, p string, o_lex string, o_dt string",
+    )
+    ep = SparqlEndpoint(spark, UpdatableStore.from_store(TripleStore(df)))
+    builds = []
+    index = fulltext.inverted_index
+    monkeypatch.setattr(
+        fulltext, "inverted_index", lambda *a, **k: builds.append(1) or index(*a, **k)
+    )
+    q = 'SELECT ?lit WHERE { ?lit <bds:search> "spark" }'
+    counts = []
+    for text in (q, q, q.replace("SELECT ?lit", "SELECT ?lit FROM NAMED <g1>"),
+                 q.replace("SELECT ?lit", "SELECT ?lit FROM NAMED <g1>")):
+        status, _ctype, body = ep.query("kb", text)
+        assert status == 200
+        counts.append(len(builds))
+    assert b"spark engine" in ep.query("kb", q)[2]
+    assert counts[0] >= 1
+    assert counts[1] == counts[0]  # repeated search: index reused
+    assert counts[2] > counts[1]  # FROM NAMED: its own scope entry
+    assert counts[3] == counts[2]
 
 
 def test_fts_result_type_and_param_repeats(spark):

@@ -461,7 +461,7 @@ def test_bnode_join_across_positions(spark):
     ]
     st = TripleStore(
         spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string")
-    ).with_dt_tracking()
+    ).view(track_dt=True)
     got = {
         (r["a"], r["b"])
         for r in run_sparql(st, "SELECT ?a ?b WHERE { ?a <ex:p> ?x . ?x <ex:q> ?b }").collect()
@@ -530,7 +530,7 @@ def test_order_by_numeric_literals(spark):
             ("c", "age", "100", "long"), ("d", "age", "2", "long")]
     st = TripleStore(
         spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string")
-    ).with_dt_tracking()
+    ).view(track_dt=True)
     out = run_sparql(st, "SELECT ?s ?a WHERE { ?s <age> ?a } ORDER BY ?a LIMIT 2")
     assert [r["s"] for r in out.collect()] == ["d", "a"]  # 2, 9 — not "10","100"
     out = run_sparql(st, "SELECT ?s WHERE { ?s <age> ?a } ORDER BY DESC(?a) LIMIT 1")
@@ -993,7 +993,7 @@ def test_xsd_date_value_comparison_bc_years(spark):
     ]
     st = TripleStore(
         spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string")
-    ).with_dt_tracking()
+    ).view(track_dt=True)
     got = {
         r["s"]
         for r in run_sparql(
@@ -1028,7 +1028,7 @@ def _dt_store(spark, rows):
     from blazegraph_database_spark.model.store import TripleStore
 
     df = spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string")
-    return TripleStore(df).with_dt_tracking()
+    return TripleStore(df).view(track_dt=True)
 
 
 def test_arith_over_aggregate_aliases(spark):
