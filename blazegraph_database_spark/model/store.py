@@ -250,14 +250,27 @@ class TripleStore:
         return TripleStore(self.df.unionByName(other.df, allowMissingColumns=True))
 
     def graph(self, g: str) -> "TripleStore":
-        """Named-graph scoping (reference: DatasetNode / GRAPH keyword)."""
+        """Named-graph scoping (reference: DatasetNode / GRAPH keyword): a
+        triples store of graph ``g``, built once per store in the memo (so
+        its stats are too) and returned as a per-query view."""
         if not self.has_graphs:
             raise ValueError("store has no graph column")
-        out = TripleStore(self.df.filter(F.col("g") == g).drop("g"))
-        out.track_dt = self.track_dt
+        scoped = self.memo(
+            ("graph", g), lambda: TripleStore(self.df.filter(F.col("g") == g).drop("g"))
+        )
         # id-join classification must survive graph scoping: a var bound as
         # an id inside GRAPH and as a string outside would never join
-        out.id_join_vars = self.id_join_vars
-        out.native_typed_vars = self.native_typed_vars
-        out.parent_quads = self
-        return out
+        return scoped.view(
+            track_dt=self.track_dt,
+            id_join_vars=self.id_join_vars,
+            native_typed_vars=self.native_typed_vars,
+            parent_quads=self,
+        )
+
+    def scope(self, graphs: tuple) -> "TripleStore":
+        """The quads of the dataset graphs ``graphs`` (FROM / FROM NAMED; an
+        empty tuple matches nothing), built once per store in the memo and
+        returned as a per-query view."""
+        cond = F.col("g").isin(list(graphs)) if graphs else F.lit(False)
+        scoped = self.memo(("scope", graphs), lambda: TripleStore(self.df.filter(cond)))
+        return scoped.view(track_dt=self.track_dt)

@@ -5,11 +5,15 @@ Reference analog: ArbitraryLengthPathNode + ArbitraryLengthPathOp
 ArbitraryLengthPathNode.java; eval in bigdata-core/bigdata-core/.../bop/paths/),
 negated property sets per PathNode + ASTPropertyPathOptimizer.java.
 
-Fixed-length constructs (/, |, ^, ?, !(...)) compile to joins/unions; `+`/`*`
-run an iterative frontier expansion with a strategy choice (see
-``transitive_closure``). All functions optionally carry a graph column so the
-same machinery evaluates paths inside GRAPH ?var — closure joins then include
-``g``, keeping each named graph's reachability separate.
+Fixed-length constructs (/, |, ^, ?, !(...)) compile to joins/unions. A
+var-var `+`/`*` closes its base with a strategy choice (see
+``transitive_closure``); an ANCHORED path (a constant endpoint) gears instead
+(``geared_reach``): every closure component is a seeded reachability walk,
+GAS BFS (``gas.bfs_from_df``: the driver tier, or past its gate the one
+shared frontier loop ``gas._general_bfs``), never the all-pairs closure. All
+functions optionally carry a graph column so the same machinery evaluates
+paths inside GRAPH ?var — closure joins and walks then include ``g``,
+keeping each named graph's reachability separate.
 """
 
 from __future__ import annotations
@@ -18,17 +22,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blazegraph_database_spark.model.store import TripleStore
+from blazegraph_database_spark.operators import gas
 from blazegraph_database_spark.operators.driver_tier import collect_bounded, to_frame
 from blazegraph_database_spark.plans import algebra as A
 
 MAX_ITERS = 64  # diameter guard; 100 TB graphs rarely exceed ~30 rounds
-
-# Above this many base pairs, `+`/`*` switch from iterative doubling to
-# semi-naive delta expansion: doubling's per-round |closure ⋈ closure| is the
-# right trade for small/deep schema graphs (log2(diameter) barriers), while
-# delta ⋈ base bounds per-round work on big fan-out data graphs — the
-# reference's ALP operator is semi-naive for the same reason.
-DOUBLING_MAX_PAIRS = 100_000
 
 # Emitted-pair bail-out for the driver functional walk (a 500k-node chain
 # would emit ~125G pairs — no tier can hold that; the distributed fallbacks
@@ -233,14 +231,13 @@ def _doubling(known: DataFrame, keys: list[str]) -> DataFrame:
 def transitive_closure(pairs: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """All (s, o) connected by 1+ hops of `pairs` (per graph key if given).
 
-    Strategy is chosen from the base-pair count (available for free from the
-    frontier materialization): iterative doubling closes a diameter-d graph
-    in ceil(log2 d) barrier rounds — the win when synchronization dominates —
-    but each round self-joins the whole closure; semi-naive expands only the
-    frontier (delta ⋈ base per round), which bounds per-round work on
-    high-fan-out data graphs where |closure|² would blow up. The reference's
-    ALP operator evaluates semi-naive; we keep doubling for the small/deep
-    inputs (schema hierarchies) where it measurably wins."""
+    Tiers: the driver tier (functional numpy walk, or the python DFS up to
+    DRIVER_DFS_MAX_PAIRS), then the functional chain tier, then semi-naive
+    (delta ⋈ base per round, as the reference's ALP operator evaluates),
+    which finishes with iterative doubling past MAX_ITERS rounds instead of
+    truncating. Small bases get no doubling tier: semi-naive closed random
+    DAGs and cyclic graphs of 20k, 50k and 100k pairs 1.3-1.7x faster than
+    doubling (forced distributed, 4 cores)."""
     keys = keys or []
     distinct = pairs.select(*keys, "s", "o").distinct()
     # driver tier (operators/driver_tier.py): one bounded Arrow collect.
@@ -262,7 +259,6 @@ def transitive_closure(pairs: DataFrame, keys: list[str] | None = None) -> DataF
             closed = _closure_local(zip(pdf["s"].values, pdf["o"].values))
         if closed is not None:
             return to_frame(pairs.sparkSession, closed, distinct.schema)
-    n_pairs = known.count() if pdf is None else len(pdf)
     # Functional bases (parent-pointer shape — the dominant hierarchy/chain
     # case) close in ceil(log2 d) array-doubling rounds instead of d
     # semi-naive rounds or |closure|-self-joining doubling; inverse-
@@ -278,8 +274,6 @@ def transitive_closure(pairs: DataFrame, keys: list[str] | None = None) -> DataF
             *keys, F.col("o").alias("s"), F.col("s").alias("o")
         )
 
-    if n_pairs <= DOUBLING_MAX_PAIRS:
-        return _doubling(known, keys)
     # semi-naive: each round joins only the last round's new pairs (lazy
     # checkpoints, as in _doubling)
     base = delta = known
@@ -294,124 +288,38 @@ def transitive_closure(pairs: DataFrame, keys: list[str] | None = None) -> DataF
     return _doubling(known, keys)
 
 
-# Frontier walks past their soft round budget keep walking (per-round cost
-# is frontier-sized, so a deep chain costs O(reachable edges) total) up to
-# this hard cap before falling back to closure composition — all-pairs state
-# must be the last resort, not the first escape hatch (r9 advisor).
-ADAPTIVE_MAX_ITERS = 4096
-
-# Frontier-walk emptiness checks batch at this stride once a walk has run
-# this many rounds (r10 verdict item 6): one isEmpty job per k rounds
-# instead of per round halves the driver syncs on deep walks, at the cost
-# of <= k-1 empty-frontier no-op rounds after convergence; walks shallower
-# than the stride keep per-round probes and pay neither.
-EMPTY_CHECK_EVERY = 8
-
-# Base-pair count above which an anchored path GEARS (seeded frontier walk)
-# instead of taking the full-closure driver tier — the strategy cutoff
-# shared by plans.compiler._anchored_path_pairs and the anchored bd:alp
-# SERVICE so the two anchored-path paths never disagree on when to gear.
-GEAR_MIN_BASE_PAIRS = 20_000
-
-
-def seeded_closure(
-    base: DataFrame, seed: str, keys: list[str] | None = None
-) -> DataFrame:
-    """([g,] o): nodes reachable in >= 1 hops from a CONSTANT seed — the
-    reference's GEARING-anchored ALP evaluation (ref:
-    ArbitraryLengthPathNode + the gearing query hint, TestGearingQueryHint:
-    forward gearing expands from the bound subject; the caller flips the
-    base relation for reverse gearing from a bound object).
-
-    Scale shape: per-round frontier ⋈ base with Δ-sized state — never the
-    ALL-PAIRS transitive closure a var-var path needs. The base relation
-    stays LAZY (each round re-reads the predicate-pruned link scan) so
-    nothing graph-sized is ever materialized; only the frontier/known sets
-    (reachable-from-seed sized) checkpoint per round."""
-    keys = keys or []
-    frontier = (
-        base.filter(F.col("s") == seed).select(*keys, "o").distinct()
-        .localCheckpoint(eager=False)
-    )
-    return _frontier_walk(base, frontier, keys)
-
-
 def seeded_closure_from(
     base: DataFrame, seeds: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
     """([g,] o): nodes reachable in >= 1 hops of ``base`` from ANY node in
-    the ``seeds`` frontier ([g,] o) — the DataFrame-frontier variant of
-    :func:`seeded_closure`, what lets a constant anchor GEAR through a path
-    sequence (ref: anchored ALP evaluation, TestGearingQueryHint): each
-    `+`/`*` component of `<c> :a/:b+ ?x` expands from the previous
-    component's bounded output instead of closing its base globally."""
+    the ``seeds`` frontier ([g,] o) — the seeded walk that lets a constant
+    anchor GEAR through a path (ref: anchored ALP evaluation,
+    TestGearingQueryHint): each `+`/`*` component of `<c> :a/:b+ ?x`
+    expands from the previous component's bounded output instead of
+    closing its base globally.
+
+    The walk is GAS BFS seeded with the seeds' 1-hop frontier, run until
+    the frontier is empty, so a seed is in the answer only through a cycle
+    or a self-loop. An unkeyed walk goes through :func:`gas.bfs_from_df`:
+    under the driver gate one bounded collect of the base and a python BFS
+    answer it; past the gate the shared loop reads the checkpoint that
+    collect materialized instead of re-scanning the lazy link scan each
+    round. A graph-keyed walk runs the shared loop with a one-hop join
+    step over the lazy base."""
     keys = keys or []
-    hop = base.select(*keys, F.col("s").alias("__f"), F.col("o"))
-    frontier = (
-        seeds.select(*keys, F.col("o").alias("__f"))
-        .join(hop, on=keys + ["__f"])
-        .select(*keys, "o")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    return _frontier_walk(base, frontier, keys)
+    first = _hop_from(base, seeds, keys)
+    if keys:
+        return _walk(lambda f: _hop_from(base, f, keys), first, keys)
+    edges = base.select(F.col("s").alias("src"), F.col("o").alias("dst"))
+    reached = gas.bfs_from_df(edges, first.select(F.col("o").alias("node")), max_depth=None)
+    return reached.select(F.col("node").alias("o"))
 
 
-def _frontier_walk(
-    base: DataFrame, frontier: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Semi-naive Δ-expansion from a materialized >=1-hop frontier.
-
-    The round budget is ADAPTIVE_MAX_ITERS, full stop — per-round work is
-    frontier-sized, so even a deep chain costs O(reachable edges) total,
-    and composing through the base's all-pairs closure must stay the LAST
-    resort, not an escape hatch (r9 advisor finding; the old per-caller
-    max_iters knob was dead weight below the adaptive cap and is gone).
-    Only past the hard cap (diameter > 4096: doubling closes that in ~12
-    barriers where the walk would need thousands) does the
-    closure-composition tail fire."""
-    hop = base.select(*keys, F.col("s").alias("__f"), F.col("o"))
-    known = frontier
-    converged = False
-    for i in range(ADAPTIVE_MAX_ITERS):
-        # Emptiness probes are per-round for the first EMPTY_CHECK_EVERY
-        # rounds (shallow walks — the common anchored-Seq case — detect
-        # convergence immediately, paying zero no-op rounds), then batch to
-        # one probe per EMPTY_CHECK_EVERY rounds: on deep walks the
-        # per-round checkpoint is already one driver sync, and a second
-        # isEmpty job per round doubled the sync count where sync latency,
-        # not data volume, dominates (r10 verdict; stride-only probing was
-        # worse for shallow walks — r11 review — because each post-
-        # convergence no-op round still runs a real job over the base).
-        if (i < EMPTY_CHECK_EVERY or i % EMPTY_CHECK_EVERY == 0) and frontier.isEmpty():
-            converged = True
-            break
-        grown = (
-            frontier.select(*keys, F.col("o").alias("__f"))
-            .join(hop, on=keys + ["__f"])
-            .select(*keys, "o")
-        )
-        frontier = (
-            grown.join(known, on=keys + ["o"], how="left_anti").distinct()
-            .localCheckpoint(eager=False)  # probe/next-round job materializes
-        )
-        known = known.unionByName(frontier)
-        if (i + 1) % 32 == 0:
-            # compact the union-plan lineage so a deep walk's anti-join
-            # doesn't re-analyze an ever-growing union tree each round
-            known = known.localCheckpoint(eager=False)
-    if not converged and not frontier.isEmpty():
-        # diameter > ADAPTIVE_MAX_ITERS: jump the rest through the base's
-        # full closure in one composition (log-round doubling) — the
-        # frontier walk must never silently truncate a deep chain
-        rest = transitive_closure(base, keys=keys)
-        tail = (
-            frontier.select(*keys, F.col("o").alias("s"))
-            .join(rest, on=keys + ["s"])
-            .select(*keys, "o")
-        )
-        known = known.unionByName(tail).distinct()
-    return known
+def _walk(step, first: DataFrame, keys: list[str]) -> DataFrame:
+    """([g,] o): ``first`` plus everything repeated ``step`` applications
+    reach from it, on the shared GAS frontier loop."""
+    seed = first.select(*keys, "o", F.lit(0).alias("depth"))
+    return gas._general_bfs(step, seed, keys + ["o"], None).select(*keys, "o")
 
 
 def bounded_paths(
@@ -551,10 +459,11 @@ def geared_reach(
     hint, TestGearingQueryHint). The constant anchor's frontier flows
     through the path structure — Seq components evaluate left-to-right
     (right-to-left with each base flipped under reverse gearing,
-    ``forward=False``), and every `+`/`*`/`{m,}` component runs a
-    Δ-expansion seeded from the accumulated frontier instead of closing its
-    base relation globally. State everywhere is reachable-from-seed sized;
-    the all-pairs closure of any component never materializes."""
+    ``forward=False``), and every `+`/`*`/`{m,}` component runs a seeded
+    walk (:func:`seeded_closure_from`) from the accumulated frontier
+    instead of closing its base relation globally. A component's base may
+    be materialized once (the walk's bounded collect); the all-pairs
+    closure of any component never is."""
     k = _gcols(with_graph)
     if isinstance(path, str):
         path = A.Link(path)
@@ -618,46 +527,17 @@ def _geared_closure(
     store: TripleStore, inner, frontier: DataFrame,
     with_graph: bool, forward: bool,
 ) -> DataFrame:
-    """>= 1 applications of ``inner`` from a frontier set. A closure-FREE
-    inner walks seeded_closure_from over its compiled base (the base stays
-    lazy — one join per round); a closure-CONTAINING inner (`(:a/:p+)+`)
-    runs semi-naive with geared_reach itself as the step function, because
-    compiling that inner would eagerly materialize the nested closure —
-    the exact all-pairs state gearing exists to avoid."""
+    """>= 1 applications of ``inner`` from a frontier set. A closure-free
+    inner walks seeded_closure_from over its compiled base; a
+    closure-containing inner (`(:a/:p+)+`) walks with geared_reach itself
+    as the step, because compiling that inner would materialize the nested
+    closure — the all-pairs state gearing exists to avoid."""
     k = _gcols(with_graph)
     if not contains_closure(inner):
         base = _oriented(store, inner, with_graph, forward)
         return seeded_closure_from(base, frontier, keys=k)
     step = lambda f: geared_reach(store, inner, f, with_graph, forward)
-    known = step(frontier).distinct().localCheckpoint(eager=False)
-    delta = known
-    converged = False
-    for i in range(ADAPTIVE_MAX_ITERS):
-        if delta.isEmpty():
-            converged = True
-            break
-        grown = step(delta)
-        delta = (
-            grown.join(known, on=k + ["o"], how="left_anti")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        known = known.unionByName(delta)
-        if (i + 1) % 16 == 0:
-            known = known.localCheckpoint(eager=False)
-    if not converged and not delta.isEmpty():
-        # outer-application diameter > the adaptive budget: same
-        # never-silently-truncate invariant as _frontier_walk — finish by
-        # composing the remainder through the inner's full closure (the
-        # last resort, reachable only on pathologically deep nestings)
-        rest = transitive_closure(_oriented(store, inner, with_graph, forward), keys=k)
-        tail = (
-            delta.select(*k, F.col("o").alias("s"))
-            .join(rest, on=k + ["s"])
-            .select(*k, "o")
-        )
-        known = known.unionByName(tail).distinct()
-    return known
+    return _walk(step, step(frontier), k)
 
 
 def _bounded_steps(
@@ -700,8 +580,10 @@ def bounded_reach(
     """([g,] o): nodes reachable from the frontier set by a walk of length
     in [lower, upper] hops of ``base`` (upper=None = unbounded) — the
     frontier-seeded analog of :func:`bounded_paths`, shared by geared
-    `{m,n}` path components and the anchored bd:alp SERVICE. State per
-    round is frontier-sized; the base's all-pairs composition never
+    `{m,n}` path components and the anchored bd:alp SERVICE. A bounded
+    upper runs exactly ``upper`` one-hop rounds with frontier-sized state;
+    an unbounded one advances ``lower - 1`` hops and then walks
+    :func:`seeded_closure_from`. The base's all-pairs composition never
     materializes."""
     k = keys or []
     return _bounded_steps(

@@ -1209,7 +1209,8 @@ def alp_service(store, pattern) -> DataFrame:
     the constraint BGP compiles normally (selectivity-ordered, pruned
     scans), its DISTINCT edge set broadcast-joins the store's IRI-object
     triples into a filtered edge table, and the round-capped
-    `operators/paths.bounded_paths` composition produces the pairs — no
+    `operators/paths.bounded_paths` composition produces the pairs (with a
+    constant endpoint, `paths.bounded_reach` walks from it instead) — no
     per-hop re-evaluation of the constraints. lowerBound 0 adds the
     zero-length identity on the source side. Binds the endpoint
     variables; the per-hop edge binding is existential across a multi-hop
@@ -1218,9 +1219,7 @@ def alp_service(store, pattern) -> DataFrame:
     from pyspark.sql import functions as F
 
     from blazegraph_database_spark.model.terms import Var, const_lex, is_const
-    from blazegraph_database_spark.operators.paths import (
-        GEAR_MIN_BASE_PAIRS, bounded_paths, bounded_reach,
-    )
+    from blazegraph_database_spark.operators.paths import bounded_paths, bounded_reach
     from blazegraph_database_spark.plans import algebra as A
 
     def bgps(n, acc):
@@ -1275,17 +1274,12 @@ def alp_service(store, pattern) -> DataFrame:
     lower = int(alp.get("lowerBound", 1))
     upper = int(alp["upperBound"]) if "upperBound" in alp else None
     s_const, o_const = is_const(path_sp.s), is_const(path_sp.o)
-    if (s_const or o_const) and (
-        upper is not None
-        or edges.limit(GEAR_MIN_BASE_PAIRS + 1).count() > GEAR_MIN_BASE_PAIRS
-    ):
+    if s_const or o_const:
         # GEARED: a constant endpoint seeds a frontier walk over the edge
         # relation instead of composing its all-pairs closure (same
-        # anchored-ALP shape as _anchored_path_pairs; the schema-sized
-        # full path keeps the driver-tier closure, which wins there).
-        # Bounded uppers always walk seeded when anchored — bounded_paths
+        # anchored-ALP shape as _anchored_path_pairs): bounded_paths
         # composes the FULL relation per round, bounded_reach only the
-        # frontier.
+        # frontier, and an unbounded upper walks GAS BFS.
         forward = s_const
         base = edges if forward else edges.select(
             F.col("o").alias("s"), F.col("s").alias("o")

@@ -3232,22 +3232,14 @@ def _(node: A.PathPattern, store: TripleStore) -> DataFrame:
     elif node.g is None and store.has_graphs:
         # FROM dataset scoping for default-graph paths (same rule the SP
         # compiler applies): an empty concrete default set matches nothing
-        dd = store.dataset_default
-        if dd is not None:
-            cond = F.col("g").isin(list(dd)) if dd else F.lit(False)
-            scoped = TripleStore(store.df.filter(cond))
-            scoped.track_dt = store.track_dt
-            store = scoped
+        if store.dataset_default is not None:
+            store = store.scope(store.dataset_default)
     with_graph = node.g is not None and isinstance(node.g, Var)
     if with_graph:
         if not store.has_graphs:
             raise ValueError("path inside GRAPH ?var over a triples-only store")
-        named = store.dataset_named
-        if named is not None:
-            cond = F.col("g").isin(list(named)) if named else F.lit(False)
-            scoped = TripleStore(store.df.filter(cond))
-            scoped.track_dt = store.track_dt
-            store = scoped
+        if store.dataset_named is not None:
+            store = store.scope(store.dataset_named)
     pairs = _anchored_path_pairs(store, node, with_graph)
     if pairs is None:
         pairs = compile_path(store, node.path, with_graph=with_graph)  # DF([g,] s, o)
@@ -3281,120 +3273,37 @@ def _(node: A.PathPattern, store: TripleStore) -> DataFrame:
     return df.select(*sel) if sel else df.select()
 
 
-# strategy cutoff shared with the anchored bd:alp SERVICE (operators/paths)
-from blazegraph_database_spark.operators.paths import (  # noqa: E402
-    GEAR_MIN_BASE_PAIRS as _GEAR_MIN_BASE_PAIRS,
-)
-
-
-def _closure_bases(path, acc=None) -> list:
-    """Base paths of every unbounded-closure component (`+`, `*`, `{m,}`)
-    reachable WITHOUT crossing into another closure's base — the components
-    whose global closure a constant anchor can avoid materializing."""
-    if acc is None:
-        acc = []
-    if isinstance(path, (A.Plus, A.Star)):
-        acc.append(path.path)
-    elif isinstance(path, A.Bounded):
-        if path.upper is None:
-            acc.append(path.path)
-        else:  # (:p+){1,3}: the nested closure still warrants gearing
-            _closure_bases(path.path, acc)
-    elif isinstance(path, (A.Inv, A.ZeroOrOne)):
-        _closure_bases(path.path, acc)
-    elif isinstance(path, (A.Seq, A.Alt)):
-        _closure_bases(path.left, acc)
-        _closure_bases(path.right, acc)
-    return acc
-
-
-def _base_pairs_hint(store: TripleStore, base_path, with_graph: bool) -> int:
-    """Size of a closure component's base relation, capped at the gearing
-    threshold + 1. Three tiers (r9 verdict item 5 + r10 review):
-
-    - a NESTED-closure base (`(:a/:p+)+`) reports large without any probe —
-      compiling it to count it would eagerly run the inner closure, the
-      exact state gearing avoids (the geared evaluator recurses instead);
-    - a single-Link (possibly inverted) base answers from per-predicate
-      stats when the store already has them (free; exactness doesn't
-      matter for a strategy threshold) — the main store computes stats
-      once for BGP join ordering, so this is the common case. A THROWAWAY
-      graph/dataset-scoped store without stats keeps the bounded probe:
-      stats() there is a full scan+shuffle that dies with the store;
-    - composite fixed-length bases keep the limit-bounded probe, which
-      never scans more than threshold+1 rows."""
-    from blazegraph_database_spark.operators.paths import compile_path, contains_closure
-
-    if contains_closure(base_path):
-        return _GEAR_MIN_BASE_PAIRS + 1
-    p = base_path
-    while isinstance(p, A.Inv):
-        p = p.path
-    if isinstance(p, str):
-        p = A.Link(p)
-    if isinstance(p, A.Link) and store._stats is not None:
-        st = store.stats().get(p.iri)
-        return st.count if st is not None else 0
-    df = compile_path(store, base_path, with_graph=with_graph)
-    return df.limit(_GEAR_MIN_BASE_PAIRS + 1).count()
-
-
 def _anchored_path_pairs(store: TripleStore, node, with_graph: bool):
     """GEARED evaluation for paths with a CONSTANT endpoint (ref:
     ArbitraryLengthPathNode + the gearing query hint, TestGearingQueryHint:
     forward gearing expands the frontier from a bound subject, reverse
-    gearing from a bound object): a seeded Δ-expansion reads only the
-    reachable-from-seed region instead of materializing the graph's
-    ALL-PAIRS closure — at 100 TB the difference between a frontier-sized
-    walk and an O(|V|²)-state fixpoint. Fires on top-level `+`/`*` AND on
-    composite paths (Seq/Alt/Inv/`{m,}` wrappers — `<c> :a/:b+ ?x`), where
-    the anchor's frontier flows through the components via geared_reach.
+    gearing from a bound object): the anchor's one-row frontier flows
+    through the path via geared_reach, and every closure component is a
+    seeded GAS BFS walk (driver tier under its gate) over the
+    reachable-from-seed region, never the graph's ALL-PAIRS closure.
     Returns the ([g,] s, o) pair DataFrame, or None when the pattern isn't
     anchored (var-var paths keep the full-closure path, which their
-    semantics genuinely need), is fixed-length (Catalyst pushes the
-    constant filter through plain joins itself), or every closure base is
-    schema-sized (the full-closure driver tier closes those in ONE collect,
-    beating diameter-many seeded rounds)."""
+    semantics genuinely need) or holds no closure (Catalyst pushes the
+    constant filter through plain joins itself)."""
     from blazegraph_database_spark.operators.paths import (
-        compile_path, contains_closure, geared_reach, seeded_closure, _gcols,
+        contains_closure, geared_reach, _gcols,
     )
 
     s_const, o_const = is_const(node.s), is_const(node.o)
-    if not (s_const or o_const):
-        return None
-    bases = _closure_bases(node.path)
-    if not bases:
-        return None
-    if all(
-        _base_pairs_hint(store, b, with_graph) <= _GEAR_MIN_BASE_PAIRS
-        for b in bases
-    ):
+    if not (s_const or o_const) or not contains_closure(node.path):
         return None
     k = _gcols(with_graph)
     forward = s_const  # prefer forward gearing when both ends are bound
     seed = const_lex(node.s if forward else node.o)
-    if isinstance(node.path, (A.Plus, A.Star)) and not contains_closure(
-        node.path.path
-    ):
-        # closure-free inner: the single-seed walk over the (lazy) compiled
-        # base; a closure-CONTAINING inner ((:a/:p+)+) falls through to
-        # geared_reach, which recurses instead of materializing it
-        base = compile_path(store, node.path.path, with_graph=with_graph)
-        if not forward:
-            base = base.select(*k, F.col("o").alias("s"), F.col("s").alias("o"))
-        reached = seeded_closure(base, seed, keys=k)  # ([g,] o), >= 1 hops
-    else:
-        frontier = store.spark.createDataFrame([(seed,)], "o string")
-        if with_graph:
-            frontier = store.df.select("g").distinct().crossJoin(frontier)
-        reached = geared_reach(store, node.path, frontier, with_graph, forward)
+    frontier = store.spark.createDataFrame([(seed,)], "o string")
+    if with_graph:
+        frontier = store.df.select("g").distinct().crossJoin(frontier)
+    reached = geared_reach(store, node.path, frontier, with_graph, forward)
     pairs = reached.select(*k, F.lit(seed).alias("s"), F.col("o"))
     if not forward:
         pairs = pairs.select(*k, F.col("o").alias("s"), F.col("s").alias("o"))
-    # Star's zero-length component for the CONSTANT endpoint is handled by
-    # the _path_nullable identity union in the caller; zero-length matches
-    # to OTHER nodes only arise for var-var patterns, which never take
-    # this path.
+    # zero-length matches to OTHER nodes than the constant only arise for
+    # var-var patterns, which never take this path
     return pairs
 
 

@@ -409,9 +409,9 @@ def path_anchored_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the constant seed flows forward through the sequence, so the `+`
     component expands a frontier from the seed's parent instead of closing
     the whole edge relation (plans/compiler._anchored_path_pairs +
-    operators/paths.geared_reach; on schema-sized bases like this one the
-    driver-tier full closure evaluates the same semantics). Oracle: the
-    seed's ancestor chain at depth >= 2."""
+    operators/paths.geared_reach; the `+` walk is a seeded GAS BFS, on
+    the driver tier at this size). Oracle: the seed's ancestor chain at
+    depth >= 2."""
     from blazegraph_database_spark.plans.sparql_parser import run_sparql
 
     tree = _parent_tree(spark, sf_dir)
@@ -450,9 +450,9 @@ def _lineitem_chain_store(spark: SparkSession, sf_dir: str) -> TripleStore:
     """Dense `next` edge graph derived from lineitem: a root node 0 fans
     out to every order's entry node, and each lineitem row chains
     K*10+i -> K*10+i+1 (linenumber <= 7, so node ids never collide).
-    ~75k edges at sf0.01 — ABOVE the 20k gearing threshold, unlike the
-    customer parent tree (~1.5k at sf0.01), so anchored paths over this
-    store take the geared frontier walk under the driver gate."""
+    ~75k edges at sf0.01 — a data-sized base, unlike the customer parent
+    tree (~1.5k at sf0.01); anchored paths over either store take the
+    geared walk, here a deep one with a wide frontier."""
     from blazegraph_database_spark.sources.relational import read_parquet
 
     li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
@@ -497,15 +497,12 @@ def _lineitem_chain_store(spark: SparkSession, sf_dir: str) -> TripleStore:
 )
 def path_anchored_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONSTANT-anchored sequence `<n:0> next/next+ ?x` over a DENSE base
-    (~75k `next` edges at sf0.01, above GEAR_MIN_BASE_PAIRS) — the r10
-    geared-Seq shape where the GEARED branch itself runs at driver scale
-    (ref: anchored ALP evaluation + the gearing query hint,
-    TestGearingQueryHint; r10 verdict: the anchored-seq oracles ride the
-    full-closure driver tier because the parent tree is schema-sized, so
-    no oracle row ever executed geared_reach). The constant root's
-    frontier flows through the Seq: one bounded hop to the entry layer,
-    then a Δ-sized frontier walk down the per-order chains — never the
-    edge set's all-pairs closure (a companion unit test patches
+    (~75k `next` edges at sf0.01) — the r10 geared-Seq shape on a
+    data-sized base (ref: anchored ALP evaluation + the gearing query hint,
+    TestGearingQueryHint). The constant root's frontier flows through the
+    Seq: one hop to the entry layer, then a seeded GAS BFS walk down the
+    per-order chains (driver tier at sf0.01) — never the edge set's
+    all-pairs closure (a companion unit test patches
     transitive_closure to raise on this exact store/query combo). Oracle:
     depth-tracked recursive CTE over the identically-derived edges."""
     from blazegraph_database_spark.plans.sparql_parser import run_sparql

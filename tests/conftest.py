@@ -16,12 +16,9 @@ SF01_DIR = "/root/testdata/sf0.01"
 SLOW_TESTS = (
     # sparql parser / path-machinery parity sweeps
     "test_geared_reach_parity_all_shapes",
-    "test_anchored_seq_path_geared",
-    "test_anchored_path_seeded_expansion",
     "test_chained_exact_arithmetic",
     "test_frontier_walk_batches_empty_checks",
     "test_seeded_closure_deep_chain_no_truncation",
-    "test_geared_nested_closure_no_allpairs",
     "test_bounded_zero_lower_const_endpoint_parity",
     # geospatial brute-force parity
     "test_knn_equals_bruteforce_and_expands_bands",

@@ -241,17 +241,18 @@ def test_path_cycle_terminates(spark):
     assert len(rows(df)) == 9  # full 3-cycle closure
 
 
-def test_transitive_closure_semi_naive_matches_doubling(spark, monkeypatch):
-    """Large-fan-out graphs take the semi-naive delta-join path; it must
-    produce the same closure as iterative doubling (ref: ArbitraryLengthPathNode
-    semi-naive ALP evaluation)."""
+def test_transitive_closure_semi_naive_matches_doubling(spark, force_distributed):
+    """Non-functional graphs past the driver tier take the semi-naive
+    delta-join path; it must produce the same closure as iterative doubling,
+    its tail past MAX_ITERS rounds (ref: ArbitraryLengthPathNode semi-naive
+    ALP evaluation)."""
     from blazegraph_database_spark.operators import paths
 
     edges = [(f"n{i}", f"n{i+1}") for i in range(12)]  # chain, depth 12
     edges += [("hub", f"n{i}") for i in range(12)]     # fan-out hub
     df = spark.createDataFrame(edges, "s string, o string")
-    by_doubling = {tuple(r) for r in paths.transitive_closure(df).collect()}
-    monkeypatch.setattr(paths, "DOUBLING_MAX_PAIRS", 0)  # force semi-naive
+    by_doubling = {tuple(r) for r in paths._doubling(df, []).collect()}
+    force_distributed()
     by_delta = {tuple(r) for r in paths.transitive_closure(df).collect()}
     assert by_delta == by_doubling
     assert ("n0", "n12") in by_delta and ("hub", "n12") in by_delta

@@ -22,6 +22,23 @@ def test_bfs_depths_and_pred(diamond, each_tier):
         assert out == {"a": (0, None), "b": (1, "a"), "c": (1, "a"), "d": (2, "b")}
 
 
+def test_bfs_unbounded_depth(spark, each_tier):
+    """max_depth=None runs until the frontier is empty: on a chain (pointer
+    doubling past the driver tier) and once a node has two parents (the
+    frontier loop)."""
+    chain = [(f"c{i}", f"c{i+1}") for i in range(10)]
+    want = {f"c{i}": i for i in range(11)}
+    shortcut = dict(want, **{f"c{i}": i - 4 for i in range(5, 11)})
+    graphs = (
+        (spark.createDataFrame(chain, "src string, dst string"), want),
+        (spark.createDataFrame(chain + [("c0", "c5")], "src string, dst string"), shortcut),
+    )
+    for _ in each_tier():
+        for df, expect in graphs:
+            out = {r["node"]: r["depth"] for r in gas.bfs(df, ["c0"], max_depth=None).collect()}
+            assert out == expect
+
+
 def test_sssp_weighted(spark, each_tier):
     edges = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "c", 1.0), ("a", "c", 5.0), ("c", "d", 1.0)],

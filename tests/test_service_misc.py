@@ -876,6 +876,39 @@ def test_rest_selects_on_written_version_build_stats_once(spark, monkeypatch):
     assert len(builds) == 1
 
 
+def test_rest_graph_scope_builds_stats_once(spark, monkeypatch):
+    """Three identical REST SELECTs through GRAPH <g1> on one quad version
+    compute the stats once each for the version and for graph g1: the
+    graph-scoped store lives in the version's memo, not per query."""
+    from blazegraph_database_spark.model.store import TripleStore
+    from blazegraph_database_spark.server.rest import SparqlEndpoint
+    from blazegraph_database_spark.update.update import UpdatableStore
+
+    df = spark.createDataFrame(
+        [("a", "p", "b", "iri", "g1"), ("b", "q", "1", "long", "g1"),
+         ("c", "p", "b", "iri", "g2")],
+        "s string, p string, o_lex string, o_dt string, g string",
+    )
+    ep = SparqlEndpoint(spark, UpdatableStore.from_store(TripleStore(df)))
+    builds = []
+    stats = TripleStore.stats
+
+    def counting(self):
+        if self._stats is None:
+            builds.append(self)
+        return stats(self)
+
+    monkeypatch.setattr(TripleStore, "stats", counting)
+    q = "SELECT ?x ?n WHERE { GRAPH <g1> { ?x <p> ?y . ?y <q> ?n } }"
+    counts = []
+    for _ in range(3):
+        status, _ctype, body = ep.query("kb", q)
+        assert status == 200 and b'"1"' in body
+        counts.append(len(builds))
+    assert counts[0] >= 1
+    assert counts == [counts[0]] * 3
+
+
 def test_rest_bds_search_index_built_once_per_scope(spark, monkeypatch):
     """A bds:search sent twice through REST builds its full-text index once;
     the same search under FROM NAMED is a different dataset scope and gets

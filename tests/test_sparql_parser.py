@@ -1289,7 +1289,7 @@ def test_anchored_path_seeded_expansion(spark):
     st = TripleStore(edges)
     node = A.PathPattern(s="n0_40", path=A.Plus("urn:next"), o=Var("o"), g=None)
     pairs = _anchored_path_pairs(st, node, with_graph=False)
-    assert pairs is not None  # the seeded branch FIRED (base > 20k)
+    assert pairs is not None  # the seeded branch FIRED
     got = {r["o"] for r in pairs.collect()}
     assert got == {f"n0_{i}" for i in range(41, 51)}  # 10 hops to chain end
     # end-to-end through the text parser, reverse gearing (const object)
@@ -1298,32 +1298,34 @@ def test_anchored_path_seeded_expansion(spark):
     assert back == {f"n1_{i}" for i in range(0, 50)}  # every chain-1 ancestor
 
 
-def test_seeded_closure_deep_chain_no_truncation(spark):
-    """A deep chain must NOT silently truncate: the walk's round budget is
-    adaptive (r9 advisor replaced the old per-caller cap + all-pairs
-    fallback), so every hop of a chain resolves frontier-sized."""
-    from blazegraph_database_spark.operators.paths import seeded_closure
+def test_seeded_closure_deep_chain_no_truncation(spark, each_tier):
+    """A deep chain must NOT silently truncate: a seeded walk runs until its
+    frontier is empty, so every hop of a chain resolves, on both tiers."""
+    from blazegraph_database_spark.operators.paths import seeded_closure_from
 
     edges = spark.createDataFrame(
         [(f"c{i}", f"c{i+1}") for i in range(30)], "s string, o string"
     )
-    got = {r["o"] for r in seeded_closure(edges, "c0").collect()}
-    assert got == {f"c{i}" for i in range(1, 31)}  # all 30 hops
+    seeds = spark.createDataFrame([("c0",)], "o string")
+    for _ in each_tier():
+        got = {r["o"] for r in seeded_closure_from(edges, seeds).collect()}
+        assert got == {f"c{i}" for i in range(1, 31)}  # all 30 hops
 
 
-def test_frontier_walk_batches_empty_checks(spark):
-    """Driver-sync budget (r10 verdict item 6 + r11 review): a DEEP walk
-    fires an isEmpty probe every round only for the first
-    EMPTY_CHECK_EVERY rounds, then once per stride — a 30-hop chain runs
-    ~k + rounds/k probes, not one per round (the old regime's 31). A
-    SHALLOW walk keeps per-round probes and pays zero no-op tail rounds."""
+def test_frontier_walk_batches_empty_checks(spark, each_tier):
+    """Driver-sync budget (r10 verdict item 6 + r11 review): on the
+    distributed tier a DEEP walk fires an isEmpty probe every round only
+    for the first EMPTY_CHECK_EVERY rounds, then once per stride — a
+    30-hop chain runs ~k + rounds/k probes, not one per round (the old
+    regime's 31). A SHALLOW walk keeps per-round probes and pays zero no-op
+    tail rounds. The driver tier runs no probe; it checks the answers."""
     from pyspark.sql import DataFrame
 
-    from blazegraph_database_spark.operators.paths import (
-        EMPTY_CHECK_EVERY, seeded_closure,
-    )
+    from blazegraph_database_spark.operators.gas import EMPTY_CHECK_EVERY
+    from blazegraph_database_spark.operators.paths import seeded_closure_from
 
     orig = DataFrame.isEmpty
+    seeds = spark.createDataFrame([("c0",)], "o string")
 
     def walk_probes(depth):
         edges = spark.createDataFrame(
@@ -1337,23 +1339,26 @@ def test_frontier_walk_batches_empty_checks(spark):
 
         DataFrame.isEmpty = counting
         try:
-            got = {r["o"] for r in seeded_closure(edges, "c0").collect()}
+            got = {r["o"] for r in seeded_closure_from(edges, seeds).collect()}
         finally:
             DataFrame.isEmpty = orig
         assert got == {f"c{i}" for i in range(1, depth + 1)}
         return calls["n"]
 
-    # deep: k per-round probes + ceil(rounds/k) stride probes + final check
     k = EMPTY_CHECK_EVERY
-    assert walk_probes(30) <= k + (30 + k) // k + 3
-    # shallow (depth < stride): per-round probes, immediate detection — the
-    # stride must not make a 3-hop walk run 8 rounds
-    assert walk_probes(3) <= 3 + 3
+    for tier in each_tier():
+        deep, shallow = walk_probes(30), walk_probes(3)
+        if tier == "distributed":
+            # deep: k per-round probes + ceil(rounds/k) stride probes + final
+            assert deep <= k + (30 + k) // k + 3
+            # shallow (depth < stride): per-round probes, immediate
+            # detection — the stride must not make a 3-hop walk run 8 rounds
+            assert shallow <= 3 + 3
 
 
 def _chain_store(spark, extra_rows=()):
-    """600 disjoint 50-hop <urn:next> chains (30k edges — data-sized, past
-    the gearing threshold) plus caller-supplied extra edges."""
+    """600 disjoint 50-hop <urn:next> chains (30k edges — data-sized) plus
+    caller-supplied extra edges."""
     from blazegraph_database_spark.model.store import TripleStore
     from pyspark.sql import functions as F
 
@@ -1414,7 +1419,7 @@ def test_anchored_seq_path_geared(spark):
 def test_path_anchored_dense_runs_geared_branch(spark):
     """The driver-scorable `path_anchored_dense` oracle (r10 verdict item
     4) really executes the GEARED branch at gate scale: its lineitem-chain
-    base (~75k edges at sf0.01) exceeds GEAR_MIN_BASE_PAIRS, so the same
+    base is ~75k edges at sf0.01, and the same
     store/query combo the correctness gate runs must never materialize the
     edge set's all-pairs closure (transitive_closure patched to raise)."""
     import blazegraph_database_spark.operators.paths as P
@@ -1432,10 +1437,11 @@ def test_path_anchored_dense_runs_geared_branch(spark):
     assert n > 10_000  # data-sized: depth>=2 reachable layer at sf0.01
 
 
-def test_geared_reach_parity_all_shapes(spark):
+def test_geared_reach_parity_all_shapes(spark, each_tier):
     """geared_reach matches the full compile_path + endpoint filter for
     every composite path shape over a small cyclic graph (seeded-vs-full
-    parity, the r9 gearing fixtures' model extended to sequences)."""
+    parity, the r9 gearing fixtures' model extended to sequences), and for
+    the seeded walk's edge shapes on both tiers."""
     from blazegraph_database_spark.model.store import TripleStore
     from blazegraph_database_spark.operators.paths import compile_path, geared_reach
     from blazegraph_database_spark.plans import algebra as A
@@ -1480,39 +1486,39 @@ def test_geared_reach_parity_all_shapes(spark):
             }
             assert got == want, (shape, seed, forward, got ^ want)
 
-
-def test_anchored_single_link_no_probe_job(spark):
-    """The gearing decision for a single-Link base comes from the store's
-    cached predicate stats — no limit-bounded probe job per anchored
-    pattern (r9 verdict item 5)."""
-    import blazegraph_database_spark.plans.compiler as C
-    from blazegraph_database_spark.model.terms import Var
-    from blazegraph_database_spark.plans import algebra as A
-
-    st = _chain_store(spark)
-    st.stats()  # warmed once per store, shared with join ordering
-    node = A.PathPattern(s="n0_40", path=A.Plus("urn:next"), o=Var("x"), g=None)
-    orig = C._base_pairs_hint
-
-    def hint_no_probe(store, base_path, with_graph):
-        from pyspark.sql import DataFrame
-
-        real_limit = DataFrame.limit
-        DataFrame.limit = lambda *a, **k: (_ for _ in ()).throw(
-            AssertionError("probe job ran for a single-Link base")
-        )
-        try:
-            return orig(store, base_path, with_graph)
-        finally:
-            DataFrame.limit = real_limit
-
-    C._base_pairs_hint = hint_no_probe
-    try:
-        pairs = C._anchored_path_pairs(st, node, with_graph=False)
-    finally:
-        C._base_pairs_hint = orig
-    assert pairs is not None
-    assert pairs.count() == 10
+    # edge shapes, on both tiers: a seed on a cycle and a seed with a
+    # self-loop reach themselves, an absent seed and an empty base reach
+    # nothing, and a graph-keyed base walks each graph apart
+    edge = TripleStore(spark.createDataFrame([
+        ("r0", "urn:r", "r1", "iri"), ("r1", "urn:r", "r2", "iri"),
+        ("r2", "urn:r", "r0", "iri"),
+        ("s0", "urn:s", "s0", "iri"), ("s0", "urn:s", "s1", "iri"),
+    ], "s string, p string, o_lex string, o_dt string"))
+    quads = TripleStore(spark.createDataFrame([
+        ("r0", "urn:r", "r1", "iri", "g1"), ("r1", "urn:r", "r0", "iri", "g1"),
+        ("r0", "urn:r", "r2", "iri", "g2"),
+    ], "s string, p string, o_lex string, o_dt string, g string"))
+    cases = [
+        (edge, A.Plus("urn:r"), "r0", {("r0",), ("r1",), ("r2",)}),
+        (edge, A.Plus("urn:s"), "s0", {("s0",), ("s1",)}),
+        (edge, A.Plus("urn:r"), "ghost", set()),
+        (edge, A.Plus("urn:none"), "r0", set()),
+        (quads, A.Plus("urn:r"), "r0", {("g1", "r0"), ("g1", "r1"), ("g2", "r2")}),
+    ]
+    for tier in each_tier():
+        for store, shape, seed, expect in cases:
+            keyed = store is quads
+            k = ["g"] if keyed else []
+            frontier = spark.createDataFrame([(seed,)], "o string")
+            if keyed:
+                frontier = store.df.select("g").distinct().crossJoin(frontier)
+            full = compile_path(store, shape, with_graph=keyed)
+            want = {tuple(r) for r in full.filter(F.col("s") == seed).select(*k, "o").collect()}
+            got = {
+                tuple(r)
+                for r in geared_reach(store, shape, frontier, keyed, True).select(*k, "o").collect()
+            }
+            assert got == want == expect, (tier, shape, seed, got, want)
 
 
 def test_chained_exact_arithmetic(spark):
@@ -1544,8 +1550,7 @@ def test_geared_nested_closure_no_allpairs(spark):
     """`<c> (:p+)? ?x` and `<c> (:next/:next)+ ?x` over a data-sized base:
     the geared evaluator recurses through nested closures — neither the
     probe nor the evaluation may materialize an all-pairs closure
-    (r10 review: ZeroOrOne/Bounded compiled their inner atomically, and
-    _base_pairs_hint's probe eagerly RAN the nested closure)."""
+    (r10 review: ZeroOrOne/Bounded compiled their inner atomically)."""
     import blazegraph_database_spark.operators.paths as P
     from blazegraph_database_spark.model.terms import Var
     from blazegraph_database_spark.plans import algebra as A
@@ -1589,9 +1594,9 @@ def test_geared_nested_closure_no_allpairs(spark):
         assert pairs4 is not None
         # (next/next+)+ from n0_46 = everything >= 2 hops down the chain
         assert {r["o"] for r in pairs4.collect()} == {"n0_48", "n0_49", "n0_50"}
-        # FINITE-bounded over a nested closure gears too (r10 review:
-        # _closure_bases skipped finite-Bounded inners, so (:p+){1,2}
-        # never geared and closed :p globally)
+        # FINITE-bounded over a nested closure gears too (r10 review: a
+        # finite-Bounded inner was skipped, so (:p+){1,2} never geared and
+        # closed :p globally)
         node5 = A.PathPattern(
             s="n0_47", path=A.Bounded(A.Plus("urn:next"), 1, 2),
             o=Var("x"), g=None,
@@ -1604,13 +1609,13 @@ def test_geared_nested_closure_no_allpairs(spark):
 
 
 def test_bounded_zero_lower_const_endpoint_parity(spark):
-    """`<c> :p{0,2} ?x` zero-matches the constant itself on BOTH the geared
-    and the full-closure path (r10 review: _path_nullable missed
+    """`<c> :p{0,2} ?x` zero-matches the constant itself on a small and a
+    data-sized store alike (r10 review: _path_nullable missed
     Bounded(lower=0), so the answer flipped with predicate cardinality)."""
     from blazegraph_database_spark.model.store import TripleStore
     from blazegraph_database_spark.plans.sparql_parser import run_sparql
 
-    # small store: full-closure path; constant ABSENT from the graph
+    # small store; constant ABSENT from the graph
     st_small = TripleStore(spark.createDataFrame(
         [("a", "urn:next", "b", "iri")],
         "s string, p string, o_lex string, o_dt string",
@@ -1619,7 +1624,7 @@ def test_bounded_zero_lower_const_endpoint_parity(spark):
         st_small, "SELECT ?x WHERE { <ghost> <urn:next>{0,2} ?x }"
     ).collect()}
     assert got_small == {"ghost"}
-    # data-sized store: geared path; same shape must agree
+    # data-sized store; same shape must agree
     st_big = _chain_store(spark)
     got_big = {r["x"] for r in run_sparql(
         st_big, "SELECT ?x WHERE { <ghost> <urn:next>{0,2} ?x }"
@@ -1630,7 +1635,7 @@ def test_bounded_zero_lower_const_endpoint_parity(spark):
     ).collect()}
     assert got_real == {"n0_48", "n0_49", "n0_50"}
     # epsilon through nullable INNERS too: (p*)+ and (p?){2,2} contain the
-    # empty word, so the absent constant zero-matches itself on BOTH paths
+    # empty word, so the absent constant zero-matches itself on both stores
     # (r10 review x2: _path_nullable fell through to False for these)
     for q in (
         "SELECT ?x WHERE { <ghost> (<urn:next>*)+ ?x }",
