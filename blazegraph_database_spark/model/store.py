@@ -1,4 +1,4 @@
-"""Triple/quad store over a DataFrame.
+"""Triple/quad store over a DataFrame, and the written version over one.
 
 Reference analog: com.bigdata.rdf.store.AbstractTripleStore + the SPO/POS/OSP
 B+Tree indices (bigdata-core/bigdata-rdf/src/java/com/bigdata/rdf/spo/).
@@ -17,6 +17,16 @@ copy that sets flags and shares the memo, so whatever one query builds,
 every later query on the same store reuses — the way every reference query
 reads the one ``AbstractTripleStore``'s indices. A memo lives as long as its
 store: a version kept in ``UpdatableStore.versions`` keeps its memo.
+
+Written versions. A :class:`DeltaStore` is a compacted base store plus two
+small, exact row sets held on the driver: ``added`` (disjoint from the base)
+and ``removed`` (a subset of it). Reads compose instead of replaying: a
+constant predicate's source is the base's own source for it, anti-joined
+against that predicate's removed rows and unioned with its added rows; the
+union ``df`` composes the same way; the stats are the base's adjusted by the
+Δ counts. Every version on one base shares the base's memo, so its virtual
+indices and stats are built once — the way a Blazegraph commit point is a
+set of indices, not a replayed list of operations.
 """
 
 from __future__ import annotations
@@ -29,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TRIPLE_COLS = ["s", "p", "o_lex", "o_dt"]
+QUAD_COLS = TRIPLE_COLS + ["g"]
 
 
 @dataclass
@@ -230,6 +241,12 @@ class TripleStore:
         parquet-footer null counts) marked them exact."""
         return self._stats is None or self._stats_exact
 
+    def may_hold(self, pred: str) -> bool:
+        """False when the stats rule ``pred`` out: absent or counted 0 (the
+        counts are exact or upper bounds, never under)."""
+        stats = self._stats
+        return stats is None or (pred in stats and stats[pred].count > 0)
+
     def total(self) -> int:
         return sum(s.count for s in self.stats().values())
 
@@ -274,3 +291,136 @@ class TripleStore:
         cond = F.col("g").isin(list(graphs)) if graphs else F.lit(False)
         scoped = self.memo(("scope", graphs), lambda: TripleStore(self.df.filter(cond)))
         return scoped.view(track_dt=self.track_dt)
+
+
+def key_join(
+    df: DataFrame, rows: DataFrame, how: str, cols: list[str], broadcast: bool = True
+) -> DataFrame:
+    """``df`` semi- or anti-joined (``how``) to the rows of ``rows`` on the
+    key columns ``cols``, null-safely (the default graph is g = NULL). The
+    right side is renamed first, so frames that share lineage still compare
+    column by column."""
+    right = rows.select([F.col(c).alias(f"__k_{c}") for c in cols])
+    if broadcast:
+        right = F.broadcast(right)
+    cond = None
+    for c in cols:
+        eq = df[c].eqNullSafe(right[f"__k_{c}"])
+        cond = eq if cond is None else cond & eq
+    return df.join(right, on=cond, how=how)
+
+
+def rows_frame(spark: SparkSession, rows, cols: list[str], o_type: str = "string") -> DataFrame:
+    """Driver-held key rows as a local relation in one partition (a result
+    streams to the client one job per partition); ``o_type`` casts
+    ``o_lex`` to a typed source's native column type."""
+    from blazegraph_database_spark.operators.driver_tier import to_frame
+
+    df = to_frame(spark, list(rows), ", ".join(f"{c} string" for c in cols)).coalesce(1)
+    return df if o_type == "string" else df.withColumn("o_lex", F.col("o_lex").cast(o_type))
+
+
+class DeltaStore(TripleStore):
+    """A written version: ``base`` with ``removed`` taken out and ``added``
+    put in (see the module docstring).
+
+    ``base`` is a compacted store, never another DeltaStore. ``added`` and
+    ``removed`` map a predicate to a frozenset of key rows (tuples in
+    ``TRIPLE_COLS`` / ``QUAD_COLS`` order) with ``added ∩ base = ∅`` and
+    ``removed ⊆ base``; they keep the stats exact and mean no read needs a
+    ``distinct()``. Versions share the frozensets of predicates one write
+    did not touch."""
+
+    def __init__(self, base: TripleStore, added: dict, removed: dict):
+        self.base = base
+        self.added = added
+        self.removed = removed
+        self.touched = frozenset(added) | frozenset(removed)
+        pred_dt = base.pred_dt
+        if pred_dt:
+            # a Δ row tagged differently makes the predicate's tag no longer
+            # constant: drop it, so no typed source is asked for
+            pred_dt = {
+                p: t for p, t in pred_dt.items() if all(r[3] == t for r in added.get(p, ()))
+            }
+        super().__init__(
+            df_factory=self._compose_df,
+            star_factory=self._star if base.star_factory else None,
+            pred_table=base.pred_table,
+            pred_dt=pred_dt,
+        )
+        self._stats_exact = base.stats_are_exact()
+        if base._stats is not None:
+            self._stats = self._compose_stats(base._stats)
+
+    @property
+    def spark(self) -> SparkSession:
+        return self.base.spark
+
+    @property
+    def has_graphs(self) -> bool:
+        return self.base.has_graphs
+
+    def key_cols(self) -> list[str]:
+        return QUAD_COLS if self.has_graphs else TRIPLE_COLS
+
+    def _frame(self, key, rows, o_type: str = "string") -> DataFrame:
+        return self.memo(key, lambda: rows_frame(self.spark, rows, self.key_cols(), o_type))
+
+    def _compose_df(self) -> DataFrame:
+        df = self.base.df
+        removed = frozenset().union(*self.removed.values())
+        if removed:
+            df = key_join(df, self._frame("removed", removed), "left_anti", self.key_cols())
+        added = frozenset().union(*self.added.values())
+        if added:
+            df = df.unionByName(self._frame("added", added), allowMissingColumns=True)
+        return df
+
+    def pattern_source(self, pred: str, typed: bool = False) -> DataFrame | None:
+        """The base's source for ``pred`` minus its removed rows plus its
+        added rows. A predicate absent from the base's stats is served by
+        its added rows alone, with no base scan."""
+        if pred not in self.touched:
+            return self.base.pattern_source(pred, typed=typed)
+        return self.memo(("source", pred, typed), lambda: self._compose_source(pred, typed))
+
+    def _compose_source(self, pred: str, typed: bool) -> DataFrame:
+        src = self.base.pattern_source(pred, typed=typed)
+        o_type = dict(src.dtypes)["o_lex"] if src is not None else "string"
+        rem = self.removed.get(pred)
+        out = None
+        if rem or self.base.may_hold(pred):
+            out = src if src is not None else self.base.df.filter(F.col("p") == pred)
+            if rem:
+                doomed = self._frame(("removed", pred, o_type), rem, o_type)
+                out = key_join(out, doomed, "left_anti", self.key_cols())
+        add = self.added.get(pred)
+        if add:
+            new = self._frame(("added", pred, o_type), add, o_type)
+            out = new if out is None else out.unionByName(new, allowMissingColumns=True)
+        return out
+
+    def _compose_stats(self, base_stats: dict[str, PredStat]) -> dict[str, PredStat]:
+        out = dict(base_stats)
+        for p in self.touched:
+            add = self.added.get(p, ())
+            st = out.get(p)
+            if st is None:
+                out[p] = PredStat(
+                    len(add), max(len({r[0] for r in add}), 1), max(len({r[2] for r in add}), 1)
+                )
+            else:
+                n = st.count + len(add) - len(self.removed.get(p, ()))
+                out[p] = PredStat(n, st.n_distinct_s, st.n_distinct_o)
+        return out
+
+    def stats(self) -> dict[str, PredStat]:
+        return self.memo("stats", lambda: self._compose_stats(self.base.stats()))
+
+    def _star(self, preds: list[str], native: frozenset = frozenset()) -> DataFrame | None:
+        # a star over a Δ-touched predicate takes the per-pattern path,
+        # whose sources compose the Δ
+        if self.touched.intersection(preds):
+            return None
+        return self.base.star_factory(preds, native=native)

@@ -49,6 +49,16 @@ def collect_bounded(df: DataFrame):
     return frame, table.to_pandas()
 
 
+def collect_rows(df: DataFrame) -> list[tuple] | None:
+    """At most :data:`DRIVER_TIER_MAX_ROWS` rows of ``df`` as tuples, nulls
+    kept, or None when it holds more. A local relation (a frame made by
+    :func:`to_frame`) comes back without a Spark job."""
+    if DRIVER_TIER_MAX_ROWS <= 0:
+        return None
+    rows = df.limit(DRIVER_TIER_MAX_ROWS + 1).collect()
+    return None if len(rows) > DRIVER_TIER_MAX_ROWS else [tuple(r) for r in rows]
+
+
 def to_frame(spark, data, schema) -> DataFrame:
     """Driver-computed rows (a list of tuples or a pandas frame, columns in
     ``schema`` order) back to Spark as one Arrow batch; pickling tuples one

@@ -607,6 +607,27 @@ def bfs_from_df(edges: DataFrame, seeds: DataFrame, max_depth: int | None = MAX_
     return _general_bfs(_edge_step(e), seed, ["node"], max_depth).select("node", "depth")
 
 
+def _reach_from_df(edges: DataFrame, seeds: DataFrame) -> DataFrame:
+    """(node): nodes >= 1 hop of ``edges`` (src, dst) from the ``seeds``
+    (node) set — a seed is in the answer only through a cycle or a
+    self-loop. The edges come to the driver marked with whether their src
+    is a seed, so the one bounded collect also gives the 1-hop frontier;
+    past the gate that frontier is read off the collect's checkpoint."""
+    mark = seeds.select(F.col("node").alias("src")).distinct().withColumn("__seed", F.lit(True))
+    marked = edges.select("src", "dst").join(mark, on="src", how="left").select(
+        "src", "dst", F.coalesce("__seed", F.lit(False)).alias("seed")
+    )
+    e, pdf = collect_bounded(marked)
+    if pdf is not None:
+        first = list(dict.fromkeys(pdf["dst"].values[pdf["seed"].values.astype(bool)]))
+        rows = _bfs_driver(pdf, first, None)
+        return to_frame(edges.sparkSession, [(n,) for n, _, _ in rows], "node string")
+    no_pred = F.lit(None).cast(e.schema["src"].dataType)
+    seed = e.filter("seed").select(F.col("dst").alias("node")).distinct()
+    seed = seed.select("node", F.lit(0).alias("depth"), no_pred.alias("pred"))
+    return _general_bfs(_edge_step(e.select("src", "dst")), seed, ["node"], None).select("node")
+
+
 def fuzzy_sssp(
     edges: DataFrame,
     sources: list[str],

@@ -9,8 +9,8 @@ Fixed-length constructs (/, |, ^, ?, !(...)) compile to joins/unions. A
 var-var `+`/`*` closes its base with a strategy choice (see
 ``transitive_closure``); an ANCHORED path (a constant endpoint) gears instead
 (``geared_reach``): every closure component is a seeded reachability walk,
-GAS BFS (``gas.bfs_from_df``: the driver tier, or past its gate the one
-shared frontier loop ``gas._general_bfs``), never the all-pairs closure. All
+GAS BFS (the driver tier, or past its gate the one shared frontier loop
+``gas._general_bfs``), never the all-pairs closure. All
 functions optionally carry a graph column so the same machinery evaluates
 paths inside GRAPH ?var — closure joins and walks then include ``g``,
 keeping each named graph's reachability separate.
@@ -300,18 +300,18 @@ def seeded_closure_from(
 
     The walk is GAS BFS seeded with the seeds' 1-hop frontier, run until
     the frontier is empty, so a seed is in the answer only through a cycle
-    or a self-loop. An unkeyed walk goes through :func:`gas.bfs_from_df`:
-    under the driver gate one bounded collect of the base and a python BFS
-    answer it; past the gate the shared loop reads the checkpoint that
-    collect materialized instead of re-scanning the lazy link scan each
-    round. A graph-keyed walk runs the shared loop with a one-hop join
-    step over the lazy base."""
+    or a self-loop. An unkeyed walk goes through ``gas._reach_from_df``:
+    under the driver gate one bounded collect of the base, its edges marked
+    by whether they leave a seed, gives both the graph and the 1-hop
+    frontier to a python BFS; past the gate the shared loop reads the
+    checkpoint that collect materialized instead of re-scanning the lazy
+    link scan each round. A graph-keyed walk runs the shared loop with a
+    one-hop join step over the lazy base."""
     keys = keys or []
-    first = _hop_from(base, seeds, keys)
     if keys:
-        return _walk(lambda f: _hop_from(base, f, keys), first, keys)
+        return _walk(lambda f: _hop_from(base, f, keys), _hop_from(base, seeds, keys), keys)
     edges = base.select(F.col("s").alias("src"), F.col("o").alias("dst"))
-    reached = gas.bfs_from_df(edges, first.select(F.col("o").alias("node")), max_depth=None)
+    reached = gas._reach_from_df(edges, seeds.select(F.col("o").alias("node")))
     return reached.select(F.col("node").alias("o"))
 
 

@@ -4,9 +4,9 @@ Reference analog: UpdateExprBuilder.java (bigdata-core/bigdata-sails/src/java/
 com/bigdata/rdf/sail/sparql/UpdateExprBuilder.java) building the UpdateRoot
 AST (bigdata-core/bigdata-rdf/.../sparql/ast/UpdateRoot.java), evaluated by
 AST2BOpUpdate.java. Here each textual operation parses into a small op dict
-and executes against :class:`update.update.UpdatableStore` — the verbs are
-already DataFrame union/anti-join; this adds the text surface an endpoint
-user hits first.
+and executes against :class:`update.update.UpdatableStore`, whose verbs
+commit each write as a Δ version on a compacted base; this adds the text
+surface an endpoint user hits first.
 
 Supported: INSERT DATA / DELETE DATA (with optional GRAPH wrapper),
 DELETE/INSERT ... WHERE (either or both templates, optional WITH graph,
@@ -23,6 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from blazegraph_database_spark.model.terms import Lit, Var
+from blazegraph_database_spark.operators.driver_tier import to_frame
 from blazegraph_database_spark.plans import algebra as A
 from blazegraph_database_spark.plans.sparql_parser import Parser
 from blazegraph_database_spark.update.update import UpdatableStore
@@ -363,7 +364,9 @@ def _ground_triples_df(spark: SparkSession, quads: list[tuple], with_graph: bool
         ol, odt = lex_dt(o)
         rows.append((sl, pl, ol, odt, g) if with_graph else (sl, pl, ol, odt))
     schema = "s string, p string, o_lex string, o_dt string" + (", g string" if with_graph else "")
-    return spark.createDataFrame(rows, schema)
+    # a local relation: the update's bounded collect reads it back with no
+    # Spark job
+    return to_frame(spark, rows, schema)
 
 
 def parse_update(src: str) -> list[dict]:
@@ -380,7 +383,7 @@ def apply_update(store: UpdatableStore, src: str, spark: SparkSession | None = N
         if kind in ("insert_data", "delete_data"):
             # keep the g column whenever the data block names a graph — a
             # triples-only store upgrades to quads rather than dropping it
-            has_g = "g" in store.current.df.columns or any(
+            has_g = store.current.has_graphs or any(
                 q[3] is not None for q in op["quads"]
             )
             data = _ground_triples_df(spark, op["quads"], with_graph=has_g)

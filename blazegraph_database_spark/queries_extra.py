@@ -1013,8 +1013,8 @@ def history_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     ast/service/history/HistoryServiceFactory.java:1 + RDRHistory.java —
     per-commit added/removed statement records): commit 1 inserts a derived
     tag for high-balance customers, commit 2 deletes the BUILDING segment
-    triples; the changelog between commit points 0..2 reports both deltas
-    as Δ-sized anti-joins of adjacent immutable versions."""
+    triples; the changelog between commit points 0..2 reads both commits
+    off the Δs the two versions hold over their shared base."""
     from blazegraph_database_spark.plans.update_parser import apply_update
     from blazegraph_database_spark.sources.relational import table_to_triples
     from blazegraph_database_spark.update.update import UpdatableStore

@@ -588,24 +588,27 @@ class SparqlEndpoint:
 
         with self._lock:
             us = self.namespaces[ns]
-            if replace:  # PUT: delete-all + load
-                us.versions.append(TripleStore(us.current.df.limit(0)))
-            cols = ["s", "p", "o_lex", "o_dt"]
-            if context_uri is not None:
-                # ref: InsertServlet's context-uri= — body statements land
-                # in the named graph(s). Overrides any graph the body
-                # itself names, like the reference's forced context.
-                # insert_data quad-upgrades a triples-only store.
-                new = self._fan_out_contexts(new, context_uri, cols)
-                cols = cols + ["g"]
-            elif "g" in new.columns and "g" in us.current.df.columns:
-                # quad body (TriG/TriX/N-Quads) into a quad store: named
-                # graphs survive; readers use g='' for the default graph
-                new = new.withColumn(
-                    "g", F.when(F.col("g") == "", F.lit(None)).otherwise(F.col("g"))
-                )
-                cols.append("g")
-            us.insert_data(new.select(*cols))
+            # one commit point: a PUT whose body fails rolls back, instead of
+            # leaving the namespace cleared
+            with us.transaction():
+                if replace:  # PUT: delete-all + load
+                    us.clear_scope("graphs")
+                cols = ["s", "p", "o_lex", "o_dt"]
+                if context_uri is not None:
+                    # ref: InsertServlet's context-uri= — body statements land
+                    # in the named graph(s). Overrides any graph the body
+                    # itself names, like the reference's forced context.
+                    # insert_data quad-upgrades a triples-only store.
+                    new = self._fan_out_contexts(new, context_uri, cols)
+                    cols = cols + ["g"]
+                elif "g" in new.columns and "g" in us.current.df.columns:
+                    # quad body (TriG/TriX/N-Quads) into a quad store: named
+                    # graphs survive; readers use g='' for the default graph
+                    new = new.withColumn(
+                        "g", F.when(F.col("g") == "", F.lit(None)).otherwise(F.col("g"))
+                    )
+                    cols.append("g")
+                us.insert_data(new.select(*cols))
         n = new.count()
         return 200, JSON, json.dumps({"inserted": n}).encode()
 
@@ -712,12 +715,9 @@ class SparqlEndpoint:
                 ).encode()
             del self._txns[txid]
             if len(shadow.versions) > base:  # collapse to one commit point
-                live.versions.append(shadow.versions[-1])
-                # same invalidation _push performs: the closure bookkeeping
-                # no longer describes the current version
-                live._closed_valid = False
-                live._explicit = None
-                live._counts = None
+                # the shadow's closure bookkeeping describes the version it
+                # publishes, so it comes along
+                live.commit(shadow.current, bookkeeping=shadow)
             return 200, JSON, json.dumps({"committed": txid}).encode()
 
     def tx_abort(self, txid: str) -> tuple[int, str, bytes]:
@@ -1346,8 +1346,7 @@ class SparqlEndpoint:
                 return self.delete_by_pattern(ns, params)
             # DELETE with no query: clear the namespace's data
             with self._lock:
-                us = self.namespaces[ns]
-                us.versions.append(TripleStore(us.current.df.limit(0)))
+                self.namespaces[ns].clear_scope("graphs")
             return 200, JSON, b'{"cleared": true}'
         return 405, JSON, b'{"error": "method not allowed"}'
 

@@ -5,17 +5,28 @@ DeleteInsertGraph/LoadGraph/ClearGraph/CopyGraph/MoveGraph/AddGraph —
 bigdata-core/bigdata-rdf/.../sparql/ast/*Update*.java, evaluated by
 AST2BOpUpdate.java) and the journal's MVCC commit points.
 
-Spark-first: a store version is an immutable DataFrame; every update
-produces a NEW version (union / anti-join — never mutation), and
-``snapshot``/``load_snapshot`` persist versions as immutable parquet
-directories — the journal-commit-point analog giving snapshot isolation
-for free: readers keep whatever version they hold.
+Spark-first: every update produces a NEW immutable version — never
+mutation — so readers keep whatever version they hold (snapshot isolation
+for free), and ``snapshot``/``load_snapshot`` persist versions as
+immutable parquet directories, the journal-commit-point analog.
 
-Scale notes: DELETE is an anti-join on (s,p,o_lex[,g]) — a broadcast
-anti-join when the delete set is small (the common case). INSERT is a
-union + (optional) dedup. DELETE/INSERT WHERE evaluates the WHERE once
-and instantiates both templates from the same bindings DataFrame, like
-the reference's single-WHERE two-template evaluation.
+A version is ``(base, added, removed)`` (``model.store.DeltaStore``):
+``base`` is the last compacted store, shared with its memo (lazy union,
+stats, virtual-index sources) by every version built on it, and
+``added``/``removed`` are exact Δ row sets held on the driver, with
+``added ∩ base = ∅`` and ``removed ⊆ base``. INSERT DATA, DELETE DATA and
+DELETE/INSERT WHERE bring their rows to the driver through the driver
+tier's bounded collect, settle the rows the Δ does not already decide with
+ONE probe job against the base's per-predicate sources (rows of a predicate
+the base's stats rule out need none), and commit set algebra on the Δ.
+Reads then compose the Δ with the base instead of replaying a lineage.
+
+Past the driver gate, and for the whole-store verbs (graph ops, LOAD,
+CLEAR, the quad upgrade, the truth-maintenance closure paths), a write
+compacts: the new version is a new base, its DataFrame locally
+checkpointed. DELETE/INSERT WHERE evaluates the WHERE once and
+instantiates both templates from the same bindings, like the reference's
+single-WHERE two-template evaluation.
 """
 
 from __future__ import annotations
@@ -25,18 +36,20 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from blazegraph_database_spark.model.store import TRIPLE_COLS, TripleStore
-from blazegraph_database_spark.plans.compiler import construct, evaluate, instantiate_template
-
-QUAD_COLS = TRIPLE_COLS + ["g"]
+from blazegraph_database_spark.model.store import (
+    QUAD_COLS,
+    TRIPLE_COLS,
+    DeltaStore,
+    TripleStore,
+    key_join,
+    rows_frame,
+)
+from blazegraph_database_spark.operators import driver_tier
+from blazegraph_database_spark.plans.compiler import evaluate, instantiate_template
 
 # graph-ref sentinel for the default graph (COPY/MOVE/ADD ... DEFAULT); the
 # default graph is stored as g=NULL, matching the reference's null context
 DEFAULT_GRAPH = "default"
-
-
-def _key_cols(df: DataFrame) -> list[str]:
-    return QUAD_COLS if "g" in df.columns else TRIPLE_COLS
 
 
 def _g_is(g: str):
@@ -50,18 +63,58 @@ def _g_lit(g: str):
     return F.lit(None).cast("string") if g == DEFAULT_GRAPH else F.lit(g)
 
 
+def _aligned(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``df``'s key columns in ``keys`` order; a missing one is NULL (a
+    triples frame written to a quad store lands in the default graph)."""
+    have = set(df.columns)
+    return df.select(*[c if c in have else F.lit(None).cast("string").alias(c) for c in keys])
+
+
+def _delta_of(version: TripleStore) -> tuple[TripleStore, dict, dict]:
+    """(base, added, removed) of a version; a compacted version is its own
+    base with an empty Δ."""
+    if isinstance(version, DeltaStore):
+        return version.base, version.added, version.removed
+    return version, {}, {}
+
+
+def _in_base(base: TripleStore, rows: set, keys: list[str]) -> set:
+    """The rows of ``rows`` the base holds, from ONE probe job: a semi-join
+    against the base sources of their predicates (the base's melted union
+    for predicates without one). A predicate the base cannot hold needs no
+    probe."""
+    preds = sorted({r[1] for r in rows if base.may_hold(r[1])})
+    if not preds:
+        return set()
+    srcs = {p: base.pattern_source(p) for p in preds}
+    parts = [src.select(*keys) for src in srcs.values() if src is not None]
+    rest = [p for p, src in srcs.items() if src is None]
+    if rest:
+        parts.append(base.df.filter(F.col("p").isin(rest)).select(*keys))
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part)
+    probe = rows_frame(base.spark, rows, keys)
+    return {tuple(r) for r in key_join(out, probe, "left_semi", keys).collect()}
+
+
+def _rows(delta: dict) -> frozenset:
+    return frozenset().union(*delta.values())
+
+
 @dataclass
 class UpdatableStore:
     """Versioned triple/quad store with SPARQL UPDATE verbs.
 
     ``versions[-1]`` is current; older versions remain readable (snapshot
-    isolation). ``checkpoint_every`` truncates lineage so long update
-    sequences don't grow unbounded plans.
+    isolation). A version is a compacted base or a ``DeltaStore`` over one
+    (see the module docstring): a write under the driver gate adds a Δ
+    version on the current base, a bigger or whole-store write compacts
+    into a new base, so no read replays a lineage of writes. Every version
+    enters through :meth:`commit`.
     """
 
     versions: list[TripleStore] = field(default_factory=list)
-    checkpoint_every: int = 8
-    _updates: int = 0
     # explicit (asserted) triples for closure truth maintenance; None until
     # the first *_with_closure call seeds it from the current store
     _explicit: DataFrame | None = None
@@ -102,8 +155,6 @@ class UpdatableStore:
         (ref: the unisolated SAIL connection each Tx wraps)."""
         return UpdatableStore(
             versions=list(self.versions),
-            checkpoint_every=self.checkpoint_every,
-            _updates=self._updates,
             _explicit=self._explicit,
             _closed_valid=self._closed_valid,
             tm_strategy=self.tm_strategy,
@@ -127,48 +178,38 @@ class UpdatableStore:
 
         Returns one row per changed statement per commit in (since, until]:
         ``(commit, action, s, p, o_lex, o_dt[, g])`` with action in
-        {'added','removed'}. Spark-first: each commit's delta is a pair of
-        anti-joins between adjacent immutable versions — Δ-sized results,
-        no version is ever materialized to the driver; statement identity
-        is (s,p,o_lex[,g]) set semantics, matching the store's verbs."""
+        {'added','removed'}; statement identity is (s,p,o_lex,o_dt[,g])
+        set semantics, matching the store's verbs. A commit between two
+        versions on the same base is read off their Δs on the driver, with
+        no Spark job; only a commit made by a compacting verb needs the
+        pair of anti-joins between the adjacent versions."""
         until = len(self.versions) - 1 if until is None else until
         if not 0 <= since <= until < len(self.versions):
             raise IndexError(
                 f"changelog range ({since}, {until}] outside 0..{len(self.versions) - 1}"
             )
-        spark = self.current.spark
+        keys = QUAD_COLS if self.current.has_graphs else TRIPLE_COLS
+        events: list[tuple] = []
         parts: list[DataFrame] = []
         for i in range(since + 1, until + 1):
+            pb, pa, pr = _delta_of(self.versions[i - 1])
+            cb, ca, cr = _delta_of(self.versions[i])
+            if pb is cb:
+                pa, pr, ca, cr = _rows(pa), _rows(pr), _rows(ca), _rows(cr)
+                for action, rows in (("added", (ca - pa) | (pr - cr)), ("removed", (cr - pr) | (pa - ca))):
+                    events += [(i, action, *r) + (None,) * (len(keys) - len(r)) for r in rows]
+                continue
             cur, prev = self.versions[i].df, self.versions[i - 1].df
-            if "g" in cur.columns and "g" not in prev.columns:
-                prev = prev.withColumn("g", F.lit(None).cast("string"))
-            if "g" in prev.columns and "g" not in cur.columns:
-                cur = cur.withColumn("g", F.lit(None).cast("string"))
-            keys = _key_cols(cur)
+            k = QUAD_COLS if "g" in cur.columns or "g" in prev.columns else TRIPLE_COLS
+            cur, prev = _aligned(cur, k), _aligned(prev, k)
             for action, left, right in (("added", cur, prev), ("removed", prev, cur)):
                 # null-safe on g: the default graph is g=NULL and must
-                # compare equal to itself (same discipline as delete_data).
-                # The right side is RENAMED before the join: adjacent
-                # versions share lineage, and same-named attributes can
-                # resolve to one expression id (Spark's trivially-true
-                # self-join warning) — which would silently loosen the
-                # anti-join condition.
-                r = right.select([F.col(c).alias(f"__r_{c}") for c in keys])
-                cond = None
-                for c in keys:
-                    eq = F.col(c).eqNullSafe(F.col(f"__r_{c}"))
-                    cond = eq if cond is None else cond & eq
-                delta = left.join(r, on=cond, how="left_anti").dropDuplicates(keys)
-                parts.append(
-                    delta.select(
-                        F.lit(i).alias("commit"), F.lit(action).alias("action"), "*"
-                    )
-                )
-        if not parts:
-            cols = "commit int, action string, s string, p string, o_lex string, o_dt string"
-            if "g" in self.current.df.columns:
-                cols += ", g string"
-            return spark.createDataFrame([], cols)
+                # compare equal to itself (same discipline as delete_data)
+                delta = key_join(left, right, "left_anti", k, broadcast=False).dropDuplicates(k)
+                parts.append(delta.select(F.lit(i).alias("commit"), F.lit(action).alias("action"), *k))
+        if events or not parts:
+            schema = "commit int, action string, " + ", ".join(f"{c} string" for c in keys)
+            parts.insert(0, driver_tier.to_frame(self.current.spark, events, schema))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
@@ -255,13 +296,14 @@ class UpdatableStore:
         explicit DataFrame is the source of truth. Memoized per explicit
         snapshot so stats/indexes survive across requests like
         query_store's."""
-        base = self._explicit if self._explicit is not None else self.current.df
+        if self._explicit is None:
+            return self.current.view(updatable=self)
         cached = getattr(self, "_estore_memo", None)
-        if cached is not None and cached[0] is base:
+        if cached is not None and cached[0] is self._explicit:
             return cached[1]
-        out = TripleStore(base)
+        out = TripleStore(self._explicit)
         out.updatable = self
-        self._estore_memo = (base, out)
+        self._estore_memo = (self._explicit, out)
         return out
 
     def insert_into_solutions(
@@ -303,28 +345,75 @@ class UpdatableStore:
             node = A.Distinct(node)
         mgr.put(name, evaluate(self.query_store, node))
 
-    def _push(self, df: DataFrame) -> TripleStore:
-        self._updates += 1
-        if self._updates % self.checkpoint_every == 0:
-            df = df.localCheckpoint(eager=False)
-        st = TripleStore(df)
-        self.versions.append(st)
-        # any push invalidates the closure bookkeeping ("current == closure
-        # of _explicit", and _explicit itself) — the *_with_closure paths
-        # re-set both after their own push, so interleaved plain verbs
-        # (insert_data/delete_insert_where/graph ops) correctly force the
-        # next closure call to re-seed and recompute from the live store
-        self._closed_valid = False
-        self._explicit = None
-        self._counts = None
-        # the Explicit/Inferred statement partition is only maintained by
-        # the closure paths and the plain DATA verbs (which re-set it after
-        # this reset); any OTHER verb (modify, graph ops, load) may turn an
-        # inferred row explicit without telling us — drop the partition so
-        # DROP ENTAILMENTS degrades to a safe no-op instead of deleting
-        # asserted data
-        self._inferred = None
-        return st
+    def commit(self, version: TripleStore, bookkeeping: "UpdatableStore | None" = None) -> TripleStore:
+        """Append ``version`` as the new commit point — the one way a version
+        enters the history.
+
+        A commit invalidates the closure bookkeeping ("current == closure of
+        _explicit", _explicit itself, the counts and the Explicit/Inferred
+        partition): the *_with_closure paths and the DATA verbs re-set what
+        they maintain after their own commit, so interleaved plain verbs
+        (delete_insert_where, graph ops, load) force the next closure call
+        to re-seed from the live store, and DROP ENTAILMENTS degrades to a
+        safe no-op instead of deleting asserted data. ``bookkeeping`` (a
+        transaction shadow whose bookkeeping describes ``version``) hands
+        its state over instead."""
+        self.versions.append(version)
+        src = bookkeeping if bookkeeping is not None else UpdatableStore()
+        self._closed_valid, self._explicit = src._closed_valid, src._explicit
+        self._counts, self._inferred = src._counts, src._inferred
+        return version
+
+    def _compact(self, df: DataFrame) -> TripleStore:
+        """Commit the whole-store result ``df`` as a new base, locally
+        checkpointed (lazily — the first read materializes it), so no later
+        version replays its lineage."""
+        return self.commit(TripleStore(df.localCheckpoint(eager=False)))
+
+    def _write(self, deletes, inserts) -> TripleStore:
+        """Commit "delete ``deletes``, then insert ``inserts``" (key-row
+        tuples) as a Δ on the current base. The rows the Δ does not already
+        decide are settled against the base by one probe; the result keeps
+        ``added ∩ base = ∅`` and ``removed ⊆ base``. A Δ past the driver gate
+        compacts into a new base."""
+        base, added0, removed0 = _delta_of(self.current)
+        keys = QUAD_COLS if base.has_graphs else TRIPLE_COLS
+        open_rows = {
+            r for r in (*deletes, *inserts)
+            if r not in added0.get(r[1], ()) and r not in removed0.get(r[1], ())
+        }
+        held = _in_base(base, open_rows, keys)
+        added, removed = dict(added0), dict(removed0)
+
+        def edit(delta: dict, p: str) -> set:
+            # copy-on-write per predicate: untouched predicates keep sharing
+            # the previous version's frozensets
+            rows = delta.get(p)
+            if not isinstance(rows, set):
+                rows = delta[p] = set(rows or ())
+            return rows
+
+        for r in deletes:
+            if r in added.get(r[1], ()):
+                edit(added, r[1]).discard(r)
+            elif r in held:
+                edit(removed, r[1]).add(r)
+        for r in inserts:
+            if r in removed.get(r[1], ()):
+                edit(removed, r[1]).discard(r)
+            elif r not in held:
+                edit(added, r[1]).add(r)
+        added = {p: frozenset(rs) for p, rs in added.items() if rs}
+        removed = {p: frozenset(rs) for p, rs in removed.items() if rs}
+        if added == added0 and removed == removed0:
+            return self.commit(self.current)  # a no-op write: same content
+        if not added and not removed:
+            return self.commit(base)
+        version = DeltaStore(base, added, removed)
+        size = sum(map(len, added.values())) + sum(map(len, removed.values()))
+        if size > driver_tier.DRIVER_TIER_MAX_ROWS:
+            return self._compact(version.df)
+        return self.commit(version)
 
     # ------------------------------------------------------- transactions --
     def transaction(self):
@@ -349,18 +438,12 @@ class UpdatableStore:
             # CREATE/DROP ENTAILMENTS must restore it too, or a later DROP
             # anti-joins against a stale (or cleared) inferred set (r8;
             # the entailments_rollback oracle pins this)
-            saved = (
-                self._explicit, self._closed_valid, self._updates,
-                self._counts, self._inferred,
-            )
+            saved = (self._explicit, self._closed_valid, self._counts, self._inferred)
             try:
                 yield self
             except Exception:
                 del self.versions[base:]
-                (
-                    self._explicit, self._closed_valid, self._updates,
-                    self._counts, self._inferred,
-                ) = saved
+                self._explicit, self._closed_valid, self._counts, self._inferred = saved
                 raise
             else:
                 if len(self.versions) > base + 1:
@@ -371,53 +454,39 @@ class UpdatableStore:
         return txn()
 
     # ------------------------------------------------------------- verbs --
-    def _upgraded_if_quads(self, triples: DataFrame) -> DataFrame:
-        """Current statements, upgraded to quads when the incoming data
-        carries a graph column a triples-only store would otherwise drop
-        (existing rows land in the default graph, g = NULL)."""
-        cur = self.current.df
-        if "g" in triples.columns and "g" not in cur.columns:
-            cur = cur.withColumn("g", F.lit(None).cast("string"))
-        return cur
-
     def insert_data(self, triples: DataFrame) -> TripleStore:
-        """INSERT DATA: union new ground triples (set semantics)."""
-        cur = self._upgraded_if_quads(triples)
-        new = triples.select(*_key_cols(cur)) if set(triples.columns) >= set(_key_cols(cur)) else triples
+        """INSERT DATA: add ground triples (set semantics) as a Δ."""
+        return self._data(triples, insert=True)
+
+    def delete_data(self, triples: DataFrame) -> TripleStore:
+        """DELETE DATA: remove a ground triple set as a Δ. Quad stores match
+        null-safely on g, so default-graph triples (g=NULL) actually delete
+        (ADVICE round 2: NULL never equals NULL in a plain equi-join)."""
+        return self._data(triples, insert=False)
+
+    def _data(self, triples: DataFrame, insert: bool) -> TripleStore:
+        # data carrying a graph column upgrades a triples-only store to
+        # quads (existing rows land in the default graph, g = NULL): a
+        # whole-store write
+        upgrade = "g" in triples.columns and not self.current.has_graphs
+        keys = QUAD_COLS if upgrade or self.current.has_graphs else TRIPLE_COLS
+        data = _aligned(triples, keys)
         inf = None
-        if self._inferred is not None and "g" not in cur.columns:
+        if self._inferred is not None and "g" not in keys:
+            # the Inferred partition stays a subset of the live store, and
             # explicitly asserting an inferred triple upgrades it to
             # Explicit (ref: StatementEnum.max on re-assertion) — it then
             # survives DROP ENTAILMENTS
-            inf = self._inferred.join(
-                new.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti"
+            inf = self._inferred.join(data, on=TRIPLE_COLS, how="left_anti")
+        rows = None if upgrade else driver_tier.collect_rows(data)
+        if rows is not None:
+            st = self._write((), rows) if insert else self._write(rows, ())
+        else:  # past the gate, or the quad upgrade
+            cur = _aligned(self.current.df, keys)
+            st = self._compact(
+                cur.unionByName(data).distinct() if insert
+                else key_join(cur, data, "left_anti", keys, broadcast=False)
             )
-        st = self._push(cur.unionByName(new, allowMissingColumns=True).distinct())
-        self._inferred = inf
-        return st
-
-    def delete_data(self, triples: DataFrame) -> TripleStore:
-        """DELETE DATA: anti-join the ground triple set (broadcast when small).
-        Quad stores join null-safely on g so default-graph triples (g=NULL)
-        actually delete (ADVICE round 2: NULL never equals NULL in a plain
-        equi-join, silently deleting nothing)."""
-        cur = self._upgraded_if_quads(triples)
-        keys = _key_cols(cur)
-        doomed = F.broadcast(triples.select(*keys))
-        inf = None
-        if self._inferred is not None and "g" not in cur.columns:
-            # keep the Inferred partition a subset of the live store
-            inf = self._inferred.join(
-                triples.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti"
-            )
-        if "g" in keys:
-            cond = None
-            for k in keys:
-                c = cur[k].eqNullSafe(doomed[k])
-                cond = c if cond is None else cond & c
-            st = self._push(cur.join(doomed, on=cond, how="left_anti"))
-        else:
-            st = self._push(cur.join(doomed, on=keys, how="left_anti"))
         self._inferred = inf
         return st
 
@@ -430,55 +499,59 @@ class UpdatableStore:
     ) -> TripleStore:
         """DELETE { t1 } INSERT { t2 } WHERE { P }: one WHERE evaluation,
         both templates instantiated from the same bindings (ref:
-        DeleteInsertGraph semantics — delete first, then insert).
+        DeleteInsertGraph semantics — delete first, then insert). The
+        instantiated triples come to the driver in one bounded collect and
+        commit as a Δ, so the WHERE plan never becomes part of a version.
 
         On quad stores the templates are graph-aware: an entry's explicit
         GRAPH wins, else ``with_graph`` (the UPDATE's WITH <g>), else the
         default graph (g=NULL) — so DELETE/INSERT WHERE no longer touches
-        matching triples in *every* graph (ADVICE r3). The delete is a
-        null-safe anti-join on (s,p,o_lex,o_dt,g)."""
+        matching triples in *every* graph (ADVICE r3). Deletes match
+        null-safely on (s,p,o_lex,o_dt,g)."""
         cur = self.current
-        is_quads = "g" in cur.df.columns
         # WITH <g> / GRAPH-wrapped templates target a named graph: a
         # triples-only store upgrades to quads first (default graph = NULL)
         needs_g = with_graph is not None or any(
             len(t) > 3 and t[3] is not None
             for t in (delete_template or []) + (insert_template or [])
         )
-        if needs_g and not is_quads:
-            self._push(cur.df.withColumn("g", F.lit(None).cast("string")))
-            cur = self.current
-            is_quads = True
+        if needs_g and not cur.has_graphs:
+            cur = self._compact(cur.df.withColumn("g", F.lit(None).cast("string")))
+        is_quads = cur.has_graphs
+        keys = QUAD_COLS if is_quads else TRIPLE_COLS
         # dt-tracked bindings: object-var datatypes ride along as `<var>__dt`
         # companions, so instantiated triples carry the bound term's true type
-        # and the delete anti-join on (s,p,o_lex,o_dt) matches IRIs and typed
-        # literals, not just plain strings (ADVICE round 1, high).
+        # and the delete matches IRIs and typed literals, not just plain
+        # strings (ADVICE round 1, high).
         # named_sets attached so `INCLUDE %set` works inside UPDATE WHERE
         # clauses too — the reference's primary solution-set use case
         # (compute once, then modify the graph; review r5-4)
         sets = self.solutions.sets() if self.solutions is not None else {}
         bindings = evaluate(cur.view(track_dt=True, named_sets=sets), where_plan)
-        df = cur.df
-        if delete_template:
-            del_triples = instantiate_template(
-                bindings, delete_template, emit_g=is_quads, target_graph=with_graph
+        # a template triple with an unbound term is skipped (SPARQL 1.1
+        # Update §3.1.3)
+        bound = F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o_lex").isNotNull()
+        parts = {}
+        for name, template in (("del", delete_template), ("ins", insert_template)):
+            if template:
+                parts[name] = instantiate_template(
+                    bindings, template, emit_g=is_quads, target_graph=with_graph
+                ).select(*keys).filter(bound)
+        if not parts:
+            return self.commit(cur)
+        tagged = [df.withColumn("__ins", F.lit(name == "ins")) for name, df in parts.items()]
+        both = tagged[0] if len(tagged) == 1 else tagged[0].unionByName(tagged[1])
+        rows = driver_tier.collect_rows(both)
+        if rows is not None:
+            return self._write(
+                [r[:-1] for r in rows if not r[-1]], [r[:-1] for r in rows if r[-1]]
             )
-            if is_quads:
-                doomed = del_triples.select(*QUAD_COLS).alias("doomed")
-                left = df.alias("cur")
-                cond = None
-                for k in QUAD_COLS:
-                    c = F.col(f"cur.{k}").eqNullSafe(F.col(f"doomed.{k}"))
-                    cond = c if cond is None else cond & c
-                df = left.join(doomed, on=cond, how="left_anti")
-            else:
-                df = df.join(del_triples.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti")
-        if insert_template:
-            ins = instantiate_template(
-                bindings, insert_template, emit_g=is_quads, target_graph=with_graph
-            )
-            df = df.unionByName(ins, allowMissingColumns=True).distinct()
-        return self._push(df)
+        df = cur.df  # past the gate: the whole-store rewrite, compacted
+        if "del" in parts:
+            df = key_join(df, parts["del"], "left_anti", keys, broadcast=False)
+        if "ins" in parts:
+            df = df.unionByName(parts["ins"]).distinct()
+        return self._compact(df)
 
     # --------------------------------------------------------- graph ops --
     def _require_quads(self) -> DataFrame:
@@ -488,15 +561,14 @@ class UpdatableStore:
         quad operations on any store, defaulting statement contexts."""
         cur = self.current.df
         if "g" not in cur.columns:
-            cur = cur.withColumn("g", F.lit(None).cast("string"))
-            self._push(cur)
+            cur = self._compact(cur.withColumn("g", F.lit(None).cast("string"))).df
         return cur
 
     def clear_graph(self, g: str) -> TripleStore:
         """CLEAR GRAPH g (DROP is identical for our schema-less graphs).
         Null-preserving: default-graph rows (g=NULL) survive clearing a
         named graph, and CLEAR DEFAULT removes exactly the NULL-g rows."""
-        return self._push(self._require_quads().filter(~_g_is(g)))
+        return self._compact(self._require_quads().filter(~_g_is(g)))
 
     drop_graph = clear_graph
 
@@ -510,19 +582,19 @@ class UpdatableStore:
         be DEFAULT (g=NULL)."""
         cur = self._require_quads()
         copied = cur.filter(_g_is(src)).withColumn("g", _g_lit(dst))
-        return self._push(cur.filter(~_g_is(dst)).unionByName(copied).distinct())
+        return self._compact(cur.filter(~_g_is(dst)).unionByName(copied).distinct())
 
     def add_graph(self, src: str, dst: str) -> TripleStore:
         """ADD: dst := dst ∪ src."""
         cur = self._require_quads()
         copied = cur.filter(_g_is(src)).withColumn("g", _g_lit(dst))
-        return self._push(cur.unionByName(copied).distinct())
+        return self._compact(cur.unionByName(copied).distinct())
 
     def move_graph(self, src: str, dst: str) -> TripleStore:
         """MOVE: dst := src; src removed."""
         cur = self._require_quads()
         moved = cur.filter(_g_is(src)).withColumn("g", _g_lit(dst))
-        return self._push(cur.filter(~(_g_is(src) | _g_is(dst))).unionByName(moved).distinct())
+        return self._compact(cur.filter(~(_g_is(src) | _g_is(dst))).unionByName(moved).distinct())
 
     # -------------------------------------------------------- load/store --
     def load(self, spark: SparkSession, path: str, fmt: str = "ntriples", graph: str | None = None) -> TripleStore:
@@ -532,7 +604,7 @@ class UpdatableStore:
         new = ntriples.read_ntriples(spark, path) if fmt == "ntriples" else spark.read.parquet(path)
         if graph is not None:
             new = new.withColumn("g", F.lit(graph))
-        return self._push(
+        return self._compact(
             self.current.df.unionByName(new, allowMissingColumns=True).distinct()
         )
 
@@ -545,6 +617,27 @@ class UpdatableStore:
     @staticmethod
     def load_snapshot(spark: SparkSession, path: str) -> "UpdatableStore":
         return UpdatableStore.from_store(TripleStore(spark.read.parquet(path)))
+
+    def clear_scope(self, scope: str) -> TripleStore:
+        """CLEAR/DROP over GraphRefAll targets (SPARQL 1.1 DEFAULT/NAMED/ALL +
+        the reference's GRAPHS/SOLUTIONS extensions — grammar sparql.jjt
+        GraphRefAll): DEFAULT empties the default graph, NAMED every named
+        graph, GRAPHS all graphs, SOLUTIONS every named solution set, ALL
+        both graphs and solution sets."""
+        df = self.current.df
+        if scope in ("all", "graphs", "solutions"):
+            if scope != "graphs" and self.solutions is not None:
+                for name in list(self.solutions.names()):
+                    self.solutions.drop(name, silent=True)
+            if scope == "solutions":
+                return self.current
+            return self._compact(df.limit(0))
+        if not self.current.has_graphs:
+            # triples-mode: the whole store IS the default graph
+            return self._compact(df.limit(0)) if scope == "default" else self.commit(self.current)
+        if scope == "default":
+            return self._compact(df.filter(F.col("g").isNotNull() & (F.col("g") != "")))
+        return self._compact(df.filter(F.col("g").isNull() | (F.col("g") == "")))
 
     # ---------------------------------------------------------- closure --
     def _touches_schema(self, triples: DataFrame) -> bool:
@@ -585,10 +678,10 @@ class UpdatableStore:
                 closed_df = delta_assert(self.current.df.select(*TRIPLE_COLS), delta)
         else:
             closed_df = rdfs_closure(TripleStore(explicit)).df
-        st = self._push(closed_df)
+        st = self._compact(closed_df)
         self._explicit = explicit
         self._closed_valid = True
-        self._inferred = closed_df.join(
+        self._inferred = st.df.join(
             explicit.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti"
         ).localCheckpoint(eager=False)
         if new_counts is not None:
@@ -614,10 +707,10 @@ class UpdatableStore:
             self._explicit if self._explicit is not None else self.current.df
         ).select(*TRIPLE_COLS)
         closed = rdfs_closure(TripleStore(explicit)).df
-        st = self._push(closed)
+        st = self._compact(closed)
         self._explicit = explicit
         self._closed_valid = True
-        self._inferred = closed.join(
+        self._inferred = st.df.join(
             explicit, on=TRIPLE_COLS, how="left_anti"
         ).localCheckpoint(eager=False)
         return st
@@ -634,8 +727,8 @@ class UpdatableStore:
         kept = self.current.df.select(*TRIPLE_COLS)
         if self._inferred is not None:
             kept = kept.join(self._inferred, on=TRIPLE_COLS, how="left_anti")
-        st = self._push(kept)
-        self._explicit = kept
+        st = self._compact(kept)
+        self._explicit = st.df
         self._inferred = None
         self._closed_valid = False
         self._counts = None
@@ -691,10 +784,10 @@ class UpdatableStore:
                 closed_df = dred_retract(closed, explicit, delta)
         else:
             closed_df = rdfs_closure(TripleStore(explicit)).df
-        st = self._push(closed_df)
+        st = self._compact(closed_df)
         self._explicit = explicit
         self._closed_valid = True
-        self._inferred = closed_df.join(
+        self._inferred = st.df.join(
             explicit.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti"
         ).localCheckpoint(eager=False)
         if new_counts is not None:
@@ -702,28 +795,3 @@ class UpdatableStore:
             # across updates — truncate now or plans grow multiplicatively
             self._counts = new_counts.localCheckpoint(eager=True)
         return st
-
-
-def _clear_scope_impl(store: "UpdatableStore", scope: str) -> TripleStore:
-    """CLEAR/DROP over GraphRefAll targets (SPARQL 1.1 DEFAULT/NAMED/ALL +
-    the reference's GRAPHS/SOLUTIONS extensions — grammar sparql.jjt
-    GraphRefAll): DEFAULT empties the default graph, NAMED every named
-    graph, GRAPHS all graphs, SOLUTIONS every named solution set, ALL both
-    graphs and solution sets."""
-    df = store.current.df
-    if scope in ("all", "graphs", "solutions"):
-        if scope != "graphs" and store.solutions is not None:
-            for name in list(store.solutions.names()):
-                store.solutions.drop(name, silent=True)
-        if scope == "solutions":
-            return store.current
-        return store._push(df.limit(0))
-    if "g" not in df.columns:
-        # triples-mode: the whole store IS the default graph
-        return store._push(df.limit(0) if scope == "default" else df)
-    if scope == "default":
-        return store._push(df.filter(F.col("g").isNotNull() & (F.col("g") != "")))
-    return store._push(df.filter(F.col("g").isNull() | (F.col("g") == "")))
-
-
-UpdatableStore.clear_scope = _clear_scope_impl

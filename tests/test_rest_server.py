@@ -1026,3 +1026,66 @@ def test_include_inferred_false(spark):
         assert b"Vehicle" not in body and b"Car" in body
     finally:
         srv.shutdown()
+
+
+def _tm_endpoint(spark, rows):
+    us = UpdatableStore.from_store(
+        TripleStore(spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string"))
+    )
+    return us, SparqlEndpoint(spark, us)
+
+
+def _select_rows(ep, text, **params):
+    status, _, body = ep.dispatch("GET", "/sparql", {"query": text, **params}, "", b"")
+    assert status == 200, body
+    doc = json.loads(body)
+    return {
+        tuple(b[v]["value"] for v in doc["head"]["vars"] if v in b)
+        for b in doc["results"]["bindings"]
+    }
+
+
+def test_tx_commit_hands_over_entailment_bookkeeping(spark):
+    """A REST transaction commits through the store's one commit function:
+    the shadow's Explicit/Inferred partition comes along, so a triple the
+    transaction asserted explicitly survives a later DROP ENTAILMENTS."""
+    us, ep = _tm_endpoint(spark, [
+        ("c1", "rdfs:subClassOf", "c2", "iri"),
+        ("x", "rdf:type", "c1", "iri"),
+    ])
+    ns = ep.default_ns
+    assert ep.update(ns, "CREATE ENTAILMENTS")[0] == 200
+    tx = json.loads(ep.dispatch("POST", "/tx", {}, "", b"")[2])["txId"]
+    upd = {"update": "INSERT DATA { <x> <rdf:type> <c2> }", "txid": tx}
+    assert ep.dispatch("POST", "/sparql", upd, "", b"")[0] == 200
+    assert ep.dispatch("POST", f"/tx/{tx}/commit", {}, "", b"")[0] == 200
+    assert ep.update(ns, "DROP ENTAILMENTS")[0] == 200
+    assert _select_rows(ep, "SELECT ?t WHERE { <x> <rdf:type> ?t }") == {("c1",), ("c2",)}
+
+
+@pytest.mark.parametrize("verb", ["PUT", "DELETE"])
+def test_whole_store_rest_writes_keep_explicit_set_current(spark, verb):
+    """PUT (replace) and the query-less DELETE (clear) commit through the
+    store's one commit function, so the explicit set behind
+    includeInferred=false describes the new version, not the cleared one;
+    a PUT whose body fails is one rolled-back commit point."""
+    us, ep = _tm_endpoint(spark, [("Car", "rdfs:subClassOf", "Vehicle", "iri")])
+    ns = ep.default_ns
+    assert ep.update(ns, "ENABLE ENTAILMENTS ; INSERT DATA { <c1> <rdf:type> <Car> }")[0] == 200
+    everything = "SELECT ?s ?p ?o WHERE { ?s ?p ?o }"
+    before = _select_rows(ep, everything)
+    explicit = {("Car", "rdfs:subClassOf", "Vehicle"), ("c1", "rdf:type", "Car")}
+    assert _select_rows(ep, everything, includeInferred="false") == explicit
+    if verb == "PUT":
+        body = b"<n1> <knows> <n2> .\n"
+        # a blank context-uri fails after the clear: nothing may change
+        assert ep.dispatch("PUT", "/sparql", {"context-uri": ","}, "text/plain", body)[0] == 400
+        assert _select_rows(ep, everything) == before
+        assert _select_rows(ep, everything, includeInferred="false") == explicit
+        assert ep.dispatch("PUT", "/sparql", {}, "text/plain", body)[0] == 200
+        want = {("n1", "knows", "n2")}
+    else:
+        assert ep.dispatch("DELETE", "/sparql", {}, "", b"")[0] == 200
+        want = set()
+    assert _select_rows(ep, everything) == want
+    assert _select_rows(ep, everything, includeInferred="false") == want
