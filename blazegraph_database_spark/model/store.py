@@ -94,7 +94,8 @@ class TripleStore:
         self.pred_sources = pred_sources
         # Star-fusion hooks (see plans/compiler._compile_bgp): pred_table maps
         # predicate → base table; star_factory([preds]) returns one scan with
-        # columns ("s", <pred>, ...) when all preds live in that one table.
+        # columns ("s", <pred>, ...) when all preds live in that one table,
+        # read through star_source (memoized like pattern_source).
         self.star_factory = star_factory
         self.pred_table = pred_table
         self.pred_dt = pred_dt  # predicate → o_dt tag (constant per predicate)
@@ -199,6 +200,16 @@ class TripleStore:
         if not self.pred_sources or pred not in self.pred_sources:
             return None
         return self.memo(("source", pred, typed), lambda: self.pred_sources[pred](typed=typed))
+
+    def star_source(self, preds: list[str], native: frozenset = frozenset()) -> DataFrame | None:
+        """Fused star scan of ``preds``, one column each next to ``s``, or
+        None when ``star_factory`` cannot serve them from one table; built
+        once per store in the memo. ``native`` names the predicates served
+        in their native column type."""
+        if not self.star_factory:
+            return None
+        key = ("star", tuple(preds), native)
+        return self.memo(key, lambda: self.star_factory(preds, native=native))
 
     @property
     def spark(self) -> SparkSession:
@@ -311,12 +322,11 @@ def key_join(
 
 
 def rows_frame(spark: SparkSession, rows, cols: list[str], o_type: str = "string") -> DataFrame:
-    """Driver-held key rows as a local relation in one partition (a result
-    streams to the client one job per partition); ``o_type`` casts
-    ``o_lex`` to a typed source's native column type."""
+    """Driver-held key rows as a local relation; ``o_type`` casts ``o_lex``
+    to a typed source's native column type."""
     from blazegraph_database_spark.operators.driver_tier import to_frame
 
-    df = to_frame(spark, list(rows), ", ".join(f"{c} string" for c in cols)).coalesce(1)
+    df = to_frame(spark, list(rows), ", ".join(f"{c} string" for c in cols))
     return df if o_type == "string" else df.withColumn("o_lex", F.col("o_lex").cast(o_type))
 
 
@@ -345,7 +355,7 @@ class DeltaStore(TripleStore):
             }
         super().__init__(
             df_factory=self._compose_df,
-            star_factory=self._star if base.star_factory else None,
+            star_factory=base.star_factory,
             pred_table=base.pred_table,
             pred_dt=pred_dt,
         )
@@ -418,9 +428,9 @@ class DeltaStore(TripleStore):
     def stats(self) -> dict[str, PredStat]:
         return self.memo("stats", lambda: self._compose_stats(self.base.stats()))
 
-    def _star(self, preds: list[str], native: frozenset = frozenset()) -> DataFrame | None:
+    def star_source(self, preds: list[str], native: frozenset = frozenset()) -> DataFrame | None:
         # a star over a Δ-touched predicate takes the per-pattern path,
         # whose sources compose the Δ
         if self.touched.intersection(preds):
             return None
-        return self.base.star_factory(preds, native=native)
+        return self.base.star_source(preds, native)

@@ -23,7 +23,7 @@ as one Arrow batch. The rule is the same for every operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 DRIVER_TIER_MAX_ROWS = 500_000
 
@@ -49,14 +49,21 @@ def collect_bounded(df: DataFrame):
     return frame, table.to_pandas()
 
 
-def collect_rows(df: DataFrame) -> list[tuple] | None:
-    """At most :data:`DRIVER_TIER_MAX_ROWS` rows of ``df`` as tuples, nulls
-    kept, or None when it holds more. A local relation (a frame made by
-    :func:`to_frame`) comes back without a Spark job."""
-    if DRIVER_TIER_MAX_ROWS <= 0:
-        return None
-    rows = df.limit(DRIVER_TIER_MAX_ROWS + 1).collect()
-    return None if len(rows) > DRIVER_TIER_MAX_ROWS else [tuple(r) for r in rows]
+def collect_rows(df: DataFrame, bound: int | None) -> list[Row] | None:
+    """The rows of ``df`` in one collect, or None when it holds more than
+    ``bound``: ``limit(bound + 1)`` keeps driver memory at ``bound + 1`` rows
+    with no separate count job. ``bound=None`` collects every row. Update
+    callers pass :data:`DRIVER_TIER_MAX_ROWS`, read at call time.
+
+    The collect is one job when ``df`` has one partition or a row bound
+    Catalyst knows to be under ``bound`` (the limit is then dropped); over
+    several partitions Spark's take may scan them in more than one job. A
+    local relation (a frame made by :func:`to_frame`) comes back without a
+    Spark job."""
+    if bound is None:
+        return df.collect()
+    rows = df.limit(bound + 1).collect()
+    return None if len(rows) > bound else rows
 
 
 def to_frame(spark, data, schema) -> DataFrame:

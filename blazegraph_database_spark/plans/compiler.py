@@ -27,6 +27,7 @@ from pyspark.errors import AnalysisException
 
 from blazegraph_database_spark.model.store import TripleStore
 from blazegraph_database_spark.model.terms import Lit, Var, const_lex, is_const
+from blazegraph_database_spark.operators.driver_tier import to_frame
 from blazegraph_database_spark.plans import algebra as A
 
 BROADCAST_MAX_ROWS = 3_000_000  # est rows under which a pattern side is broadcast
@@ -98,9 +99,8 @@ def _fast_scan_rewrite(store: TripleStore, node):
     persisted store stats, or the groupBy stats path — see
     TripleStore.stats_are_exact) and the store is an unscoped triple view
     (no quads, no FROM dataset). At 100 TB this answers "how many triples
-    with predicate X" from metadata instead of a full scan."""
-    from blazegraph_database_spark.model.terms import IRI, Var
-
+    with predicate X" from metadata instead of a full scan. The answer is a
+    local relation, so it reaches the client with no Spark job."""
     if store.has_graphs or store.dataset_default is not None or store.dataset_named is not None:
         return None
     if not store.stats_are_exact():
@@ -115,7 +115,7 @@ def _fast_scan_rewrite(store: TripleStore, node):
             total = sum(st0[a].count for a in _pred_aliases(p) if a in st0)
         else:  # variable predicate: sum of all range counts
             total = sum(s.count for s in store.stats().values())
-        return store.spark.createDataFrame([(int(total),)], f"{alias} long")
+        return to_frame(store.spark, [(int(total),)], f"{alias} long")
 
     # SELECT (COUNT(*) AS ?c) { spo } — parser shape:
     # Project(Extend(Group(bgp, (), ((__agg0, count(1)),)), c, col(__agg0)), [c])
@@ -156,9 +156,7 @@ def _fast_scan_rewrite(store: TripleStore, node):
         m = _fast_spo(node.child.child)
         if m and isinstance(m[1], Var) and m[1].name == node.child.vars[0]:
             preds = sorted(p for p, s in store.stats().items() if s.count > 0)
-            return store.spark.createDataFrame(
-                [(p,) for p in preds], f"{m[1].name} string"
-            )
+            return to_frame(store.spark, [(p,) for p in preds], f"{m[1].name} string")
 
     # SELECT ?p (COUNT(*) AS ?c) { ?s ?p ?o } GROUP BY ?p —
     # Project(Extend(Group(bgp, (p,), ((__agg0, count(1)),)), c, col(__agg0)), [p, c]).
@@ -188,7 +186,7 @@ def _fast_scan_rewrite(store: TripleStore, node):
                     data, schema = rows, f"{pkey} string, {ch.var} long"
                 else:
                     data, schema = [(c, p) for p, c in rows], f"{ch.var} long, {pkey} string"
-                return store.spark.createDataFrame(data, schema)
+                return to_frame(store.spark, data, schema)
     return None
 
 
@@ -787,8 +785,13 @@ def _pattern_df(sp: A.SP, store: TripleStore) -> DataFrame:
         dn = store.dataset_named
         if sp.g is None and dd is not None:
             conds.append(_cc("g").isin(list(dd)) if dd else F.lit(False))
-        if isinstance(sp.g, Var) and dn is not None:
-            conds.append(_cc("g").isin(list(dn)) if dn else F.lit(False))
+        if isinstance(sp.g, Var):
+            # GRAPH ?g ranges over the named graphs only: never the default
+            # graph (g NULL, or '' as _named_graphs reads it)
+            if dn is None:
+                conds.append(_cc("g").isNotNull() & (_cc("g") != ""))
+            else:
+                conds.append(_cc("g").isin(list(dn)) if dn else F.lit(False))
     if conds:
         # ONE fused filter instead of a filter chain: each df.filter is a
         # full Dataset construction over py4j (~40 roundtrips); the fused
@@ -877,34 +880,49 @@ def _vars_of(sp: A.SP) -> set[str]:
     return out
 
 
-def _star_fuse(patterns: list, store: TripleStore):
-    """Collapse same-subject-variable patterns whose constant predicates live
-    in one base table into a single column-pruned scan (subject star-join
-    fusion; the SPO-index analog of the reference's subject-ordered access
-    path). Returns (fused entries [(df, est, vars)], leftover pattern idxs).
+def _star_subject(s):
+    """The star-fusion group of a subject term: ("var", name) for a
+    variable, ("iri", lex) for a constant IRI, None otherwise (literals,
+    ``Emb`` terms and blank-node labels stay on the per-pattern path)."""
+    if isinstance(s, Var):
+        return ("var", s.name)
+    if is_const(s) and not isinstance(s, Lit) and not const_lex(s).startswith("_:"):
+        return ("iri", const_lex(s))
+    return None
 
-    Eligible: ?s <constP> ?o with distinct object vars, no graph term. At
-    100 TB this turns an N-pattern star over the fact table from N scans +
-    N-1 self-join shuffles into one scan of N+1 columns.
+
+def _star_fuse(patterns: list, store: TripleStore):
+    """Collapse same-subject patterns whose constant predicates live in one
+    base table into a single column-pruned scan (subject star-join fusion;
+    the SPO-index analog of the reference's subject-ordered access path).
+    Returns (fused entries [(df, est, vars)], leftover pattern idxs).
+
+    Eligible: <subj> <constP> ?o with distinct object vars and no graph
+    term, where <subj> is a variable or a constant IRI. At 100 TB this
+    turns an N-pattern star over the fact table from N scans + N-1
+    self-join shuffles into one scan of N+1 columns. A bound subject is the
+    reference's SPO range scan: the fused scan filters ``s == <iri>`` and
+    carries no subject column. The entry's estimate is the largest of its
+    patterns' estimates.
     """
     if not (store.star_factory and store.pred_table):
         return [], list(range(len(patterns)))
     groups: dict = {}
     for i, sp in enumerate(patterns):
+        subj = _star_subject(sp.s)
         if (
-            isinstance(sp.s, Var)
+            subj is not None
             and sp.p is not None
             and is_const(sp.p)
             and isinstance(sp.o, Var)
             and sp.g is None
-            and sp.o.name != sp.s.name
+            and subj != ("var", sp.o.name)
             and const_lex(sp.p) in store.pred_table
         ):
-            key = (sp.s.name, store.pred_table[const_lex(sp.p)])
+            key = (subj, store.pred_table[const_lex(sp.p)])
             groups.setdefault(key, []).append(i)
     fused, taken = [], set()
-    stats = store.stats()
-    for (svar, _table), idxs in groups.items():
+    for ((kind, term), _table), idxs in groups.items():
         uniq, seen_o = [], set()
         for i in idxs:  # one pattern per object var; dupes stay join-based
             if patterns[i].o.name not in seen_o:
@@ -919,7 +937,7 @@ def _star_fuse(patterns: list, store: TripleStore):
         native_preds = frozenset(
             const_lex(patterns[i].p) for i in uniq if patterns[i].o.name in native
         )
-        df = store.star_factory(preds, native=native_preds)
+        df = store.star_source(preds, native=native_preds)
         if df is None:
             continue
         id_vars = store.id_join_vars
@@ -933,21 +951,24 @@ def _star_fuse(patterns: list, store: TripleStore):
                 return col.cast(_NATIVE_SPARK_TYPE[native[vname]]).alias(vname)
             return col.alias(vname)
 
-        sel = [var_col(F.col("s"), svar)] + [
-            var_col(F.col(p), patterns[i].o.name) for p, i in zip(preds, uniq)
-        ]
+        sel = [var_col(F.col(p), patterns[i].o.name) for p, i in zip(preds, uniq)]
         if store.track_dt:
             sel += [
                 F.lit(store.pred_dt[p]).alias(f"{patterns[i].o.name}__dt")
                 for p, i in zip(preds, uniq)
                 if patterns[i].o.name not in id_vars
             ]
-            if svar not in id_vars:
+        if kind == "iri":
+            df = df.filter(F.col("s") == term)
+            out_vars = set(seen_o)
+        else:
+            sel.insert(0, var_col(F.col("s"), term))
+            if store.track_dt and term not in id_vars:
                 # same normalized tag as _pattern_df's subject branch
-                sel.append(F.lit("iri").alias(f"{svar}__dt"))
-        ests = [float(stats[p].count) for p in preds if p in stats]
-        est = max(ests) if ests else float("inf")
-        fused.append((df.select(*sel), est, {svar, *seen_o}))
+                sel.append(F.lit("iri").alias(f"{term}__dt"))
+            out_vars = {term, *seen_o}
+        est = max(_estimate(patterns[i], store) for i in uniq)
+        fused.append((df.select(*sel), est, out_vars))
         taken.update(uniq)
     return fused, [i for i in range(len(patterns)) if i not in taken]
 
@@ -1047,6 +1068,12 @@ def _compile_bgp(node: A.BGP, store: TripleStore) -> DataFrame:
         idx = joinable[0] if joinable else 0
         ordered.append(entries.pop(idx))
         bound |= ordered[-1][2]
+    # the build side of each join is the smaller input: later inputs under
+    # the bound are broadcast against the running join, except that a seed
+    # estimated smaller than the first input it joins is broadcast instead
+    broadcast = [k > 0 and est <= BROADCAST_MAX_ROWS for k, (_df, est, _vs) in enumerate(ordered)]
+    if len(ordered) > 1 and broadcast[1] and ordered[0][1] < ordered[1][1]:
+        broadcast[:2] = [True, False]
     trace = store._trace
     if trace is not None:
         trace.append(
@@ -1058,9 +1085,9 @@ def _compile_bgp(node: A.BGP, store: TripleStore) -> DataFrame:
                     {
                         "vars": sorted(vs),
                         "est_rows": est,
-                        "broadcast": bool(k > 0 and est <= BROADCAST_MAX_ROWS),
+                        "broadcast": bc,
                     }
-                    for k, (_df, est, vs) in enumerate(ordered)
+                    for (_df, est, vs), bc in zip(ordered, broadcast)
                 ],
                 "id_join_vars": sorted(store.id_join_vars),
                 "native_typed_vars": dict(
@@ -1069,8 +1096,8 @@ def _compile_bgp(node: A.BGP, store: TripleStore) -> DataFrame:
             }
         )
     out = None
-    for df, est, _ in ordered:
-        if est <= BROADCAST_MAX_ROWS and out is not None:
+    for (df, _est, _vs), bc in zip(ordered, broadcast):
+        if bc:
             df = F.broadcast(df)
         if out is None:
             out = df

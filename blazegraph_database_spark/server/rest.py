@@ -31,6 +31,7 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame, SparkSession
 
 from blazegraph_database_spark.model.store import TripleStore
+from blazegraph_database_spark.operators import driver_tier
 from blazegraph_database_spark.plans import compiler
 from blazegraph_database_spark.plans.sparql_parser import parse_sparql_query
 from blazegraph_database_spark.plans.update_parser import apply_update
@@ -60,8 +61,9 @@ _RDF_READERS = {
 
 class ResultTooLarge(Exception):
     """A query result exceeded the endpoint's row cap (documented 413 —
-    the bounded-driver-memory guard: serializers stream partitions via
-    toLocalIterator, and the cap bounds the encoded payload)."""
+    the bounded-driver-memory guard: a result comes to the driver in one
+    collect of at most cap + 1 rows, and the cap bounds the encoded
+    payload)."""
 
     def __init__(self, cap: int):
         super().__init__(
@@ -70,17 +72,15 @@ class ResultTooLarge(Exception):
         )
 
 
-def _iter_rows(df: DataFrame, cap: int | None):
-    """Stream result rows driver-side one partition at a time
-    (toLocalIterator — never a whole-result collect; VERDICT r4: a SELECT
-    without LIMIT over a 100 TB store must not OOM the REST driver),
-    enforcing the row cap."""
-    n = 0
-    for row in df.toLocalIterator():
-        n += 1
-        if cap is not None and n > cap:
-            raise ResultTooLarge(cap)
-        yield row
+def _iter_rows(df: DataFrame, cap: int | None) -> list:
+    """The result rows, brought to the driver in one collect bounded at
+    ``cap + 1`` rows (a SELECT without LIMIT over a 100 TB store must not
+    OOM the REST driver), raising :class:`ResultTooLarge` past the cap.
+    ``cap=None`` collects the whole result."""
+    rows = driver_tier.collect_rows(df, cap)
+    if rows is None:
+        raise ResultTooLarge(cap)
+    return rows
 
 
 def _select_json(df: DataFrame, cap: int | None = None) -> bytes:
@@ -225,7 +225,7 @@ def _triples_nt(df: DataFrame, cap: int | None = None) -> bytes:
 
 def _triples_ttl(df: DataFrame, cap: int | None = None) -> bytes:
     """Turtle with @prefix declarations and `;` predicate lists — one
-    subject block per streamed row (fragment computation is distributed;
+    subject block per collected row (fragment computation is distributed;
     ref: rio TurtleWriter behind ConnegUtil). The cap counts subjects."""
     blocks = rdf_writers._ttl_subject_blocks(df, rdf_writers.DEFAULT_PREFIXES)
     body = "\n\n".join(r["block"] for r in _iter_rows(blocks, cap))
@@ -248,8 +248,8 @@ def _triples_jsonld(df: DataFrame, cap: int | None = None) -> bytes:
 
 # Accept-header → (serializer, content-type) per result kind. The graph
 # writer set matches the reference's ConnegUtil RDFFormat table (N-Triples,
-# Turtle-with-prefixes, RDF/XML, JSON-LD); all serializers stream via
-# toLocalIterator under the endpoint row cap.
+# Turtle-with-prefixes, RDF/XML, JSON-LD); every serializer reads its rows
+# from one bounded collect under the endpoint row cap.
 _SELECT_FMTS = {SRJ: (_select_json, SRJ), CSV: (_select_csv, CSV),
                 TSV: (_select_tsv, TSV), SRX: (_select_xml, SRX)}
 RDFXML = "application/rdf+xml"
@@ -296,8 +296,8 @@ class SparqlEndpoint:
         max_result_rows: int | None = 1_000_000,
     ):
         self.spark = spark
-        # documented 413 guard: results stream through toLocalIterator and
-        # abort once they exceed this many rows/fragments (None = uncapped)
+        # documented 413 guard: a result comes back in one collect bounded at
+        # this many rows/fragments + 1, and aborts past it (None = uncapped)
         self.max_result_rows = max_result_rows
         self.default_ns = namespace
         self.namespaces: dict[str, UpdatableStore] = {namespace: store}

@@ -478,8 +478,9 @@ class UpdatableStore:
             # Explicit (ref: StatementEnum.max on re-assertion) — it then
             # survives DROP ENTAILMENTS
             inf = self._inferred.join(data, on=TRIPLE_COLS, how="left_anti")
-        rows = None if upgrade else driver_tier.collect_rows(data)
+        rows = None if upgrade else driver_tier.collect_rows(data, driver_tier.DRIVER_TIER_MAX_ROWS)
         if rows is not None:
+            rows = [tuple(r) for r in rows]
             st = self._write((), rows) if insert else self._write(rows, ())
         else:  # past the gate, or the quad upgrade
             cur = _aligned(self.current.df, keys)
@@ -541,7 +542,7 @@ class UpdatableStore:
             return self.commit(cur)
         tagged = [df.withColumn("__ins", F.lit(name == "ins")) for name, df in parts.items()]
         both = tagged[0] if len(tagged) == 1 else tagged[0].unionByName(tagged[1])
-        rows = driver_tier.collect_rows(both)
+        rows = driver_tier.collect_rows(both, driver_tier.DRIVER_TIER_MAX_ROWS)
         if rows is not None:
             return self._write(
                 [r[:-1] for r in rows if not r[-1]], [r[:-1] for r in rows if r[-1]]

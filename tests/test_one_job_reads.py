@@ -1,0 +1,212 @@
+"""Reads that Spark can answer in one job run exactly one: the REST answer
+comes to the driver in one bounded collect, a bound-subject star is one
+scan, a fused star scan is built once per store, and fast-scan answers run
+no job at all. Jobs are counted by job group."""
+
+from __future__ import annotations
+
+import json
+
+import pytest
+from pyspark.sql import functions as F
+
+from blazegraph_database_spark.model.store import TripleStore
+from blazegraph_database_spark.plans import compiler
+from blazegraph_database_spark.plans.sparql_parser import parse_sparql_query
+from blazegraph_database_spark.plans.update_parser import apply_update
+from blazegraph_database_spark.server import rest
+from blazegraph_database_spark.server.rest import SparqlEndpoint
+from blazegraph_database_spark.sources import relational
+from blazegraph_database_spark.update.update import UpdatableStore
+
+from conftest import SF_DIR
+
+STAR = (
+    "SELECT ?name ?bal ?seg ?nat WHERE { <customer:3> <customer#c_name> ?name ; "
+    "<customer#c_acctbal> ?bal ; <customer#c_mktsegment> ?seg ; "
+    "<customer#c_nationkey_ref> ?nat }"
+)
+
+
+def _jobs(spark, group: str) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _rows(store, text):
+    return [tuple(r) for r in compiler.evaluate(store, parse_sparql_query(text)[1]).collect()]
+
+
+@pytest.fixture()
+def rel_endpoint(spark):
+    return SparqlEndpoint(spark, UpdatableStore.from_store(relational.cached_store(spark, SF_DIR)))
+
+
+def test_bound_subject_star_is_one_scan(spark, rel_endpoint):
+    """A star on a constant subject compiles into ONE fused scan with no
+    join, and over REST it is answered in one job."""
+    store = relational.cached_store(spark, SF_DIR)
+    df = compiler.evaluate(store, parse_sparql_query(STAR)[1])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    # the answer equals the per-pattern join over the melted triples
+    assert sorted(_rows(store, STAR)) == sorted(_rows(TripleStore(store.df), STAR))
+    rel_endpoint.query("kb", STAR, query_id="star-warm")  # counts a warm read
+    status, _ctype, body = rel_endpoint.query("kb", STAR, query_id="star-1")
+    assert status == 200 and b"Customer#000000003" in body
+    assert _jobs(spark, "rest-query-star-1") == 1
+
+
+def test_bound_subject_star_leaves_out_literal_and_delta_subjects(spark):
+    """Only IRI subjects fuse; a star over a Δ-touched predicate takes the
+    join path, which composes the Δ."""
+    store = relational.cached_store(spark, SF_DIR)
+    lit_star = parse_sparql_query(
+        'SELECT ?n ?b WHERE { "customer:3" <customer#c_name> ?n ; <customer#c_acctbal> ?b }'
+    )[1]
+    (bgp,) = [t for t in compiler.explain_trace(store, lit_star) if t.get("op") == "BGP"]
+    assert bgp["star_fused_scans"] == 0
+    us = UpdatableStore.from_store(store)
+    apply_update(
+        us,
+        'DELETE DATA { <customer:3> <customer#c_mktsegment> "BUILDING" } ; '
+        'INSERT DATA { <customer:3> <customer#c_mktsegment> "BENCH" }',
+        spark,
+    )
+    cur = us.current
+    assert cur.star_source(["customer#c_name", "customer#c_mktsegment"]) is None
+    assert cur.star_source(["customer#c_name", "customer#c_acctbal"]) is not None
+    (row,) = _rows(cur, STAR)
+    assert row[0] == "Customer#000000003" and row[2] == "BENCH"
+
+
+def test_fused_star_scan_is_memoized(spark):
+    """A second compile of a fused variable-subject star reads the scan from
+    the store memo: no parquet schema job, no job at all."""
+    store = relational.cached_store(spark, SF_DIR)
+    q = parse_sparql_query(
+        "SELECT ?c ?n ?s WHERE { ?c <customer#c_name> ?n ; <customer#c_mktsegment> ?s }"
+    )[1]
+    first = compiler.evaluate(store, q)
+    second = _in_group(spark, "star-memo", lambda: compiler.evaluate(store, q))
+    assert _jobs(spark, "star-memo") == 0
+    assert sorted(map(tuple, first.collect())) == sorted(map(tuple, second.collect()))
+
+
+def test_multi_partition_answer_is_one_job(spark):
+    """A 3-partition answer comes back in one job, where a per-partition
+    stream paid one job per partition. The range's 30 rows are a known
+    bound under the cap, so Catalyst drops the collect's limit."""
+    triples = spark.range(0, 30, numPartitions=3).select(
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+        F.lit("p").alias("p"),
+        F.col("id").cast("string").alias("o_lex"),
+        F.lit("string").alias("o_dt"),
+    )
+    ep = SparqlEndpoint(spark, UpdatableStore.from_store(TripleStore(triples)))
+    q = "SELECT ?s ?o WHERE { ?s <p> ?o }"
+    store = ep.namespaces["kb"].query_store
+    assert compiler.evaluate(store, parse_sparql_query(q)[1]).rdd.getNumPartitions() == 3
+    status, _ctype, body = ep.query("kb", q, query_id="three-parts")
+    assert status == 200 and len(json.loads(body)["results"]["bindings"]) == 30
+    assert _jobs(spark, "rest-query-three-parts") == 1
+
+
+def test_row_cap_fires_at_cap_plus_one(spark):
+    rows = [(f"s{i}", "p", f"o{i}", "iri") for i in range(11)]
+    df = spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string")
+    ep = SparqlEndpoint(spark, UpdatableStore.from_store(TripleStore(df)), max_result_rows=10)
+    q = "SELECT ?s ?o WHERE { ?s <p> ?o }"
+    status, _ctype, body = ep.dispatch("GET", "/sparql", {"query": q}, "", b"")
+    assert status == 413 and "row cap (10)" in json.loads(body)["error"]
+    status, _ctype, body = ep.dispatch("GET", "/sparql", {"query": q + " LIMIT 10"}, "", b"")
+    assert status == 200 and len(json.loads(body)["results"]["bindings"]) == 10
+
+
+def _streamed(df, cap):
+    """The per-partition stream the endpoint served before the bounded
+    collect: the reference the bodies must match byte for byte."""
+    for n, row in enumerate(df.toLocalIterator(), 1):
+        if cap is not None and n > cap:
+            raise rest.ResultTooLarge(cap)
+        yield row
+
+
+@pytest.mark.parametrize(
+    "query, formats",
+    [
+        (
+            "SELECT ?o ?p ?d WHERE { ?o <orders#o_totalprice> ?p ; <orders#o_orderdate> ?d }",
+            rest._SELECT_FMTS,
+        ),
+        (
+            "SELECT ?o ?p ?c WHERE { ?o <orders#o_totalprice> ?p ; <orders#o_custkey_ref> ?c } "
+            "ORDER BY DESC(?p) ?o",
+            rest._SELECT_FMTS,
+        ),
+        (
+            "SELECT ?seg (COUNT(*) AS ?k) WHERE { ?c <customer#c_mktsegment> ?seg } "
+            "GROUP BY ?seg ORDER BY ?seg",
+            rest._SELECT_FMTS,
+        ),
+        (
+            "CONSTRUCT { ?c <urn:x#name> ?n ; <urn:x#nation> ?nat } "
+            "WHERE { ?c <customer#c_name> ?n ; <customer#c_nationkey_ref> ?nat }",
+            rest._GRAPH_FMTS,
+        ),
+    ],
+    ids=["select", "order_by", "group_by", "construct"],
+)
+def test_bodies_match_the_per_partition_stream(spark, rel_endpoint, monkeypatch, query, formats):
+    for accept in formats:
+        status, _ctype, body = rel_endpoint.query("kb", query, accept=accept)
+        assert status == 200
+        with monkeypatch.context() as m:
+            m.setattr(rest, "_iter_rows", _streamed)
+            _status, _ctype, streamed = rel_endpoint.query("kb", query, accept=accept)
+        assert body == streamed, accept
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "SELECT (COUNT(*) AS ?c) WHERE { ?x <p> ?y }",
+        "SELECT DISTINCT ?p WHERE { ?x ?p ?y }",
+        "SELECT ?p (COUNT(*) AS ?c) WHERE { ?x ?p ?y } GROUP BY ?p",
+    ],
+    ids=["count", "distinct_p", "group_count"],
+)
+def test_fast_scan_answers_run_no_job(spark, query):
+    rows = [("a", "p", "b", "iri"), ("b", "p", "c", "iri"), ("a", "q", "1", "long")]
+    store = TripleStore(spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string"))
+    store.stats()  # the stats build is the store's, not the query's
+    group = f"fast-scan-{query}"
+    got = _in_group(
+        spark, group, lambda: compiler.evaluate(store, parse_sparql_query(query)[1]).collect()
+    )
+    assert _jobs(spark, group) == 0
+    assert len(got) >= 1
+
+
+def test_tiny_seed_is_the_build_side(spark):
+    """An FK hop from a bound subject broadcasts its 1-row seed, not the
+    customer-name source it joins."""
+    store = relational.cached_store(spark, SF_DIR)
+    text = (
+        "SELECT ?c ?name WHERE { <orders:7> <orders#o_custkey_ref> ?c . "
+        "?c <customer#c_name> ?name }"
+    )
+    (bgp,) = [t for t in compiler.explain_trace(store, parse_sparql_query(text)[1])
+              if t.get("op") == "BGP"]
+    order = bgp["join_order"]
+    assert [j["broadcast"] for j in order] == [True, False]
+    assert order[0]["est_rows"] < order[1]["est_rows"]
+    assert _rows(store, text) == _rows(TripleStore(store.df), text)
