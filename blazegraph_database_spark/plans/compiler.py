@@ -18,7 +18,7 @@ predicates (region/nation) out of shuffles.
 from __future__ import annotations
 
 import re
-from collections import Counter
+from dataclasses import dataclass, field
 from functools import singledispatch
 
 from pyspark.sql import Column, DataFrame
@@ -249,153 +249,171 @@ def _all_sp_vars(n) -> set[str]:
     return out
 
 
+@dataclass
+class _VarUses:
+    """Where every variable of a plan is bound and read (see :func:`_var_uses`)."""
+
+    # var → one (position 's'/'p'/'o'/'g', constant predicate or None) per
+    # plain triple-pattern site that binds it
+    sites: dict = field(default_factory=dict)
+    lexical: set = field(default_factory=set)  # vars whose lexical form is produced or consumed
+    opaque: list = field(default_factory=list)  # string forms of expressions that may read a var
+
+
+def _var_uses(root) -> _VarUses | None:
+    """One walk of a plan recording, per variable, its triple-pattern sites,
+    whether it must stay lexical, and every expression that may read it —
+    the record both binding classifiers filter (:func:`_id_join_vars`,
+    :func:`_native_typed_vars`). The reference makes this decision once per
+    term (inline IV vs TERM2ID id, ref: internal/IV.java,
+    LexiconConfiguration); here it is made once per query.
+
+    Lexical: vars bound by property paths, VALUES, BIND, SERVICE (and a
+    variable SERVICE endpoint), RDF-star embedded terms, generated EXISTS
+    flags, GRAPH ?g scopes and geo:search PARAM objects, plus every var that
+    is projected, grouped or ordered by name. A WITH plan is walked like the
+    main pattern, so its projection marks the columns its INCLUDEs carry.
+
+    None when the plan's output surface is unknown (no Project or Group on
+    the spine — raw pattern evaluations keep lexical bindings), or when the
+    walk meets a node it cannot see through: an INCLUDE of a set no WITH in
+    the query declares (its columns are unknown here) or any other node
+    kind."""
+    spine = root
+    while isinstance(spine, (A.Slice, A.OrderBy, A.Distinct, A.Dataset, A.WithNamed)):
+        spine = spine.child
+    if not isinstance(spine, (A.Project, A.Group)):
+        return None
+    u = _VarUses()
+    declared: set[str] = set()
+    gave_up = False
+
+    def read(*terms) -> None:
+        # a var read by name needs its lexical value; an expression is kept
+        # as its string form and scanned per var by the classifiers
+        nonlocal gave_up
+        for t in terms:
+            if isinstance(t, str):
+                u.lexical.add(t)
+            elif t is not None:
+                try:
+                    u.opaque.append(str(t))
+                except Exception:  # pragma: no cover - repr failure → give up safely
+                    gave_up = True
+
+    def walk(n) -> None:
+        nonlocal gave_up
+        if gave_up:
+            return
+        if isinstance(n, A.SP):
+            if isinstance(n.s, A.Emb) or isinstance(n.o, A.Emb):
+                u.lexical.update(_vars_of(n))  # sid joins are lexical
+                return
+            pred = const_lex(n.p) if n.p is not None and is_const(n.p) else None
+            for where, pos in (("s", n.s), ("p", n.p), ("o", n.o), ("g", n.g)):
+                if isinstance(pos, Var):
+                    u.sites.setdefault(pos.name, []).append((where, pred))
+            if pred is not None and isinstance(n.o, Var):
+                # geo:search magic PARAM positions consume the object var's
+                # VALUE (resolved per sibling binding — _geo_param_join)
+                from blazegraph_database_spark.operators.service import (
+                    GEO_OUT_LOCALS, _geo_local,
+                )
+
+                loc = _geo_local(pred)
+                if loc is not None and loc != "search" and loc not in GEO_OUT_LOCALS:
+                    u.lexical.add(n.o.name)
+        elif isinstance(n, A.BGP):
+            for sp in n.patterns:
+                walk(sp)
+        elif isinstance(n, (A.Join, A.Union2, A.Minus, A.LeftJoin)):
+            walk(n.left)
+            walk(n.right)
+            read(getattr(n, "condition", None))
+        elif isinstance(n, A.Filter):
+            read(n.condition)
+            walk(n.child)
+        elif isinstance(n, A.Extend):
+            read(n.var, n.expr)  # the BIND target is a lexical binding
+            walk(n.child)
+        elif isinstance(n, A.Values):
+            for row in n.rows:
+                read(*row.keys())
+            if n.child is not None:
+                walk(n.child)
+        elif isinstance(n, (A.Exists, A.ExistsFlag)):
+            read(getattr(n, "var", None))  # a generated boolean flag, never an id
+            walk(n.child)
+            walk(n.pattern)
+        elif isinstance(n, A.Project):
+            read(*n.vars)
+            walk(n.child)
+        elif isinstance(n, (A.Distinct, A.Slice, A.Dataset, A.DropCols)):
+            walk(n.child)
+        elif isinstance(n, A.OrderBy):
+            read(*(key for key, _asc in n.keys))
+            walk(n.child)
+        elif isinstance(n, A.Group):
+            read(*n.keys, *(e for _name, e in n.aggs), n.having)
+            walk(n.child)
+        elif isinstance(n, A.GraphScope):
+            if isinstance(n.g, Var):
+                u.lexical.add(n.g.name)
+            walk(n.child)
+        elif isinstance(n, A.WithNamed):
+            declared.update(n.named)
+            for plan in n.named.values():
+                walk(plan)
+            walk(n.child)
+        elif isinstance(n, A.NamedInclude):
+            # a declared set carries its WITH plan's projected (lexical)
+            # columns; any other set's columns are unknown
+            gave_up = n.name not in declared
+        elif isinstance(n, (A.Service, A.PathPattern)):
+            u.lexical.update(_all_sp_vars(n))  # these emit lexical bindings
+            if isinstance(n, A.Service) and isinstance(n.iri, Var):
+                # a variable ENDPOINT is consumed lexically (the compiler
+                # collects its distinct values to dispatch service calls)
+                u.lexical.add(n.iri.name)
+        else:
+            gave_up = True
+
+    walk(root)
+    return None if gave_up else u
+
+
+def _reads(v: str, exprs) -> bool:
+    """Whether any expression string may read ``v``: matches `v`, `v__dt`,
+    `v__id` as tokens (`_` continues a word, so the explicit alternative
+    covers the companion suffixes). A false positive only costs the
+    optimization, never correctness."""
+    rx = re.compile(r"\b" + re.escape(v) + r"(\b|_)")
+    return any(rx.search(s) for s in exprs)
+
+
 def _id_join_vars(root) -> frozenset[str]:
-    """Vars that can ride joins as 64-bit term ids instead of lexical strings.
+    """Vars that can ride joins as 128-bit term ids instead of lexical strings.
 
-    A var qualifies iff every one of these holds:
-
-    * the query's output surface is known (the plan spine reaches a Project
-      or Group — raw pattern evaluations keep lexical bindings);
-    * it is bound only by plain triple patterns — never by property paths,
-      VALUES, BIND, INCLUDE, SERVICE, RDF-star embedded terms, or a GRAPH
-      position (those operators produce/consume lexical bindings);
-    * it occurs in >= 2 patterns, i.e. it is genuinely a join key;
-    * its value is never used: not projected, grouped, ordered, aggregated,
-      or referenced by any filter/expression. Expression references are
-      detected by a word-boundary scan of the Column's string form — a
-      false positive only costs the optimization, never correctness.
+    A var qualifies iff, in the :func:`_var_uses` record, it has at least
+    two triple-pattern sites (it is genuinely a join key), none of them in
+    GRAPH position, it never has to stay lexical, and no expression reads
+    it.
 
     This is the compile-time equivalent of the reference's rule that all
     intermediate solutions hold IVs and the lexicon materializes values
     only at projection/expression boundaries.
     """
-    occurrences: Counter = Counter()
-    needed: set[str] = set()
-    opaque: list[str] = []
-    state = {"bail": False}
-
-    def note_opaque(e) -> None:
-        try:
-            opaque.append(str(e))
-        except Exception:  # pragma: no cover - repr failure → give up safely
-            state["bail"] = True
-
-    def walk(n) -> None:
-        if state["bail"]:
-            return
-        if isinstance(n, A.SP):
-            if isinstance(n.s, A.Emb) or isinstance(n.o, A.Emb):
-                needed.update(_vars_of(n))  # sid joins are lexical
-                return
-            for pos, in_g in ((n.s, False), (n.p, False), (n.o, False), (n.g, True)):
-                if isinstance(pos, Var):
-                    occurrences[pos.name] += 1
-                    if in_g:
-                        needed.add(pos.name)
-            if n.p is not None and is_const(n.p) and isinstance(n.o, Var):
-                # geo:search magic PARAM positions consume the object var's
-                # VALUE (resolved per sibling binding — _geo_param_join);
-                # id-joining it would leave only the 64-bit companion bound
-                from blazegraph_database_spark.operators.service import (
-                    GEO_OUT_LOCALS, _geo_local,
-                )
-
-                loc = _geo_local(const_lex(n.p))
-                if loc is not None and loc != "search" and loc not in GEO_OUT_LOCALS:
-                    needed.add(n.o.name)
-            return
-        if isinstance(n, A.BGP):
-            for sp in n.patterns:
-                walk(sp)
-        elif isinstance(n, (A.Join, A.Union2, A.Minus)):
-            walk(n.left)
-            walk(n.right)
-        elif isinstance(n, A.LeftJoin):
-            walk(n.left)
-            walk(n.right)
-            if n.condition is not None:
-                note_opaque(n.condition)
-        elif isinstance(n, A.Filter):
-            note_opaque(n.condition)
-            walk(n.child)
-        elif isinstance(n, A.Extend):
-            needed.add(n.var)
-            note_opaque(n.expr)
-            walk(n.child)
-        elif isinstance(n, A.Values):
-            for row in n.rows:
-                needed.update(row.keys())
-            if n.child is not None:
-                walk(n.child)
-        elif isinstance(n, A.Exists):
-            walk(n.child)
-            walk(n.pattern)
-        elif isinstance(n, A.ExistsFlag):
-            needed.add(n.var)  # generated boolean flag, never an id
-            walk(n.child)
-            walk(n.pattern)
-        elif isinstance(n, A.Project):
-            needed.update(n.vars)
-            walk(n.child)
-        elif isinstance(n, (A.Distinct, A.Slice, A.Dataset, A.DropCols)):
-            walk(n.child)
-        elif isinstance(n, A.OrderBy):
-            for key, _asc in n.keys:
-                if isinstance(key, str):
-                    needed.add(key)
-                else:
-                    note_opaque(key)
-            walk(n.child)
-        elif isinstance(n, A.Group):
-            for k in n.keys:
-                if isinstance(k, str):
-                    needed.add(k)
-                else:
-                    note_opaque(k)
-            for _name, e in n.aggs:
-                note_opaque(e)
-            if n.having is not None:
-                note_opaque(n.having)
-            walk(n.child)
-        elif isinstance(n, A.GraphScope):
-            if isinstance(n.g, Var):
-                needed.add(n.g.name)
-            walk(n.child)
-        elif isinstance(n, A.WithNamed):
-            for plan in n.named.values():
-                walk(plan)
-            walk(n.child)
-        elif isinstance(n, A.NamedInclude):
-            pass  # joins against a materialized lexical solution set
-        elif isinstance(n, (A.Service, A.PathPattern)):
-            needed.update(_all_sp_vars(n))  # these emit lexical bindings
-            if isinstance(n, A.Service) and isinstance(n.iri, Var):
-                # a variable ENDPOINT is consumed lexically (the compiler
-                # collects its distinct values to dispatch service calls)
-                needed.add(n.iri.name)
-        else:
-            state["bail"] = True
-
-    # the output surface must be knowable: a Project or Group on the spine
-    spine = root
-    while isinstance(spine, (A.Slice, A.OrderBy, A.Distinct, A.Dataset, A.WithNamed)):
-        spine = spine.child
-    if not isinstance(spine, (A.Project, A.Group)):
+    u = _var_uses(root)
+    if u is None:
         return frozenset()
-    walk(root)
-    if state["bail"]:
-        return frozenset()
-    cands = {v for v, c in occurrences.items() if c >= 2 and v not in needed}
-    if not cands:
-        return frozenset()
-    out = set()
-    for v in cands:
-        # matches `v`, `v__dt`, `v__id` as expression tokens; `_` continues a
-        # word so the explicit alternative covers the companion suffixes
-        rx = re.compile(r"\b" + re.escape(v) + r"(\b|_)")
-        if not any(rx.search(s) for s in opaque):
-            out.add(v)
-    return frozenset(out)
+    return frozenset(
+        v
+        for v, sites in u.sites.items()
+        if len(sites) >= 2
+        and all(where != "g" for where, _p in sites)
+        and v not in u.lexical
+        and not _reads(v, u.opaque)
+    )
 
 
 # Allowed cast surfaces per native dt tag. For 'double' only AS DOUBLE is
@@ -426,15 +444,12 @@ def _native_typed_vars(root, store) -> dict[str, str]:
     numeric range filters reach the parquet reader as pushed filters
     (plan-quality-tested).
 
-    A var qualifies iff:
+    A var qualifies iff, in the :func:`_var_uses` record:
 
-    * the output surface is known (Project/Group on the spine);
-    * every binding site is the OBJECT of a constant-predicate plain triple
-      pattern whose store dt tag is 'long' or 'double', the same tag at
-      every site (Union arms must union compatible column types);
-    * it never occurs in subject/predicate/graph position, paths, VALUES,
-      BIND targets, RDF-star embedded terms, SERVICE, or named includes;
-    * it is not projected, grouped, ordered, or distinct-surfaced by name;
+    * every site is the OBJECT of a constant predicate whose store dt tag
+      has allowed casts, the same tag at every site (Union arms must union
+      compatible column types);
+    * it never has to stay lexical;
     * every expression reference is one of the tag's allowed casts
       (``_NATIVE_CASTS``) — those casts produce bit-identical values from
       either binding mode, so any surrounding expression is unaffected.
@@ -448,125 +463,22 @@ def _native_typed_vars(root, store) -> dict[str, str]:
     pred_dt = store.pred_dt or {}
     if not pred_dt:
         return {}
-    bind_tags: dict[str, set] = {}
-    disq: set[str] = set()
-    opaque: list[str] = []
-    state = {"bail": False}
-
-    def note_opaque(e) -> None:
-        try:
-            opaque.append(str(e))
-        except Exception:  # pragma: no cover - repr failure → give up safely
-            state["bail"] = True
-
-    def walk(n) -> None:
-        if state["bail"]:
-            return
-        if isinstance(n, A.SP):
-            if isinstance(n.s, A.Emb) or isinstance(n.o, A.Emb):
-                disq.update(_vars_of(n))  # sid joins are lexical
-                return
-            for pos in (n.s, n.p, n.g):
-                if isinstance(pos, Var):
-                    disq.add(pos.name)
-            if isinstance(n.o, Var):
-                v = n.o.name
-                tag = (
-                    pred_dt.get(const_lex(n.p))
-                    if (n.p is not None and is_const(n.p))
-                    else None
-                )
-                if tag in _NATIVE_CASTS:
-                    bind_tags.setdefault(v, set()).add(tag)
-                else:
-                    disq.add(v)
-            return
-        if isinstance(n, A.BGP):
-            for sp in n.patterns:
-                walk(sp)
-        elif isinstance(n, (A.Join, A.Union2, A.Minus)):
-            walk(n.left)
-            walk(n.right)
-        elif isinstance(n, A.LeftJoin):
-            walk(n.left)
-            walk(n.right)
-            if n.condition is not None:
-                note_opaque(n.condition)
-        elif isinstance(n, A.Filter):
-            note_opaque(n.condition)
-            walk(n.child)
-        elif isinstance(n, A.Extend):
-            disq.add(n.var)
-            note_opaque(n.expr)
-            walk(n.child)
-        elif isinstance(n, A.Values):
-            for row in n.rows:
-                disq.update(row.keys())
-            if n.child is not None:
-                walk(n.child)
-        elif isinstance(n, A.Exists):
-            walk(n.child)
-            walk(n.pattern)
-        elif isinstance(n, A.ExistsFlag):
-            disq.add(n.var)
-            walk(n.child)
-            walk(n.pattern)
-        elif isinstance(n, A.Project):
-            disq.update(n.vars)
-            walk(n.child)
-        elif isinstance(n, (A.Distinct, A.Slice, A.Dataset, A.DropCols)):
-            walk(n.child)
-        elif isinstance(n, A.OrderBy):
-            for key, _asc in n.keys:
-                if isinstance(key, str):
-                    disq.add(key)
-                else:
-                    note_opaque(key)
-            walk(n.child)
-        elif isinstance(n, A.Group):
-            for k in n.keys:
-                if isinstance(k, str):
-                    disq.add(k)
-                else:
-                    note_opaque(k)
-            for _name, e in n.aggs:
-                note_opaque(e)
-            if n.having is not None:
-                note_opaque(n.having)
-            walk(n.child)
-        elif isinstance(n, A.GraphScope):
-            if isinstance(n.g, Var):
-                disq.add(n.g.name)
-            walk(n.child)
-        elif isinstance(n, (A.Service, A.PathPattern)):
-            disq.update(_all_sp_vars(n))  # these emit lexical bindings
-        else:
-            state["bail"] = True  # WithNamed / NamedInclude / unknown: bail
-
-    spine = root
-    while isinstance(spine, (A.Slice, A.OrderBy, A.Distinct, A.Dataset)):
-        spine = spine.child
-    if not isinstance(spine, (A.Project, A.Group)):
-        return {}
-    walk(root)
-    if state["bail"]:
+    u = _var_uses(root)
+    if u is None:
         return {}
     out: dict[str, str] = {}
-    for v, tags in bind_tags.items():
-        if v in disq or len(tags) != 1:
+    for v, sites in u.sites.items():
+        tags = {pred_dt.get(p) if where == "o" else None for where, p in sites}
+        tag = tags.pop() if len(tags) == 1 else None
+        if tag not in _NATIVE_CASTS or v in u.lexical:
             continue
-        tag = next(iter(tags))
         allowed = [c.format(v=v) for c in _NATIVE_CASTS[tag]]
-        rx = re.compile(r"\b" + re.escape(v) + r"(\b|_)")
-        ok = True
-        for s in opaque:
-            cleaned = s
+        cleaned = []
+        for s in u.opaque:
             for a in allowed:
-                cleaned = cleaned.replace(a, "")
-            if rx.search(cleaned):
-                ok = False
-                break
-        if ok:
+                s = s.replace(a, "")
+            cleaned.append(s)
+        if not _reads(v, cleaned):
             out[v] = tag
     return out
 
@@ -716,7 +628,11 @@ def _pattern_df(sp: A.SP, store: TripleStore) -> DataFrame:
         return _emb_pattern_df(sp, store)
     df = None
     native = store.native_typed_vars
-    if sp.p is not None and is_const(sp.p):
+    if isinstance(sp.s, Lit):
+        # a literal is never a subject: the pattern is provably empty (the
+        # subject filter below compares lexical forms only)
+        df = store.df.limit(0)
+    elif sp.p is not None and is_const(sp.p):
         aliases = _pred_aliases(const_lex(sp.p))
         stats = store._stats
         known = (
@@ -818,8 +734,8 @@ def _pattern_df(sp: A.SP, store: TripleStore) -> DataFrame:
             if pos.name in seen:  # repeated var within one pattern: equality filter
                 df = df.filter(_cc(col) == _cc(seen[pos.name]))
             elif pos.name in id_vars:
-                # pure join key: bind the 64-bit term id, never the string —
-                # downstream joins shuffle longs (TERM2ID discipline)
+                # pure join key: bind the 128-bit term id, never the string —
+                # downstream joins shuffle two-long ids (TERM2ID discipline)
                 seen[pos.name] = col
                 sel.append(term_id(_cc(col)).alias(f"{pos.name}__id"))
             elif pos.name in native and col == "o_lex":
@@ -1060,14 +976,7 @@ def _compile_bgp(node: A.BGP, store: TripleStore) -> DataFrame:
     for i in leftover:
         sp = patterns[i]
         entries.append((_pattern_df(sp, store), _estimate(sp, store), _vars_of(sp)))
-    entries.sort(key=lambda e: e[1])
-    ordered = [entries.pop(0)]
-    bound = set(ordered[0][2])
-    while entries:
-        joinable = [i for i, e in enumerate(entries) if e[2] & bound]
-        idx = joinable[0] if joinable else 0
-        ordered.append(entries.pop(idx))
-        bound |= ordered[-1][2]
+    ordered = _greedy_order(entries)
     # the build side of each join is the smaller input: later inputs under
     # the bound are broadcast against the running join, except that a seed
     # estimated smaller than the first input it joins is broadcast instead
@@ -1095,8 +1004,28 @@ def _compile_bgp(node: A.BGP, store: TripleStore) -> DataFrame:
                 ),
             }
         )
+    return _join_all([(df, bc) for (df, _est, _vs), bc in zip(ordered, broadcast)])
+
+
+def _greedy_order(entries: list) -> list:
+    """Seed with the most selective of ``entries`` [(df, est, vars)], then
+    repeatedly take the cheapest input that shares a variable with the
+    bound set (cartesian only as a last resort)."""
+    entries = sorted(entries, key=lambda e: e[1])
+    ordered = [entries.pop(0)]
+    bound = set(ordered[0][2])
+    while entries:
+        joinable = [i for i, e in enumerate(entries) if e[2] & bound]
+        ordered.append(entries.pop(joinable[0] if joinable else 0))
+        bound |= ordered[-1][2]
+    return ordered
+
+
+def _join_all(inputs: list) -> DataFrame:
+    """Natural-join ``inputs`` [(df, broadcast)] left to right, each flagged
+    input under a broadcast hint."""
     out = None
-    for (df, _est, _vs), bc in zip(ordered, broadcast):
+    for df, bc in inputs:
         if bc:
             df = F.broadcast(df)
         if out is None:
@@ -1274,44 +1203,23 @@ def _compile_bgp_hinted(patterns: list, hints: dict, store: TripleStore) -> Data
         if len(entries) <= RTO_MAX_SAMPLED_PATTERNS and len(entries) > 2:
             ordered = _rto_order(entries, trace)
         else:
-            entries.sort(key=lambda e: e[1])
-            ordered = [entries.pop(0)]
-            bound = set(ordered[0][2])
-            while entries:
-                joinable = [i for i, e in enumerate(entries) if e[2] & bound]
-                idx = joinable[0] if joinable else 0
-                ordered.append(entries.pop(idx))
-                bound |= ordered[-1][2]
-        out = None
-        for df, est, _ in ordered:
-            # a probe that hit the cap means "at least cap+1 rows" — only
-            # exactly-measured small inputs qualify for broadcast
-            if est <= RTO_SAMPLE_CAP and out is not None:
-                df = F.broadcast(df)
-            if out is None:
-                out = df
-            else:
-                shared = sorted(set(out.columns) & set(df.columns))
-                out = out.join(df, on=shared) if shared else out.crossJoin(df)
-        return out
+            ordered = _greedy_order(entries)
+        # a probe that hit the cap means "at least cap+1 rows" — only
+        # exactly-measured small inputs qualify for broadcast
+        return _join_all(
+            [(df, k > 0 and est <= RTO_SAMPLE_CAP) for k, (df, est, _) in enumerate(ordered)]
+        )
     rf = hints.get("run_first") or frozenset()
     rl = hints.get("run_last") or frozenset()
     order = sorted(
         range(len(patterns)),
         key=lambda i: (0 if i in rf else (2 if i in rl else 1), i),
     )
-    out = None
-    for i in order:
-        sp = patterns[i]
-        df, est = _pattern_df(sp, store), _estimate(sp, store)
-        if out is None:
-            out = df
-            continue
-        if est <= BROADCAST_MAX_ROWS:
-            df = F.broadcast(df)
-        shared = sorted(set(out.columns) & set(df.columns))
-        out = out.join(df, on=shared) if shared else out.crossJoin(df)
-    return out
+    inputs = []
+    for k, i in enumerate(order):
+        df, est = _pattern_df(patterns[i], store), _estimate(patterns[i], store)
+        inputs.append((df, k > 0 and est <= BROADCAST_MAX_ROWS))
+    return _join_all(inputs)
 
 
 # ---------------------------------------------------------------- dispatch --
@@ -1414,7 +1322,7 @@ def _(node: A.BGP, store: TripleStore) -> DataFrame:
                     pairs = pairs.withColumnRenamed("g", gterm.name)
                 hits = hits.join(pairs, on=var)
             for c in list(hits.columns):
-                # pure-join vars ride shuffles as 64-bit term ids — the
+                # pure-join vars ride shuffles as 128-bit term ids — the
                 # search output must offer the same companion the rest of
                 # the BGP joins on
                 if c in idv:

@@ -431,20 +431,23 @@ class SparqlEndpoint:
             # explain=details prepends the engine's own optimizer trace
             # (BGP join order, estimates, broadcast and id-join decisions —
             # the reference page's static-optimizer section)
-            if form == "select":
-                df = compiler.evaluate(store, parsed[1])
-            elif form == "construct":
+            if form == "construct":
                 df = compiler.construct(store, parsed[1], parsed[2])
             elif form in ("describe", "describe_where"):
                 df = self._describe(store, parsed)
-            else:  # ASK explains its underlying pattern
-                df = compiler.evaluate(store, parsed[1])
+            else:  # SELECT, or the pattern under an ASK
+                # one compile, on the view the query runs on (a SELECT
+                # carries `__dt` companions); it also records the trace
+                flags = {"_trace": []} if explain == "details" else {}
+                if form == "select":
+                    flags["track_dt"] = True
+                view = store.view(**flags)
+                df = compiler.evaluate(view, parsed[1])
             plan = df._jdf.queryExecution().toString()
             if explain == "details" and form in ("select", "ask"):
-                trace = compiler.explain_trace(store, parsed[1])
                 plan = (
                     "== Optimizer Trace ==\n"
-                    + json.dumps(trace, indent=1, default=str)
+                    + json.dumps(view._trace, indent=1, default=str)
                     + "\n\n"
                     + plan
                 )

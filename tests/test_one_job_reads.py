@@ -74,6 +74,9 @@ def test_bound_subject_star_leaves_out_literal_and_delta_subjects(spark):
     )[1]
     (bgp,) = [t for t in compiler.explain_trace(store, lit_star) if t.get("op") == "BGP"]
     assert bgp["star_fused_scans"] == 0
+    # a literal is never a subject: the star and its single pattern match nothing
+    assert compiler.evaluate(store, lit_star).collect() == []
+    assert _rows(store, 'SELECT ?n WHERE { "customer:3" <customer#c_name> ?n }') == []
     us = UpdatableStore.from_store(store)
     apply_update(
         us,

@@ -121,29 +121,96 @@ def test_bgp_joins_on_long_term_ids(spark):
     assert rows and all(n > 0 for n in rows.values())
 
 
+def _classifier_shapes():
+    """One plan per node shape with the vars each classifier must pick:
+    ``(shape, plan, id-join vars, native-typed vars)``. Both classifiers read
+    one variable-use walk, so every node shape gets one rule: a var that is
+    filtered on, projected, grouped, ordered by, bound by
+    VALUES/BIND/SERVICE/GRAPH, or read by a non-cast expression stays
+    lexical; a pure join key gets a term id; a var read only through its
+    tag's value-identical casts binds natively. An INCLUDE of a set no WITH
+    declares has unknown columns: nothing is classified."""
+    from blazegraph_database_spark.functions import sparql_funcs as fn
+
+    tp = A.SP(V("x"), "orders#o_totalprice", V("v"))  # double tag
+    ok = A.SP(V("x"), "orders#o_orderkey", V("k"))  # long tag
+    bgp = A.BGP([tp, ok])
+    ref = A.SP(V("o"), "orders#o_custkey_ref", V("c"))  # IRI-ref object
+
+    def root(child):
+        return A.Project(A.Extend(child, "s", F.col("v").cast("double")), ["s"])
+
+    chain = A.BGP(
+        [
+            ref,
+            A.SP(V("c"), "customer#c_nationkey_ref", V("n")),
+            A.SP(V("n"), "nation#n_name", V("nm")),
+        ]
+    )
+    with_plan = A.Project(
+        A.BGP([A.SP(V("x"), "orders#o_custkey_ref", V("c")),
+               A.SP(V("c"), "customer#c_nationkey_ref", V("n"))]),
+        ["x"],
+    )
+    both = {"v": "double", "k": "long"}
+    return [
+        # (shape, plan, id-join vars, native-typed vars)
+        ("pure join key, cast-only values", root(bgp), {"x"}, both),
+        ("filtered join key", A.Project(
+            A.Filter(F.col("c").startswith("customer:1"), chain), ["nm"]), {"n"}, {}),
+        ("no Project/Group root", A.Filter(F.col("c").startswith("customer:1"), chain),
+         set(), {}),
+        ("projected by name", A.Project(A.BGP([tp]), ["v"]), set(), {}),
+        ("non-cast expression", A.Project(
+            A.Extend(A.BGP([tp]), "u", F.upper(F.col("v"))), ["u"]), set(), {}),
+        ("value-divergent cast", A.Project(
+            A.Extend(A.BGP([tp]), "b", F.col("v").cast("long")), ["b"]), set(), {}),
+        ("IRI-ref object", A.Project(
+            A.Extend(A.BGP([ref, ok]), "kk", F.col("k").cast("long")), ["kk"]),
+         set(), {"k": "long"}),
+        ("raw MIN aggregate", A.Group(A.BGP([tp]), keys=(), aggs=[("m", fn.MIN("v"))]),
+         set(), {}),
+        ("cast-only aggregate", A.Group(A.BGP([tp]), keys=(), aggs=[("s", fn.SUM("v"))]),
+         set(), {"v": "double"}),
+        ("variable SERVICE endpoint", root(A.Join(
+            bgp, A.Service(V("x"), A.BGP([A.SP(V("a"), "p", V("b"))])))), set(), both),
+        ("GRAPH ?g", root(A.GraphScope(V("x"), bgp)), set(), both),
+        ("VALUES", root(A.Join(A.Values([{"k": "1"}]), bgp)), {"x"}, {"v": "double"}),
+        ("BIND", root(A.Extend(bgp, "b", F.concat(F.col("x"), F.col("v")))),
+         set(), {"k": "long"}),
+        ("EXISTS flag", root(A.ExistsFlag(bgp, A.BGP(
+            [A.SP(V("x"), "orders#o_custkey_ref", V("k"))]), "f")), {"x", "k"}, {"v": "double"}),
+        ("WITH...INCLUDE", root(A.WithNamed(
+            A.Join(A.NamedInclude("w"), bgp), {"w": with_plan})), {"c"}, both),
+        ("undeclared INCLUDE", root(A.Join(A.NamedInclude("hi"), bgp)), set(), {}),
+        ("ORDER BY expression", A.OrderBy(
+            root(bgp), [(F.concat(F.col("x"), F.col("k")), True)]), set(), {"v": "double"}),
+        ("HAVING", A.Group(bgp, keys=(), aggs=[("s", fn.SUM("v"))],
+                           having=F.count(F.col("x")) > F.max(F.col("k"))),
+         set(), {"v": "double"}),
+    ]
+
+
 def test_id_join_classification_is_conservative(spark):
     """A var referenced by a filter expression must stay lexical even when it
-    is also a join key; vars bound by paths/VALUES never get ids."""
+    is also a join key; vars bound by paths/VALUES never get ids; with no
+    Project/Group root the output surface is unknown and no var gets an id."""
     from blazegraph_database_spark.plans.compiler import _id_join_vars
 
-    plan = A.Project(
-        A.Filter(
-            F.col("c").startswith("customer:1"),
-            A.BGP(
-                [
-                    A.SP(V("o"), "orders#o_custkey_ref", V("c")),
-                    A.SP(V("c"), "customer#c_nationkey_ref", V("n")),
-                    A.SP(V("n"), "nation#n_name", V("nm")),
-                ]
-            ),
-        ),
-        ["nm"],
-    )
-    ids = _id_join_vars(plan)
-    assert "c" not in ids  # filtered on → value needed
-    assert "n" in ids  # pure join key
-    # no Project/Group root → no ids at all (output surface unknown)
-    assert _id_join_vars(plan.child) == frozenset()
+    for shape, plan, ids, _native in _classifier_shapes():
+        assert _id_join_vars(plan) == frozenset(ids), shape
+
+
+def test_native_typed_classification_is_conservative(spark):
+    """Vars whose value surface isn't provably cast-only must stay lexical:
+    projected vars, string-function references, IRI-ref objects, raw
+    (uncast) aggregate args, and double-tagged vars cast AS BIGINT
+    (string→BIGINT of '1.5' is NULL; double→BIGINT truncates)."""
+    from blazegraph_database_spark.plans.compiler import _native_typed_vars
+
+    st = cached_store(spark, SF_DIR)
+    for shape, plan, _ids, native in _classifier_shapes():
+        assert _native_typed_vars(plan, st) == native, shape
 
 
 def test_rto_hint_measures_and_matches_static(spark, monkeypatch):
@@ -249,51 +316,14 @@ def test_native_typed_filter_pushes_to_parquet(spark):
     assert "cast(o_totalprice" not in p, p
 
 
-def test_native_typed_classification_is_conservative(spark):
-    """Vars whose value surface isn't provably cast-only must stay lexical:
-    projected vars, string-function references, IRI-ref objects, raw
-    (uncast) aggregate args, and double-tagged vars cast AS BIGINT
-    (string→BIGINT of '1.5' is NULL; double→BIGINT truncates)."""
-    from blazegraph_database_spark.functions import sparql_funcs as fn
-    from blazegraph_database_spark.plans.compiler import _native_typed_vars
-
-    st = cached_store(spark, SF_DIR)
-    tp = A.SP(V("x"), "orders#o_totalprice", V("v"))  # double tag
-    ok = A.SP(V("x"), "orders#o_orderkey", V("k"))  # long tag
-
-    # projected by name → lexical
-    assert "v" not in _native_typed_vars(A.Project(A.BGP([tp]), ["v"]), st)
-    # referenced through a non-cast expression → lexical
-    p2 = A.Project(A.Extend(A.BGP([tp]), "u", F.upper(F.col("v"))), ["u"])
-    assert "v" not in _native_typed_vars(p2, st)
-    # double-tagged var cast AS BIGINT → lexical (value-divergent cast)
-    p3 = A.Project(A.Extend(A.BGP([tp]), "b", F.col("v").cast("long")), ["b"])
-    assert "v" not in _native_typed_vars(p3, st)
-    # IRI-ref object never qualifies; long key under pure casts does
-    p4 = A.Project(
-        A.Extend(
-            A.BGP([A.SP(V("o"), "orders#o_custkey_ref", V("c")), ok]),
-            "kk",
-            F.col("k").cast("long"),
-        ),
-        ["kk"],
-    )
-    nat = _native_typed_vars(p4, st)
-    assert "c" not in nat and nat.get("k") == "long"
-    # raw MIN(v) (no cast: lexical ordering semantics) → lexical
-    p5 = A.Group(A.BGP([tp]), keys=(), aggs=[("m", fn.MIN("v"))])
-    assert "v" not in _native_typed_vars(p5, st)
-    # cast-only aggregate → native
-    p6 = A.Group(A.BGP([tp]), keys=(), aggs=[("s", fn.SUM("v"))])
-    assert _native_typed_vars(p6, st).get("v") == "double"
-
-
 def test_native_typed_path_equals_lexical_path(spark, monkeypatch):
     """Forcing the classifier off must not change any result of the flagship
-    agg query or a typed-filter query — the native binding is a pure
-    physical optimization."""
+    agg query, a typed-filter query or a WITH…INCLUDE query whose named
+    subquery and main pattern each bind a native var — the native binding
+    is a pure physical optimization."""
     from blazegraph_database_spark import queries_core
     from blazegraph_database_spark.plans import compiler
+    from blazegraph_database_spark.plans.sparql_parser import parse_sparql_query, run_sparql
 
     def run_both(q):
         native = q(spark, SF_DIR).collect()
@@ -305,6 +335,15 @@ def test_native_typed_path_equals_lexical_path(spark, monkeypatch):
 
     run_both(queries_core.bgp_join_agg)
     run_both(queries_core.union_filter)
+    with_q = (
+        "SELECT ?x ?k2 WITH { SELECT ?x (SUM(?v) AS ?t) WHERE { "
+        "?x <orders#o_totalprice> ?v } GROUP BY ?x } AS %w WHERE { INCLUDE %w . "
+        "?x <orders#o_orderkey> ?k . BIND(?k + 1 AS ?k2) FILTER(?t > 400000) }"
+    )
+    st = cached_store(spark, SF_DIR)
+    plan = parse_sparql_query(with_q)[1]
+    assert compiler._native_typed_vars(plan, st) == {"v": "double", "k": "long"}
+    run_both(lambda spark, sf: run_sparql(cached_store(spark, sf), with_q))
 
 
 def test_rto_samples_join_paths(spark):

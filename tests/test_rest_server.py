@@ -135,6 +135,10 @@ def test_explain_details_has_optimizer_trace(server):
     text = body.decode()
     assert "Optimizer Trace" in text and '"join_order"' in text
     assert "Physical Plan" in text  # Spark plan still follows
+    # the plan shown is the executed one: a SELECT carries `__dt` companions
+    q = urllib.parse.quote("SELECT ?x ?n WHERE { ?x <knows> ?y . ?y <name> ?n }")
+    _status, _ctype, body = _req(f"{server}/sparql?query={q}&explain=details")
+    assert "n__dt" in body.decode()
 
 
 def test_explain_form_post(server):

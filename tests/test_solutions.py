@@ -62,6 +62,23 @@ def test_insert_include_roundtrip(spark, us):
         us.query_store, "SELECT ?s ?t WHERE { INCLUDE %hi . ?s <tag> ?t }"
     )
     assert sorted(tuple(r) for r in got.collect()) == [("b", "y"), ("c", "y")]
+    # a persisted set joined by a var that two patterns also bind: the
+    # join is on the set's lexical column, never a cross join
+    rows = [
+        ("a", "knows", "b", "iri"),
+        ("b", "name", "Bob", "string"),
+        ("c", "knows", "d", "iri"),
+        ("d", "name", "Dan", "string"),
+        ("b", "flag", "1", "long"),
+    ]
+    us2 = UpdatableStore.from_store(
+        TripleStore(spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string"))
+    )
+    apply_update(us2, "INSERT INTO %hi SELECT ?y WHERE { ?y <flag> ?f }")
+    got = run_sparql(
+        us2.query_store, "SELECT ?n WHERE { INCLUDE %hi . ?x <knows> ?y . ?y <name> ?n }"
+    )
+    assert [tuple(r) for r in got.collect()] == [("Bob",)]
 
 
 def test_insert_replaces_not_appends(spark, us):
