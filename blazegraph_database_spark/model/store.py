@@ -35,8 +35,10 @@ import copy
 import threading
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from blazegraph_database_spark.operators import driver_tier
 
 TRIPLE_COLS = ["s", "p", "o_lex", "o_dt"]
 QUAD_COLS = TRIPLE_COLS + ["g"]
@@ -305,12 +307,15 @@ class TripleStore:
 
 
 def key_join(
-    df: DataFrame, rows: DataFrame, how: str, cols: list[str], broadcast: bool = True
+    df: DataFrame, rows: DataFrame | Column, how: str, cols: list[str], broadcast: bool = True
 ) -> DataFrame:
     """``df`` semi- or anti-joined (``how``) to the rows of ``rows`` on the
     key columns ``cols``, null-safely (the default graph is g = NULL). The
     right side is renamed first, so frames that share lineage still compare
-    column by column."""
+    column by column. ``rows`` may be a :func:`key_rows` predicate instead
+    of a frame: ``df`` is then filtered by it, with no join."""
+    if isinstance(rows, Column):
+        return df.filter(rows if how == "left_semi" else ~rows)
     right = rows.select([F.col(c).alias(f"__k_{c}") for c in cols])
     if broadcast:
         right = F.broadcast(right)
@@ -324,10 +329,40 @@ def key_join(
 def rows_frame(spark: SparkSession, rows, cols: list[str], o_type: str = "string") -> DataFrame:
     """Driver-held key rows as a local relation; ``o_type`` casts ``o_lex``
     to a typed source's native column type."""
-    from blazegraph_database_spark.operators.driver_tier import to_frame
-
-    df = to_frame(spark, list(rows), ", ".join(f"{c} string" for c in cols))
+    df = driver_tier.to_frame(spark, list(rows), ", ".join(f"{c} string" for c in cols))
     return df if o_type == "string" else df.withColumn("o_lex", F.col("o_lex").cast(o_type))
+
+
+def _sql_lit(v, cast: str = "string") -> str:
+    """``v`` as a Spark SQL literal of type ``cast`` (quotes and
+    backslashes escaped; None is a typed NULL)."""
+    if v is None:
+        return f"CAST(NULL AS {cast})"
+    text = "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return text if cast == "string" else f"CAST({text} AS {cast})"
+
+
+def key_rows(spark: SparkSession, rows, cols: list[str], o_type: str = "string") -> DataFrame | Column:
+    """Driver-held key rows (``s`` never null) as the right side of
+    :func:`key_join`. Up to ``driver_tier.LITERAL_MAX_ROWS`` rows (read at
+    call time) become one literal predicate, ``s IN (...) AND struct(cols)
+    IN (...)``, built as one SQL expression (one py4j call, where a Column
+    per value costs one each): struct equality matches null fields, so it
+    is null-safe, and the plan runs in one job with no broadcast. The
+    ``s`` hash-set test keeps the per-row cost flat in the row count. More
+    rows become a :func:`rows_frame`, which ``key_join`` broadcasts."""
+    if len(rows) > driver_tier.LITERAL_MAX_ROWS:
+        return rows_frame(spark, rows, cols, o_type)
+    if not rows:
+        return F.lit(False)
+    casts = [o_type if c == "o_lex" else "string" for c in cols]
+    subjects = ", ".join(map(_sql_lit, sorted({r[0] for r in rows})))
+    structs = ", ".join(
+        "named_struct(" + ", ".join(f"'{c}', {_sql_lit(v, t)}" for c, v, t in zip(cols, r, casts)) + ")"
+        for r in rows
+    )
+    keys = ", ".join(f"`{c}`" for c in cols)
+    return F.expr(f"`s` IN ({subjects}) AND struct({keys}) IN ({structs})")
 
 
 class DeltaStore(TripleStore):
@@ -377,11 +412,18 @@ class DeltaStore(TripleStore):
     def _frame(self, key, rows, o_type: str = "string") -> DataFrame:
         return self.memo(key, lambda: rows_frame(self.spark, rows, self.key_cols(), o_type))
 
+    def _without(self, df: DataFrame, key, rows, o_type: str = "string") -> DataFrame:
+        """``df`` minus the driver-held ``rows``; their :func:`key_rows`
+        side is built once per version in the memo under ``key``."""
+        cols = self.key_cols()
+        side = self.memo(key, lambda: key_rows(self.spark, rows, cols, o_type))
+        return key_join(df, side, "left_anti", cols)
+
     def _compose_df(self) -> DataFrame:
         df = self.base.df
         removed = frozenset().union(*self.removed.values())
         if removed:
-            df = key_join(df, self._frame("removed", removed), "left_anti", self.key_cols())
+            df = self._without(df, "removed", removed)
         added = frozenset().union(*self.added.values())
         if added:
             df = df.unionByName(self._frame("added", added), allowMissingColumns=True)
@@ -403,8 +445,7 @@ class DeltaStore(TripleStore):
         if rem or self.base.may_hold(pred):
             out = src if src is not None else self.base.df.filter(F.col("p") == pred)
             if rem:
-                doomed = self._frame(("removed", pred, o_type), rem, o_type)
-                out = key_join(out, doomed, "left_anti", self.key_cols())
+                out = self._without(out, ("removed", pred, o_type), rem, o_type)
         add = self.added.get(pred)
         if add:
             new = self._frame(("added", pred, o_type), add, o_type)

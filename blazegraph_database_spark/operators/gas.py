@@ -25,7 +25,12 @@ import itertools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from blazegraph_database_spark.operators.driver_tier import _chk, collect_bounded, to_frame
+from blazegraph_database_spark.operators.driver_tier import (
+    _chk,
+    collect_bounded,
+    local_rows,
+    to_frame,
+)
 
 MAX_ITERS = 64
 
@@ -597,11 +602,12 @@ def bfs_from_df(edges: DataFrame, seeds: DataFrame, max_depth: int | None = MAX_
     depth). The same driver kernel and frontier loop as :func:`bfs`;
     ``max_depth=None`` runs until the frontier is empty."""
     e, pdf = collect_bounded(edges.select("src", "dst"))
-    seeds = seeds.select("node").distinct()
+    seeds = seeds.select("node")
     seeds, seed_pdf = collect_bounded(seeds) if pdf is not None else (seeds, None)
     if seed_pdf is not None:
-        rows = _bfs_driver(pdf, list(seed_pdf["node"].values), max_depth)
+        rows = _bfs_driver(pdf, list(dict.fromkeys(seed_pdf["node"].values)), max_depth)
         return to_frame(edges.sparkSession, [(n, d) for n, d, _ in rows], "node string, depth int")
+    seeds = seeds.distinct()
     no_pred = F.lit(None).cast(e.schema["src"].dataType)
     seed = seeds.select("node", F.lit(0).alias("depth"), no_pred.alias("pred"))
     return _general_bfs(_edge_step(e), seed, ["node"], max_depth).select("node", "depth")
@@ -628,6 +634,18 @@ def _reach_from_df(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     return _general_bfs(_edge_step(e.select("src", "dst")), seed, ["node"], None).select("node")
 
 
+def _walk_back(pred: dict, hit: list, max_depth: int) -> list:
+    """The nodes on the BFS predecessor chains from ``hit`` back to the
+    source: the distributed walk's rounds, over the driver-held ``pred``."""
+    out, cur = list(hit), hit
+    for _ in range(max_depth):
+        cur = list(dict.fromkeys(pred[n] for n in cur if pred.get(n) is not None))
+        if not cur:
+            break
+        out += cur
+    return out
+
+
 def fuzzy_sssp(
     edges: DataFrame,
     sources: list[str],
@@ -641,7 +659,10 @@ def fuzzy_sssp(
     1. One BFS per source (unit weights; the ref's SSSP step) recording each
        target's depth, -1 if unreachable.
     2. Shortest-path vertices collected by walking BFS predecessors back
-       from each reached target; merged and deduplicated.
+       from each reached target; merged and deduplicated. A BFS answered
+       by the driver tier is a local relation: its rows are read with no
+       job and walked in python. Past the gate the walk is a loop of tiny
+       joins.
     3. A multi-source BFS from the merged path set, taking vertices in
        (distance-from-path, node) order until n_max — the fuzzy expansion.
 
@@ -649,18 +670,29 @@ def fuzzy_sssp(
     depth|-1), ...]). The per-(source,target) matrix is O(|S|*|T|) — output
     sized, so the driver collect is bounded by the request itself.
     """
+    spark = edges.sparkSession
     path_parts = []
+    walked: list = []  # path nodes of the driver-tier walks
     st_dists: list[tuple] = []
+    wanted = set(targets)
     for src in sources:
         t = bfs(edges, [src], max_depth=max_depth)
-        reached = {
-            r["node"]: r["depth"]
-            for r in t.filter(F.col("node").isin(targets)).select("node", "depth").collect()
-        }
+        held = local_rows(t)  # the driver tier's answer: rows already here
+        if held is not None:
+            pred = {r["node"]: r["pred"] for r in held}
+            reached = {r["node"]: r["depth"] for r in held if r["node"] in wanted}
+        else:
+            reached = {
+                r["node"]: r["depth"]
+                for r in t.filter(F.col("node").isin(targets)).select("node", "depth").collect()
+            }
         for tgt in targets:
             st_dists.append((src, tgt, reached.get(tgt, -1)))
         hit = [x for x in targets if x in reached]
         if not hit:
+            continue
+        if held is not None:
+            walked += _walk_back(pred, hit, max_depth)
             continue
         # walk predecessors back to the source: <= path-length tiny joins
         cur = _chk(t.filter(F.col("node").isin(hit)).select("node", "pred"))
@@ -677,13 +709,14 @@ def fuzzy_sssp(
                 break
             path_parts.append(nxt.select("node"))
             cur = nxt
+    if walked:
+        path_parts.append(to_frame(spark, [(n,) for n in dict.fromkeys(walked)], "node string"))
     if not path_parts:
-        spark = edges.sparkSession
         return spark.createDataFrame([], "node string, dist int"), st_dists
     path_set = path_parts[0]
     for p in path_parts[1:]:
         path_set = path_set.unionByName(p)
-    expanded = bfs_from_df(edges, path_set.distinct(), max_depth=max_depth)
+    expanded = bfs_from_df(edges, path_set, max_depth=max_depth)
     # orderBy+limit compiles to TakeOrderedAndProject — per-partition top-N
     # then a single bounded merge, no global single-partition window
     return (

@@ -100,13 +100,13 @@ def _fast_scan_rewrite(store: TripleStore, node):
     TripleStore.stats_are_exact) and the store is an unscoped triple view
     (no quads, no FROM dataset). At 100 TB this answers "how many triples
     with predicate X" from metadata instead of a full scan. The answer is a
-    local relation, so it reaches the client with no Spark job."""
+    local relation, so it reaches the client with no Spark job. Under
+    ``track_dt`` it carries the same `__dt` companions as the compiled plan
+    (only the DISTINCT ?p scan has one), so REST answers from it too."""
     if store.has_graphs or store.dataset_default is not None or store.dataset_named is not None:
         return None
     if not store.stats_are_exact():
         return None
-    if store.track_dt:
-        return None  # dt-tracked consumers expect __dt companion columns
 
     def count_df(alias: str, m) -> DataFrame:
         _s, p, _o = m
@@ -156,7 +156,10 @@ def _fast_scan_rewrite(store: TripleStore, node):
         m = _fast_spo(node.child.child)
         if m and isinstance(m[1], Var) and m[1].name == node.child.vars[0]:
             preds = sorted(p for p, s in store.stats().items() if s.count > 0)
-            return to_frame(store.spark, [(p,) for p in preds], f"{m[1].name} string")
+            v = m[1].name
+            if store.track_dt:  # the compiled scan's companion: a predicate is an IRI
+                return to_frame(store.spark, [(p, "iri") for p in preds], f"{v} string, {v}__dt string")
+            return to_frame(store.spark, [(p,) for p in preds], f"{v} string")
 
     # SELECT ?p (COUNT(*) AS ?c) { ?s ?p ?o } GROUP BY ?p —
     # Project(Extend(Group(bgp, (p,), ((__agg0, count(1)),)), c, col(__agg0)), [p, c]).
@@ -3273,14 +3276,18 @@ def instantiate_template(
     template: list[tuple],
     emit_g: bool = False,
     target_graph: str | None = None,
+    flags: list[bool] | None = None,
 ) -> DataFrame:
     """(s,p,o[,g]) template instantiation over a bindings DataFrame.
     Object-var datatypes come from `<var>__dt` companions when present;
     BIND-created vars without one default to 'string'. With ``emit_g`` a
     `g` column is added: an entry's explicit GRAPH wrapper wins, else
-    ``target_graph`` (the UPDATE's WITH <g>), else NULL (default graph)."""
+    ``target_graph`` (the UPDATE's WITH <g>), else NULL (default graph).
+    The triples are distinct, unless ``flags`` (one per entry) is given:
+    each row then carries its entry's flag as `__ins`, duplicates kept
+    (a DELETE…INSERT instantiates both templates in this one pass)."""
     parts = []
-    for t in template:
+    for i, t in enumerate(template):
         s, p, o = t[0], t[1], t[2]
         g = t[3] if len(t) > 3 else target_graph
         def col_of(pos, dt_if_const):
@@ -3312,16 +3319,15 @@ def instantiate_template(
         if emit_g:
             gc = F.col(g.name) if isinstance(g, Var) else F.lit(g)
             cols.append(gc.cast("string").alias("g"))
+        if flags is not None:
+            cols.append(F.lit(flags[i]).alias("__ins"))
         parts.append(F.struct(*cols))
     # ONE pass over the bindings: explode an array of per-template structs.
     # The union-of-selects alternative re-evaluates the WHERE join once per
     # template triple — an 8-entry CONSTRUCT (BSBM Explore Q12) paid the
     # join 8x; at 100 TB that's 8 full shuffles instead of one.
-    return (
-        sol.select(F.explode(F.array(*parts)).alias("__t"))
-        .select("__t.*")
-        .distinct()
-    )
+    out = sol.select(F.explode(F.array(*parts)).alias("__t")).select("__t.*")
+    return out if flags is not None else out.distinct()
 
 
 # reference describeMode enum → describe() args (ref: QueryHints.java:587

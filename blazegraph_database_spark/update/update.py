@@ -42,7 +42,7 @@ from blazegraph_database_spark.model.store import (
     DeltaStore,
     TripleStore,
     key_join,
-    rows_frame,
+    key_rows,
 )
 from blazegraph_database_spark.operators import driver_tier
 from blazegraph_database_spark.plans.compiler import evaluate, instantiate_template
@@ -79,10 +79,11 @@ def _delta_of(version: TripleStore) -> tuple[TripleStore, dict, dict]:
 
 
 def _in_base(base: TripleStore, rows: set, keys: list[str]) -> set:
-    """The rows of ``rows`` the base holds, from ONE probe job: a semi-join
-    against the base sources of their predicates (the base's melted union
-    for predicates without one). A predicate the base cannot hold needs no
-    probe."""
+    """The rows of ``rows`` the base holds, from ONE probe job: the base
+    sources of their predicates (the base's melted union for predicates
+    without one) filtered by the rows' literal predicate, or semi-joined to
+    them past ``LITERAL_MAX_ROWS`` (``key_rows``). A predicate the base
+    cannot hold needs no probe."""
     preds = sorted({r[1] for r in rows if base.may_hold(r[1])})
     if not preds:
         return set()
@@ -94,7 +95,7 @@ def _in_base(base: TripleStore, rows: set, keys: list[str]) -> set:
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
-    probe = rows_frame(base.spark, rows, keys)
+    probe = key_rows(base.spark, rows, keys)
     return {tuple(r) for r in key_join(out, probe, "left_semi", keys).collect()}
 
 
@@ -378,6 +379,9 @@ class UpdatableStore:
         compacts into a new base."""
         base, added0, removed0 = _delta_of(self.current)
         keys = QUAD_COLS if base.has_graphs else TRIPLE_COLS
+        # the edits below assume each row once: a repeated insert of a row
+        # removed from the base would add it back to `added` too
+        deletes, inserts = set(deletes), set(inserts)
         open_rows = {
             r for r in (*deletes, *inserts)
             if r not in added0.get(r[1], ()) and r not in removed0.get(r[1], ())
@@ -529,29 +533,31 @@ class UpdatableStore:
         # (compute once, then modify the graph; review r5-4)
         sets = self.solutions.sets() if self.solutions is not None else {}
         bindings = evaluate(cur.view(track_dt=True, named_sets=sets), where_plan)
+        # one pass over the bindings instantiates both templates, each row
+        # flagged `__ins`; no distinct(): _write works on sets
+        dels, ins = list(delete_template or ()), list(insert_template or ())
+        if not dels and not ins:
+            return self.commit(cur)
+        both = instantiate_template(
+            bindings, dels + ins, emit_g=is_quads, target_graph=with_graph,
+            flags=[False] * len(dels) + [True] * len(ins),
+        ).select(*keys, "__ins")
         # a template triple with an unbound term is skipped (SPARQL 1.1
         # Update §3.1.3)
-        bound = F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o_lex").isNotNull()
-        parts = {}
-        for name, template in (("del", delete_template), ("ins", insert_template)):
-            if template:
-                parts[name] = instantiate_template(
-                    bindings, template, emit_g=is_quads, target_graph=with_graph
-                ).select(*keys).filter(bound)
-        if not parts:
-            return self.commit(cur)
-        tagged = [df.withColumn("__ins", F.lit(name == "ins")) for name, df in parts.items()]
-        both = tagged[0] if len(tagged) == 1 else tagged[0].unionByName(tagged[1])
+        both = both.filter(
+            F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o_lex").isNotNull()
+        )
         rows = driver_tier.collect_rows(both, driver_tier.DRIVER_TIER_MAX_ROWS)
         if rows is not None:
             return self._write(
                 [r[:-1] for r in rows if not r[-1]], [r[:-1] for r in rows if r[-1]]
             )
         df = cur.df  # past the gate: the whole-store rewrite, compacted
-        if "del" in parts:
-            df = key_join(df, parts["del"], "left_anti", keys, broadcast=False)
-        if "ins" in parts:
-            df = df.unionByName(parts["ins"]).distinct()
+        if dels:
+            doomed = both.filter(~F.col("__ins")).select(*keys)
+            df = key_join(df, doomed, "left_anti", keys, broadcast=False)
+        if ins:
+            df = df.unionByName(both.filter(F.col("__ins")).select(*keys)).distinct()
         return self._compact(df)
 
     # --------------------------------------------------------- graph ops --

@@ -10,10 +10,12 @@ in DuckDB, compares row count, column names, and order-insensitive values
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever copy is on the path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()

@@ -54,13 +54,23 @@ def _replay(spark, make, updates, monkeypatch=None, compact=False):
 
 
 def _same_as_compacted(spark, monkeypatch, make, updates, queries):
-    """Answers on the Δ version, checked against the compacted replay."""
-    delta = _replay(spark, make, updates)
-    assert isinstance(delta.current, DeltaStore) or not updates or delta.current is delta.versions[0]
+    """Answers on the Δ version, checked against the compacted replay. The Δ
+    side runs twice: with its rows entering plans as literal predicates (the
+    default ``LITERAL_MAX_ROWS``) and as broadcast joins (pinned at 0)."""
     compacted = _replay(spark, make, updates, monkeypatch, compact=True)
     assert not isinstance(compacted.current, DeltaStore)
-    got = [_answer(delta.query_store, q) for q in queries]
-    assert got == [_answer(compacted.query_store, q) for q in queries]
+    want = [_answer(compacted.query_store, q) for q in queries]
+    for literal_max in (driver_tier.LITERAL_MAX_ROWS, 0):
+        with monkeypatch.context() as m:
+            m.setattr(driver_tier, "LITERAL_MAX_ROWS", literal_max)
+            delta = _replay(spark, make, updates)
+            assert (
+                isinstance(delta.current, DeltaStore)
+                or not updates
+                or delta.current is delta.versions[0]
+            )
+            got = [_answer(delta.query_store, q) for q in queries]
+        assert got == want, literal_max
     return delta, got
 
 

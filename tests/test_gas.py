@@ -39,6 +39,26 @@ def test_bfs_unbounded_depth(spark, each_tier):
             assert out == expect
 
 
+def test_fuzzy_sssp_walk_on_both_tiers(spark, each_tier):
+    """The predecessor walk runs in python over the driver tier's BFS rows
+    and as a join loop past the gate: the same path set, distances and
+    expansion. Tree k -> 2k, 2k+1 from 1; sources 2 and 3, targets 9 and 12
+    (9 under 2, 12 under 3), one unreachable target."""
+    edges = spark.createDataFrame(
+        [(str(k // 2), str(k)) for k in range(2, 16)], "src string, dst string"
+    )
+    want_st = [("2", "9", 2), ("2", "12", -1), ("2", "99", -1),
+               ("3", "9", -1), ("3", "12", 2), ("3", "99", -1)]
+    for _ in each_tier():
+        verts, st = gas.fuzzy_sssp(edges, ["2", "3"], ["9", "12", "99"], n_max=8)
+        assert st == want_st
+        got = [tuple(r) for r in verts.collect()]
+        # path set {2, 4, 9, 3, 6, 12} at distance 0, then the nearest
+        # out-neighbors in node order
+        assert got == [("12", 0), ("2", 0), ("3", 0), ("4", 0), ("6", 0), ("9", 0),
+                       ("13", 1), ("5", 1)]
+
+
 def test_sssp_weighted(spark, each_tier):
     edges = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "c", 1.0), ("a", "c", 5.0), ("c", "d", 1.0)],

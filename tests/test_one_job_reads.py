@@ -187,7 +187,10 @@ def test_bodies_match_the_per_partition_stream(spark, rel_endpoint, monkeypatch,
     ],
     ids=["count", "distinct_p", "group_count"],
 )
-def test_fast_scan_answers_run_no_job(spark, query):
+def test_fast_scan_answers_run_no_job(spark, monkeypatch, query):
+    """Compiled directly and through the endpoint (which compiles with
+    ``track_dt``), the answer runs no job; the endpoint's body is the one
+    the compiled scan gives."""
     rows = [("a", "p", "b", "iri"), ("b", "p", "c", "iri"), ("a", "q", "1", "long")]
     store = TripleStore(spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string"))
     store.stats()  # the stats build is the store's, not the query's
@@ -197,6 +200,12 @@ def test_fast_scan_answers_run_no_job(spark, query):
     )
     assert _jobs(spark, group) == 0
     assert len(got) >= 1
+    ep = SparqlEndpoint(spark, UpdatableStore.from_store(store))
+    qid = f"fast-{abs(hash(query))}"
+    status, _ctype, body = ep.query("kb", query, query_id=qid)
+    assert status == 200 and _jobs(spark, f"rest-query-{qid}") == 0
+    monkeypatch.setattr(compiler, "_fast_scan_rewrite", lambda store, node: None)
+    assert ep.query("kb", query)[2] == body
 
 
 def test_tiny_seed_is_the_build_side(spark):
@@ -213,3 +222,112 @@ def test_tiny_seed_is_the_build_side(spark):
     assert [j["broadcast"] for j in order] == [True, False]
     assert order[0]["est_rows"] < order[1]["est_rows"]
     assert _rows(store, text) == _rows(TripleStore(store.df), text)
+
+
+# ---- driver-held rows stay on the driver: an update_mix-shaped sequence ----
+TAG = "urn:bench#tag"
+LINK = "urn:bench#link"
+GAS_BFS = (
+    "PREFIX gas: <http://www.bigdata.com/rdf/gas#>\n"
+    "SELECT ?v ?d WHERE { SERVICE gas:service { "
+    'gas:program gas:gasClass "com.bigdata.rdf.graph.analytics.BFS" . '
+    f"gas:program gas:in <urn:bench:n0> . gas:program gas:linkType <{LINK}> . "
+    "gas:program gas:out ?v . gas:program gas:out1 ?d . } }"
+)
+
+
+def _rewrite(k: int, seg: str) -> str:
+    return (
+        f"DELETE {{ <customer:{k}> <customer#c_mktsegment> ?s }} "
+        f'INSERT {{ <customer:{k}> <customer#c_mktsegment> "{seg}" }} '
+        f"WHERE {{ <customer:{k}> <customer#c_mktsegment> ?s }}"
+    )
+
+
+def _bindings(body: bytes) -> list[tuple]:
+    rows = json.loads(body)["results"]["bindings"]
+    return sorted(tuple(b[v]["value"] for v in sorted(b)) for b in rows)
+
+
+def test_update_mix_cycle_job_counts(spark, rel_endpoint):
+    """The writes and reads of one update_mix cycle start Spark only for
+    base data: INSERT/DELETE DATA of new predicates and the tag scan run no
+    job, a BFS over Δ-only edges none, a warm DELETE…INSERT…WHERE one WHERE
+    pass plus one probe, and the point read of the rewritten triple two:
+    its removed row is a literal filter, not a broadcast job, and the take
+    reads the base scan's partition, then the added rows' one."""
+    sc = spark.sparkContext
+
+    def update(text, group):
+        return _in_group(spark, group, lambda: rel_endpoint.update("kb", text))
+
+    edges = " ".join(
+        f"<urn:bench:n{a}> <{LINK}> <urn:bench:n{b}> ." for a, b in ((0, 1), (0, 2), (1, 3))
+    )
+    update(f"INSERT DATA {{ {edges} }}", "um-edges")
+    update(f'INSERT DATA {{ <customer:3> <{TAG}> "t1" . }}', "um-tag")
+    update(f'DELETE DATA {{ <urn:bench:n1> <{LINK}> <urn:bench:n3> . }}', "um-cut")
+    assert [_jobs(spark, g) for g in ("um-edges", "um-tag", "um-cut")] == [0, 0, 0]
+    status, _ctype, body = rel_endpoint.query("kb", GAS_BFS, query_id="um-bfs")
+    assert status == 200 and _jobs(spark, "rest-query-um-bfs") == 0
+    assert _bindings(body) == [("0", "urn:bench:n0"), ("1", "urn:bench:n1"), ("1", "urn:bench:n2")]
+    update(_rewrite(4, "WARM"), "um-rewrite-cold")  # pays the one-time schema read
+    update(_rewrite(5, "BENCH"), "um-rewrite")
+    assert _jobs(spark, "um-rewrite") <= 2
+    status, _ctype, body = rel_endpoint.query(
+        "kb", f"SELECT ?c ?t WHERE {{ ?c <{TAG}> ?t }}", query_id="um-tags"
+    )
+    assert _jobs(spark, "rest-query-um-tags") == 0 and _bindings(body) == [("customer:3", "t1")]
+    status, _ctype, body = rel_endpoint.query(
+        "kb", "SELECT ?seg WHERE { <customer:5> <customer#c_mktsegment> ?seg }", query_id="um-point"
+    )
+    assert status == 200 and _bindings(body) == [("BENCH",)]
+    assert _jobs(spark, "rest-query-um-point") == 2
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_limit_over_a_three_partition_store(spark):
+    """A LIMIT over a store of three partitions answers right. A bare LIMIT
+    compiles to a top-N over the projected vars, so it is deterministic."""
+    triples = spark.range(0, 30, numPartitions=3).select(
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+        F.lit("p").alias("p"),
+        F.col("id").cast("string").alias("o_lex"),
+        F.lit("string").alias("o_dt"),
+    ).localCheckpoint()
+    store = TripleStore(triples)
+    store.stats()  # the stats build is the store's, not the query's
+    ep = SparqlEndpoint(spark, UpdatableStore.from_store(store))
+    q = "SELECT ?s ?o WHERE { ?s <p> ?o }"
+    status, _ctype, body = ep.query("kb", q)
+    assert status == 200 and len(_bindings(body)) == 30
+    status, _ctype, body = ep.query("kb", q + " ORDER BY ?o LIMIT 1")
+    assert status == 200 and _bindings(body) == [("0", "s0")]
+    status, _ctype, body = ep.query("kb", q + " LIMIT 1")
+    assert status == 200 and _bindings(body) == [("0", "s0")]
+
+
+def test_delete_insert_where_past_the_gate_matches_the_delta(spark, monkeypatch):
+    """The past-gate rewrite filters the one flagged frame the Δ path
+    collects: same answers, a repeated insert row and all."""
+    from blazegraph_database_spark.operators import driver_tier
+
+    text = (
+        "DELETE { ?c <customer#c_mktsegment> ?s } "
+        'INSERT { ?c <customer#c_mktsegment> "MOVED" . <urn:x> <urn:p> "same" } '
+        'WHERE { ?c <customer#c_mktsegment> ?s . FILTER(?s = "BUILDING") }'
+    )
+    queries = [
+        "SELECT ?s (COUNT(*) AS ?n) WHERE { ?c <customer#c_mktsegment> ?s } GROUP BY ?s",
+        "SELECT ?o WHERE { <urn:x> <urn:p> ?o }",
+    ]
+
+    def answers(gate):
+        monkeypatch.setattr(driver_tier, "DRIVER_TIER_MAX_ROWS", gate)
+        us = UpdatableStore.from_store(relational.cached_store(spark, SF_DIR))
+        apply_update(us, text, spark)
+        return [sorted(_rows(us.query_store, q)) for q in queries]
+
+    delta, compacted = answers(driver_tier.DRIVER_TIER_MAX_ROWS), answers(0)
+    assert delta == compacted
+    assert ("BUILDING", 0) not in delta[0] and delta[1] == [("same",)]
