@@ -3,38 +3,93 @@
 Reference analog: the ServiceRegistry / ServiceCall machinery
 (bigdata-core/bigdata-rdf/.../sparql/ast/service/ServiceRegistry.java,
 RemoteServiceCallImpl.java) that dispatches SERVICE <iri> { ... } groups to
-internal services (bds:search, geo:search) or remote SPARQL endpoints.
+internal services or remote SPARQL endpoints.
 
-Spark-first: a service is a callable (spark, params) -> DataFrame of
-bindings; the registry maps service IRIs to callables. The built-in
-services wrap this engine's own operators — full-text (bds:search),
-geospatial (geo:search), and graph analytics (gas:service) — the same
-internal services the reference ships. Remote endpoints speak the SPARQL
-1.1 Protocol over HTTP: ``http_transport`` POSTs the serialized query as a
-form body and parses application/sparql-results+json responses
-(``parse_srj``); bindings are pushed down as chunked VALUES blocks — the
-reference's vectored remote SERVICE evaluation. The transport is
-injectable, so the protocol layer is conformance-tested against this
-repo's own localhost REST endpoint and against stored protocol fixtures
-without needing outside network access.
+One registry, one contract: a service is a ``ServiceFn(spark, params)``
+returning a DataFrame of bindings, registered under its IRI. SPARQL
+dispatch (``compiler``'s SERVICE case) resolves aliases, looks the IRI up
+here and calls it with ``params = {"query", "pattern", "store"}``: the
+block shipped as SELECT text, the parsed block, and the store view. A
+service that reads the incoming solutions (``reads_solutions``) also gets
+them as ``params["solutions"]``, or is called once per distinct binding of
+its ``binding_vars``. The built-ins register at import under their
+reference IRIs — GAS (gas:service), geospatial (geo:search), full text
+(bds:search, bds:searchInSearch), the bd: utility services (alp, sample,
+slice, values, history, describe, rdrhistory), external full text
+(fts:search) and the Wikidata label service; stored queries
+(``register_stored_query``) register into the same registry. The inline
+magic-predicate forms of bds:search and geo:search (``split_magic``) are
+the same service calls (ref: ASTSearchOptimizer, ASTGeoSpatialOptimizer).
+
+Remote endpoints speak the SPARQL 1.1 Protocol over HTTP:
+``http_transport`` POSTs the serialized query as a form body and parses
+application/sparql-results+json responses (``parse_srj``); bindings are
+pushed down as chunked VALUES blocks — the reference's vectored remote
+SERVICE evaluation. The transport is injectable, so the protocol layer is
+conformance-tested against this repo's own localhost REST endpoint and
+against stored protocol fixtures without needing outside network access.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import re
 from collections.abc import Callable
 from urllib.parse import urlencode
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from blazegraph_database_spark.model.terms import Lit, Var, const_lex, is_const
+from blazegraph_database_spark.plans import algebra as A
 
 ServiceFn = Callable[[SparkSession, dict], DataFrame]
 
 _REGISTRY: dict[str, ServiceFn] = {}
 
+BD_NS = "http://www.bigdata.com/rdf#"
+BDS_NS = "http://www.bigdata.com/rdf/search#"
+GAS_NS = "http://www.bigdata.com/rdf/gas#"
+GEO_NS = "http://www.bigdata.com/rdf/geospatial#"
+FTS_NS = "http://www.bigdata.com/rdf/fts#"
+WIKIBASE_NS = "http://wikiba.se/ontology#"
+
+# Built-in vocabularies: a query may declare the prefix (full IRI) or leave
+# it undeclared (the parser keeps the compact `pfx:local` form); both name
+# the same service or magic predicate.
+_BUILTIN_NS = {
+    "bd:": BD_NS, "bds:": BDS_NS, "gas:": GAS_NS,
+    "geo:": GEO_NS, "fts:": FTS_NS, "wikibase:": WIKIBASE_NS,
+}
+
+
+def _expand(iri: str) -> str:
+    """A built-in vocabulary IRI in its full form; any other IRI as is."""
+    for pfx, ns in _BUILTIN_NS.items():
+        if iri.startswith(pfx):
+            return ns + iri[len(pfx):]
+    return iri
+
+
+def _ns_local(iri: str | None, ns: str) -> str | None:
+    """Local name of ``iri`` in the vocabulary ``ns`` (full or compact
+    form), else None."""
+    if iri is None:
+        return None
+    iri = _expand(iri)
+    return iri[len(ns):] if iri.startswith(ns) else None
+
+
+def _pred_local(sp, ns: str) -> str | None:
+    """Local name of a triple pattern's constant predicate in ``ns``."""
+    if not isinstance(sp, A.SP) or sp.p is None or not is_const(sp.p):
+        return None
+    return _ns_local(const_lex(sp.p), ns)
+
 
 def register_service(iri: str, fn: ServiceFn) -> None:
-    _REGISTRY[iri] = fn
+    _REGISTRY[_expand(iri)] = fn
 
 
 _SERVICE_ALIASES: dict[str, str] = {}
@@ -56,10 +111,17 @@ def resolve_service_alias(iri: str) -> str:
     return iri
 
 
+def canonical(iri: str) -> str:
+    """The registry key a SERVICE IRI dispatches to: aliases followed,
+    built-in vocabularies in full form."""
+    return _expand(resolve_service_alias(iri))
+
+
 def lookup(iri: str) -> ServiceFn:
-    if iri not in _REGISTRY:
+    key = canonical(iri)
+    if key not in _REGISTRY:
         raise KeyError(f"no service registered for <{iri}>")
-    return _REGISTRY[iri]
+    return _REGISTRY[key]
 
 
 def call_service(spark: SparkSession, iri: str, params: dict) -> DataFrame:
@@ -67,60 +129,105 @@ def call_service(spark: SparkSession, iri: str, params: dict) -> DataFrame:
     return lookup(iri)(spark, params)
 
 
-# ------------------------------------------------------- built-in services --
-def _bds_search(spark: SparkSession, params: dict) -> DataFrame:
-    """bds:search analog: params = {index | df+id_col+text_col, query,
-    match_all?, min_relevance_ppm?, max_rank?}."""
-    from blazegraph_database_spark.operators import fulltext
+def block_patterns(n) -> list:
+    """The triple patterns of a SERVICE block (its BGPs, joined)."""
+    if isinstance(n, A.BGP):
+        return list(n.patterns)
+    if isinstance(n, A.Join):
+        return block_patterns(n.left) + block_patterns(n.right)
+    return [n] if isinstance(n, A.SP) else []
 
-    idx = params.get("index")
-    if idx is None:
-        idx = fulltext.inverted_index(
-            params["df"], params.get("id_col", "doc_id"), params.get("text_col", "text")
-        )
-    patterns = [(t, t.endswith("*")) for t in params["query"].split()]
-    patterns = [(t.rstrip("*"), pre) for t, pre in patterns]
-    return fulltext.search(
-        idx,
-        patterns,
-        match_all=params.get("match_all", False),
-        min_relevance_ppm=params.get("min_relevance_ppm", 0),
-        max_rank=params.get("max_rank", 20),
+
+# ------------------------------------- services that read the solutions --
+WIKIBASE_LABEL_SERVICE = WIKIBASE_NS + "label"
+
+
+def binding_vars(node) -> list[str]:
+    """Vars a SERVICE call needs bound before it can run: a variable
+    endpoint, or the variable params of a geo:search. The call runs once
+    per distinct binding of them in the incoming solutions (ref:
+    ServiceCallJoin groups incoming binding sets by the as-bound
+    serviceRef; GeoSpatialServiceFactory resolves params per binding set —
+    fixture ticket_bg1899: geo:spatialCircleCenter ?locationOfMunich)."""
+    if not isinstance(node, A.Service):
+        return []
+    if isinstance(node.iri, Var):
+        return [node.iri.name]
+    if canonical(node.iri) == GEO_NS + "search":
+        return sorted(geo_param_vars(block_patterns(node.pattern)))
+    return []
+
+
+def reads_solutions(node) -> bool:
+    """Whether a conjunct is a SERVICE that needs the incoming solutions:
+    one with ``binding_vars``, or the label service, which enriches the
+    solutions themselves (Wikidata's label service; Wikidata runs the
+    reference, so this is reference-deployment surface)."""
+    return bool(binding_vars(node)) or (
+        isinstance(node, A.Service)
+        and not isinstance(node.iri, Var)
+        and canonical(node.iri) == WIKIBASE_LABEL_SERVICE
     )
 
 
-def _geo_search(spark: SparkSession, params: dict) -> DataFrame:
-    """geo:search analog: params = {df, shape: rect|circle, bounds...}."""
-    from blazegraph_database_spark.operators import geospatial
+def bind(node, binding: dict):
+    """The SERVICE call with its ``binding_vars`` replaced by one binding's
+    values: the endpoint, and geo:search param objects."""
+    iri = binding[node.iri.name] if isinstance(node.iri, Var) else node.iri
+    pattern = node.pattern
+    sps = block_patterns(pattern)
+    if not isinstance(node.iri, Var) and geo_param_vars(sps) & binding.keys():
+        pattern = A.BGP([
+            A.SP(sp.s, sp.p, Lit(binding[sp.o.name]), sp.g)
+            if isinstance(sp.o, Var) and sp.o.name in binding and is_geo_param(sp)
+            else sp
+            for sp in sps
+        ])
+    return dataclasses.replace(node, iri=iri, pattern=pattern)
 
-    df = params["df"]
-    if params.get("shape", "rect") == "rect":
-        return geospatial.in_rectangle(
-            df, params["lat0"], params["lat1"], params["lon0"], params["lon1"]
-        )
-    return geospatial.in_circle(df, params["lat"], params["lon"], params["radius_km"])
+
+# ------------------------------------------------ inline magic predicates --
+# the vocabularies whose triples form inline service groups, with the
+# predicates that make a subject var a group
+_MAGIC_TRIGGERS = {BDS_NS: ("search",), GEO_NS: ("search", "predicate")}
+
+
+def split_magic(patterns) -> tuple[list, list]:
+    """Partition a BGP's patterns into inline magic groups
+    ``[(service_iri, [sps])]`` and the ordinary remainder (ref:
+    ASTSearchOptimizer / ASTGeoSpatialOptimizer lift these triples out of
+    the BGP into the bds:search / geo:search service calls). A group is the
+    triples of one subject var that receives a trigger predicate. A bds:
+    triple outside every group is an error (the reference rejects orphan
+    search magic); a geo: one stays an ordinary pattern."""
+    def magic(sp):
+        for ns in _MAGIC_TRIGGERS:
+            local = _pred_local(sp, ns)
+            if local is not None:
+                return ns, local
+        return None, None
+
+    groups: dict[tuple, list] = {}
+    for sp in patterns:
+        ns, local = magic(sp)
+        if ns is not None and local in _MAGIC_TRIGGERS[ns] and isinstance(sp.s, Var):
+            groups[(ns, sp.s.name)] = []
+    rest = []
+    for sp in patterns:
+        ns, local = magic(sp)
+        key = (ns, sp.s.name) if ns is not None and isinstance(sp.s, Var) else None
+        if key in groups:
+            groups[key].append(sp)
+        elif ns == BDS_NS:
+            raise ValueError(
+                f"magic predicate bds:{local} without a bds:search on its subject"
+            )
+        else:
+            rest.append(sp)
+    return [(ns + "search", pats) for (ns, _v), pats in groups.items()], rest
 
 
 # ------------------------------------------------------------ GAS service --
-GAS_NS = "http://www.bigdata.com/rdf/gas#"
-
-
-def _ns_local(iri: str | None, ns: str, prefix: str) -> str | None:
-    """Local name of a vocabulary IRI in either its full-namespace or
-    compact prefixed form (queries may or may not declare the prefix)."""
-    if iri is None:
-        return None
-    if iri.startswith(ns):
-        return iri[len(ns):]
-    if iri.startswith(prefix):
-        return iri[len(prefix):]
-    return None
-
-
-def _gas_local(iri: str | None) -> str | None:
-    return _ns_local(iri, GAS_NS, "gas:")
-
-
 def gas_service(store, patterns) -> DataFrame:
     """SERVICE <gas:service> — the GAS-program SERVICE (ref:
     bigdata-core/.../graph/impl/bd/GASService.java Options vocabulary plus
@@ -146,9 +253,6 @@ def gas_service(store, patterns) -> DataFrame:
     truncates by (attribute, vertex) order after convergence, which equals
     the reference's traversal cutoff whenever the cap lands on a depth
     boundary."""
-    from pyspark.sql import functions as F
-
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
     from blazegraph_database_spark.operators import gas
 
     sources: list[str] = []
@@ -156,8 +260,7 @@ def gas_service(store, patterns) -> DataFrame:
     outs: dict[str, str] = {}
     opts: dict = {"direction": "Forward"}
     for sp in patterns:
-        pred = const_lex(sp.p) if (sp.p is not None and is_const(sp.p)) else None
-        local = _gas_local(pred)
+        local = _pred_local(sp, GAS_NS)
         if local is None:
             continue
         if local in ("out", "out1", "out2") and isinstance(sp.o, Var):
@@ -259,13 +362,6 @@ def gas_service(store, patterns) -> DataFrame:
 
 
 # ------------------------------------------------------------ geo service --
-GEO_NS = "http://www.bigdata.com/rdf/geospatial#"
-
-
-def _geo_local(iri: str | None) -> str | None:
-    return _ns_local(iri, GEO_NS, "geo:")
-
-
 GEO_OUT_LOCALS = (
     "latValue", "lonValue", "timeValue", "locationValue",
     "literalValue", "distanceValue", "locationAndTimeValue",
@@ -273,22 +369,17 @@ GEO_OUT_LOCALS = (
 )
 
 
-def geo_param_vars(patterns) -> set[str]:
-    """Vars standing in geo:search PARAM positions (not output bindings) —
-    these need values from sibling solutions before the service can run
-    (ref: GeoSpatialServiceFactory resolves them per incoming binding set;
-    fixture ticket_bg1899: geo:spatialCircleCenter ?locationOfMunich)."""
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
+def is_geo_param(sp) -> bool:
+    """Whether a triple's object is a geo:search PARAM (not the search mode
+    and not an output binding): a variable there consumes its value."""
+    local = _pred_local(sp, GEO_NS)
+    return local is not None and local != "search" and local not in GEO_OUT_LOCALS
 
-    out: set[str] = set()
-    for sp in patterns:
-        pred = const_lex(sp.p) if (sp.p is not None and is_const(sp.p)) else None
-        local = _geo_local(pred)
-        if local is None or local == "search" or local in GEO_OUT_LOCALS:
-            continue
-        if isinstance(sp.o, Var):
-            out.add(sp.o.name)
-    return out
+
+def geo_param_vars(patterns) -> set[str]:
+    """Vars standing in geo:search PARAM positions — these need values
+    from sibling solutions before the service can run (``binding_vars``)."""
+    return {sp.o.name for sp in patterns if isinstance(sp.o, Var) and is_geo_param(sp)}
 
 
 _GEO_FIELD_NAMES = {"lat": "lat", "lon": "lon", "time": "t", "coord": "coord"}
@@ -333,9 +424,6 @@ def geo_search_service(store, patterns) -> DataFrame:
       ?res geo:locationValue ?loc . / geo:literalValue ?lit .
       ?res geo:distanceValue ?d .                      # inCircle only
     """
-    from pyspark.sql import functions as F
-
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
     from blazegraph_database_spark.operators import geospatial
 
     subj = None
@@ -343,8 +431,7 @@ def geo_search_service(store, patterns) -> DataFrame:
     args: dict = {}
     outs: dict[str, str] = {}
     for sp in patterns:
-        pred = const_lex(sp.p) if (sp.p is not None and is_const(sp.p)) else None
-        local = _geo_local(pred)
+        local = _pred_local(sp, GEO_NS)
         if local is None:
             continue
         if local == "search":
@@ -741,46 +828,39 @@ def remote_sparql_service(endpoint: str, transport: Transport | None = None) -> 
     return call
 
 
-register_service("bds:search", _bds_search)
-register_service("geo:search", _geo_search)
-
-
 # ------------------------------------------------- bd: utility services --
-BD_NS = "http://www.bigdata.com/rdf#"
-
-
-def _bd_local(iri: str | None) -> str | None:
-    return _ns_local(iri, BD_NS, "bd:")
-
-
-def _split_service_params(store, sps):
+def _split_service_params(sps):
     """Split a SERVICE block's triples into ``bd:serviceParam`` options and
     the actual pattern(s) (ref: eval/ServiceParams.java — the shared param
     convention of the bd: utility services). Returns (params, patterns):
-    params maps the bd-local key ('sample.limit') to a list of lexicals."""
-    from blazegraph_database_spark.model.terms import const_lex, is_const
-
+    params maps the key to a list of object terms (constants or Vars).
+    bd:-namespace keys compact to their local name ('sample.limit'); other
+    keys keep their full IRI."""
     # grammar: `bd:serviceParam <key> <value>` — the SUBJECT is the magic
     # bd:serviceParam constant, the predicate names the option
-    params: dict[str, list[str]] = {}
+    params: dict[str, list] = {}
     patterns = []
     for sp in sps:
         subj = const_lex(sp.s) if is_const(sp.s) else None
-        if subj is not None and _bd_local(subj) == "serviceParam":
-            if not is_const(sp.p) or not is_const(sp.o):
-                raise ValueError("bd:serviceParam needs constant key and value")
-            # bd:-namespace keys compact to their local name
-            # ('sample.limit'); app-chosen keys keep their full IRI
+        if _ns_local(subj, BD_NS) == "serviceParam":
+            if not is_const(sp.p):
+                raise ValueError("bd:serviceParam needs a constant key")
             p = const_lex(sp.p)
-            key = _bd_local(p) or p
-            params.setdefault(key, []).append(const_lex(sp.o))
+            params.setdefault(_ns_local(p, BD_NS) or _expand(p), []).append(sp.o)
         else:
             patterns.append(sp)
     return params, patterns
 
 
+def _const_params(params: dict, service: str) -> dict[str, list[str]]:
+    """``_split_service_params`` values as lexicals, for services whose
+    params are constants."""
+    if any(not is_const(t) for ts in params.values() for t in ts):
+        raise ValueError(f"{service}: bd:serviceParam needs constant key and value")
+    return {k: [const_lex(t) for t in ts] for k, ts in params.items()}
+
+
 def _service_pattern_df(store, patterns) -> DataFrame:
-    from blazegraph_database_spark.plans import algebra as A
     from blazegraph_database_spark.plans.compiler import evaluate
 
     if not patterns:
@@ -798,10 +878,8 @@ def bd_sample_service(store, sps) -> DataFrame:
     Spark: the pattern evaluates once; DENSE/EVEN order by the binding
     columns (the SPO-key-order analog); RANDOM is ``orderBy(rand(seed))``
     — one pass, TakeOrdered, never a full sort materialization."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    params, patterns = _split_service_params(store, sps)
+    sp_params, patterns = _split_service_params(sps)
+    params = _const_params(sp_params, "bd:sample")
     limit = int(params.get("sample.limit", ["100"])[0])
     seed = int(params.get("sample.seed", ["0"])[0])
     stype = params.get("sample.sampleType", ["RANDOM"])[0].upper()
@@ -832,10 +910,10 @@ def bd_slice_service(store, sps) -> DataFrame:
     """SERVICE <bd:slice> { pattern . bd:serviceParam bd:slice.offset o ;
     bd:slice.limit n } — direct offset/limit slice of an access path in
     key order (ref: eval/SliceServiceFactory.java:110)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    params, patterns = _split_service_params(store, sps)
+    sp_params, patterns = _split_service_params(sps)
+    params = _const_params(sp_params, "bd:slice")
     offset = int(params.get("slice.offset", ["0"])[0])
     limit = int(params.get("slice.limit", ["1000"])[0])
     df = _service_pattern_df(store, patterns)
@@ -869,11 +947,10 @@ def bd_describe_service(store, sps) -> DataFrame:
     <r> . [bd:describe.mode "..." ; bd:describe.iterationLimit "n"] } —
     the CBD of the listed resources as bindings of the block's one triple
     pattern, served through a bounded MVCC-keyed LRU."""
-    from pyspark.sql import functions as F
-
     from blazegraph_database_spark.plans import compiler
 
-    params, patterns = _split_service_params(store, sps)
+    sp_params, patterns = _split_service_params(sps)
+    params = _const_params(sp_params, "bd:describe")
     iris = params.get("describe.iri", [])
     if not iris:
         raise ValueError(
@@ -895,8 +972,6 @@ def bd_describe_service(store, sps) -> DataFrame:
         while len(_DESCRIBE_CACHE) > _DESCRIBE_CACHE_MAX:
             _DESCRIBE_CACHE.pop(next(iter(_DESCRIBE_CACHE)))
     sp = patterns[0]
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
-
     sel, conds = [], []
     for col, pos in (("s", sp.s), ("p", sp.p), ("o_lex", sp.o)):
         if isinstance(pos, Var):
@@ -912,37 +987,27 @@ def bd_describe_service(store, sps) -> DataFrame:
 
 
 # ------------------------------------------------------- stored queries --
-# ref: service/storedquery/StoredQueryService.java — applications register
-# a stored query (SPARQL text or procedural logic) under a service IRI of
-# their choosing; SERVICE <iri> { bd:serviceParam ... } invokes it.
-_STORED_QUERIES: dict[str, object] = {}
-
-
 def register_stored_query(iri: str, query) -> None:
     """Register SPARQL text or a callable ``(store, params) -> DataFrame``
-    under a service IRI (ref: StoredQueryService registration against the
-    ServiceRegistry)."""
-    _STORED_QUERIES[iri] = query
+    as the service at ``iri`` (ref: service/storedquery/
+    StoredQueryService.java — applications register a stored query under a
+    service IRI of their choosing; SERVICE <iri> { bd:serviceParam ... }
+    invokes it). The block's bd:serviceParam triples become the params the
+    stored logic sees, key → list of lexicals."""
 
+    def call(spark: SparkSession, params: dict) -> DataFrame:
+        sp_params, patterns = _split_service_params(block_patterns(params["pattern"]))
+        if patterns:
+            raise ValueError(
+                "stored-query SERVICE blocks carry only bd:serviceParam triples"
+            )
+        if callable(query):
+            return query(params["store"], _const_params(sp_params, f"<{iri}>"))
+        from blazegraph_database_spark.plans.sparql_parser import run_sparql
 
-def stored_query_lookup(iri: str):
-    return _STORED_QUERIES.get(iri)
+        return run_sparql(params["store"], query)
 
-
-def call_stored_query(store, iri: str, sps) -> DataFrame:
-    """Invoke a stored query; the block's bd:serviceParam triples become
-    the ServiceParams the stored logic sees."""
-    q = _STORED_QUERIES[iri]
-    params, patterns = _split_service_params(store, sps)
-    if patterns:
-        raise ValueError(
-            "stored-query SERVICE blocks carry only bd:serviceParam triples"
-        )
-    if callable(q):
-        return q(store, params)
-    from blazegraph_database_spark.plans.sparql_parser import run_sparql
-
-    return run_sparql(store, q)
+    register_service(iri, call)
 
 
 def bd_values_service(store, sps) -> DataFrame:
@@ -950,28 +1015,19 @@ def bd_values_service(store, sps) -> DataFrame:
     bd:serviceParam bd:values.val "x" . ... } — the VALUES-as-service form
     (ref: eval/ValuesServiceFactory.java:92): one binding per bd:values.val
     for the named var."""
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
-
-    var = None
-    vals: list[str] = []
-    for sp in sps:
-        subj = const_lex(sp.s) if is_const(sp.s) else None
-        if subj is None or _bd_local(subj) != "serviceParam":
-            raise ValueError("bd:values blocks carry only bd:serviceParam triples")
-        key = _bd_local(const_lex(sp.p)) if is_const(sp.p) else None
-        if key == "values.var":
-            if not isinstance(sp.o, Var):
-                raise ValueError("bd:values.var needs a variable object")
-            var = sp.o.name
-        elif key == "values.val":
-            if not is_const(sp.o):
-                raise ValueError("bd:values.val needs a constant value")
-            vals.append(const_lex(sp.o))
-        else:
-            raise ValueError(f"unknown bd:values param {key!r}")
-    if var is None:
+    params, patterns = _split_service_params(sps)
+    if patterns:
+        raise ValueError("bd:values blocks carry only bd:serviceParam triples")
+    unknown = set(params) - {"values.var", "values.val"}
+    if unknown:
+        raise ValueError(f"unknown bd:values param {sorted(unknown)[0]!r}")
+    var = params.get("values.var", [None])[-1]
+    if not isinstance(var, Var):
         raise ValueError("bd:values needs bd:values.var ?v")
-    return store.spark.createDataFrame([(v,) for v in vals], f"{var} string")
+    if not all(is_const(v) for v in params.get("values.val", [])):
+        raise ValueError("bd:values.val needs a constant value")
+    vals = [const_lex(v) for v in params.get("values.val", [])]
+    return store.spark.createDataFrame([(v,) for v in vals], f"{var.name} string")
 
 
 def bd_history_service(store, sps) -> DataFrame:
@@ -988,80 +1044,50 @@ def bd_history_service(store, sps) -> DataFrame:
         bd:serviceParam bd:history.commit ?commit .  # commit point (int)
         bd:serviceParam bd:history.since "N" .       # commits > N only
 
+    A VARIABLE action/commit object binds the record field; a CONSTANT one
+    filters the records by it (the reference's history service filters by
+    ChangeAction / commit point the same way).
+
     Requires a store view carrying its UpdatableStore (query_store sets
     the back-pointer) — the MVCC version list IS the history index."""
-    from pyspark.sql import functions as F
-
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
-
     us = store.updatable
     if us is None:
         raise ValueError(
             "SERVICE <bd:history> needs an updatable store (query via "
             "UpdatableStore.query_store or the REST endpoint)"
         )
-    # scan by hand: action/commit params take VARIABLE objects, which
-    # _split_service_params (constants-only) would reject
-    action_var = commit_var = None
-    action_filter = commit_filter = None
-    since = 0
-    pattern = None
-    for sp in sps:
-        subj = const_lex(sp.s) if is_const(sp.s) else None
-        if subj is not None and _bd_local(subj) == "serviceParam":
-            key = _bd_local(const_lex(sp.p)) if is_const(sp.p) else None
-            # a VARIABLE object binds the record field; a CONSTANT object
-            # filters the records by it (the reference's history service
-            # filters by ChangeAction / commit point the same way)
-            if key == "history.action" and isinstance(sp.o, Var):
-                action_var = sp.o.name
-            elif key == "history.action" and is_const(sp.o):
-                action_filter = const_lex(sp.o)
-                if action_filter not in ("added", "removed"):
-                    raise ValueError(
-                        "bd:history.action filter must be 'added' or "
-                        f"'removed', got {action_filter!r}"
-                    )
-            elif key == "history.commit" and isinstance(sp.o, Var):
-                commit_var = sp.o.name
-            elif key == "history.commit" and is_const(sp.o):
-                commit_filter = int(const_lex(sp.o))
-            elif key == "history.since" and is_const(sp.o):
-                since = int(const_lex(sp.o))
-            else:
-                raise ValueError(f"unknown bd:history param {key!r}")
-        else:
-            if pattern is not None:
-                raise ValueError("bd:history takes ONE statement pattern")
-            pattern = sp
-    if pattern is None:
-        raise ValueError("bd:history needs a statement pattern")
-    log = us.changelog(since=since)
-    if action_filter is not None:
-        log = log.filter(F.col("action") == action_filter)
-    if commit_filter is not None:
-        log = log.filter(F.col("commit") == commit_filter)
+    params, patterns = _split_service_params(sps)
+    for key, terms in params.items():
+        if key not in ("history.action", "history.commit", "history.since") or (
+            key == "history.since" and not is_const(terms[-1])
+        ):
+            raise ValueError(f"unknown bd:history param {key!r}")
+    if len(patterns) != 1:
+        raise ValueError("bd:history takes ONE statement pattern")
+    pattern = patterns[0]
+    since = params.get("history.since")
+    log = us.changelog(since=int(const_lex(since[-1])) if since else 0)
     sel = []
     for term, col in ((pattern.s, "s"), (pattern.p, "p"), (pattern.o, "o_lex")):
         if isinstance(term, Var):
             sel.append(F.col(col).alias(term.name))
         else:
             log = log.filter(F.col(col) == const_lex(term))
-    if action_var is not None:
-        sel.append(F.col("action").alias(action_var))
-    if commit_var is not None:
-        sel.append(F.col("commit").alias(commit_var))
+    for key, col in (("history.action", "action"), ("history.commit", "commit")):
+        for term in params.get(key, []):
+            if isinstance(term, Var):
+                sel.append(F.col(col).alias(term.name))
+                continue
+            val = const_lex(term)
+            if col == "action" and val not in ("added", "removed"):
+                raise ValueError(
+                    f"bd:history.action filter must be 'added' or 'removed', got {val!r}"
+                )
+            log = log.filter(F.col(col) == (val if col == "action" else int(val)))
     return log.select(*sel)
 
 
 # --------------------------------------------- external fulltext (fts:) --
-FTS_NS = "http://www.bigdata.com/rdf/fts#"
-
-
-def _fts_local(iri: str | None) -> str | None:
-    return _ns_local(iri, FTS_NS, "fts:")
-
-
 def solr_transport(timeout_ms: int | None = None):
     """Default fts: transport — a Solr select GET (ref:
     fts/impl/SolrFulltextSearchImpl.java:100: `wt=json` + user params,
@@ -1086,7 +1112,7 @@ def solr_transport(timeout_ms: int | None = None):
     return transport
 
 
-def fts_search_service(store, sps, transport=None) -> DataFrame:
+def fts_search_service(store, sps) -> DataFrame:
     """SERVICE <fts:search> — EXTERNAL fulltext search (ref:
     fts/FulltextSearchServiceFactory.java + FTS.java vocabulary): the
     reference federates search out to a Solr endpoint; hits come back as
@@ -1101,11 +1127,9 @@ def fts_search_service(store, sps, transport=None) -> DataFrame:
              fts:timeout "5000" ;
              fts:score ?score ; fts:snippet ?snip .
 
-    The transport is injectable (tests run a fake Solr); the default
-    speaks the real Solr select wire format."""
-    from pyspark.sql import functions as F
-
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
+    The transport is injectable through ``store.fts_transport`` (tests
+    run a fake Solr); the default speaks the real Solr select wire
+    format."""
 
     res_var = None
     opts = {
@@ -1118,8 +1142,7 @@ def fts_search_service(store, sps, transport=None) -> DataFrame:
     query = endpoint = params = None
     timeout = None
     for sp in sps:
-        pred = const_lex(sp.p) if is_const(sp.p) else None
-        local = _fts_local(pred)
+        local = _pred_local(sp, FTS_NS)
         if local is None:
             continue
         if local == "search":
@@ -1141,13 +1164,12 @@ def fts_search_service(store, sps, transport=None) -> DataFrame:
             # unknown fts: predicate (or a var where a constant belongs):
             # raise like the sibling bd: services do — silently dropping a
             # typo'd option leaves vars unbound with no diagnostic
-            raise ValueError(f"unknown fts: service predicate {pred!r}")
+            raise ValueError(f"unknown fts: service predicate fts:{local}")
     if res_var is None or query is None:
         raise ValueError('SERVICE <fts:search> needs `?res fts:search "query"`')
     if endpoint is None:
         raise ValueError("SERVICE <fts:search> needs fts:endpoint (no default configured)")
-    if transport is None:
-        transport = solr_transport(timeout)
+    transport = store.fts_transport or solr_transport(timeout)
     docs = transport(endpoint, query, params)
 
     def flat(v):  # ref flattenJsonResult: arrays join, scalars stringify
@@ -1216,11 +1238,7 @@ def alp_service(store, pattern) -> DataFrame:
     variables; the per-hop edge binding is existential across a multi-hop
     walk and is not projected (the reference's alp.edgeVar covers the
     same single-var naming)."""
-    from pyspark.sql import functions as F
-
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
     from blazegraph_database_spark.operators.paths import bounded_paths, bounded_reach
-    from blazegraph_database_spark.plans import algebra as A
 
     def bgps(n, acc):
         if isinstance(n, A.BGP):
@@ -1324,9 +1342,6 @@ def alp_service(store, pattern) -> DataFrame:
 
 
 # -- wikibase:label — the Wikidata deployment's label service ---------------
-
-WIKIBASE_NS = "http://wikiba.se/ontology#"
-WIKIBASE_LABEL_SERVICE = WIKIBASE_NS + "label"
 _RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
 _SCHEMA_DESC = "http://schema.org/description"
 _SKOS_ALT = "http://www.w3.org/2004/02/skos/core#altLabel"
@@ -1341,7 +1356,7 @@ def label_service_langs(store, sps) -> list[str]:
     """Language preference list from `bd:serviceParam wikibase:language
     "en,de"` triples (comma lists and repeated params both accepted;
     `[AUTO_LANGUAGE]` placeholders are dropped — no request context here)."""
-    params, _pats = _split_service_params(store, sps)
+    params = _const_params(_split_service_params(sps)[0], "wikibase:label")
     raw = params.get(WIKIBASE_NS + "language", [])
     langs = [l.strip() for v in raw for l in v.split(",")]
     langs = [l for l in langs if l and not l.startswith("[")]
@@ -1354,7 +1369,6 @@ def label_service_targets(sps) -> list[tuple]:
     Automatic mode is rewritten INTO this form at parse time from the
     query's projection (see sparql_parser), mirroring how the Wikidata
     label service resolves `?xLabel`-style projection variables."""
-    from blazegraph_database_spark.model.terms import Var, const_lex, is_const
 
     out = []
     for sp in sps:
@@ -1378,7 +1392,6 @@ def label_service_join(store, ldf: DataFrame, sps) -> DataFrame:
     stay unbound. One left join per target; the label lookup prunes to the
     target predicate before its per-entity window, so the joined side is
     label-index-sized, never store-sized."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     langs = label_service_langs(store, sps)
@@ -1426,3 +1439,323 @@ def label_service_join(store, ldf: DataFrame, sps) -> DataFrame:
             ldf = ldf.withColumn(f"{ovar}__dt", dt)
         ldf = ldf.drop("__lab", "__labdt")
     return ldf
+
+
+# ------------------------------------------------- full-text (bds:) --
+def _scoped_memo(store, name: str, build) -> DataFrame:
+    """A full-text surface from the store's shared memo, one entry per
+    dataset scope: a FROM / FROM NAMED view builds over its own graphs."""
+    return store.memo((name, store.dataset_default, store.dataset_named), build)
+
+
+def _dataset_scoped_df(store, named_scope: bool = False) -> DataFrame:
+    """The store's statements restricted to its FROM dataset (if any) —
+    every full-text surface builds over THIS view so a search under
+    FROM <g> never sees other graphs' literals (search-named-graphs10).
+
+    ``named_scope``: a search INSIDE a GRAPH pattern sees the dataset's
+    NAMED graphs, not the default graph — under `FROM NAMED :g1` the
+    default graph is EMPTY but `GRAPH ?g { ?lit bds:search ... }` must
+    still find :g1's literals (search-named-graphs2/4/5)."""
+    df = store.df
+    if named_scope:
+        dn = store.dataset_named
+        if "g" in df.columns:
+            df = df.filter(F.col("g").isNotNull() & (F.col("g") != ""))
+            if dn is not None:
+                df = df.filter(F.col("g").isin(list(dn)) if dn else F.lit(False))
+        return df
+    dd = store.dataset_default
+    if dd is not None and "g" in df.columns:
+        df = df.filter(F.col("g").isin(list(dd)) if dd else F.lit(False))
+    return df
+
+
+def _store_literal_value_index(store, named_scope: bool = False) -> DataFrame:
+    """Full-text index over DISTINCT string-literal VALUES: doc id = the
+    literal lexical itself, so a hit binds the matched literal (the
+    reference's text index maps tokens to literal IVs; ref:
+    search/FullTextIndex.java). Memoized on the store instance, one memo
+    per dataset scope (default-graph vs GRAPH-pattern/NAMED view)."""
+    from blazegraph_database_spark.operators import fulltext
+
+    def build() -> DataFrame:
+        docs = (
+            _dataset_scoped_df(store, named_scope)
+            .filter(F.col("o_dt") == "string")
+            .select(F.col("o_lex").alias("s"))
+            .distinct()
+            .select("s", F.col("s").alias("text"))
+        )
+        return fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
+
+    return _scoped_memo(store, "ft_value_index_named" if named_scope else "ft_value_index", build)
+
+
+def _store_literal_index(store) -> DataFrame:
+    """Full-text index over the store's string literals: doc = subject, text
+    = concatenated literal values (the reference's text index likewise
+    indexes the lexicon's literals; ref: search/FullTextIndex.java).
+
+    Memoized in the store's shared memo (not a module dict keyed by
+    id(store): CPython reuses ids after GC, which could hand a stale
+    checkpointed index to an unrelated store, and the module dict never
+    shrank — ADVICE r2)."""
+    from blazegraph_database_spark.operators import fulltext
+
+    return _scoped_memo(
+        store,
+        "ft_literal_index",
+        lambda: fulltext.inverted_index(
+            _store_literal_texts(store), id_col="s", text_col="text"
+        ).localCheckpoint(),
+    )
+
+
+def _store_subject_index(store) -> DataFrame:
+    """Full-text index over SUBJECT URIs (ref: BDS.java SUBJECT_SEARCH —
+    "search against the URIs"): doc id = the subject term, text = its
+    lexical form, tokenized like any literal."""
+    from blazegraph_database_spark.operators import fulltext
+
+    def build() -> DataFrame:
+        docs = (
+            _dataset_scoped_df(store).select("s").distinct()
+            .select("s", F.col("s").alias("text"))
+        )
+        return fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
+
+    return _scoped_memo(store, "ft_subject_index", build)
+
+
+def _store_literal_texts(store) -> DataFrame:
+    """(s, text): each subject's concatenated string literals — the document
+    surface behind the full-text index; bds:matchExact / bds:matchRegex
+    post-filter against it (ref: BDS.java MATCH_EXACT/MATCH_REGEX filter
+    the matched literal's text)."""
+    return _scoped_memo(
+        store,
+        "ft_literal_texts",
+        lambda: (
+            _dataset_scoped_df(store).filter(F.col("o_dt") == "string")
+            .groupBy("s")
+            .agg(F.concat_ws(" ", F.collect_list("o_lex")).alias("text"))
+            .localCheckpoint()
+        ),
+    )
+
+
+def _bds_text_filter(store, query, opts: dict, doc_is_text: bool):
+    """Hit-text filter closure (ref: BDS.java MATCH_EXACT/MATCH_REGEX):
+    runs inside search() BEFORE ranking and the maxRank cut, against the
+    matched document's text — the doc id itself when it is the text (a
+    matched literal, a subject URI), the memoized (s, text) literal
+    surface otherwise. Consumes the match_exact / match_regex entries of
+    ``opts``; None when neither is set."""
+    exact, regex = opts.pop("match_exact", False), opts.pop("match_regex", None)
+    if not exact and regex is None:
+        return None
+
+    def scored_filter(scored):
+        if doc_is_text:
+            text = F.col("id")
+        else:
+            texts = _store_literal_texts(store).withColumnRenamed("s", "id")
+            scored = scored.join(texts, on="id")
+            text = F.col("text")
+        if exact:
+            scored = scored.filter(text.contains(query))
+        if regex is not None:
+            scored = scored.filter(text.rlike(regex))
+        return scored.drop("text")
+
+    return scored_filter
+
+
+_BDS_OUTS = ("relevance", "rank", "rangeCount")
+
+
+def _bds_options(sps, key: str):
+    """The one bds: option parser (ref: BDS.java vocabulary; bds:search and
+    bds:searchInSearch share the FullTextQuery option set). ``key`` is the
+    search predicate's local name. Returns (search var, query text, query
+    patterns, options, output vars): options are ``fulltext.search``
+    keywords plus match_exact / match_regex / subject_search; output vars
+    map relevance / rank / rangeCount to the var they bind. Every other
+    triple in the group raises — a typo'd option must not vanish."""
+    subj = query = None
+    opts: dict = {}
+    outs: dict[str, str] = {}
+    prefix_all = False
+    for sp in sps:
+        local = _pred_local(sp, BDS_NS)
+        o = const_lex(sp.o) if is_const(sp.o) else None
+        if local == key and o is not None:
+            subj, query = sp.s, o
+        elif local in _BDS_OUTS and isinstance(sp.o, Var):
+            outs[local] = sp.o.name
+        elif o is None or local is None:
+            raise ValueError(f"bds:{key}: unsupported magic triple {sp}")
+        elif local == "matchAllTerms":
+            opts["match_all"] = o == "true"
+        elif local == "minRelevance":
+            opts["min_relevance_ppm"] = int(float(o) * 1_000_000)
+        elif local == "maxRelevance":
+            # round, not truncate: the bound is inclusive, and a cap echoed
+            # back from a hit's own bds:relevance must keep it
+            opts["max_relevance_ppm"] = round(float(o) * 1_000_000)
+        elif local in ("minRank", "maxRank"):  # minRank+maxRank page (BDS.java)
+            opts["min_rank" if local == "minRank" else "max_rank"] = int(o)
+        elif local == "matchExact":
+            opts["match_exact"] = o == "true"
+        elif local == "matchRegex":
+            opts["match_regex"] = o
+        elif local == "prefixMatch":
+            # every query token matches as a prefix (ref: BDS.PREFIX_MATCH —
+            # equivalent to suffixing '*' on each token)
+            prefix_all = o == "true"
+        elif local == "subjectSearch":  # BDS.java SUBJECT_SEARCH
+            opts["subject_search"] = o == "true"
+        elif local != "searchTimeout":
+            # bds:searchTimeout is accepted, advisory (ref: BDS.SEARCH_TIMEOUT
+            # bounds the B+Tree scan): deadlines here are enforced per query
+            # by the REST job groups (server/rest.py), not per operator
+            raise ValueError(f"bds:{key}: unsupported magic predicate bds:{local}")
+    if not isinstance(subj, Var):
+        raise ValueError(f'SERVICE <bds:{key}> needs `?var bds:{key} "query"`')
+    patterns = [(t.rstrip("*"), t.endswith("*") or prefix_all) for t in query.split()]
+    return subj.name, query, patterns, opts, outs
+
+
+def bds_search(store, sps) -> DataFrame:
+    """bds:search — the SERVICE form and the inline magic-predicate form
+    (`?lit bds:search "q" . ?lit bds:relevance ?s . ?subj ?p ?lit`; ref:
+    BDS.java vocabulary, ASTSearchOptimizer lifting the magic triples out
+    of the BGP). The search var binds the MATCHED LITERAL, which then joins
+    object-position patterns (ref: the reference's own eval fixtures,
+    ticket_bg1256); bds:subjectSearch "true" searches the subject URIs
+    instead and binds the subject.
+
+    A GRAPH-scoped group (its triples carry g after GRAPH <g> / ?g) counts
+    a hit once per graph holding the matched literal, binding or filtering
+    the graph term and honoring the FROM NAMED set — the search runs
+    against the statements visible in the GRAPH scope. The index then
+    builds over the NAMED view: under `FROM NAMED :g1` the default graph
+    is empty but :g1's literals stay searchable (search-named-graphs2/4/5)."""
+    from blazegraph_database_spark.operators import fulltext
+
+    var, query, patterns, opts, outs = _bds_options(sps, "search")
+    subject_search = opts.pop("subject_search", False)
+    gterm = next((sp.g for sp in sps if sp.g is not None), None)
+    graph_scoped = gterm is not None and store.has_graphs and not subject_search
+    if subject_search:
+        idx, scoring = _store_subject_index(store), "tfidf"
+    else:
+        idx, scoring = _store_literal_value_index(store, graph_scoped), "cosine"
+    count_var = outs.get("rangeCount")
+    text_filter = _bds_text_filter(store, query, opts, doc_is_text=True)
+    hits = fulltext.search(
+        idx,
+        patterns,
+        scored_filter=text_filter,
+        count_col=count_var,
+        scoring=scoring,
+        **opts,
+    )
+    # rangeCount: ONE solution binding only the count (hits suppressed;
+    # zero-hit searches bind 0 — ref: SearchServiceFactory.java:649); other
+    # requested vars ride along UNBOUND so projections over them stay valid
+    counted = count_var is not None
+    cols = [
+        (var, F.lit(None).cast("string") if counted else F.col("id")),
+        (outs.get("relevance"), F.lit(None).cast("double") if counted
+         else F.col("score_ppm").cast("double") / 1_000_000),
+        (outs.get("rank"), F.lit(None).cast("int") if counted else F.col("rank")),
+    ]
+    out = hits.select(
+        *([count_var] if counted else []), *(c.alias(n) for n, c in cols if n is not None)
+    )
+    if graph_scoped:
+        pairs = (
+            store.df.filter(F.col("o_dt") == "string")
+            .select("g", F.col("o_lex").alias(var))
+            .distinct()
+        )
+        if is_const(gterm):
+            pairs = pairs.filter(F.col("g") == const_lex(gterm)).drop("g")
+        else:
+            dn = store.dataset_named
+            if dn is not None:
+                pairs = pairs.filter(F.col("g").isin(list(dn)) if dn else F.lit(False))
+            pairs = pairs.withColumnRenamed("g", gterm.name)
+        out = out.join(pairs, on=var)
+    return out
+
+
+def bds_search_in_search(store, sps) -> DataFrame:
+    """bds:searchInSearch (ref: eval/SearchInSearchServiceFactory.java,
+    registered under BDS.SEARCH_IN_SEARCH, ServiceRegistry.java:138): the
+    full-text hit set used as a FILTER on the search var — the service
+    yields the DISTINCT subjects holding a matching literal, and the
+    enclosing group's natural join on ?var keeps only incoming bindings
+    linked to a matched literal (the reference's iterate-and-prune over
+    the incoming binding sets). No rank cut by default (ref uses
+    DEFAULT_MAX_RANK = MAX_VALUE), so no global sort: the hit set stays an
+    unordered semi-join input."""
+    from blazegraph_database_spark.operators import fulltext
+
+    var, query, patterns, opts, outs = _bds_options(sps, "searchInSearch")
+    if outs or "subject_search" in opts:
+        raise ValueError("bds:searchInSearch binds only its search var")
+    opts.setdefault("max_rank", None)
+    text_filter = _bds_text_filter(store, query, opts, doc_is_text=False)
+    hits = fulltext.search(
+        _store_literal_index(store), patterns, scored_filter=text_filter, **opts
+    )
+    return hits.select(F.col("id").alias(var)).distinct()
+
+
+# ------------------------------------------------------ the built-ins --
+def _on_block(handler) -> ServiceFn:
+    """A ServiceFn over a handler of (store, the block's triple patterns)."""
+    return lambda spark, params: handler(params["store"], block_patterns(params["pattern"]))
+
+
+def _rdr_history_service(spark: SparkSession, params: dict) -> DataFrame:
+    """SERVICE <bd:rdrhistory> (ref: ServiceRegistry.java:170
+    RDRHistoryServiceFactory + sail/RDRHistory.java:61): change events are
+    recorded as RDR statement metadata (<<s p o>> blaze:history:added|
+    removed "commit"^^xsd:long) and queried with ORDINARY SPARQL-star
+    patterns — the block compiles unchanged against the history store view
+    (ever-existed statements + metadata rows), so sid joins, accessors and
+    filters all work."""
+    from blazegraph_database_spark.plans.compiler import _compile
+
+    us = params["store"].updatable
+    if us is None:
+        raise ValueError(
+            "SERVICE <bd:rdrhistory> needs an updatable store (query via "
+            "UpdatableStore.query_store or the REST endpoint)"
+        )
+    return _compile(params["pattern"], us.history_store())
+
+
+for _iri, _fn in {
+    GAS_NS + "service": _on_block(gas_service),
+    GEO_NS + "search": _on_block(geo_search_service),
+    BDS_NS + "search": _on_block(bds_search),
+    BDS_NS + "searchInSearch": _on_block(bds_search_in_search),
+    # bd:alp reads the BGP node itself: its hints carry the alp.* params
+    BD_NS + "alp": lambda spark, params: alp_service(params["store"], params["pattern"]),
+    BD_NS + "sample": _on_block(bd_sample_service),
+    BD_NS + "slice": _on_block(bd_slice_service),
+    BD_NS + "values": _on_block(bd_values_service),
+    BD_NS + "history": _on_block(bd_history_service),
+    BD_NS + "describe": _on_block(bd_describe_service),
+    BD_NS + "rdrhistory": _rdr_history_service,
+    FTS_NS + "search": _on_block(fts_search_service),
+    WIKIBASE_LABEL_SERVICE: lambda spark, params: label_service_join(
+        params["store"], params["solutions"], block_patterns(params["pattern"])
+    ),
+}.items():
+    register_service(_iri, _fn)

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from functools import singledispatch
+from functools import reduce, singledispatch
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -27,6 +27,7 @@ from pyspark.errors import AnalysisException
 
 from blazegraph_database_spark.model.store import TripleStore
 from blazegraph_database_spark.model.terms import Lit, Var, const_lex, is_const
+from blazegraph_database_spark.operators import service
 from blazegraph_database_spark.operators.driver_tier import to_frame
 from blazegraph_database_spark.plans import algebra as A
 
@@ -316,16 +317,10 @@ def _var_uses(root) -> _VarUses | None:
             for where, pos in (("s", n.s), ("p", n.p), ("o", n.o), ("g", n.g)):
                 if isinstance(pos, Var):
                     u.sites.setdefault(pos.name, []).append((where, pred))
-            if pred is not None and isinstance(n.o, Var):
+            if isinstance(n.o, Var) and service.is_geo_param(n):
                 # geo:search magic PARAM positions consume the object var's
-                # VALUE (resolved per sibling binding — _geo_param_join)
-                from blazegraph_database_spark.operators.service import (
-                    GEO_OUT_LOCALS, _geo_local,
-                )
-
-                loc = _geo_local(pred)
-                if loc is not None and loc != "search" and loc not in GEO_OUT_LOCALS:
-                    u.lexical.add(n.o.name)
+                # VALUE (resolved per sibling binding — _fold_service)
+                u.lexical.add(n.o.name)
         elif isinstance(n, A.BGP):
             for sp in n.patterns:
                 walk(sp)
@@ -1238,374 +1233,56 @@ def _(node: A.SP, store: TripleStore) -> DataFrame:
 
 @_compile.register
 def _(node: A.BGP, store: TripleStore) -> DataFrame:
-    magic, rest = _split_bds_magic(node.patterns)
-    geo_magic, rest = _split_geo_magic(rest)
-    if geo_magic:
-        # Inline geospatial magic predicates, no SERVICE wrapper (ref:
-        # ASTGeoSpatialOptimizer lifts geo:search groups out of the BGP
-        # into GeoSpatialServiceFactory — the reference's own eval
-        # fixtures TestGeoSpatialServiceEvaluation use this form).
-        from blazegraph_database_spark.operators import service as _svc
-
-        out = None
-        idv = store.id_join_vars
-        deferred = []
-        for _var, pats in geo_magic.items():
-            if _svc.geo_param_vars(pats):
-                # VARIABLE service params (e.g. geo:spatialCircleCenter
-                # ?center bound by a sibling pattern — ticket_bg1899's
-                # inline form): resolve per distinct sibling binding, same
-                # machinery as SERVICE <geo:search>
-                deferred.append(pats)
-                continue
-            hits = _svc.geo_search_service(store, pats)
-            for c in list(hits.columns):
-                if c in idv:
-                    hits = hits.withColumn(f"{c}__id", term_id(F.col(c)))
-            out = hits if out is None else out.crossJoin(hits)
-        remainder = (
-            _compile(A.BGP(rest + sum(magic.values(), []), hints=node.hints), store)
-            if rest or magic
-            else None
-        )
-        if remainder is not None:
-            if out is None:
-                out = remainder
-            else:
-                shared = sorted(set(remainder.columns) & set(out.columns))
-                out = remainder.join(out, on=shared) if shared else remainder.crossJoin(out)
-        for pats in deferred:
-            if out is None:
-                raise ValueError(
-                    "geo:search: a variable service parameter needs a "
-                    "sibling pattern in the same group binding it"
-                )
-            out = _geo_param_join(store, out, pats)
-            for c in list(out.columns):
-                if c in idv and not c.endswith("__id") and f"{c}__id" not in out.columns:
-                    out = out.withColumn(f"{c}__id", term_id(F.col(c)))
-        return out
-    if magic:
-        # Inline magic-predicate full-text search, the form Blazegraph
-        # queries actually use (`?lit bds:search "q" . ?lit bds:relevance
-        # ?s . ?subj ?p ?lit`, no SERVICE wrapper; ref: BDS.java vocabulary
-        # + ASTSearchOptimizer.java lifting magic triples out of the BGP).
-        # Contract per the reference's own eval fixtures: the search var
-        # binds the MATCHED LITERAL, which then joins object-position
-        # patterns naturally.
-        out = None
-        idv = store.id_join_vars
-        for var, pats in magic.items():
-            # GRAPH-scoped search (the SPs carry g after _push_graph /
-            # GRAPH <g>): a hit counts once per graph holding the matched
-            # literal, binding/filtering the graph term and honoring the
-            # FROM NAMED set — ref: the search service runs against the
-            # statements visible in the GRAPH scope. The index itself must
-            # build over the NAMED view then: under `FROM NAMED :g1` the
-            # default graph is empty but :g1's literals stay searchable
-            # (search-named-graphs2/4/5).
-            gterm = next((sp.g for sp in pats if sp.g is not None), None)
-            hits = _bds_inline_search(
-                store, pats, named_scope=gterm is not None and store.has_graphs
-            )
-            if gterm is not None and store.has_graphs:
-                pairs = (
-                    store.df.filter(F.col("o_dt") == "string")
-                    .select("g", F.col("o_lex").alias(var))
-                    .distinct()
-                )
-                if is_const(gterm):
-                    pairs = pairs.filter(F.col("g") == const_lex(gterm)).drop("g")
-                else:
-                    dn = store.dataset_named
-                    if dn is not None:
-                        pairs = pairs.filter(
-                            F.col("g").isin(list(dn)) if dn else F.lit(False)
-                        )
-                    pairs = pairs.withColumnRenamed("g", gterm.name)
-                hits = hits.join(pairs, on=var)
-            for c in list(hits.columns):
-                # pure-join vars ride shuffles as 128-bit term ids — the
-                # search output must offer the same companion the rest of
-                # the BGP joins on
-                if c in idv:
-                    hits = hits.withColumn(f"{c}__id", term_id(F.col(c)))
-            out = hits if out is None else out.crossJoin(hits)
-        if rest:
-            rdf = _compile_bgp(A.BGP(rest, hints=node.hints), store)
-            shared = sorted(set(rdf.columns) & set(out.columns))
-            out = rdf.join(out, on=shared) if shared else rdf.crossJoin(out)
-        return out
-    return _compile_bgp(node, store)
-
-
-def _split_geo_magic(patterns):
-    """Partition a BGP's patterns into inline geospatial magic groups
-    {search_var: [sps]} and the ordinary remainder (ref:
-    ASTGeoSpatialOptimizer — magic triples whose predicate lives in the
-    geo: namespace route to the geospatial service without a SERVICE
-    wrapper). A group triggers only when its subject var receives a
-    geo:search / geo:predicate param."""
-    from blazegraph_database_spark.operators.service import _geo_local
-
-    def geo_pred(sp) -> str | None:
-        if not (isinstance(sp, A.SP) and sp.p is not None and is_const(sp.p)):
-            return None
-        return _geo_local(const_lex(sp.p))
-
-    trigger_vars = {
-        sp.s.name
-        for sp in patterns
-        if geo_pred(sp) in ("search", "predicate") and isinstance(sp.s, Var)
-    }
-    geo: dict[str, list] = {}
-    rest = []
-    for sp in patterns:
-        if (
-            geo_pred(sp) is not None
-            and isinstance(sp.s, Var)
-            and sp.s.name in trigger_vars
-        ):
-            geo.setdefault(sp.s.name, []).append(sp)
+    conjuncts = _flatten_join(node)
+    if conjuncts[0] is not node:  # an inline group lifted as a SERVICE call
+        return _fold_readers(store, conjuncts)
+    groups, rest = service.split_magic(node.patterns)
+    if not groups:
+        return _compile_bgp(node, store)
+    # Inline magic-predicate groups (bds:search, geo:search with constant
+    # params) are the same service calls as the SERVICE form; each joins
+    # the rest of the BGP on its shared vars
+    out = _compile_bgp(A.BGP(rest, hints=node.hints), store) if rest else None
+    idv = store.id_join_vars
+    for iri, pats in groups:
+        hits = _compile(A.Service(iri, A.BGP(pats)), store)
+        for c in list(hits.columns):
+            # pure-join vars ride shuffles as 128-bit term ids — the
+            # service output must offer the same companion the rest of the
+            # BGP joins on
+            if c in idv:
+                hits = hits.withColumn(f"{c}__id", term_id(F.col(c)))
+        if out is None:
+            out = hits
         else:
-            rest.append(sp)
-    return geo, rest
-
-
-def _split_bds_magic(patterns):
-    """Partition a BGP's patterns into {search_var: [magic sps]} and the
-    ordinary remainder. A bds:* pattern whose subject never receives a
-    bds:search is an error (the reference's ASTSearchOptimizer rejects
-    orphan magic triples)."""
-    magic: dict[str, list] = {}
-    rest: list = []
-    search_vars = {
-        sp.s.name
-        for sp in patterns
-        if isinstance(sp, A.SP)
-        and sp.p is not None
-        and is_const(sp.p)
-        and _compact_builtin_iri(const_lex(sp.p)) == "bds:search"
-        and isinstance(sp.s, Var)
-    }
-    for sp in patterns:
-        pred = (
-            _compact_builtin_iri(const_lex(sp.p))
-            if isinstance(sp, A.SP) and sp.p is not None and is_const(sp.p)
-            else None
-        )
-        if pred is not None and pred.startswith("bds:"):
-            if not (isinstance(sp.s, Var) and sp.s.name in search_vars):
-                raise ValueError(
-                    f"magic predicate {pred} without a bds:search on its subject"
-                )
-            magic.setdefault(sp.s.name, []).append(sp)
-        else:
-            rest.append(sp)
-    return magic, rest
-
-
-def _scoped_memo(store: TripleStore, name: str, build) -> DataFrame:
-    """A full-text surface from the store's shared memo, one entry per
-    dataset scope: a FROM / FROM NAMED view builds over its own graphs."""
-    return store.memo((name, store.dataset_default, store.dataset_named), build)
-
-
-def _dataset_scoped_df(store: TripleStore, named_scope: bool = False) -> DataFrame:
-    """The store's statements restricted to its FROM dataset (if any) —
-    every full-text surface builds over THIS view so a search under
-    FROM <g> never sees other graphs' literals (search-named-graphs10).
-
-    ``named_scope``: a search INSIDE a GRAPH pattern sees the dataset's
-    NAMED graphs, not the default graph — under `FROM NAMED :g1` the
-    default graph is EMPTY but `GRAPH ?g { ?lit bds:search ... }` must
-    still find :g1's literals (search-named-graphs2/4/5)."""
-    df = store.df
-    if named_scope:
-        dn = store.dataset_named
-        if "g" in df.columns:
-            df = df.filter(F.col("g").isNotNull() & (F.col("g") != ""))
-            if dn is not None:
-                df = df.filter(F.col("g").isin(list(dn)) if dn else F.lit(False))
-        return df
-    dd = store.dataset_default
-    if dd is not None and "g" in df.columns:
-        df = df.filter(F.col("g").isin(list(dd)) if dd else F.lit(False))
-    return df
-
-
-def _store_literal_value_index(store: TripleStore, named_scope: bool = False) -> DataFrame:
-    """Full-text index over DISTINCT string-literal VALUES: doc id = the
-    literal lexical itself, so a hit binds the matched literal (the
-    reference's text index maps tokens to literal IVs; ref:
-    search/FullTextIndex.java). Memoized on the store instance, one memo
-    per dataset scope (default-graph vs GRAPH-pattern/NAMED view)."""
-    from blazegraph_database_spark.operators import fulltext
-
-    def build() -> DataFrame:
-        docs = (
-            _dataset_scoped_df(store, named_scope)
-            .filter(F.col("o_dt") == "string")
-            .select(F.col("o_lex").alias("s"))
-            .distinct()
-            .select("s", F.col("s").alias("text"))
-        )
-        return fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
-
-    return _scoped_memo(store, "ft_value_index_named" if named_scope else "ft_value_index", build)
-
-
-def _bds_inline_search(store: TripleStore, pats, named_scope: bool = False) -> DataFrame:
-    """Evaluate one inline magic-predicate search group → DataFrame binding
-    the search var to the matched literal plus any requested
-    relevance/rank/rangeCount vars. Shares the option parser and filter
-    closures with the SERVICE form."""
-    from blazegraph_database_spark.operators import fulltext
-
-    subj, query, opts = None, None, {}
-    flags = {"match_exact": False, "match_regex": None}
-    rel_var = rank_var = count_var = None
-    for sp in pats:
-        pred = _compact_builtin_iri(const_lex(sp.p))
-        if pred == "bds:search":
-            subj, query = sp.s, const_lex(sp.o)
-        elif _parse_bds_common(sp, pred, opts, flags):
-            pass
-        elif pred == "bds:minRank":
-            opts["min_rank"] = int(const_lex(sp.o))
-        elif pred == "bds:relevance" and isinstance(sp.o, Var):
-            rel_var = sp.o.name
-        elif pred == "bds:rank" and isinstance(sp.o, Var):
-            rank_var = sp.o.name
-        elif pred == "bds:rangeCount" and isinstance(sp.o, Var):
-            count_var = sp.o.name
-        else:
-            raise ValueError(f"unsupported inline search magic predicate {pred!r}")
-    patterns = [
-        (t.rstrip("*"), t.endswith("*") or flags.get("prefix_all", False))
-        for t in query.split()
-    ]
-
-    def value_filter(scored):
-        # matchExact/matchRegex run against the matched literal itself
-        out = scored
-        if flags["match_exact"]:
-            out = out.filter(F.col("id").contains(query))
-        if flags["match_regex"] is not None:
-            out = out.filter(F.col("id").rlike(flags["match_regex"]))
-        return out
-
-    sf = value_filter if (flags["match_exact"] or flags["match_regex"]) else None
-    hits = fulltext.search(
-        _store_literal_value_index(store, named_scope), patterns, scored_filter=sf,
-        count_col=count_var, scoring="cosine", **opts,
-    )
-    if count_var is not None:
-        return hits.withColumn(subj.name, F.lit(None).cast("string"))
-    sel = [F.col("id").alias(subj.name)]
-    if rel_var is not None:
-        sel.append((F.col("score_ppm").cast("double") / 1_000_000).alias(rel_var))
-    if rank_var is not None:
-        sel.append(F.col("rank").alias(rank_var))
-    return hits.select(*sel)
+            shared = sorted(set(out.columns) & set(hits.columns))
+            out = out.join(hits, on=shared) if shared else out.crossJoin(hits)
+    return out
 
 
 def _flatten_join(n) -> list:
+    """A join's conjuncts. An inline magic group that reads the incoming
+    solutions (a geo:search with variable params) is lifted out of its BGP
+    as the SERVICE call it stands for, so it folds in like the SERVICE
+    form (ref: ASTGeoSpatialOptimizer lifts inline groups into service
+    calls)."""
     if isinstance(n, A.Join):
         return _flatten_join(n.left) + _flatten_join(n.right)
-    return [n]
-
-
-def _is_label_service(c) -> bool:
-    """SERVICE wikibase:label — correlates with the sibling solutions (the
-    Wikidata deployment's label service; Wikidata runs the reference, so
-    this is reference-deployment surface). Resolved in the Join spine like
-    variable-endpoint services."""
-    from blazegraph_database_spark.operators.service import WIKIBASE_LABEL_SERVICE
-
-    return (
-        isinstance(c, A.Service)
-        and not isinstance(c.iri, Var)
-        and c.iri == WIKIBASE_LABEL_SERVICE
-    )
-
-
-def _collect_sps(n) -> list:
     if isinstance(n, A.BGP):
-        return list(n.patterns)
-    if isinstance(n, A.Join):
-        return _collect_sps(n.left) + _collect_sps(n.right)
-    return [n] if isinstance(n, A.SP) else []
+        calls = [A.Service(iri, A.BGP(pats)) for iri, pats in service.split_magic(n.patterns)[0]]
+        lifted = [c for c in calls if service.reads_solutions(c)]
+        if lifted:
+            gone = {id(sp) for c in lifted for sp in c.pattern.patterns}
+            keep = [sp for sp in n.patterns if id(sp) not in gone]
+            return ([A.BGP(keep, hints=n.hints)] if keep else []) + lifted
+    return [n]
 
 
 @_compile.register
 def _(node: A.Join, store: TripleStore) -> DataFrame:
-    # SERVICE ?var: the endpoint is a VARIABLE bound elsewhere in the join
-    # conjunction (ref: ServiceCallJoin.java:386 — group the incoming
-    # solutions by the distinct as-bound serviceRef values, call each
-    # endpoint once). Join is associative/commutative, so the binding may
-    # sit ANYWHERE in the flattened conjunct list, not just the direct
-    # sibling — compile everything else first, then resolve each
-    # variable-endpoint service against the joined solutions.
-    from blazegraph_database_spark.operators import service
-
     conjuncts = _flatten_join(node)
-    var_svcs = [
-        c for c in conjuncts
-        if isinstance(c, A.Service) and isinstance(c.iri, Var)
-    ]
-    lbl_svcs = [c for c in conjuncts if _is_label_service(c)]
-    geo_svcs = [
-        c for c in conjuncts
-        if isinstance(c, A.Service) and not isinstance(c.iri, Var)
-        and _compact_builtin_iri(c.iri) == "geo:search"
-        and service.geo_param_vars(_collect_sps(c.pattern))
-    ]
-    if geo_svcs:
-        # geo:search with VARIABLE params (e.g. spatialCircleCenter bound
-        # by a sibling pattern — ticket_bg1899): resolve like SERVICE ?var
-        # endpoints — evaluate the siblings, then run the service once per
-        # DISTINCT as-bound param row (ref: ServiceCallJoin's grouping of
-        # incoming solutions; bounded by the same endpoint guard)
-        skip = {id(c) for c in geo_svcs}
-        others = [c for c in conjuncts if id(c) not in skip]
-        if not others:
-            raise ValueError(
-                "SERVICE <geo:search>: a variable service parameter needs "
-                "a sibling pattern binding it"
-            )
-        from functools import reduce
-
-        ldf = _compile(reduce(A.Join, others), store)
-        for svc in geo_svcs:
-            ldf = _geo_param_join(store, ldf, _collect_sps(svc.pattern))
-        return ldf
-    if var_svcs or lbl_svcs:
-        skip = {id(c) for c in var_svcs} | {id(c) for c in lbl_svcs}
-        others = [c for c in conjuncts if id(c) not in skip]
-        if not others and var_svcs:
-            raise ValueError(
-                f"SERVICE ?{var_svcs[0].iri.name}: a variable service "
-                "endpoint needs a sibling pattern in the same group "
-                "binding it (e.g. VALUES)"
-            )
-        if others:
-            # rebuild the sibling conjunction as a Join tree and compile it
-            # through the normal path, so null-compatible joins (UNION/
-            # OPTIONAL arms leaving shared vars UNBOUND) keep their
-            # semantics under a service rewrite
-            from functools import reduce
-
-            ldf = _compile(reduce(A.Join, others), store)
-        else:  # label service alone: incoming = the unit solution
-            ldf = store.spark.range(1).drop("id")
-        for svc in var_svcs:
-            ldf = _service_var_join(store, ldf, svc)
-        for svc in lbl_svcs:
-            from blazegraph_database_spark.operators import service as _svc_mod
-
-            ldf = _svc_mod.label_service_join(store, ldf, _collect_sps(svc.pattern))
-        return ldf
+    if any(service.reads_solutions(c) for c in conjuncts):
+        return _fold_readers(store, conjuncts)
     l, r = _compile(node.left, store), _compile(node.right, store)
     shared = sorted(set(l.columns) & set(r.columns))
     if not shared:
@@ -1636,118 +1313,98 @@ def _(node: A.Join, store: TripleStore) -> DataFrame:
     return l.join(r, on=shared)
 
 
+def _fold_readers(store: TripleStore, conjuncts: list, rows=None) -> DataFrame:
+    """A conjunction whose SERVICE conjuncts read the incoming solutions
+    (``service.reads_solutions``): the other conjuncts — and a VALUES
+    block's ``rows``, the usual way to bind an endpoint — compile first
+    through the normal join path, so null-compatible joins keep their
+    semantics; then each such service folds in over their solutions (the
+    unit solution when there are none). Join is associative and
+    commutative, so a binding may sit anywhere in the conjunction."""
+    readers = [c for c in conjuncts if service.reads_solutions(c)]
+    others = [c for c in conjuncts if not service.reads_solutions(c)]
+    rest = reduce(A.Join, others) if others else None
+    if rows is not None:
+        ldf = _compile(A.Values(rows, child=rest), store)
+    elif rest is not None:
+        ldf = _compile(rest, store)
+    else:
+        ldf = store.spark.range(1).drop("id")
+
+    def ready(svc) -> bool:
+        names = service.binding_vars(svc)
+        return bool(names) and set(names) <= set(ldf.columns)
+
+    while readers:
+        # a service whose vars are bound goes first (one may bind another's
+        # param); one that takes the solutions whole (the label service)
+        # sees every other service's bindings
+        svc = next((r for r in readers if ready(r)), readers[0])
+        readers = [r for r in readers if r is not svc]
+        ldf = _fold_service(store, ldf, svc)
+    idv = store.id_join_vars
+    for c in list(ldf.columns):
+        if c in idv and f"{c}__id" not in ldf.columns:
+            ldf = ldf.withColumn(f"{c}__id", term_id(F.col(c)))
+    return ldf
+
+
 # endpoint sets are inherently small (they're SERVICES, not data); the cap
 # keeps a mis-bound variable (e.g. joined to a data column) from fanning
 # out into thousands of service calls
 SERVICE_VAR_MAX_ENDPOINTS = 64
 
 
-def _geo_param_join(store: TripleStore, ldf: DataFrame, sps: list) -> DataFrame:
-    """Run geo:search once per DISTINCT as-bound value row of its variable
-    params, substitute, union, and join back to the incoming solutions.
-    The distinct-param collect is bounded by SERVICE_VAR_MAX_ENDPOINTS —
-    param vars enumerate query-level configuration (a handful of centers/
-    regions), never data-sized sets. Serves both the SERVICE-wrapped form
-    and the inline magic-predicate form (same resolution either way)."""
-    from blazegraph_database_spark.operators import service
-
-    pvars = sorted(service.geo_param_vars(sps))
-    missing = [v for v in pvars if v not in ldf.columns]
+def _fold_service(store: TripleStore, ldf: DataFrame, svc: "A.Service") -> DataFrame:
+    """Fold one SERVICE that reads the solutions ``ldf`` into them. A
+    service without ``binding_vars`` (the label service) takes them whole.
+    Otherwise collect the distinct bindings of those vars — at most
+    SERVICE_VAR_MAX_ENDPOINTS, since they enumerate query-level
+    configuration (endpoints, a handful of centers), never data-sized sets
+    — call the service once per binding, tag each result with it, and
+    natural-join the union back (ref: ServiceCallJoin's as-bound
+    serviceRef grouping). Solutions leaving a var unbound are pruned (ref:
+    ServiceCallJoin drops binding sets without a serviceRef)."""
+    names = service.binding_vars(svc)
+    if not names:
+        return _call_service(store, svc, ldf)
+    missing = [v for v in names if v not in ldf.columns]
     if missing:
         raise ValueError(
-            f"SERVICE <geo:search>: param vars {missing} are bound by no sibling"
+            f"SERVICE <{svc.iri}>: no sibling pattern binds "
+            f"{', '.join('?' + v for v in missing)} (a variable endpoint or "
+            "service parameter must be bound by the enclosing group, e.g. via VALUES)"
         )
-    rows = ldf.select(*pvars).distinct().limit(SERVICE_VAR_MAX_ENDPOINTS + 1).collect()
-    if len(rows) > SERVICE_VAR_MAX_ENDPOINTS:
-        raise ValueError(
-            f"SERVICE <geo:search>: more than {SERVICE_VAR_MAX_ENDPOINTS} "
-            "distinct parameter bindings"
-        )
-    parts = []
-    for r in rows:
-        sub = []
-        for sp in sps:
-            if isinstance(sp.o, Var) and sp.o.name in pvars:
-                sub.append(A.SP(sp.s, sp.p, Lit(r[sp.o.name])))
-            else:
-                sub.append(sp)
-        out = service.geo_search_service(store, sub)
-        for v in pvars:
-            out = out.withColumn(v, F.lit(r[v]))
-        parts.append(out)
-    if not parts:
-        return ldf.limit(0)
-    res = parts[0]
-    for p_ in parts[1:]:
-        res = res.unionByName(p_)
-    shared = sorted(set(ldf.columns) & set(res.columns))
-    return ldf.join(res, on=shared) if shared else ldf.crossJoin(res)
-
-
-def _pattern_var_names(n) -> set[str]:
-    """Variable names mentioned in a service block's patterns (the
-    service's possible output bindings)."""
-    out: set[str] = set()
-    if isinstance(n, A.BGP):
-        for sp in n.patterns:
-            out |= _pattern_var_names(sp)
-    elif isinstance(n, A.Join):
-        out |= _pattern_var_names(n.left) | _pattern_var_names(n.right)
-    elif isinstance(n, A.SP):
-        for t in (n.s, n.p, n.o, getattr(n, "g", None)):
-            if isinstance(t, Var):
-                out.add(t.name)
-    return out
-
-
-def _service_var_join(store: TripleStore, ldf: DataFrame, svc: "A.Service") -> DataFrame:
-    """Collect the solutions' DISTINCT endpoint bindings, call the service
-    once per endpoint, and natural-join the tagged union back — the
-    reference's as-bound serviceRef grouping. Solutions with the endpoint
-    var unbound are pruned (ref: ServiceCallJoin filters incoming binding
-    sets without a serviceRef binding)."""
-    v = svc.iri.name
-    if v not in ldf.columns:
-        raise ValueError(
-            f"SERVICE ?{v}: no sibling pattern binds ?{v} (a variable "
-            "service endpoint must be bound by the enclosing group, e.g. "
-            "via VALUES)"
-        )
+    bound = reduce(lambda a, b: a & b, [F.col(v).isNotNull() for v in names])
     rows = (
-        ldf.select(v).filter(F.col(v).isNotNull()).distinct()
+        ldf.select(*names).filter(bound).distinct()
         .limit(SERVICE_VAR_MAX_ENDPOINTS + 1).collect()
     )
     if len(rows) > SERVICE_VAR_MAX_ENDPOINTS:
         raise ValueError(
-            f"SERVICE ?{v}: more than {SERVICE_VAR_MAX_ENDPOINTS} distinct "
-            "endpoint bindings — is the variable really a service ref?"
+            f"SERVICE <{svc.iri}>: more than {SERVICE_VAR_MAX_ENDPOINTS} distinct "
+            f"bindings of {names} — is each really a service ref or parameter?"
         )
     parts = []
     for r in rows:
-        ep = r[0]
-        res = _compile(
-            A.Service(ep, svc.pattern, svc.raw, svc.silent, svc.prologue), store
-        )
-        if v in res.columns:
-            # the block itself binds the endpoint var: SPARQL join
-            # semantics FILTER on it — overwriting would keep (and
-            # mislabel) rows whose inner binding differs
-            res = res.filter(F.col(v) == F.lit(ep))
-        else:
-            res = res.withColumn(v, F.lit(ep))
+        binding = r.asDict()
+        res = _compile(service.bind(svc, binding), store)
+        for v, val in binding.items():
+            # a block that itself binds the var join-filters on it —
+            # overwriting would keep (and mislabel) rows that differ
+            res = (
+                res.filter(F.col(v) == F.lit(val)) if v in res.columns
+                else res.withColumn(v, F.lit(val))
+            )
         parts.append(res)
     if not parts:
-        # no bound endpoints → no output (reference behavior). Keep the
-        # service block's variable columns so outer projections over them
-        # still resolve on the empty frame.
+        # nothing bound → no output. Keep the block's variable columns so
+        # outer projections over them still resolve on the empty frame.
         out = ldf.limit(0)
-        for name in sorted(_pattern_var_names(svc.pattern)):
-            if name not in out.columns:
-                out = out.withColumn(name, F.lit(None).cast("string"))
+        for name in sorted(_all_sp_vars(svc.pattern) - set(out.columns)):
+            out = out.withColumn(name, F.lit(None).cast("string"))
         return out
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
+    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
     shared = sorted(set(ldf.columns) & set(out.columns))
     return ldf.join(out, on=shared)
 
@@ -1810,16 +1467,16 @@ def _definite_vars(n) -> set[str]:
 
 @_compile.register
 def _(node: A.LeftJoin, store: TripleStore) -> DataFrame:
-    if _is_label_service(node.right) and node.condition is None:
+    if (
+        node.condition is None
+        and service.reads_solutions(node.right)
+        and not service.binding_vars(node.right)
+    ):
         # OPTIONAL { SERVICE wikibase:label {...} } — a common Wikidata
-        # idiom: the label service correlates with the LEFT solutions (it
-        # only ever adds columns, never removes rows, so the left-join
-        # semantics are exactly the enrich)
-        from blazegraph_database_spark.operators import service as _svc_mod
-
-        return _svc_mod.label_service_join(
-            store, _compile(node.left, store), _collect_sps(node.right.pattern)
-        )
+        # idiom: a service that takes the LEFT solutions whole only ever
+        # adds columns, never removes rows, so the left join is exactly
+        # that fold
+        return _fold_service(store, _compile(node.left, store), node.right)
     l, r = _compile(node.left, store), _compile(node.right, store)
     shared = sorted(set(l.columns) & set(r.columns))
     if not shared and node.condition is None:
@@ -2068,27 +1725,12 @@ def _(node: A.Values, store: TripleStore) -> DataFrame:
     spark = store.spark
     cols = sorted({k for row in node.rows for k in row})
     if node.child is not None:
-        # variable-endpoint SERVICEs on the child's join spine resolve
-        # against the solutions INCLUDING these inline bindings (a VALUES
-        # clause is the usual way to bind ?ep) — evaluate everything else
-        # plus the bindings first, then dispatch the service calls
+        # SERVICEs on the child's join spine that read the solutions see
+        # these inline bindings too (a VALUES clause is the usual way to
+        # bind an endpoint or a service parameter)
         spine = _flatten_join(node.child)
-        var_svcs = [
-            c for c in spine
-            if isinstance(c, A.Service) and isinstance(c.iri, Var)
-        ]
-        if var_svcs:
-            others = [
-                c for c in spine
-                if not (isinstance(c, A.Service) and isinstance(c.iri, Var))
-            ]
-            rest = None
-            for o in others:
-                rest = o if rest is None else A.Join(rest, o)
-            ldf = _compile(A.Values(node.rows, child=rest), store)
-            for svc in var_svcs:
-                ldf = _service_var_join(store, ldf, svc)
-            return ldf
+        if any(service.reads_solutions(c) for c in spine):
+            return _fold_readers(store, spine, rows=node.rows)
     if node.child is None:
         data = [tuple(row.get(c) for c in cols) for row in node.rows]
         return spark.createDataFrame(data, schema=", ".join(f"{c} string" for c in cols))
@@ -2802,334 +2444,36 @@ def _(node: A.NamedInclude, store: TripleStore) -> DataFrame:
     return sets[node.name]
 
 
-def _store_literal_index(store: TripleStore) -> DataFrame:
-    """Full-text index over the store's string literals: doc = subject, text
-    = concatenated literal values (the reference's text index likewise
-    indexes the lexicon's literals; ref: search/FullTextIndex.java).
-
-    Memoized in the store's shared memo (not a module dict keyed by
-    id(store): CPython reuses ids after GC, which could hand a stale
-    checkpointed index to an unrelated store, and the module dict never
-    shrank — ADVICE r2)."""
-    from blazegraph_database_spark.operators import fulltext
-
-    return _scoped_memo(
-        store,
-        "ft_literal_index",
-        lambda: fulltext.inverted_index(
-            _store_literal_texts(store), id_col="s", text_col="text"
-        ).localCheckpoint(),
-    )
-
-
-def _store_subject_index(store: TripleStore) -> DataFrame:
-    """Full-text index over SUBJECT URIs (ref: BDS.java SUBJECT_SEARCH —
-    "search against the URIs"): doc id = the subject term, text = its
-    lexical form, tokenized like any literal."""
-    from blazegraph_database_spark.operators import fulltext
-
-    def build() -> DataFrame:
-        docs = (
-            _dataset_scoped_df(store).select("s").distinct()
-            .select("s", F.col("s").alias("text"))
-        )
-        return fulltext.inverted_index(docs, id_col="s", text_col="text").localCheckpoint()
-
-    return _scoped_memo(store, "ft_subject_index", build)
-
-
-def _store_literal_texts(store: TripleStore) -> DataFrame:
-    """(s, text): each subject's concatenated string literals — the document
-    surface behind the full-text index; bds:matchExact / bds:matchRegex
-    post-filter against it (ref: BDS.java MATCH_EXACT/MATCH_REGEX filter
-    the matched literal's text)."""
-    return _scoped_memo(
-        store,
-        "ft_literal_texts",
-        lambda: (
-            _dataset_scoped_df(store).filter(F.col("o_dt") == "string")
-            .groupBy("s")
-            .agg(F.concat_ws(" ", F.collect_list("o_lex")).alias("text"))
-            .localCheckpoint()
-        ),
-    )
-
-
-def _parse_bds_common(sp, pred: str | None, opts: dict, flags: dict) -> bool:
-    """Consume one SHARED BDS option magic triple into opts/flags; True if
-    handled. bds:search and bds:searchInSearch route through the same
-    FullTextQuery option set in the reference, so the parse is shared."""
-    if pred == "bds:matchAllTerms":
-        opts["match_all"] = const_lex(sp.o) == "true"
-    elif pred == "bds:minRelevance":
-        opts["min_relevance_ppm"] = int(float(const_lex(sp.o)) * 1_000_000)
-    elif pred == "bds:maxRank":
-        opts["max_rank"] = int(const_lex(sp.o))
-    elif pred == "bds:maxRelevance":
-        # round, not truncate: the bound is inclusive, and a cap echoed
-        # back from a hit's own bds:relevance must keep it
-        opts["max_relevance_ppm"] = round(float(const_lex(sp.o)) * 1_000_000)
-    elif pred == "bds:matchExact":
-        flags["match_exact"] = const_lex(sp.o) == "true"
-    elif pred == "bds:matchRegex":
-        flags["match_regex"] = const_lex(sp.o)
-    elif pred == "bds:prefixMatch":
-        # every query token matches as a prefix (ref: BDS.PREFIX_MATCH —
-        # equivalent to suffixing '*' on each token)
-        flags["prefix_all"] = const_lex(sp.o) == "true"
-    elif pred == "bds:searchTimeout":
-        # accepted, advisory (ref: BDS.SEARCH_TIMEOUT bounds the B+Tree
-        # scan): deadlines here are enforced per-query by the REST job
-        # groups (server/rest.py), not per-operator
-        pass
-    else:
-        return False
-    return True
-
-
-def _bds_text_filter(store, query, match_exact, match_regex, subject_search=False):
-    """Hit-text filter closure (ref: BDS.java MATCH_EXACT/MATCH_REGEX):
-    runs inside search() BEFORE ranking and the maxRank cut, against the
-    matched document's text surface — the subject URI itself under
-    subjectSearch, the memoized (s, text) literal surface otherwise.
-    None when no filter option is set."""
-    if not match_exact and match_regex is None:
-        return None
-
-    def scored_filter(scored):
-        if subject_search:
-            text = F.col("id")  # the doc IS the subject lexical
-        else:
-            texts = _store_literal_texts(store).withColumnRenamed("s", "id")
-            scored = scored.join(texts, on="id")
-            text = F.col("text")
-        if match_exact:
-            scored = scored.filter(text.contains(query))
-        if match_regex is not None:
-            scored = scored.filter(text.rlike(match_regex))
-        return scored.drop("text")
-
-    return scored_filter
-
-
-# Built-in service namespaces: queries may use the declared full-IRI form or
-# the compact prefix form; both resolve to the same internal service (the
-# reference registers these factories under the full URIs; ref:
-# ServiceRegistry.java defaults + BDS.java / GASService.java namespaces).
-_BUILTIN_SERVICE_NS = {
-    "http://www.bigdata.com/rdf/search#": "bds:",
-    "http://www.bigdata.com/rdf/gas#": "gas:",
-    "http://www.bigdata.com/rdf/geospatial#": "geo:",
-    "http://www.bigdata.com/rdf#": "bd:",
-    "http://www.bigdata.com/rdf/fts#": "fts:",
-}
-
-
-def _compact_builtin_iri(iri: str | None) -> str | None:
-    if iri is None:
-        return None
-    for ns, pfx in _BUILTIN_SERVICE_NS.items():
-        if iri.startswith(ns):
-            return pfx + iri[len(ns):]
-    return iri
-
-
 @_compile.register
 def _(node: A.Service, store: TripleStore) -> DataFrame:
-    """SERVICE <iri> { ... }: built-in magic-predicate services evaluate
-    against the store; anything else dispatches through the service registry
-    (remote endpoints need a transport-backed registration — no network
-    here). Ref: ServiceRegistry.java dispatch in AST2BOpUtility."""
-    from blazegraph_database_spark.operators import fulltext, service
+    """SERVICE <iri> { ... } (ref: ServiceRegistry dispatch in
+    AST2BOpUtility): built-ins, stored queries, aliases and remote
+    endpoints are all one registry lookup (``operators/service.py``). A
+    service that reads the incoming solutions folds in over the unit
+    solution when it stands alone in its group."""
+    if service.reads_solutions(node):
+        return _fold_readers(store, [node])
+    return _call_service(store, node)
 
-    if isinstance(node.iri, Var):
-        raise ValueError(
-            f"SERVICE ?{node.iri.name}: a variable service endpoint needs a "
-            "sibling pattern in the same group binding it (e.g. VALUES)"
-        )
 
-    collect_sps = _collect_sps
-
-    if _is_label_service(node):
-        # standalone (no sibling patterns in its group): incoming = unit
-        # solution; manual-mode targets with no bound entity come back
-        # unbound, matching an empty automatic resolution
-        return service.label_service_join(
-            store, store.spark.range(1).drop("id"), collect_sps(node.pattern)
-        )
-    if isinstance(node.iri, str):
-        # alias resolution (ref: ServiceRegistry.addAlias) — an alias URI
-        # dispatches exactly like its target, including remote endpoints
-        resolved = service.resolve_service_alias(node.iri)
-        if resolved != node.iri:
-            node = A.Service(resolved, node.pattern, node.raw, node.silent, node.prologue)
-    svc_iri = _compact_builtin_iri(node.iri)
-    if svc_iri == "bd:alp":
-        # ref: ASTALPServiceOptimizer.java / BD.java ALP_SERVICE — the
-        # configurable arbitrary-length-path service (bounds, edge
-        # constraints, bidirectionality); needs the BGP node itself (its
-        # hints carry the alp.* parameters), not just the pattern list
-        return service.alp_service(store, node.pattern)
-    if svc_iri == "gas:service":
-        return service.gas_service(store, collect_sps(node.pattern))
-    if svc_iri == "geo:search":
-        return service.geo_search_service(store, collect_sps(node.pattern))
-    if svc_iri == "bd:sample":  # ref: eval/SampleServiceFactory.java:101
-        return service.bd_sample_service(store, collect_sps(node.pattern))
-    if svc_iri == "bd:slice":  # ref: eval/SliceServiceFactory.java:110
-        return service.bd_slice_service(store, collect_sps(node.pattern))
-    if svc_iri == "bd:values":  # ref: eval/ValuesServiceFactory.java:92
-        return service.bd_values_service(store, collect_sps(node.pattern))
-    if svc_iri == "bd:history":  # ref: history/HistoryServiceFactory.java:1
-        return service.bd_history_service(store, collect_sps(node.pattern))
-    if svc_iri == "bd:describe":  # ref: cache/DescribeServiceFactory.java
-        return service.bd_describe_service(store, collect_sps(node.pattern))
-    if svc_iri == "bd:rdrhistory":
-        # ref: ServiceRegistry.java:170 RDRHistoryServiceFactory + sail/
-        # RDRHistory.java:61 — change events recorded as RDR statement
-        # metadata (<<s p o>> blaze:history:added|removed "commit"^^xsd:long)
-        # and queried with ORDINARY SPARQL-star patterns: the block compiles
-        # unchanged against the history store view (ever-existed statements
-        # + metadata rows), so sid joins, accessors and filters all work.
-        us = store.updatable
-        if us is None:
-            raise ValueError(
-                "SERVICE <bd:rdrhistory> needs an updatable store (query via "
-                "UpdatableStore.query_store or the REST endpoint)"
-            )
-        return _compile(node.pattern, us.history_store())
-    if svc_iri == "fts:search":  # ref: fts/FulltextSearchServiceFactory.java
-        return service.fts_search_service(
-            store, collect_sps(node.pattern), transport=store.fts_transport
-        )
-    if service.stored_query_lookup(node.iri) is not None:
-        # ref: storedquery/StoredQueryService.java — app-registered IRIs
-        return service.call_stored_query(store, node.iri, collect_sps(node.pattern))
-    if svc_iri == "bds:searchInSearch":
-        # ref: eval/SearchInSearchServiceFactory.java (registered under
-        # BDS.SEARCH_IN_SEARCH, ServiceRegistry.java:138): the full-text
-        # hit set used as a FILTER on the search var — the service yields
-        # the DISTINCT subjects holding a matching literal, and the
-        # enclosing group's natural join on ?var keeps only incoming
-        # bindings linked to a matched literal (the reference's
-        # iterate-and-prune over the incoming binding sets). No rank cut
-        # by default (ref uses DEFAULT_MAX_RANK = MAX_VALUE), so no
-        # global sort: the hit set stays an unordered semi-join input.
-        pats = collect_sps(node.pattern)
-        subj, query, opts = None, None, {}
-        flags = {"match_exact": False, "match_regex": None}
-        for sp in pats:
-            pred = _compact_builtin_iri(const_lex(sp.p)) if is_const(sp.p) else None
-            if pred == "bds:searchInSearch":
-                subj, query = sp.s, const_lex(sp.o)
-            elif not _parse_bds_common(sp, pred, opts, flags):
-                raise ValueError(
-                    "SERVICE <bds:searchInSearch> supports searchInSearch/"
-                    f"matchAllTerms/minRelevance/maxRelevance/maxRank/"
-                    f"matchExact/matchRegex, got {pred!r}"
-                )
-        if subj is None or not isinstance(subj, Var):
-            raise ValueError(
-                'SERVICE <bds:searchInSearch> needs `?var bds:searchInSearch "query"`'
-            )
-        opts.setdefault("max_rank", None)
-        patterns = [
-            (t.rstrip("*"), t.endswith("*") or flags.get("prefix_all", False))
-            for t in query.split()
-        ]
-        hits = fulltext.search(
-            _store_literal_index(store),
-            patterns,
-            scored_filter=_bds_text_filter(
-                store, query, flags["match_exact"], flags["match_regex"]
-            ),
-            **opts,
-        )
-        return hits.select(F.col("id").alias(subj.name)).distinct()
-    if svc_iri == "bds:search":
-        # magic predicates inside the block (ref: BDS.java search vocabulary)
-        pats = collect_sps(node.pattern)
-        if not any(
-            is_const(sp.p)
-            and _compact_builtin_iri(const_lex(sp.p)) == "bds:subjectSearch"
-            and const_lex(sp.o) == "true"
-            for sp in pats
-        ):
-            # default contract = the INLINE form's: the search var binds the
-            # MATCHED LITERAL (ref: the reference's own ticket_bg1256
-            # fixture — SERVICE bds:search yields the literal, which joins
-            # object-position patterns); subjectSearch=true switches to the
-            # URI index below
-            return _bds_inline_search(store, pats)
-        subj, query, opts = None, None, {}
-        flags = {"match_exact": False, "match_regex": None}
-        rel_var = rank_var = count_var = None
-        subject_search = False
-        for sp in pats:
-            pred = _compact_builtin_iri(const_lex(sp.p)) if is_const(sp.p) else None
-            if pred == "bds:search":
-                subj, query = sp.s, const_lex(sp.o)
-            elif _parse_bds_common(sp, pred, opts, flags):
-                pass  # shared option set (matchAllTerms/relevance/rank caps/filters)
-            elif pred == "bds:minRank":  # minRank+maxRank page (BDS.java)
-                opts["min_rank"] = int(const_lex(sp.o))
-            elif pred == "bds:subjectSearch":  # BDS.java SUBJECT_SEARCH
-                subject_search = const_lex(sp.o) == "true"
-            elif pred == "bds:relevance" and isinstance(sp.o, Var):
-                rel_var = sp.o.name  # bind the hit's relevance score
-            elif pred == "bds:rank" and isinstance(sp.o, Var):
-                rank_var = sp.o.name  # bind the hit's 1-based rank
-            elif pred == "bds:rangeCount" and isinstance(sp.o, Var):
-                count_var = sp.o.name  # bind the total hit count
-        if subj is None or not isinstance(subj, Var):
-            raise ValueError("SERVICE <bds:search> needs `?var bds:search \"query\"`")
-        patterns = [
-            (t.rstrip("*"), t.endswith("*") or flags.get("prefix_all", False))
-            for t in query.split()
-        ]
-        idx = _store_subject_index(store) if subject_search else _store_literal_index(store)
-        hits = fulltext.search(
-            idx,
-            patterns,
-            scored_filter=_bds_text_filter(
-                store, query, flags["match_exact"], flags["match_regex"],
-                subject_search=subject_search,
-            ),
-            count_col=count_var,
-            **opts,
-        )
-        if count_var is not None:
-            # reference semantics: ONE solution binding only rangeCount
-            # (hits suppressed; zero-hit searches bind 0) — ref:
-            # SearchServiceFactory.java:649. Other requested service vars
-            # ride along UNBOUND (typed NULLs) so projections over them
-            # stay valid instead of raising (review r5-5).
-            out = hits.withColumn(subj.name, F.lit(None).cast("string"))
-            if rel_var is not None:
-                out = out.withColumn(rel_var, F.lit(None).cast("double"))
-            if rank_var is not None:
-                out = out.withColumn(rank_var, F.lit(None).cast("int"))
-            return out
-        sel = [F.col("id").alias(subj.name)]
-        if rel_var is not None:  # score as the 0..1 relevance the ref binds
-            sel.append((F.col("score_ppm").cast("double") / 1_000_000).alias(rel_var))
-        if rank_var is not None:
-            sel.append(F.col("rank").alias(rank_var))
-        return hits.select(*sel)
+def _call_service(store: TripleStore, node: "A.Service", solutions=None) -> DataFrame:
+    """Call the registered service of a SERVICE node (``solutions``: the
+    incoming solutions, for a service that reads them). SILENT turns a
+    failed call into one empty solution, which leaves the incoming
+    solutions as they are (SPARQL 1.1 Federated Query §4)."""
+    params = {
+        "query": f"{node.prologue}SELECT * WHERE {{ {node.raw} }}",
+        "pattern": node.pattern,
+        "store": store,
+    }
+    if solutions is not None:
+        params["solutions"] = solutions
     try:
-        fn = service.lookup(node.iri)
-        out = fn(
-            store.spark,
-            {
-                "query": f"{node.prologue}SELECT * WHERE {{ {node.raw} }}",
-                "pattern": node.pattern,
-            },
-        )
+        return service.lookup(node.iri)(store.spark, params)
     except Exception:
-        if node.silent:  # SERVICE SILENT failure → one empty solution (spec)
-            return store.spark.range(1).drop("id")
-        raise
-    return out
+        if not node.silent:
+            raise
+        return solutions if solutions is not None else store.spark.range(1).drop("id")
 
 
 def _path_nullable(path) -> bool:

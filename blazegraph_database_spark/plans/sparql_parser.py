@@ -470,6 +470,7 @@ def _expand_label_services(node, proj: list) -> object:
     from blazegraph_database_spark.operators.service import (
         LABEL_TARGET_PREDS,
         WIKIBASE_LABEL_SERVICE,
+        canonical,
     )
 
     if node is None or not hasattr(node, "__dataclass_fields__"):
@@ -479,7 +480,7 @@ def _expand_label_services(node, proj: list) -> object:
     if (
         isinstance(node, A.Service)
         and not isinstance(node.iri, _V)
-        and node.iri == WIKIBASE_LABEL_SERVICE
+        and canonical(node.iri) == WIKIBASE_LABEL_SERVICE
     ):
         pats = list(node.pattern.patterns) if isinstance(node.pattern, A.BGP) else []
         explicit = {

@@ -245,14 +245,14 @@ def _ft_oracle() -> str:
 
 @register("service_bds_search", None)  # sql attached below (import-order)
 def service_bds_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SERVICE <bds:search>: federation dispatch through the service
-    registry to the built-in full-text service, prefix + exact terms
-    (ref: ServiceRegistry + bds:search)."""
-    from blazegraph_database_spark.operators.service import call_service
+    """bds:search over the document corpus: "stream* batch", a prefix term
+    and an exact term, top 12 by relevance (ref: bds:search, BDS.java
+    prefix match and maxRank)."""
+    from blazegraph_database_spark.operators import fulltext
     from blazegraph_database_spark.queries_search import _docs_index
 
     idx = _docs_index(spark, sf_dir)
-    return call_service(spark, "bds:search", {"index": idx, "query": "stream* batch", "max_rank": 12})
+    return fulltext.search(idx, [("stream", True), ("batch", False)], max_rank=12)
 
 
 QUERIES["service_bds_search"]["sql"] = _ft_oracle()

@@ -13,22 +13,7 @@ from blazegraph_database_spark.plans import algebra as A
 from blazegraph_database_spark.plans.compiler import evaluate
 
 
-def test_service_bds_search(spark):
-    docs = spark.createDataFrame(
-        [(1, "spark spark engine"), (2, "other words here")], "doc_id long, text string"
-    )
-    out = service.call_service(spark, "bds:search", {"df": docs, "query": "spark"})
-    assert [r["id"] for r in out.collect()] == [1]
-    pre = service.call_service(spark, "bds:search", {"df": docs, "query": "spar*"})
-    assert [r["id"] for r in pre.collect()] == [1]
-
-
-def test_service_geo_and_unknown(spark):
-    pts = spark.createDataFrame([(1, 5.0, 5.0), (2, 50.0, 50.0)], "id long, lat double, lon double")
-    out = service.call_service(
-        spark, "geo:search", {"df": pts, "shape": "rect", "lat0": 0.0, "lat1": 10.0, "lon0": 0.0, "lon1": 10.0}
-    )
-    assert [r["id"] for r in out.collect()] == [1]
+def test_service_unknown_iri_raises(spark):
     with pytest.raises(KeyError):
         service.call_service(spark, "no:such", {})
 
@@ -340,6 +325,16 @@ def test_service_silent_failure(spark):
         'SELECT ?s ?a WHERE { SERVICE SILENT <no:such> { ?s <p> ?o } ?s <age> ?a }',
     )
     assert [(r["s"], r["a"]) for r in out.collect()] == [("a", "30")]
+    # a built-in's failure (gas:service without gas:gasClass) is ignored
+    # the same way (SPARQL 1.1 Federated Query §4)
+    out = run_sparql(
+        st,
+        "SELECT ?s ?a WHERE { SERVICE SILENT gas:service { gas:program gas:out ?v } "
+        "?s <age> ?a }",
+    )
+    assert [(r["s"], r["a"]) for r in out.collect()] == [("a", "30")]
+    with pytest.raises(ValueError, match="gasClass"):
+        run_sparql(st, "SELECT ?v WHERE { SERVICE gas:service { gas:program gas:out ?v } }")
 
 
 def test_describe_var_where(spark):
@@ -1592,6 +1587,33 @@ def test_geo_inline_magic_variable_param(spark):
     """
     got = {(r["city"], r["res"]) for r in run_sparql(st, q).collect()}
     assert got == {("cityA", "e1"), ("cityA", "e2"), ("cityB", "e3")}
+    # a VALUES-bound param: the inline form answers what the SERVICE form
+    # answers (the inline group folds in over the VALUES solutions)
+    group = """
+      ?res geo:search "inCircle" .
+      ?res geo:predicate <loc> .
+      ?res geo:spatialCircleCenter ?c .
+      ?res geo:spatialCircleRadius "50" .
+    """
+    expected = {("10#20", "e1"), ("10#20", "e2")}
+    for body in (group, "SERVICE geo:search {" + group + "}"):
+        q = (
+            "PREFIX geo: <http://www.bigdata.com/rdf/geospatial#>\n"
+            'SELECT ?c ?res WHERE { VALUES ?c { "10#20" } ' + body + " }"
+        )
+        assert {(r["c"], r["res"]) for r in run_sparql(st, q).collect()} == expected
+    # the param bound by another service that reads the solutions (here a
+    # variable endpoint answering ?c): that service folds in first
+    service.register_stored_query(
+        "http://app/centers",
+        lambda store, params: store.spark.createDataFrame([("10#20",)], "c string"),
+    )
+    q = (
+        "PREFIX geo: <http://www.bigdata.com/rdf/geospatial#>\n"
+        "SELECT ?c ?res WHERE { VALUES ?ep { <http://app/centers> } "
+        + group + " SERVICE ?ep { } }"
+    )
+    assert {(r["c"], r["res"]) for r in run_sparql(st, q).collect()} == expected
 
 
 def test_alp_service_anchored_geared(spark):
@@ -1648,3 +1670,181 @@ def test_alp_service_anchored_geared(spark):
     assert {r["v"] for r in run_sparql(st, q2).collect()} == {
         f"n1_{i}" for i in range(46, 49)
     }
+
+
+@pytest.mark.parametrize(
+    "block",
+    [
+        # inline magic predicates
+        '?lit <bds:search> "spark" . ?lit <bds:maxrank> "5" .',
+        # bds:searchInSearch
+        'SERVICE <bds:searchInSearch> { ?lit <bds:searchInSearch> "spark" . '
+        '?lit <bds:maxrank> "5" . }',
+        # the subjectSearch SERVICE form
+        'SERVICE <bds:search> { ?lit <bds:search> "spark" . '
+        '?lit <bds:subjectSearch> "true" . ?lit <bds:maxrank> "5" . }',
+    ],
+    ids=["inline", "searchInSearch", "subjectSearch"],
+)
+def test_bds_unknown_option_raises_in_every_form(spark, block):
+    """Every bds: form reads its options through one parser, so a typo'd
+    option (bds:maxrank for bds:maxRank) raises instead of vanishing."""
+    from blazegraph_database_spark.plans.sparql_parser import run_sparql
+
+    st = TripleStore(spark.createDataFrame(
+        [("d1", "text", "spark engine", "string")],
+        "s string, p string, o_lex string, o_dt string",
+    ))
+    with pytest.raises(ValueError, match="maxrank"):
+        run_sparql(st, "SELECT ?lit WHERE { " + block + " }")
+
+
+# ------------------------------------------------ one SERVICE dispatch ----
+_DISPATCH_NS = {
+    "bd": "http://www.bigdata.com/rdf#",
+    "bds": "http://www.bigdata.com/rdf/search#",
+    "gas": "http://www.bigdata.com/rdf/gas#",
+    "geo": "http://www.bigdata.com/rdf/geospatial#",
+    "fts": "http://www.bigdata.com/rdf/fts#",
+    "wikibase": "http://wikiba.se/ontology#",
+}
+_SP = "<{bd}serviceParam>"
+# service IRI (prefix, local) → (sibling patterns, block, expected ?v values);
+# {pfx} stands for the namespace in the form under test
+_DISPATCH_CASES = {
+    ("gas", "service"): (
+        "",
+        '<{gas}program> <{gas}gasClass> "com.bigdata.rdf.graph.analytics.BFS" . '
+        "<{gas}program> <{gas}in> <ex:a> . <{gas}program> <{gas}linkType> <ex:link> . "
+        "<{gas}program> <{gas}out> ?v .",
+        {"ex:a", "ex:b", "ex:c"},
+    ),
+    ("geo", "search"): (
+        "",
+        '?v <{geo}search> "inCircle" . ?v <{geo}predicate> <ex:loc> . '
+        '?v <{geo}spatialCircleCenter> "10#20" . ?v <{geo}spatialCircleRadius> "50" .',
+        {"ex:e1"},
+    ),
+    ("bds", "search"): ("", '?v <{bds}search> "spark" .', {"spark engine"}),
+    ("bds", "searchInSearch"): ("", '?v <{bds}searchInSearch> "batch" .', {"ex:b"}),
+    ("bd", "alp"): (
+        "",
+        '<ex:a> ?edge ?v . hint:Prior hint:alp.pathExpr "true" . ?edge <ex:kind> "hop" .',
+        {"ex:b", "ex:c"},
+    ),
+    ("bd", "sample"): (
+        "",
+        f'?v <ex:link> ?o . {_SP} <{{bd}}sample.limit> "1" . '
+        f'{_SP} <{{bd}}sample.sampleType> "DENSE" .',
+        {"ex:a"},
+    ),
+    ("bd", "slice"): (
+        "",
+        f'?v <ex:link> ?o . {_SP} <{{bd}}slice.offset> "1" . {_SP} <{{bd}}slice.limit> "5" .',
+        {"ex:b"},
+    ),
+    ("bd", "values"): (
+        "", f'{_SP} <{{bd}}values.var> ?v . {_SP} <{{bd}}values.val> "x" .', {"x"}
+    ),
+    ("bd", "history"): (
+        "", f'?v <ex:name> ?o . {_SP} <{{bd}}history.action> "added" .', {"ex:c"}
+    ),
+    ("bd", "describe"): (
+        "", f"?v <ex:link> ?o . {_SP} <{{bd}}describe.iri> <ex:b> .", {"ex:b"}
+    ),
+    ("bd", "rdrhistory"): ("", "<<?v <ex:name> ?o>> <blaze:history:added> ?c .", {"ex:c"}),
+    ("fts", "search"): (
+        "", '?v <{fts}search> "spark" . ?v <{fts}endpoint> "http://solr/select" .', {"doc1"}
+    ),
+    ("wikibase", "label"): (
+        "?s <ex:link> <ex:b> .",
+        f'{_SP} <{{wikibase}}language> "en" . ?s <http://www.w3.org/2000/01/rdf-schema#label> ?v .',
+        {"Alpha"},
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def dispatch_store(spark):
+    from blazegraph_database_spark.update.update import UpdatableStore
+
+    rows = [
+        ("ex:a", "ex:link", "ex:b", "iri"),
+        ("ex:b", "ex:link", "ex:c", "iri"),
+        ("ex:link", "ex:kind", "hop", "string"),
+        ("ex:a", "ex:name", "spark engine", "string"),
+        ("ex:b", "ex:name", "batch tool", "string"),
+        ("ex:e1", "ex:loc", "10.0#20.0", "geo"),
+        ("ex:e2", "ex:loc", "50.0#60.0", "geo"),
+        ("ex:a", "http://www.w3.org/2000/01/rdf-schema#label", "Alpha", "lang:en"),
+    ]
+    schema = "s string, p string, o_lex string, o_dt string"
+    us = UpdatableStore.from_store(TripleStore(spark.createDataFrame(rows, schema)))
+    us.insert_data(spark.createDataFrame([("ex:c", "ex:name", "new", "string")], schema))
+    st = us.query_store
+    st.fts_transport = lambda endpoint, query, params: [{"id": "doc1", "score": 1.0}]
+    return st
+
+
+def _dispatched(monkeypatch, st, iri, siblings, block):
+    """Run ``SELECT ?v { siblings SERVICE <iri> { block } }``; return the
+    ?v values and the registry keys the query looked up."""
+    from blazegraph_database_spark.plans.sparql_parser import run_sparql
+
+    seen = []
+    lookup = service.lookup
+
+    def spy(key):
+        seen.append(service.canonical(key))
+        return lookup(key)
+
+    monkeypatch.setattr(service, "lookup", spy)
+    q = f"SELECT ?v WHERE {{ {siblings} SERVICE <{iri}> {{ {block} }} }}"
+    return {r["v"] for r in run_sparql(st, q).collect()}, seen
+
+
+@pytest.mark.parametrize(
+    "pfx,local", list(_DISPATCH_CASES), ids=[f"{p}:{l}" for p, l in _DISPATCH_CASES]
+)
+def test_builtin_service_dispatch(spark, dispatch_store, monkeypatch, pfx, local):
+    """Every built-in answers through the one registry under its reference
+    IRI, in the full form and in the compact (undeclared-prefix) form, with
+    its magic predicates in the same form."""
+    siblings, block, expected = _DISPATCH_CASES[(pfx, local)]
+    for form in ("full", "compact"):
+        ns = {p: (n if form == "full" else f"{p}:") for p, n in _DISPATCH_NS.items()}
+        iri = ns[pfx] + local
+        got, seen = _dispatched(
+            monkeypatch, dispatch_store, iri, siblings, block.format(**ns)
+        )
+        assert got == expected, form
+        assert _DISPATCH_NS[pfx] + local in seen, form
+
+
+def test_registered_service_dispatch(spark, dispatch_store, monkeypatch):
+    """An alias, a stored query and a registered mock dispatch through the
+    same registry; a registered service gets {"query", "pattern", "store"}."""
+    calls = []
+
+    def mock(spark_, params):
+        calls.append(params)
+        return spark_.createDataFrame([("m",)], "v string")
+
+    service.register_service("http://app/dispatch#mock", mock)
+    service.register_stored_query(
+        "http://app/dispatch#stored", "SELECT ?v WHERE { ?v <ex:link> ?o }"
+    )
+    service.register_service_alias(
+        "http://app/dispatch#alias", "http://www.bigdata.com/rdf#values"
+    )
+    values = '<bd:serviceParam> <bd:values.var> ?v . <bd:serviceParam> <bd:values.val> "x" .'
+    for iri, block, expected, key in (
+        ("http://app/dispatch#mock", "?v <ex:p> ?o", {"m"}, "http://app/dispatch#mock"),
+        ("http://app/dispatch#stored", "", {"ex:a", "ex:b"}, "http://app/dispatch#stored"),
+        ("http://app/dispatch#alias", values, {"x"}, "http://www.bigdata.com/rdf#values"),
+    ):
+        got, seen = _dispatched(monkeypatch, dispatch_store, iri, "", block)
+        assert got == expected and seen == [key], iri
+    assert set(calls[0]) == {"query", "pattern", "store"}
+    assert "?v <ex:p> ?o" in calls[0]["query"]
+
