@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 _IRI_BAD_RX = re.compile(r'[\x00-\x20<>"{}|^`\\]')
 
 from blazegraph_database_spark.model.store import TRIPLE_COLS, TripleStore
+from blazegraph_database_spark.model.terms import sid_lex
 from blazegraph_database_spark.update.update import UpdatableStore
 
 VERTEX_TYPE = "pg:Vertex"
@@ -47,8 +48,8 @@ def _lit(v) -> tuple[str, str]:
 
 
 def _edge_sid(out_v: str, label: str, in_v: str) -> str:
-    """Statement id of the edge triple — matches plans/compiler.sid_expr."""
-    return f"<<{out_v}|{EDGE_NS}{label}|{in_v}|iri>>"
+    """Statement id of the edge triple."""
+    return sid_lex(out_v, EDGE_NS + label, in_v, "iri")
 
 
 class GraphListener:

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.model.terms import sid_col
+
 
 def _c(x) -> Column:
     return F.col(x) if isinstance(x, str) else x
@@ -399,11 +401,9 @@ def STRDT_TAG(dt_iri: str) -> str:
 
 # RDF-star / RDR statement-term accessors (ref: SidIV.java; SPARQL-star
 # TRIPLE/SUBJECT/PREDICATE/OBJECT/isTRIPLE over the `<<s|p|o_lex|o_dt>>`
-# sid encoding — see plans.compiler.sid_expr) --------------------------------
+# sid encoding — see model.terms.sid_col) --------------------------------
 def TRIPLE(s, p, o_lex, o_dt="string") -> Column:
-    return F.concat(
-        F.lit("<<"), _c(s), F.lit("|"), _c(p), F.lit("|"), _c(o_lex), F.lit("|"), _c(o_dt), F.lit(">>")
-    )
+    return sid_col(_c(s), _c(p), _c(o_lex), _c(o_dt))
 
 
 def ISTRIPLE(x) -> Column:

@@ -16,11 +16,14 @@ Scale notes:
   one driver tier and one set of distributed tiers.
 - The outer loop reaches fixpoint in <= 3 passes for standard RDFS rule
   interaction (type triples produced by rdfs2/3/9 only feed rdfs9 again);
-  at 100 TB one would run delta-driven maintenance instead (see
-  update.update.maintain_closure).
+  updates maintain the closure from their delta instead (delta_assert /
+  dred_retract, called by update.update.UpdatableStore.insert_with_closure
+  and delete_with_closure).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -145,21 +148,113 @@ def _as_triples(edges: DataFrame, pred: str) -> DataFrame:
     )
 
 
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _mutual_edges(df: DataFrame, pred: str, eq_pred: str, fold: bool) -> DataFrame:
+    """``pred`` edges, plus ``eq_pred`` edges both ways when ``fold``
+    (owl:equivalentClass/Property => mutual subClassOf/subPropertyOf; ref
+    fast-closure steps 4/6)."""
+    edges = _edges(df, pred)
+    if fold:
+        eq = _edges(df, eq_pred)
+        edges = edges.unionByName(eq).unionByName(
+            eq.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    return edges
+
+
+def _type_head(subj: str, extra: list[str]) -> list:
+    """Projection of an rdf:type head ``(subj rdf:type dst)``."""
+    return [
+        F.col(subj).alias("s"), F.lit(RDF_TYPE).alias("p"),
+        F.col("dst").alias("o_lex"), F.lit("iri").alias("o_dt"), *extra,
+    ]
+
+
+def _fire_rules(data: DataFrame, subprop, dom, rng, subclass) -> list[DataFrame]:
+    """The RDFS data-rule program, rdfs7 → rdfs2/3 → rdfs9, fired from the
+    ``data`` rows against CLOSED schema sides — (src, dst) edge frames,
+    broadcast in every join. Every rule has exactly one data premise and
+    each rule's heads feed only later rules, so one stratified firing is
+    complete. Returns the head frames (the input rows are not among them);
+    an absent (None) side skips its rule. Columns of ``data`` beyond
+    (s, p, o_lex, o_dt) ride along from premise to head, which is how the
+    counting callers carry a derivation count through the program."""
+    extra = [c for c in data.columns if c not in ("s", "p", "o_lex", "o_dt")]
+    heads = []
+    if subprop is not None:
+        # rdfs7: (s p o) + (p subPropertyOf q) => (s q o)
+        inf7 = data.join(F.broadcast(subprop), data["p"] == subprop["src"]).select(
+            "s", F.col("dst").alias("p"), "o_lex", "o_dt", *extra
+        )
+        heads.append(inf7)
+        data = data.unionByName(inf7)
+    types = [data.filter(F.col("p") == RDF_TYPE)]
+    if dom is not None:
+        # rdfs2: (p domain c) + (s p o) => (s rdf:type c)
+        types.append(data.join(F.broadcast(dom), data["p"] == dom["src"]).select(*_type_head("s", extra)))
+    if rng is not None:
+        # rdfs3: (p range c) + (s p o) => (o rdf:type c) — IRI objects only
+        types.append(
+            data.filter(F.col("o_dt") == "iri")
+            .join(F.broadcast(rng), data["p"] == rng["src"])
+            .select(*_type_head("o_lex", extra))
+        )
+    heads += types[1:]
+    if subclass is not None:
+        # rdfs9: (x type c) + (c subClassOf d) => (x type d)
+        typed = _union(types)
+        heads.append(
+            typed.join(F.broadcast(subclass), typed["o_lex"] == subclass["src"]).select(*_type_head("s", extra))
+        )
+    return heads
+
+
+def _trivial_axioms(df: DataFrame) -> list[DataFrame]:
+    """rdfs4a/4b/6/8/10/12/13: everything-is-a-Resource and the reflexive
+    sub-axioms."""
+    def head(rows: DataFrame, s, p: str, o) -> DataFrame:
+        return rows.select(s.alias("s"), F.lit(p).alias("p"), o.alias("o_lex"), F.lit("iri").alias("o_dt"))
+
+    def typed(cls: str) -> DataFrame:
+        return df.filter((F.col("p") == RDF_TYPE) & (F.col("o_lex") == cls))
+
+    resource = F.lit(RDFS_RESOURCE)
+    props, classes = typed(RDF_PROPERTY), typed(RDFS_CLASS)
+    return [
+        # rdfs4a/4b: everything is an rdfs:Resource
+        head(df, F.col("s"), RDF_TYPE, resource),
+        head(df.filter(F.col("o_dt") == "iri"), F.col("o_lex"), RDF_TYPE, resource),
+        # rdfs6: p rdf:type rdf:Property => p subPropertyOf p
+        head(props, F.col("s"), RDFS_SUBPROP, F.col("s")),
+        # rdfs8/10: c rdf:type rdfs:Class => c subClassOf rdfs:Resource, c subClassOf c
+        head(classes, F.col("s"), RDFS_SUBCLASS, resource),
+        head(classes, F.col("s"), RDFS_SUBCLASS, F.col("s")),
+        # rdfs12: p rdf:type ContainerMembershipProperty => p subPropertyOf rdfs:member
+        head(typed(RDFS_CMP), F.col("s"), RDFS_SUBPROP, F.lit(RDFS_MEMBER)),
+        # rdfs13: d rdf:type rdfs:Datatype => d subClassOf rdfs:Literal
+        head(typed(RDFS_DATATYPE), F.col("s"), RDFS_SUBCLASS, F.lit(RDFS_LITERAL)),
+    ]
+
+
 def rdfs_closure_pass(df: DataFrame, trivial_axioms: bool = False) -> DataFrame:
     """One stratified rule pass: eq-class/eq-prop fold → rdfs5 → rdfs7 →
     rdfs2/3 → rdfs11 → rdfs9 (the reference's fast-closure rule order — each
     rule's outputs feed only later strata, so the pass is complete for
-    standard RDFS schemas in one shot). Rules whose schema premise is empty
-    are skipped entirely — the common case pays only for the rules its
+    standard RDFS schemas in one shot). The closed schema triples (the
+    rdfs5/11 closures) join the output, and the data rules fire once over
+    the closed sides (_fire_rules). Rules whose schema premise is empty are
+    skipped entirely — the common case pays only for the rules its
     ontology actually uses.
 
-    owl:equivalentClass/Property fold into the subclass/subproperty closures
-    as mutual edges (ref fast-closure steps 4/6). ``trivial_axioms=True``
-    additionally fires rdfs4a/4b/6/8/10/12/13 (everything-is-a-Resource and
-    reflexive sub-axioms) — off by default, matching the reference's
-    InferenceEngine ``forwardChainRdfTypeRdfsResource=false`` default: these
-    flood the store with rows no real query asks for, which at 100 TB is
-    pure write amplification."""
+    ``trivial_axioms=True`` additionally fires rdfs4a/4b/6/8/10/12/13
+    (everything-is-a-Resource and reflexive sub-axioms) — off by default,
+    matching the reference's InferenceEngine
+    ``forwardChainRdfTypeRdfsResource=false`` default: these flood the
+    store with rows no real query asks for, which at 100 TB is pure write
+    amplification."""
     # One probe job for all schema-premise rules (vs one isEmpty() scan per
     # rule): which schema predicates does this ontology actually use?
     present = {
@@ -171,91 +266,20 @@ def rdfs_closure_pass(df: DataFrame, trivial_axioms: bool = False) -> DataFrame:
         .distinct()
         .collect()
     }
-    subprop_e = _edges(df, RDFS_SUBPROP)
-    if OWL_EQPROP in present:  # equivalentProperty => mutual subPropertyOf
-        eqp = _edges(df, OWL_EQPROP)
-        subprop_e = subprop_e.unionByName(eqp).unionByName(
-            eqp.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    data = df
-    extra = []
-    if RDFS_SUBPROP in present or OWL_EQPROP in present:
-        # rdfs5 closure; rdfs7: (s p o) + (p subPropertyOf q) => (s q o)
-        subprop = transitive_closure(subprop_e)
-        inf7 = (
-            df.join(F.broadcast(subprop), df["p"] == subprop["src"])
-            .select("s", F.col("dst").alias("p"), "o_lex", "o_dt")
-        )
-        data = df.unionByName(inf7)
-        extra.append(_as_triples(subprop, RDFS_SUBPROP))
-    type_parts = [data.filter(F.col("p") == RDF_TYPE)]
-    if RDFS_DOMAIN in present:
-        dom = _edges(df, RDFS_DOMAIN)
-        # rdfs2: (p domain c) + (s p o) => (s rdf:type c)
-        inf2 = (
-            data.join(F.broadcast(dom), data["p"] == dom["src"])
-            .select("s", F.lit(RDF_TYPE).alias("p"), F.col("dst").alias("o_lex"), F.lit("iri").alias("o_dt"))
-        )
-        extra.append(inf2)
-        type_parts.append(inf2)
-    if RDFS_RANGE in present:
-        rng = _edges(df, RDFS_RANGE)
-        # rdfs3: (p range c) + (s p o) => (o rdf:type c) — IRI objects only
-        inf3 = (
-            data.filter(F.col("o_dt") == "iri")
-            .join(F.broadcast(rng), data["p"] == rng["src"])
-            .select(
-                F.col("o_lex").alias("s"), F.lit(RDF_TYPE).alias("p"), F.col("dst").alias("o_lex"), F.lit("iri").alias("o_dt")
-            )
-        )
-        extra.append(inf3)
-        type_parts.append(inf3)
-    subclass_e = _edges(df, RDFS_SUBCLASS)
-    if OWL_EQCLASS in present:  # equivalentClass => mutual subClassOf
-        eqc = _edges(df, OWL_EQCLASS)
-        subclass_e = subclass_e.unionByName(eqc).unionByName(
-            eqc.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+    parts = [df]
+    subprop = subclass = None
+    if RDFS_SUBPROP in present or OWL_EQPROP in present:  # rdfs5 closure
+        subprop = transitive_closure(_mutual_edges(df, RDFS_SUBPROP, OWL_EQPROP, OWL_EQPROP in present))
+        parts.append(_as_triples(subprop, RDFS_SUBPROP))
+    if RDFS_SUBCLASS in present or OWL_EQCLASS in present:  # rdfs11 closure
+        subclass = transitive_closure(_mutual_edges(df, RDFS_SUBCLASS, OWL_EQCLASS, OWL_EQCLASS in present))
+        parts.append(_as_triples(subclass, RDFS_SUBCLASS))
+    dom = _edges(df, RDFS_DOMAIN) if RDFS_DOMAIN in present else None
+    rng = _edges(df, RDFS_RANGE) if RDFS_RANGE in present else None
+    parts += _fire_rules(df, subprop, dom, rng, subclass)
     if trivial_axioms:
-        # rdfs4a/4b: everything is an rdfs:Resource
-        extra.append(
-            df.select("s", F.lit(RDF_TYPE).alias("p"), F.lit(RDFS_RESOURCE).alias("o_lex"), F.lit("iri").alias("o_dt"))
-        )
-        extra.append(
-            df.filter(F.col("o_dt") == "iri").select(
-                F.col("o_lex").alias("s"), F.lit(RDF_TYPE).alias("p"),
-                F.lit(RDFS_RESOURCE).alias("o_lex"), F.lit("iri").alias("o_dt"),
-            )
-        )
-        # rdfs6: p rdf:type rdf:Property => p subPropertyOf p
-        props = df.filter((F.col("p") == RDF_TYPE) & (F.col("o_lex") == RDF_PROPERTY))
-        extra.append(props.select("s", F.lit(RDFS_SUBPROP).alias("p"), F.col("s").alias("o_lex"), F.lit("iri").alias("o_dt")))
-        # rdfs8/10: c rdf:type rdfs:Class => c subClassOf rdfs:Resource, c subClassOf c
-        classes = df.filter((F.col("p") == RDF_TYPE) & (F.col("o_lex") == RDFS_CLASS))
-        extra.append(classes.select("s", F.lit(RDFS_SUBCLASS).alias("p"), F.lit(RDFS_RESOURCE).alias("o_lex"), F.lit("iri").alias("o_dt")))
-        extra.append(classes.select("s", F.lit(RDFS_SUBCLASS).alias("p"), F.col("s").alias("o_lex"), F.lit("iri").alias("o_dt")))
-        # rdfs12: p rdf:type ContainerMembershipProperty => p subPropertyOf rdfs:member
-        cmp_ = df.filter((F.col("p") == RDF_TYPE) & (F.col("o_lex") == RDFS_CMP))
-        extra.append(cmp_.select("s", F.lit(RDFS_SUBPROP).alias("p"), F.lit(RDFS_MEMBER).alias("o_lex"), F.lit("iri").alias("o_dt")))
-        # rdfs13: d rdf:type rdfs:Datatype => d subClassOf rdfs:Literal
-        dts = df.filter((F.col("p") == RDF_TYPE) & (F.col("o_lex") == RDFS_DATATYPE))
-        extra.append(dts.select("s", F.lit(RDFS_SUBCLASS).alias("p"), F.lit(RDFS_LITERAL).alias("o_lex"), F.lit("iri").alias("o_dt")))
-    if RDFS_SUBCLASS in present or OWL_EQCLASS in present:
-        # rdfs11 closure; rdfs9: (x type c) + (c subClassOf d) => (x type d)
-        subclass = transitive_closure(subclass_e)
-        extra.append(_as_triples(subclass, RDFS_SUBCLASS))
-        types = type_parts[0]
-        for t in type_parts[1:]:
-            types = types.unionByName(t)
-        inf9 = (
-            types.join(F.broadcast(subclass), types["o_lex"] == subclass["src"])
-            .select("s", F.lit(RDF_TYPE).alias("p"), F.col("dst").alias("o_lex"), F.lit("iri").alias("o_dt"))
-        )
-        extra.append(inf9)
-    out = data
-    for e in extra:
-        out = out.unionByName(e)
-    return out.distinct()
+        parts += _trivial_axioms(df)
+    return _union(parts).distinct()
 
 
 def rdfs_closure(
@@ -464,32 +488,12 @@ def _schema_sides(closed: DataFrame):
     )
 
 
-def _fire_data_rules(delta: DataFrame, subprop, dom, rng, subclass) -> DataFrame:
-    """All inferences whose DATA premise is a `delta` row (schema premises
-    broadcast). Every RDFS rule has exactly one data premise and the schema
-    sides are pre-closed, so one stratified firing (rdfs7 → rdfs2/3 → rdfs9)
-    is complete — the same argument as rdfs_closure_pass, restricted to the
-    delta. Cost: delta-sized joins only; the corpus is never touched."""
-    inf7 = delta.join(F.broadcast(subprop), delta["p"] == subprop["src"]).select(
-        "s", F.col("dst").alias("p"), "o_lex", "o_dt"
-    )
-    data = delta.unionByName(inf7)
-    inf2 = data.join(F.broadcast(dom), data["p"] == dom["src"]).select(
-        "s", F.lit(RDF_TYPE).alias("p"), F.col("dst").alias("o_lex"), F.lit("iri").alias("o_dt")
-    )
-    inf3 = (
-        data.filter(F.col("o_dt") == "iri")
-        .join(F.broadcast(rng), data["p"] == rng["src"])
-        .select(
-            F.col("o_lex").alias("s"), F.lit(RDF_TYPE).alias("p"),
-            F.col("dst").alias("o_lex"), F.lit("iri").alias("o_dt"),
-        )
-    )
-    types = data.filter(F.col("p") == RDF_TYPE).unionByName(inf2).unionByName(inf3)
-    inf9 = types.join(F.broadcast(subclass), types["o_lex"] == subclass["src"]).select(
-        "s", F.lit(RDF_TYPE).alias("p"), F.col("dst").alias("o_lex"), F.lit("iri").alias("o_dt")
-    )
-    return inf7.unionByName(inf2).unionByName(inf3).unionByName(inf9).distinct()
+def _derivation_counts(delta: DataFrame, sides) -> DataFrame:
+    """(s, p, o_lex, o_dt, cnt): per head, the number of its distinct
+    derivations whose ONE explicit data premise is a ``delta`` row — every
+    (premise, schema edge, rule) combination contributes one."""
+    heads = _fire_rules(delta.withColumn("cnt", F.lit(1).cast("long")), *sides)
+    return _union(heads).groupBy("s", "p", "o_lex", "o_dt").agg(F.sum("cnt").alias("cnt"))
 
 
 def delta_assert(closed: DataFrame, delta: DataFrame) -> DataFrame:
@@ -497,8 +501,7 @@ def delta_assert(closed: DataFrame, delta: DataFrame) -> DataFrame:
     assertAll — forward-chain the focus store against the database): the new
     closure is closed ∪ Δ ∪ fire(Δ). Complete because every RDFS rule has
     one data premise; cost is Δ-sized joins plus the union, no corpus scan."""
-    inferred = _fire_data_rules(delta, *_schema_sides(closed))
-    return closed.unionByName(delta).unionByName(inferred).distinct()
+    return _union([closed, delta, *_fire_rules(delta, *_schema_sides(closed))]).distinct()
 
 
 def dred_retract(closed: DataFrame, explicit_new: DataFrame, delta: DataFrame) -> DataFrame:
@@ -522,7 +525,7 @@ def dred_retract(closed: DataFrame, explicit_new: DataFrame, delta: DataFrame) -
     sides = _schema_sides(closed)
     delta = delta.select("s", "p", "o_lex", "o_dt")
     suspects = _chk(
-        delta.unionByName(_fire_data_rules(delta, *sides))
+        _union([delta, *_fire_rules(delta, *sides)])
         .distinct()
         .join(explicit_new, on=["s", "p", "o_lex", "o_dt"], how="left_anti")
     )
@@ -541,7 +544,7 @@ def dred_retract(closed: DataFrame, explicit_new: DataFrame, delta: DataFrame) -
     rederived = None
     remaining = suspects
     for _ in range(4):  # strata depth bounds the cascade (7 → 2/3 → 9)
-        fired = _fire_data_rules(pool, *sides)
+        fired = _union(_fire_rules(pool, *sides)).distinct()
         won = _chk(fired.join(remaining, on=["s", "p", "o_lex", "o_dt"], how="left_semi"))
         if won.isEmpty():
             break
@@ -550,42 +553,6 @@ def dred_retract(closed: DataFrame, explicit_new: DataFrame, delta: DataFrame) -
         pool = won  # later rounds fire only from the re-derived delta
     out = candidate if rederived is None else candidate.unionByName(rederived).distinct()
     return out
-
-
-def _count_data_rules(delta: DataFrame, subprop, dom, rng, subclass) -> DataFrame:
-    """Multiplicity-preserving variant of `_fire_data_rules`: each input row
-    carries a `cnt` column and every (premise, schema-edge, rule) combination
-    contributes its premise's count to the head — so the result is the exact
-    number of distinct derivations of each head whose ONE explicit data
-    premise lies in `delta`. Same stratification (rdfs7 → rdfs2/3 → rdfs9),
-    same broadcast-schema joins; the only difference is sum(cnt) in place of
-    distinct."""
-    inf7 = delta.join(F.broadcast(subprop), delta["p"] == subprop["src"]).select(
-        "s", F.col("dst").alias("p"), "o_lex", "o_dt", "cnt"
-    )
-    data = delta.unionByName(inf7)
-    inf2 = data.join(F.broadcast(dom), data["p"] == dom["src"]).select(
-        "s", F.lit(RDF_TYPE).alias("p"), F.col("dst").alias("o_lex"),
-        F.lit("iri").alias("o_dt"), "cnt",
-    )
-    inf3 = (
-        data.filter(F.col("o_dt") == "iri")
-        .join(F.broadcast(rng), data["p"] == rng["src"])
-        .select(
-            F.col("o_lex").alias("s"), F.lit(RDF_TYPE).alias("p"),
-            F.col("dst").alias("o_lex"), F.lit("iri").alias("o_dt"), "cnt",
-        )
-    )
-    types = data.filter(F.col("p") == RDF_TYPE).unionByName(inf2).unionByName(inf3)
-    inf9 = types.join(F.broadcast(subclass), types["o_lex"] == subclass["src"]).select(
-        "s", F.lit(RDF_TYPE).alias("p"), F.col("dst").alias("o_lex"),
-        F.lit("iri").alias("o_dt"), "cnt",
-    )
-    return (
-        inf7.unionByName(inf2).unionByName(inf3).unionByName(inf9)
-        .groupBy("s", "p", "o_lex", "o_dt")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
 
 
 def build_support_counts(closed: DataFrame, explicit: DataFrame) -> DataFrame:
@@ -601,8 +568,7 @@ def build_support_counts(closed: DataFrame, explicit: DataFrame) -> DataFrame:
     Returns (s, p, o_lex, o_dt, cnt) over DERIVED triples only. The closure
     is explicit ∪ {counts where cnt > 0}; schema-sized by broadcast joins,
     one shuffle on the triple key for the sum."""
-    sides = _schema_sides(closed)
-    return _count_data_rules(explicit.withColumn("cnt", F.lit(1).cast("long")), *sides)
+    return _derivation_counts(explicit, _schema_sides(closed))
 
 
 def counting_retract(
@@ -622,8 +588,7 @@ def counting_retract(
     retraction untouched); schema deltas must take the recompute path
     (callers gate on `_touches_schema`, same as DRed). `delta` must be a
     subset of the old explicit set."""
-    sides = _schema_sides(closed)
-    dec = _count_data_rules(delta.withColumn("cnt", F.lit(1).cast("long")), *sides)
+    dec = _derivation_counts(delta, _schema_sides(closed))
     key = ["s", "p", "o_lex", "o_dt"]
     adjusted = counts.join(dec.withColumnRenamed("cnt", "dec"), on=key, how="left").withColumn(
         "cnt", F.col("cnt") - F.coalesce(F.col("dec"), F.lit(0))
@@ -638,30 +603,6 @@ def counting_retract(
         .join(alive, on=key, how="left_anti")
     )
     new_closed = closed.join(dropped, on=key, how="left_anti")
-    return new_counts, new_closed
-
-
-def counting_assert(
-    counts: DataFrame, delta: DataFrame, closed: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Insert-side of counting TM: increment by the derivation counts the
-    delta generates (linearity again). `delta` must contain only rows NOT
-    already explicit — re-inserting a counted row would double its
-    derivations (callers anti-join against the old explicit set).
-    Returns (new_counts, new_closed)."""
-    sides = _schema_sides(closed)
-    inc = _count_data_rules(delta.withColumn("cnt", F.lit(1).cast("long")), *sides)
-    key = ["s", "p", "o_lex", "o_dt"]
-    new_counts = (
-        counts.join(inc.withColumnRenamed("cnt", "inc"), on=key, how="full")
-        .withColumn(
-            "cnt", F.coalesce(F.col("cnt"), F.lit(0)) + F.coalesce(F.col("inc"), F.lit(0))
-        )
-        .drop("inc")
-    )
-    new_closed = (
-        closed.unionByName(delta).unionByName(new_counts.select(*key)).distinct()
-    )
     return new_counts, new_closed
 
 

@@ -19,6 +19,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 DT_IRI = "iri"
 DT_BNODE = "bnode"
 DT_STRING = "string"
@@ -27,6 +30,7 @@ DT_DOUBLE = "double"
 DT_DECIMAL = "decimal"
 DT_BOOLEAN = "boolean"
 DT_TIMESTAMP = "timestamp"
+DT_SID = "sid"  # an embedded-statement term in object position
 
 
 @dataclass(frozen=True)
@@ -71,3 +75,38 @@ def const_lex(x) -> str:
     if isinstance(x, Lit):
         return x.lex
     raise TypeError(f"not a constant term: {x!r}")
+
+
+# Statement ids (RDR / RDF-star embedded statements; ref: SidIV.java): the
+# lexical form ``<<s|p|o_lex|o_dt>>`` of the embedded statement's four
+# columns, deterministic so Spark and a SQL oracle compute identical ids.
+def sid_col(s="s", p="p", o_lex="o_lex", o_dt="o_dt") -> Column:
+    """Statement-id column of four term columns (names or Columns),
+    by default the current row's own (s, p, o_lex, o_dt)."""
+    return F.concat(F.lit("<<"), s, F.lit("|"), p, F.lit("|"), o_lex, F.lit("|"), o_dt, F.lit(">>"))
+
+
+def sid_lex(s: str, p: str, o_lex: str, o_dt: str) -> str:
+    """Statement id of one statement, as a python string (same form as
+    :func:`sid_col`)."""
+    return f"<<{s}|{p}|{o_lex}|{o_dt}>>"
+
+
+def is_sid(col: Column) -> Column:
+    """True where the lexical column holds a statement id."""
+    return col.startswith("<<") & col.endswith(">>") & col.contains("|")
+
+
+def sid_parts(col: Column) -> Column:
+    """The '|'-separated fields of a statement-id column as one array
+    column; :func:`sid_fields` reads the four terms off it."""
+    return F.split(col.substr(F.lit(3), F.length(col) - 4), r"\|")
+
+
+def sid_fields(parts: Column) -> tuple[Column, Column, Column, Column]:
+    """(s, p, o_lex, o_dt) of a :func:`sid_parts` array. The object lexical
+    re-joins the middle fields, so an embedded ``|`` (or a nested sid in
+    object position) survives; a nested sid in the embedded subject
+    position is not decodable."""
+    o_lex = F.array_join(F.slice(parts, 3, F.greatest(F.size(parts) - 3, F.lit(1))), "|")
+    return F.element_at(parts, 1), F.element_at(parts, 2), o_lex, F.element_at(parts, -1)

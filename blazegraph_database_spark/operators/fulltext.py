@@ -258,7 +258,6 @@ def search(
     max_rank: int | None = 20,
     min_rank: int = 1,
     scored_filter=None,
-    count_col: str | None = None,
     scoring: str = "tfidf",
 ) -> DataFrame:
     """Ranked keyword search over an inverted index.
@@ -349,14 +348,6 @@ def search(
         # hit-level filters (bds:matchExact/matchRegex) apply BEFORE rank
         # assignment and the maxRank cut, like every other hit filter
         scored = scored_filter(scored)
-    if count_col is not None:
-        # bds:rangeCount: the reference returns EXACTLY ONE solution
-        # binding only the count var — hits are NOT enumerated, and a
-        # zero-hit search still binds 0 (ref:
-        # SearchServiceFactory.java:649 SingleValueChunkedIterator instead
-        # of the hit iterator; ADVICE r4: the old per-hit crossJoin made
-        # count 0 unobservable). Count is total pre-maxRank hits.
-        return scored.agg(F.count(F.lit(1)).alias(count_col))
     if max_rank is None:
         # unranked hit SET (ref: searchInSearch uses DEFAULT_MAX_RANK =
         # Integer.MAX_VALUE — no rank cut, so no global sort either)

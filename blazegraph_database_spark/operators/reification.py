@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.model.terms import DT_SID, is_sid, sid_col, sid_fields, sid_parts
+
 RDF_TYPE = "rdf:type"
 RDF_STATEMENT = "rdf:Statement"
 RDF_SUBJECT = "rdf:subject"
@@ -51,10 +53,6 @@ _OBJ_SP = (RDF_OBJECT, _RDF_NS + "object")
 _SCAFFOLD_PREDS = list(_SUBJ_SP + _PRED_SP + _OBJ_SP)
 
 
-def _is_sid(col):
-    return col.startswith("<<") & col.endswith(">>") & col.contains("|")
-
-
 def _sid_node(col):
     """Deterministic statement-node label for a sid lexical (md5 keeps the
     identity SQL-recomputable)."""
@@ -62,18 +60,14 @@ def _sid_node(col):
 
 
 def _decode_sid(df: DataFrame, sid_col: str) -> DataFrame:
-    """Add i_s, i_p, i_o, i_odt decoded from the sid column. The object
-    lexical is re-joined from the middle fields, so an embedded ``|`` (or
-    a NESTED sid in object position) survives; a nested sid in the
-    embedded SUBJECT position is not decodable and is out of scope."""
-    inner = F.col(sid_col).substr(F.lit(3), F.length(sid_col) - 4)
-    parts = F.split(inner, r"\|")
-    n = F.size(parts)
+    """Add i_s, i_p, i_o, i_odt decoded from the sid column (see
+    :func:`~blazegraph_database_spark.model.terms.sid_fields`)."""
+    i_s, i_p, i_o, i_odt = sid_fields(sid_parts(F.col(sid_col)))
     return (
-        df.withColumn("i_s", F.element_at(parts, 1))
-        .withColumn("i_p", F.element_at(parts, 2))
-        .withColumn("i_odt", F.element_at(parts, -1))
-        .withColumn("i_o", F.array_join(F.slice(parts, 3, F.greatest(n - 3, F.lit(1))), "|"))
+        df.withColumn("i_s", i_s)
+        .withColumn("i_p", i_p)
+        .withColumn("i_odt", i_odt)
+        .withColumn("i_o", i_o)
     )
 
 
@@ -88,10 +82,10 @@ def reify(df: DataFrame) -> DataFrame:
     # the input feeds three filters and the sid-set distinct; truncate its
     # lineage once or a derived input's DAG re-expands per consumer
     df = df.localCheckpoint(eager=False)
-    subj_sid = df.filter(_is_sid(F.col("s")))
-    obj_sid = df.filter((F.col("o_dt") == "sid") & _is_sid(F.col("o_lex")))
+    subj_sid = df.filter(is_sid(F.col("s")))
+    obj_sid = df.filter((F.col("o_dt") == DT_SID) & is_sid(F.col("o_lex")))
     plain = df.filter(
-        ~_is_sid(F.col("s")) & ~((F.col("o_dt") == "sid") & _is_sid(F.col("o_lex")))
+        ~is_sid(F.col("s")) & ~((F.col("o_dt") == DT_SID) & is_sid(F.col("o_lex")))
     )
 
     sids = (
@@ -158,10 +152,7 @@ def unreify(df: DataFrame) -> DataFrame:
         )
         .withColumn(
             "sid",
-            F.concat(
-                F.lit("<<"), F.col("i_s"), F.lit("|"), F.col("i_p"), F.lit("|"),
-                F.col("i_o"), F.lit("|"), F.col("i_odt"), F.lit(">>"),
-            ),
+            sid_col("i_s", "i_p", "i_o", "i_odt"),
         )
         .select(F.col("s").alias("node"), "sid", "i_s", "i_p", "i_o", "i_odt")
         .localCheckpoint(eager=False)  # feeds inner + node set + two joins
@@ -192,13 +183,13 @@ def unreify(df: DataFrame) -> DataFrame:
         )
         .withColumn(
             "o_dt",
-            F.when(F.col("__sid_o").isNotNull() & (F.col("o_dt") == "bnode"), F.lit("sid")).otherwise(
+            F.when(F.col("__sid_o").isNotNull() & (F.col("o_dt") == "bnode"), F.lit(DT_SID)).otherwise(
                 F.col("o_dt")
             ),
         )
         .withColumn(
             "o_lex",
-            F.when(F.col("o_dt") == "sid", F.coalesce(F.col("__sid_o"), F.col("o_lex"))).otherwise(
+            F.when(F.col("o_dt") == DT_SID, F.coalesce(F.col("__sid_o"), F.col("o_lex"))).otherwise(
                 F.col("o_lex")
             ),
         )

@@ -294,10 +294,10 @@ def gas_service(store, patterns) -> DataFrame:
         # link weights through RDR statement metadata (ref: GASService
         # LINK_ATTR_TYPE — the reference resolves link attributes through
         # SIDs): `<<s linkType o>> <attr> w` rows keyed by the edge's sid
-        from blazegraph_database_spark.plans.compiler import sid_expr
+        from blazegraph_database_spark.model.terms import sid_col
 
         sids = src_df.select(
-            F.col("s").alias("src"), F.col("o_lex").alias("dst"), sid_expr().alias("_sid")
+            F.col("s").alias("src"), F.col("o_lex").alias("dst"), sid_col().alias("_sid")
         )
         # non-numeric annotations ERROR (a silent 1.0 default would mask
         # data damage); multiple annotations per edge collapse to MIN so
@@ -1653,43 +1653,48 @@ def bds_search(store, sps) -> DataFrame:
     else:
         idx, scoring = _store_literal_value_index(store, graph_scoped), "cosine"
     count_var = outs.get("rangeCount")
-    text_filter = _bds_text_filter(store, query, opts, doc_is_text=True)
-    hits = fulltext.search(
-        idx,
-        patterns,
-        scored_filter=text_filter,
-        count_col=count_var,
-        scoring=scoring,
-        **opts,
-    )
-    # rangeCount: ONE solution binding only the count (hits suppressed;
-    # zero-hit searches bind 0 — ref: SearchServiceFactory.java:649); other
-    # requested vars ride along UNBOUND so projections over them stay valid
     counted = count_var is not None
+    if counted:  # a count covers the whole pre-rank hit set
+        opts["max_rank"] = None
+    text_filter = _bds_text_filter(store, query, opts, doc_is_text=True)
+    hits = fulltext.search(idx, patterns, scored_filter=text_filter, scoring=scoring, **opts)
+    group = []
+    if graph_scoped:
+        # each hit once per graph holding the matched literal; the graph
+        # column keeps a private name until the final select, so a graph
+        # variable named like a hit column (?id, ?rank) cannot clash
+        pairs = (
+            store.df.filter(F.col("o_dt") == "string")
+            .select(F.col("g").alias("__bds_g"), F.col("o_lex").alias("id"))
+            .distinct()
+        )
+        if is_const(gterm):
+            pairs = pairs.filter(F.col("__bds_g") == const_lex(gterm)).drop("__bds_g")
+        else:
+            dn = store.dataset_named
+            if dn is not None:
+                pairs = pairs.filter(F.col("__bds_g").isin(list(dn)) if dn else F.lit(False))
+            group = ["__bds_g"]
+        hits = hits.join(pairs, on="id")
+    if counted:
+        # bds:rangeCount: ONE solution (per graph under GRAPH ?g) binding
+        # only the count — hits are not enumerated, and a zero-hit search
+        # (or a constant graph without hits) binds 0 (ref:
+        # SearchServiceFactory.java:649, a SingleValueChunkedIterator in
+        # place of the hit iterator); other requested vars ride along
+        # UNBOUND so projections over them stay valid
+        hits = hits.groupBy(*group).agg(F.count(F.lit(1)).alias(count_var))
     cols = [
         (var, F.lit(None).cast("string") if counted else F.col("id")),
         (outs.get("relevance"), F.lit(None).cast("double") if counted
          else F.col("score_ppm").cast("double") / 1_000_000),
         (outs.get("rank"), F.lit(None).cast("int") if counted else F.col("rank")),
     ]
-    out = hits.select(
-        *([count_var] if counted else []), *(c.alias(n) for n, c in cols if n is not None)
+    return hits.select(
+        *([count_var] if counted else []),
+        *(c.alias(n) for n, c in cols if n is not None),
+        *(F.col(g).alias(gterm.name) for g in group),
     )
-    if graph_scoped:
-        pairs = (
-            store.df.filter(F.col("o_dt") == "string")
-            .select("g", F.col("o_lex").alias(var))
-            .distinct()
-        )
-        if is_const(gterm):
-            pairs = pairs.filter(F.col("g") == const_lex(gterm)).drop("g")
-        else:
-            dn = store.dataset_named
-            if dn is not None:
-                pairs = pairs.filter(F.col("g").isin(list(dn)) if dn else F.lit(False))
-            pairs = pairs.withColumnRenamed("g", gterm.name)
-        out = out.join(pairs, on=var)
-    return out
 
 
 def bds_search_in_search(store, sps) -> DataFrame:

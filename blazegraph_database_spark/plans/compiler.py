@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from blazegraph_database_spark.model.store import TripleStore
-from blazegraph_database_spark.model.terms import Lit, Var, const_lex, is_const
+from blazegraph_database_spark.model.terms import DT_SID, Lit, Var, const_lex, is_const, sid_col
 from blazegraph_database_spark.operators import service
 from blazegraph_database_spark.operators.driver_tier import to_frame
 from blazegraph_database_spark.plans import algebra as A
@@ -511,19 +511,6 @@ def _pred_aliases(p: str) -> tuple[str, ...]:
     return (p,)
 
 
-DT_SID = "sid"  # datatype tag of an embedded-statement term in object position
-
-
-def sid_expr() -> F.Column:
-    """Statement-id lexical for the current row's (s,p,o_lex,o_dt) — the
-    RDR/RDF-star statement identifier (ref: SidIV.java). Deterministic string
-    encoding so both Spark and a SQL oracle compute identical ids."""
-    return F.concat(
-        F.lit("<<"), F.col("s"), F.lit("|"), F.col("p"), F.lit("|"),
-        F.col("o_lex"), F.lit("|"), F.col("o_dt"), F.lit(">>"),
-    )
-
-
 def _sid_inner_df(emb: "A.Emb", store: TripleStore, alias: str) -> DataFrame:
     """Compile the inner pattern of `<<s p o>>`: bindings for its vars plus
     the statement-id column `alias` used to join with the metadata pattern."""
@@ -536,7 +523,7 @@ def _sid_inner_df(emb: "A.Emb", store: TripleStore, alias: str) -> DataFrame:
                 conds.append(F.col("o_dt") == (pos.dt if isinstance(pos, Lit) else "iri"))
     for c in conds:
         df = df.filter(c)
-    sel, seen = [sid_expr().alias(alias)], {}
+    sel, seen = [sid_col().alias(alias)], {}
     for col, pos in (("s", emb.s), ("p", emb.p), ("o_lex", emb.o)):
         if isinstance(pos, Var):
             if pos.name in seen:
@@ -2648,10 +2635,7 @@ def instantiate_template(
                 eo, eodt = col_of(pos.o, "iri" if not isinstance(pos.o, Lit) else pos.o.dt)
                 if isinstance(pos.o, Lit):
                     eodt = F.lit(pos.o.dt)
-                sid = F.concat(
-                    F.lit("<<"), es, F.lit("|"), ep, F.lit("|"), eo, F.lit("|"), eodt, F.lit(">>")
-                )
-                return sid, F.lit(DT_SID)
+                return sid_col(es, ep, eo, eodt), F.lit(DT_SID)
             return F.lit(const_lex(pos)), F.lit(dt_if_const)
         sc, _ = col_of(s, "iri")
         pc, _ = col_of(p, "iri")

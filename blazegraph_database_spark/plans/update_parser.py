@@ -22,7 +22,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from blazegraph_database_spark.model.terms import Lit, Var
+from blazegraph_database_spark.model.terms import DT_SID, Lit, Var, sid_lex
 from blazegraph_database_spark.operators.driver_tier import to_frame
 from blazegraph_database_spark.plans import algebra as A
 from blazegraph_database_spark.plans.sparql_parser import Parser
@@ -354,7 +354,7 @@ def _ground_triples_df(spark: SparkSession, quads: list[tuple], with_graph: bool
             sl, _ = lex_dt(term.s)
             pl, _ = lex_dt(term.p)
             ol, odt = lex_dt(term.o)
-            return f"<<{sl}|{pl}|{ol}|{odt}>>", "sid"
+            return sid_lex(sl, pl, ol, odt), DT_SID
         return str(term), "iri"
 
     rows = []

@@ -302,7 +302,7 @@ def gas_service_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     <w> (1 + child%3)`), resolved via sid equi-join — the reference's
     link-attribute-through-SIDs mechanism, driver-checked against the same
     recursive-CTE oracle as the direct-API gas_sssp_tree."""
-    from blazegraph_database_spark.plans.compiler import sid_expr
+    from blazegraph_database_spark.model.terms import sid_col
     from blazegraph_database_spark.plans.sparql_parser import run_sparql
 
     edges = _tree_edges(spark, sf_dir)
@@ -313,7 +313,7 @@ def gas_service_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("iri").alias("o_dt"),
     )
     meta = base.select(
-        sid_expr().alias("s"),
+        sid_col().alias("s"),
         F.lit("w").alias("p"),
         (F.lit(1) + F.col("o_lex").cast("long") % 3).cast("double").cast("string").alias("o_lex"),
         F.lit("double").alias("o_dt"),

@@ -1124,14 +1124,17 @@ class SparqlEndpoint:
             "com.bigdata.rdf.store.AbstractTripleStore.quads":
                 str("g" in store.df.columns).lower(),
             "com.bigdata.rdf.sail.truthMaintenance":
-                str(getattr(us, "tm_strategy", None) is not None).lower(),
+                str(us.tm_enabled).lower(),
             "commitPoints": str(len(us.versions)),
         }
         return 200, "application/xml", self._render_properties_xml(entries)
 
     def counters(self, ns: str) -> tuple[int, str, bytes]:
         stats = self.namespaces[ns].current.stats()
-        doc = {p: {"count": st.count, "distinct_s": st.distinct_s, "distinct_o": st.distinct_o} for p, st in stats.items()}
+        doc = {
+            p: {"count": st.count, "distinct_s": st.n_distinct_s, "distinct_o": st.n_distinct_o}
+            for p, st in stats.items()
+        }
         return 200, JSON, json.dumps(doc).encode()
 
     # --------------------------------------------------------- dispatch --

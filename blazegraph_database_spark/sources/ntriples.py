@@ -6,8 +6,8 @@ org.openrdf.rio N-Triples/Turtle parsers via DataLoader.java).
 Spark-first: N-Triples/N-Quads are line-oriented, so parsing is a
 `spark.read.text` scan + JVM-side regexp extraction — fully distributed,
 no Python in the loop, linear in input splits (this is the 100 TB bulk-load
-path). The Turtle subset needs prefix state, which is collected once from
-the (tiny) @prefix header and applied distributed via mapInPandas.
+path). Turtle needs document-scoped prefix state and is read by
+sources.rdf_formats.read_turtle.
 
 Lang-tagged literals carry o_dt = 'lang:<tag>'; typed literals map xsd types
 onto the engine's dt tags (long/double/boolean/timestamp/string).
@@ -16,12 +16,11 @@ onto the engine's dt tags (long/double/boolean/timestamp/string).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from blazegraph_database_spark.model.terms import DT_SID, is_sid, sid_col, sid_fields, sid_parts
 
 # term = IRI | bnode ; object additionally literal with optional @lang / ^^type
 _SUBJ = r"(<[^>]*>|_:\S+)"
@@ -349,16 +348,12 @@ def read_ntriples_star(spark: SparkSession, path: str) -> DataFrame:
         inner_s.alias("s"), inner_p.alias("p"),
         F.col("_io").alias("o_lex"), F.col("_iodt").alias("o_dt"),
     )
-    sid = F.concat(
-        F.lit("<<"), F.col("s"), F.lit("|"), F.col("p"), F.lit("|"),
-        F.col("o_lex"), F.lit("|"), F.col("o_dt"), F.lit(">>"),
-    )
     meta = star_g.select(
         inner_s.alias("s"), inner_p.alias("p"),
         F.col("_io").alias("o_lex"), F.col("_iodt").alias("o_dt"),
         meta_p.alias("_mp"), F.col("_mo"), F.col("_mdt"),
     ).select(
-        sid.alias("s"), F.col("_mp").alias("p"), F.col("_mo").alias("o_lex"), F.col("_mdt").alias("o_dt")
+        sid_col().alias("s"), F.col("_mp").alias("p"), F.col("_mo").alias("o_lex"), F.col("_mdt").alias("o_dt")
     )
 
     # object-position star lines: `s p <<s2 p2 o2>> .` — inner statement
@@ -382,11 +377,8 @@ def read_ntriples_star(spark: SparkSession, path: str) -> DataFrame:
     )
     obj_meta = star_og.select(
         out_s.alias("s"), out_p.alias("p"),
-        F.concat(
-            F.lit("<<"), oin_s, F.lit("|"), oin_p, F.lit("|"),
-            F.col("_oo"), F.lit("|"), F.col("_oodt"), F.lit(">>"),
-        ).alias("o_lex"),
-        F.lit("sid").alias("o_dt"),
+        sid_col(oin_s, oin_p, "_oo", "_oodt").alias("o_lex"),
+        F.lit(DT_SID).alias("o_dt"),
     )
     return (
         plain.unionByName(inner)
@@ -447,20 +439,11 @@ def _nt_sid(col: F.Column) -> F.Column:
     `<<s|p|o_lex|o_dt>>` internal encoding; one nesting level — a sid
     whose embedded OBJECT is itself a sid re-joins textually from the
     middle fields but is not recursively rendered)."""
-    inner = col.substr(F.lit(3), F.length(col) - 4)
-    parts = F.split(inner, r"\|")
-    i_s = F.element_at(parts, 1)
-    i_p = F.element_at(parts, 2)
-    i_odt = F.element_at(parts, -1)
-    i_o = F.array_join(F.slice(parts, 3, F.greatest(F.size(parts) - 3, F.lit(1))), "|")
+    i_s, i_p, i_o, i_odt = sid_fields(sid_parts(col))
     subj = F.when(i_s.startswith("_:"), i_s).otherwise(F.concat(F.lit("<"), i_s, F.lit(">")))
     return F.concat(
         F.lit("<< "), subj, F.lit(" <"), i_p, F.lit("> "), _nt_obj(i_o, i_odt), F.lit(" >>")
     )
-
-
-def _is_sid_lex(col: F.Column) -> F.Column:
-    return col.startswith("<<") & col.endswith(">>") & col.contains("|")
 
 
 def nt_line(df: DataFrame) -> F.Column:
@@ -469,11 +452,11 @@ def nt_line(df: DataFrame) -> F.Column:
     statements — the writer-side of BigdataNTriplesParser's RDR mode, so
     an RDR store exports losslessly through write_ntriples and reloads
     via read_ntriples_star."""
-    obj = F.when(F.col("o_dt") == "sid", _nt_sid(F.col("o_lex"))).otherwise(
+    obj = F.when(F.col("o_dt") == DT_SID, _nt_sid(F.col("o_lex"))).otherwise(
         _nt_obj(F.col("o_lex"), F.col("o_dt"))
     )
     subj = (
-        F.when(_is_sid_lex(F.col("s")), _nt_sid(F.col("s")))
+        F.when(is_sid(F.col("s")), _nt_sid(F.col("s")))
         .when(F.col("s").startswith("_:"), F.col("s"))  # blank-node subject
         .otherwise(F.concat(F.lit("<"), F.col("s"), F.lit(">")))
     )
@@ -530,17 +513,10 @@ def _nt_sid_stage(df: DataFrame, col: str, out: str) -> DataFrame:
     (NULL for non-sid lexicals), staged like _nt_obj_stage."""
     t = f"__nt_{out}_"
     c = F.col(col)
-    inner = F.when(_is_sid_lex(c), c.substr(F.lit(3), F.length(c) - 4))
-    df = df.select("*", F.split(inner, r"\|").alias(t + "parts"))
-    parts = F.col(t + "parts")
+    df = df.select("*", sid_parts(F.when(is_sid(c), c)).alias(t + "parts"))
+    i_s, i_p, i_o, i_odt = sid_fields(F.col(t + "parts"))
     df = df.select(
-        "*",
-        F.element_at(parts, 1).alias(t + "s"),
-        F.element_at(parts, 2).alias(t + "p"),
-        F.element_at(parts, -1).alias(t + "odt"),
-        F.array_join(
-            F.slice(parts, 3, F.greatest(F.size(parts) - 3, F.lit(1))), "|"
-        ).alias(t + "o"),
+        "*", i_s.alias(t + "s"), i_p.alias(t + "p"), i_odt.alias(t + "odt"), i_o.alias(t + "o")
     )
     df = _nt_obj_stage(df, t + "o", t + "odt", t + "oterm")
     i_s = F.col(t + "s")
@@ -567,12 +543,12 @@ def nt_lines(df: DataFrame) -> DataFrame:
     out = _nt_obj_stage(out, "o_lex", "o_dt", "__nt_oplain")
     out = _nt_sid_stage(out, "o_lex", "__nt_osid")
     out = _nt_sid_stage(out, "s", "__nt_ssid")
-    obj = F.when(F.col("o_dt") == "sid", F.col("__nt_osid")).otherwise(
+    obj = F.when(F.col("o_dt") == DT_SID, F.col("__nt_osid")).otherwise(
         F.col("__nt_oplain")
     )
     s = F.col("s")
     subj = (
-        F.when(_is_sid_lex(s), F.col("__nt_ssid"))
+        F.when(is_sid(s), F.col("__nt_ssid"))
         .when(s.startswith("_:"), s)
         .otherwise(F.concat(F.lit("<"), s, F.lit(">")))
     )
@@ -584,70 +560,3 @@ def nt_lines(df: DataFrame) -> DataFrame:
 def write_ntriples(df: DataFrame, path: str) -> None:
     """Serialize (s,p,o_lex,o_dt) → N-Triples text files."""
     nt_lines(df).write.mode("overwrite").text(path)
-
-
-def read_turtle_subset(spark: SparkSession, path: str) -> DataFrame:
-    """Turtle subset: @prefix declarations + simple `s p o .` statements
-    (plus the `a` keyword). Prefixes are a tiny header — collected once,
-    closed over by an Arrow-batched mapInPandas parser for the body."""
-    lines = spark.read.text(path)
-    prefix_rows = (
-        lines.filter(F.trim(F.col("value")).startswith("@prefix"))
-        .select(
-            F.regexp_extract("value", r"@prefix\s+([A-Za-z0-9_-]*):\s*<([^>]*)>", 1).alias("pfx"),
-            F.regexp_extract("value", r"@prefix\s+([A-Za-z0-9_-]*):\s*<([^>]*)>", 2).alias("iri"),
-        )
-        .collect()
-    )
-    prefixes = {r["pfx"]: r["iri"] for r in prefix_rows}
-
-    import re
-
-    term_re = re.compile(
-        r'(<[^>]*>|_:\S+|"(?:[^"\\]|\\.)*"(?:@[A-Za-z0-9-]+|\^\^\S+)?|[A-Za-z0-9_-]*:[A-Za-z0-9_.-]+|a)'
-    )
-
-    def expand(tok: str) -> tuple[str, str]:
-        if tok == "a":
-            return "http://www.w3.org/1999/02/22-rdf-syntax-ns#type", "iri"
-        if tok.startswith("<"):
-            return tok[1:-1], "iri"
-        if tok.startswith("_:"):
-            return tok, "iri"
-        if tok.startswith('"'):
-            m = re.match(r'"((?:[^"\\]|\\.)*)"(?:@([A-Za-z0-9-]+)|\^\^(\S+))?', tok)
-            lex = unescape_literal(m.group(1))
-            if m.group(2):
-                return lex, f"lang:{m.group(2)}"
-            if m.group(3):
-                dt_iri = m.group(3)
-                if dt_iri.startswith("<"):
-                    dt_iri = dt_iri[1:-1]
-                elif ":" in dt_iri:
-                    pfx, local = dt_iri.split(":", 1)
-                    dt_iri = prefixes.get(pfx, pfx + ":") + local
-                # unknown (and identity-family: sized-int/float) datatype
-                # IRIs keep dt:<iri> term identity, same as typed_lex
-                return lex, _XSD_DT.get(dt_iri) or f"dt:{dt_iri}"
-            return lex, "string"
-        pfx, local = tok.split(":", 1)
-        return prefixes.get(pfx, pfx + ":") + local, "iri"
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"s": [], "p": [], "o_lex": [], "o_dt": []}
-            for line in pdf["value"]:
-                t = line.strip()
-                if not t or t.startswith("#") or t.startswith("@prefix") or not t.endswith("."):
-                    continue
-                toks = term_re.findall(t[:-1].strip())
-                if len(toks) != 3:
-                    continue
-                (s, _), (p, _), (o, odt) = expand(toks[0]), expand(toks[1]), expand(toks[2])
-                out["s"].append(s)
-                out["p"].append(p)
-                out["o_lex"].append(o)
-                out["o_dt"].append(odt)
-            yield pd.DataFrame(out)
-
-    return lines.mapInPandas(parse, "s string, p string, o_lex string, o_dt string")

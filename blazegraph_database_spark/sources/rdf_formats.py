@@ -24,6 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from blazegraph_database_spark.model.terms import DT_SID, sid_lex
 from blazegraph_database_spark.sources.ntriples import _XSD_DT, typed_lex, unescape_literal
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -445,7 +446,7 @@ class _TurtleParser:
                 raise SyntaxError("turtle: expected '>>' closing an embedded statement")
             self.next()
             self.out.append((es, ep, eo, eodt))
-            return f"<<{es}|{ep}|{eo}|{eodt}>>", "sid"
+            return sid_lex(es, ep, eo, eodt), DT_SID
         if (kind, text) == ("OP", "["):
             bn = self._new_bnode()
             if self.peek() != ("OP", "]"):  # [ p o ; ... ]

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from blazegraph_database_spark.model.terms import DT_SID, is_sid, sid_fields, sid_parts
+
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 # engine dt tag → XSD datatype IRI (inverse of the readers' _XSD_DT)
@@ -69,10 +71,6 @@ def _pname_or_iri(col, prefixes: dict[str, str]):
             F.concat(F.lit(pfx + ":"), local),
         ).otherwise(out)
     return F.when(col.startswith("_:"), col).otherwise(out)
-
-
-def _is_sid_lex(col):
-    return col.startswith("<<") & col.endswith(">>") & col.contains("|")
 
 
 def _ttl_term_stage(df: DataFrame, lex: str, dt: str, out: str, prefixes) -> DataFrame:
@@ -125,17 +123,10 @@ def _ttl_sid_stage(df: DataFrame, col: str, out: str, prefixes) -> DataFrame:
     level), NULL for non-sid lexicals. Staged like _ttl_term_stage."""
     t = f"__w_{out}_"
     c = F.col(col)
-    inner = F.when(_is_sid_lex(c), c.substr(F.lit(3), F.length(c) - 4))
-    df = df.select("*", F.split(inner, r"\|").alias(t + "parts"))
-    parts = F.col(t + "parts")
+    df = df.select("*", sid_parts(F.when(is_sid(c), c)).alias(t + "parts"))
+    i_s, i_p, i_o, i_odt = sid_fields(F.col(t + "parts"))
     df = df.select(
-        "*",
-        F.element_at(parts, 1).alias(t + "s"),
-        F.element_at(parts, 2).alias(t + "p"),
-        F.element_at(parts, -1).alias(t + "odt"),
-        F.array_join(
-            F.slice(parts, 3, F.greatest(F.size(parts) - 3, F.lit(1))), "|"
-        ).alias(t + "o"),
+        "*", i_s.alias(t + "s"), i_p.alias(t + "p"), i_odt.alias(t + "odt"), i_o.alias(t + "o")
     )
     df = df.select(
         "*",
@@ -166,7 +157,7 @@ def _ttl_subject_blocks(df: DataFrame, prefixes: dict[str, str], extra_group=())
     po = F.concat(
         F.col("__w_ppn"),
         F.lit(" "),
-        F.when(F.col("o_dt") == "sid", F.col("__w_osid")).otherwise(
+        F.when(F.col("o_dt") == DT_SID, F.col("__w_osid")).otherwise(
             F.col("__w_oplain")
         ),
     ).alias("po")
@@ -182,7 +173,7 @@ def _ttl_subject_blocks(df: DataFrame, prefixes: dict[str, str], extra_group=())
     return agg.select(
         *extra_group,
         F.concat(
-            F.when(_is_sid_lex(F.col("s")), F.col("__w_ssid")).otherwise(
+            F.when(is_sid(F.col("s")), F.col("__w_ssid")).otherwise(
                 F.col("__w_spn")
             ),
             F.lit(" "),

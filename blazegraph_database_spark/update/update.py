@@ -44,6 +44,7 @@ from blazegraph_database_spark.model.store import (
     key_join,
     key_rows,
 )
+from blazegraph_database_spark.model.terms import sid_col
 from blazegraph_database_spark.operators import driver_tier
 from blazegraph_database_spark.plans.compiler import evaluate, instantiate_template
 
@@ -123,11 +124,6 @@ class UpdatableStore:
     # precondition for the delta maintenance paths (delta_assert /
     # dred_retract); the first *_with_closure call closes from scratch
     _closed_valid: bool = False
-    # retraction strategy: "dred" (delete/re-derive, no side state) or
-    # "counting" (per-triple derivation counts maintained across updates —
-    # decrement-only deletes, right when deletes are frequent)
-    tm_strategy: str = "dred"
-    _counts: DataFrame | None = None
     # ENABLE/DISABLE ENTAILMENTS verb state (ref: ast/EnableEntailments.java
     # — setTruthMaintenance on the SAIL connection): when True, apply_update
     # routes data ops through the *_with_closure truth-maintenance paths
@@ -158,8 +154,6 @@ class UpdatableStore:
             versions=list(self.versions),
             _explicit=self._explicit,
             _closed_valid=self._closed_valid,
-            tm_strategy=self.tm_strategy,
-            _counts=self._counts,
             tm_enabled=self.tm_enabled,
             _inferred=self._inferred,
             solutions=self.solutions,
@@ -227,12 +221,8 @@ class UpdatableStore:
         the commit time — same role, and this engine's commit points ARE
         its version ordinals)."""
         log = self.changelog(since, until)
-        sid = F.concat(
-            F.lit("<<"), F.col("s"), F.lit("|"), F.col("p"), F.lit("|"),
-            F.col("o_lex"), F.lit("|"), F.col("o_dt"), F.lit(">>"),
-        )
         return log.select(
-            sid.alias("s"),
+            sid_col().alias("s"),
             F.concat(F.lit("blaze:history:"), F.col("action")).alias("p"),
             F.col("commit").cast("string").alias("o_lex"),
             F.lit("long").alias("o_dt"),
@@ -351,9 +341,9 @@ class UpdatableStore:
         enters the history.
 
         A commit invalidates the closure bookkeeping ("current == closure of
-        _explicit", _explicit itself, the counts and the Explicit/Inferred
-        partition): the *_with_closure paths and the DATA verbs re-set what
-        they maintain after their own commit, so interleaved plain verbs
+        _explicit", _explicit itself and the Explicit/Inferred partition):
+        the *_with_closure paths and the DATA verbs re-set what they
+        maintain after their own commit, so interleaved plain verbs
         (delete_insert_where, graph ops, load) force the next closure call
         to re-seed from the live store, and DROP ENTAILMENTS degrades to a
         safe no-op instead of deleting asserted data. ``bookkeeping`` (a
@@ -362,7 +352,7 @@ class UpdatableStore:
         self.versions.append(version)
         src = bookkeeping if bookkeeping is not None else UpdatableStore()
         self._closed_valid, self._explicit = src._closed_valid, src._explicit
-        self._counts, self._inferred = src._counts, src._inferred
+        self._inferred = src._inferred
         return version
 
     def _compact(self, df: DataFrame) -> TripleStore:
@@ -442,12 +432,12 @@ class UpdatableStore:
             # CREATE/DROP ENTAILMENTS must restore it too, or a later DROP
             # anti-joins against a stale (or cleared) inferred set (r8;
             # the entailments_rollback oracle pins this)
-            saved = (self._explicit, self._closed_valid, self._counts, self._inferred)
+            saved = (self._explicit, self._closed_valid, self._inferred)
             try:
                 yield self
             except Exception:
                 del self.versions[base:]
-                self._explicit, self._closed_valid, self._counts, self._inferred = saved
+                self._explicit, self._closed_valid, self._inferred = saved
                 raise
             else:
                 if len(self.versions) > base + 1:
@@ -652,6 +642,19 @@ class UpdatableStore:
 
         return bool(triples.filter(F.col("p").isin(*SCHEMA_PREDS)).take(1))
 
+    def _commit_closure(self, closed: DataFrame, explicit: DataFrame) -> TripleStore:
+        """Commit ``closed`` as the closure of ``explicit`` — the one tail of
+        every closure path: compact, record the explicit set and that the
+        current version is its closure, and rebuild the Inferred partition
+        as the closure minus the explicit set."""
+        st = self._compact(closed)
+        self._explicit = explicit
+        self._closed_valid = True
+        self._inferred = st.df.join(
+            explicit.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti"
+        ).localCheckpoint(eager=False)
+        return st
+
     def insert_with_closure(self, triples: DataFrame) -> TripleStore:
         """Incremental RDFS maintenance on insert (ref: TruthMaintenance.java
         assertAll): data-only deltas forward-chain against the closed store —
@@ -662,40 +665,17 @@ class UpdatableStore:
         from blazegraph_database_spark.inference.rdfs import delta_assert, rdfs_closure
 
         delta = triples.select(*TRIPLE_COLS)
-        explicit_old = self._explicit if self._explicit is not None else self.current.df
         explicit = (
-            explicit_old.unionByName(delta, allowMissingColumns=True)
+            (self._explicit if self._explicit is not None else self.current.df)
+            .unionByName(delta, allowMissingColumns=True)
             .distinct()
             .localCheckpoint(eager=False)
         )
-        new_counts = None
         if self._closed_valid and not self._touches_schema(delta):
-            if self.tm_strategy == "counting" and self._counts is not None:
-                from blazegraph_database_spark.inference.rdfs import counting_assert
-
-                # linearity: only GENUINELY-new rows may increment — a
-                # re-insert of an already-explicit triple must not create
-                # phantom support that would survive its later retraction
-                fresh = delta.join(
-                    explicit_old.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti"
-                )
-                closed = self.current.df.select(*TRIPLE_COLS).localCheckpoint(eager=True)
-                new_counts, closed_df = counting_assert(self._counts, fresh, closed)
-            else:
-                closed_df = delta_assert(self.current.df.select(*TRIPLE_COLS), delta)
+            closed = delta_assert(self.current.df.select(*TRIPLE_COLS), delta)
         else:
-            closed_df = rdfs_closure(TripleStore(explicit)).df
-        st = self._compact(closed_df)
-        self._explicit = explicit
-        self._closed_valid = True
-        self._inferred = st.df.join(
-            explicit.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti"
-        ).localCheckpoint(eager=False)
-        if new_counts is not None:
-            # eager: the counts table is closure-sized and its lineage chains
-            # across updates — truncate now or plans grow multiplicatively
-            self._counts = new_counts.localCheckpoint(eager=True)
-        return st
+            closed = rdfs_closure(TripleStore(explicit)).df
+        return self._commit_closure(closed, explicit)
 
     def create_entailments(self) -> TripleStore:
         """CREATE ENTAILMENTS (ref: ast/CreateEntailments.java;
@@ -713,14 +693,7 @@ class UpdatableStore:
         explicit = (
             self._explicit if self._explicit is not None else self.current.df
         ).select(*TRIPLE_COLS)
-        closed = rdfs_closure(TripleStore(explicit)).df
-        st = self._compact(closed)
-        self._explicit = explicit
-        self._closed_valid = True
-        self._inferred = st.df.join(
-            explicit, on=TRIPLE_COLS, how="left_anti"
-        ).localCheckpoint(eager=False)
-        return st
+        return self._commit_closure(rdfs_closure(TripleStore(explicit)).df, explicit)
 
     def drop_entailments(self) -> TripleStore:
         """DROP ENTAILMENTS (ref: ast/DropEntailments.java;
@@ -738,7 +711,6 @@ class UpdatableStore:
         self._explicit = st.df
         self._inferred = None
         self._closed_valid = False
-        self._counts = None
         return st
 
     def delete_with_closure(self, triples: DataFrame) -> TripleStore:
@@ -750,55 +722,16 @@ class UpdatableStore:
         the closed store — delete cost scales with the delta, not with a
         closure recompute. Schema deltas (rare, and schema-sized) fall back
         to recompute-from-explicit."""
-        from blazegraph_database_spark.inference.rdfs import (
-            build_support_counts,
-            counting_retract,
-            dred_retract,
-            rdfs_closure,
-        )
+        from blazegraph_database_spark.inference.rdfs import dred_retract, rdfs_closure
 
         delta = triples.select(*TRIPLE_COLS)
-        was_closed = self._closed_valid
-        explicit_old = self._explicit if self._explicit is not None else self.current.df
-        explicit = explicit_old.join(
-            F.broadcast(delta), on=TRIPLE_COLS, how="left_anti"
-        ).localCheckpoint(eager=False)
-        new_counts = None
-        if was_closed and not self._touches_schema(delta):
-            closed = self.current.df.select(*TRIPLE_COLS)
-            if self.tm_strategy == "counting":
-                # pin the closure first: the counting pipeline references it
-                # from every rule branch, and an unpinned post-update plan
-                # re-expands once per reference (driver plan blow-up)
-                closed = closed.localCheckpoint(eager=True)
-                # counts build lazily from the PRE-delete explicit set (the
-                # linearity precondition: delta ⊆ counted explicit rows),
-                # then persist across updates so later deletes are
-                # decrement-only
-                counts = (
-                    self._counts
-                    if self._counts is not None
-                    else build_support_counts(closed, explicit_old.select(*TRIPLE_COLS))
-                )
-                # linearity: only rows that WERE explicit may decrement — a
-                # no-op delete of a never-asserted triple must not steal
-                # support from inferences other premises still derive
-                eff = delta.join(
-                    explicit_old.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_semi"
-                )
-                new_counts, closed_df = counting_retract(counts, explicit, eff, closed)
-            else:
-                closed_df = dred_retract(closed, explicit, delta)
+        explicit = (
+            (self._explicit if self._explicit is not None else self.current.df)
+            .join(F.broadcast(delta), on=TRIPLE_COLS, how="left_anti")
+            .localCheckpoint(eager=False)
+        )
+        if self._closed_valid and not self._touches_schema(delta):
+            closed = dred_retract(self.current.df.select(*TRIPLE_COLS), explicit, delta)
         else:
-            closed_df = rdfs_closure(TripleStore(explicit)).df
-        st = self._compact(closed_df)
-        self._explicit = explicit
-        self._closed_valid = True
-        self._inferred = st.df.join(
-            explicit.select(*TRIPLE_COLS), on=TRIPLE_COLS, how="left_anti"
-        ).localCheckpoint(eager=False)
-        if new_counts is not None:
-            # eager: the counts table is closure-sized and its lineage chains
-            # across updates — truncate now or plans grow multiplicatively
-            self._counts = new_counts.localCheckpoint(eager=True)
-        return st
+            closed = rdfs_closure(TripleStore(explicit)).df
+        return self._commit_closure(closed, explicit)

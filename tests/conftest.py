@@ -23,10 +23,10 @@ SLOW_TESTS = (
     # geospatial brute-force parity
     "test_knn_equals_bruteforce_and_expands_bands",
     # truth-maintenance recompute-parity sweeps
-    "test_counting_strategy_store",
+    "test_tm_store_chain_matches_recompute",
     "test_data_delete_never_recomputes_closure",
     "test_delete_with_closure_matches_full_recompute",
-    "test_counting_reinsert_no_phantom_support",
+    "test_tm_reinsert_then_delete_drops_inferences",
     # RTO fixture sweeps
     "test_rto_bar_q1",
     "test_rto_lubm_queries",
@@ -35,6 +35,7 @@ SLOW_TESTS = (
     "test_id_join_path_equals_lexical_path",
     "test_fuzzy_decontaminate_matches_bruteforce",
     "test_tc_retract_equals_recompute_random",
+    "test_rdfs_tm_equals_recompute_random",
     "test_native_typed_path_equals_lexical_random",
     # reference geo manifest families (the slow configurations; the
     # TestGeoSpatialDefaults family minus defaults05 stays in)

@@ -285,3 +285,41 @@ def test_bds_prefix_match_and_search_timeout(spark):
     """
     got = {r["lit"] for r in run_sparql(st, q).collect()}
     assert got == {"sparkling water fountain", "spark plug"}
+
+
+def test_bds_rangecount_under_graph(spark):
+    """bds:rangeCount inside GRAPH ?g binds one count per named graph that
+    holds hits, with ?g bound; GRAPH <g1> and the ungraphed form count the
+    same hits."""
+    from blazegraph_database_spark.model.store import TripleStore
+    from blazegraph_database_spark.plans.sparql_parser import run_sparql
+
+    rows = [
+        ("d1", "txt", "spark engine", "string", "g1"),
+        ("d2", "txt", "spark query", "string", "g1"),
+        ("d3", "txt", "duck engine", "string", "g2"),
+    ]
+    st = TripleStore(
+        spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string, g string")
+    )
+    prefix = "PREFIX bds: <http://www.bigdata.com/rdf/search#> "
+    block = '?lit bds:search "spark" . ?lit bds:rangeCount ?n'
+
+    def run(q):
+        return sorted(map(tuple, run_sparql(st, prefix + q).collect()))
+
+    assert run("SELECT ?g ?n WHERE { GRAPH ?g { %s } }" % block) == [("g1", 2)]
+    assert run("SELECT ?n WHERE { GRAPH <g1> { %s } }" % block) == [(2,)]
+    assert run("SELECT ?n WHERE { %s }" % block) == [(2,)]
+    # a graph variable named like an internal hit column
+    assert run("SELECT ?id ?n WHERE { GRAPH ?id { %s } }" % block) == [("g1", 2)]
+    assert run("SELECT ?rank ?n WHERE { GRAPH ?rank { %s } }" % block) == [("g1", 2)]
+    hits = '?lit bds:search "spark" . ?lit bds:rank ?r . ?lit bds:relevance ?score_ppm'
+    assert run("SELECT ?id ?lit ?r WHERE { GRAPH ?id { %s } }" % hits) == [
+        ("g1", "spark engine", 1),
+        ("g1", "spark query", 2),
+    ]
+    assert run("SELECT ?rank ?lit WHERE { GRAPH ?rank { %s } }" % hits) == [
+        ("g1", "spark engine"),
+        ("g1", "spark query"),
+    ]

@@ -440,69 +440,57 @@ def test_counting_retract_shared_support_survives(spark):
     assert row and row[0]["cnt"] == 1
 
 
-def test_counting_assert_matches_full_recompute(spark, onto):
-    explicit = onto.df
-    closed = rdfs.rdfs_closure(onto).df
-    counts = rdfs.build_support_counts(closed, explicit)
-    delta = spark.createDataFrame(
-        [("bob", "hasPet", "felix", "iri"), ("felix", "rdf:type", "Mammal", "iri")],
-        "s string, p string, o_lex string, o_dt string",
-    )
-    explicit_new = explicit.unionByName(delta)
-    _, new_closed = rdfs.counting_assert(counts, delta, closed)
-    recomputed = rdfs.rdfs_closure(TripleStore(explicit_new)).df
-    assert _closure_set(new_closed) == _closure_set(recomputed)
-
-
-def test_counting_strategy_store(spark, onto):
-    """UpdatableStore(tm_strategy='counting'): insert→delete→delete chain
-    keeps the closure identical to DRed / full recompute, with the counts
-    table maintained across calls."""
-    dred = UpdatableStore.from_store(TripleStore(onto.df))
-    cnt = UpdatableStore.from_store(TripleStore(onto.df))
-    cnt.tm_strategy = "counting"
+def test_tm_store_chain_matches_recompute(spark, onto):
+    """UpdatableStore truth maintenance: an insert→delete→delete chain keeps
+    the closure equal to a from-scratch closure of the explicit set after
+    every step, and a rolled-back delete restores the bookkeeping."""
+    us = UpdatableStore.from_store(TripleStore(onto.df))
     empty = spark.createDataFrame([], "s string, p string, o_lex string, o_dt string")
-    for us in (dred, cnt):
-        us.insert_with_closure(empty)  # seed the closure
+    us.insert_with_closure(empty)  # seed the closure
     ins = spark.createDataFrame(
         [("bob", "hasPet", "felix", "iri")], "s string, p string, o_lex string, o_dt string"
     )
     dele = spark.createDataFrame(
         [("ann", "hasPet", "rex", "iri")], "s string, p string, o_lex string, o_dt string"
     )
-    for us in (dred, cnt):
-        us.insert_with_closure(ins)
-        us.delete_with_closure(dele)
-    assert cnt._counts is not None  # maintained for the next delete
-    a = _closure_set(dred.current.df)
-    b = _closure_set(cnt.current.df)
-    assert a == b
-    # second delete reuses the maintained counts (still exact)
-    for us in (dred, cnt):
-        us.delete_with_closure(ins)
-    assert _closure_set(dred.current.df) == _closure_set(cnt.current.df)
-    # rollback restores the counts bookkeeping
-    before = cnt._counts
+
+    def recomputed(explicit):
+        return _closure_set(rdfs.rdfs_closure(TripleStore(explicit)).df)
+
+    key = ["s", "p", "o_lex", "o_dt"]
+    us.insert_with_closure(ins)
+    explicit = onto.df.unionByName(ins)
+    assert _closure_set(us.current.df) == recomputed(explicit)
+    assert ("bob", "knowsOf", "felix") in _closure_set(us.current.df)
+    us.delete_with_closure(dele)
+    explicit = explicit.join(dele, on=key, how="left_anti")
+    assert _closure_set(us.current.df) == recomputed(explicit)
+    assert ("ann", "likes", "rex") not in _closure_set(us.current.df)
+    us.delete_with_closure(ins)
+    explicit = explicit.join(ins, on=key, how="left_anti")
+    assert _closure_set(us.current.df) == recomputed(explicit)
+    assert ("felix", "rdf:type", "Animal") not in _closure_set(us.current.df)
+    # rollback restores the truth-maintenance bookkeeping
+    before = (us._explicit, us._inferred, us.current)
     try:
-        with cnt.transaction():
-            cnt.delete_with_closure(dele)
+        with us.transaction():
+            us.delete_with_closure(dele)
             raise RuntimeError("boom")
     except RuntimeError:
         pass
-    assert cnt._counts is before
+    assert (us._explicit, us._inferred, us.current) == before
 
 
-def test_counting_reinsert_no_phantom_support(spark):
-    """Re-inserting an already-explicit triple must not double its counts:
-    a later delete still removes its no-longer-derivable inferences."""
+def test_tm_reinsert_then_delete_drops_inferences(spark):
+    """Re-inserting an already-explicit triple is a no-op: a later delete
+    still removes its no-longer-derivable inferences."""
     T = "iri"
     st = _store(spark, [("C", "rdfs:subClassOf", "D", T), ("x", "rdf:type", "C", T)])
     us = UpdatableStore.from_store(TripleStore(st.df))
-    us.tm_strategy = "counting"
     empty = spark.createDataFrame([], "s string, p string, o_lex string, o_dt string")
     us.insert_with_closure(empty)
     t = spark.createDataFrame([("x", "rdf:type", "C", T)], "s string, p string, o_lex string, o_dt string")
-    us.delete_with_closure(t)   # materializes counts
+    us.delete_with_closure(t)
     us.insert_with_closure(t)   # re-insert
     us.insert_with_closure(t)   # re-insert AGAIN (already explicit — no-op)
     us.delete_with_closure(t)   # must remove (x type D)
@@ -510,9 +498,9 @@ def test_counting_reinsert_no_phantom_support(spark):
     assert ("x", "rdf:type", "D") not in triples and ("x", "rdf:type", "C") not in triples
 
 
-def test_counting_noop_delete_keeps_support(spark):
-    """Deleting a never-asserted triple is a no-op: it must not decrement
-    support that other explicit premises still provide."""
+def test_tm_noop_delete_keeps_support(spark):
+    """Deleting a never-asserted triple is a no-op: it must not remove an
+    inference that other explicit premises still derive."""
     T = "iri"
     st = _store(
         spark,
@@ -523,7 +511,6 @@ def test_counting_noop_delete_keeps_support(spark):
         ],
     )
     us = UpdatableStore.from_store(TripleStore(st.df))
-    us.tm_strategy = "counting"
     empty = spark.createDataFrame([], "s string, p string, o_lex string, o_dt string")
     us.insert_with_closure(empty)
     ghost = spark.createDataFrame([("a", "p2", "b", T)], "s string, p string, o_lex string, o_dt string")

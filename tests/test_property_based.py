@@ -3,7 +3,7 @@ totality (SURVEY.md §5)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 # hypothesis drives many examples; one shared Spark round-trip per example is
@@ -233,6 +233,72 @@ def test_tc_retract_equals_recompute_random(spark, edges, deleted_frac, data):
     dele = spark.createDataFrame(deleted, "src string, dst string")
     got = {(r["src"], r["dst"]) for r in tc_retract(tc_old, e_new, dele).collect()}
     assert got == tc_py(kept)
+
+
+# schema edges over a few classes and properties, data over a few nodes
+# (IRI objects, plus a literal object rdfs3 must skip): small pools, so
+# random rows share premises and heads (multiple support, cycles)
+_TM_CLASS = st.sampled_from(["c0", "c1", "c2"])
+_TM_PROP = st.sampled_from(["p0", "p1", "p2"])
+_TM_NODE = st.sampled_from(["x0", "x1", "x2"])
+_TM_SCHEMA = st.one_of(
+    st.tuples(st.sampled_from(["rdfs:subClassOf", "owl:equivalentClass"]), _TM_CLASS, _TM_CLASS),
+    st.tuples(st.just("rdfs:subPropertyOf"), _TM_PROP, _TM_PROP),
+    st.tuples(st.sampled_from(["rdfs:domain", "rdfs:range"]), _TM_PROP, _TM_CLASS),
+)
+_TM_DATA = st.one_of(
+    st.tuples(_TM_NODE, _TM_PROP, _TM_NODE, st.just("iri")),
+    st.tuples(_TM_NODE, _TM_PROP, st.just("v"), st.just("string")),
+    st.tuples(_TM_NODE, st.just("rdf:type"), _TM_CLASS, st.just("iri")),
+)
+
+
+@given(
+    schema=st.lists(_TM_SCHEMA, min_size=1, max_size=6, unique=True),
+    rows=st.lists(_TM_DATA, min_size=2, max_size=10, unique=True),
+    ins=st.lists(_TM_DATA, min_size=1, max_size=3, unique=True),
+    dels=st.lists(st.integers(0, 9), min_size=1, max_size=3),
+)
+# a class with two supports: deleting one keeps (x0 type c2)
+@example(
+    schema=[("rdfs:subClassOf", "c0", "c2"), ("rdfs:subClassOf", "c1", "c2")],
+    rows=[("x0", "rdf:type", "c0", "iri"), ("x0", "rdf:type", "c1", "iri")],
+    ins=[("x1", "rdf:type", "c0", "iri")],
+    dels=[0],
+)
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_rdfs_tm_equals_recompute_random(spark, schema, rows, ins, dels):
+    """Every RDFS truth-maintenance path lands on a from-scratch closure of
+    the new explicit set, on RANDOM schemas (subclass/subproperty cycles,
+    equivalentClass, domain/range) and data: delta_assert on insert,
+    dred_retract and counting_retract (over build_support_counts) on
+    retraction — the invariant behind UpdatableStore's TM paths."""
+    from blazegraph_database_spark.inference import rdfs
+    from blazegraph_database_spark.model.store import TripleStore
+
+    cols = "s string, p string, o_lex string, o_dt string"
+
+    def frame(triples):
+        return spark.createDataFrame(sorted(triples), cols)
+
+    def closure(triples):
+        return {tuple(r) for r in rdfs.rdfs_closure(TripleStore(frame(triples))).df.collect()}
+
+    def rows_of(df):
+        return {tuple(r) for r in df.select("s", "p", "o_lex", "o_dt").collect()}
+
+    explicit = {(s, p, o, "iri") for p, s, o in schema} | set(rows)
+    dels = {rows[i % len(rows)] for i in dels}
+    closed = rdfs.rdfs_closure(TripleStore(frame(explicit))).df.localCheckpoint()
+    # insert: a data-only delta forward-chains against the closed store
+    assert rows_of(rdfs.delta_assert(closed, frame(ins))) == closure(explicit | set(ins))
+    # retract: delete/re-derive and support-count decrement
+    kept = explicit - dels
+    want = closure(kept)
+    assert rows_of(rdfs.dred_retract(closed, frame(kept), frame(dels))) == want
+    counts = rdfs.build_support_counts(closed, frame(explicit))
+    _, new_closed = rdfs.counting_retract(counts, frame(kept), frame(dels), closed)
+    assert rows_of(new_closed) == want
 
 
 @given(

@@ -908,6 +908,46 @@ def test_namespace_properties(server):
     assert '<entry key="commitPoints">' in text
 
 
+def test_namespace_counters_and_truth_maintenance(spark):
+    """GET /namespace/<ns>/counters serves per-predicate counts, and the
+    properties' truthMaintenance entry follows ENABLE/DISABLE ENTAILMENTS."""
+    rows = [
+        ("a", "rdf:type", "Person", "iri"),
+        ("b", "rdf:type", "Person", "iri"),
+        ("a", "knows", "b", "iri"),
+    ]
+    store = UpdatableStore.from_store(
+        TripleStore(spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string"))
+    )
+    srv, port = start_background(SparqlEndpoint(spark, store))
+    base = f"http://127.0.0.1:{port}"
+    tm_key = '<entry key="com.bigdata.rdf.sail.truthMaintenance">'
+
+    def tm(ns):
+        return _req(f"{base}/namespace/{ns}/properties")[2].decode()
+
+    try:
+        st, ctype, body = _req(f"{base}/namespace/kb/counters")
+        assert st == 200 and ctype == "application/json"
+        assert json.loads(body) == {
+            "rdf:type": {"count": 2, "distinct_s": 2, "distinct_o": 1},
+            "knows": {"count": 1, "distinct_s": 1, "distinct_o": 1},
+        }
+        st, _, _ = _req(f"{base}/namespace?name=tm", "POST")
+        assert st == 201
+        assert tm_key + "false<" in tm("tm")
+        for verb, want in (("ENABLE", "true"), ("DISABLE", "false")):
+            form = urllib.parse.urlencode({"update": f"{verb} ENTAILMENTS"}).encode()
+            st, _, _ = _req(
+                f"{base}/namespace/tm/sparql", "POST", form, "application/x-www-form-urlencoded"
+            )
+            assert st == 200
+            assert tm_key + want + "<" in tm("tm")
+        assert tm_key + "false<" in tm("kb")  # the other namespace is untouched
+    finally:
+        srv.shutdown()
+
+
 def test_namespace_create_properties_body(spark):
     """POST /namespace with the reference's properties-XML body (ref:
     RestApiCreateKBTask): com.bigdata.rdf.sail.namespace names the KB,

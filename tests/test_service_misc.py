@@ -469,7 +469,7 @@ def test_gas_service_weighted_sssp_link_attr(spark):
     """gas:linkAttrType resolves SSSP edge weights through RDR statement
     metadata (ref: GASService LINK_ATTR_TYPE via SIDs): `<<s link o>>
     <w> n` rows weight the edge; unannotated edges default to 1.0."""
-    from blazegraph_database_spark.plans.compiler import sid_expr
+    from blazegraph_database_spark.model.terms import sid_col
     from blazegraph_database_spark.plans.sparql_parser import run_sparql
     from pyspark.sql import functions as F
 
@@ -479,7 +479,7 @@ def test_gas_service_weighted_sssp_link_attr(spark):
     )
     # weight a->c so the two-hop a->b->c route (1 + 1) beats it
     meta = base.filter("s = 'a' and o_lex = 'c'").select(
-        sid_expr().alias("s"), F.lit("w").alias("p"),
+        sid_col().alias("s"), F.lit("w").alias("p"),
         F.lit("9.5").alias("o_lex"), F.lit("double").alias("o_dt"),
     )
     st = TripleStore(base.unionByName(meta))

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from blazegraph_database_spark.model.store import TripleStore
 from blazegraph_database_spark.sources import ntriples, parquet_store
+from blazegraph_database_spark.sources.rdf_formats import read_turtle
 
 NT = """
 # a comment line
@@ -71,7 +72,7 @@ ex:b ex:name "Bob"@en .
 def test_read_turtle_subset(spark, tmp_path):
     p = tmp_path / "data.ttl"
     p.write_text(TTL)
-    rows = {(r["s"], r["p"], r["o_lex"], r["o_dt"]) for r in ntriples.read_turtle_subset(spark, str(p)).collect()}
+    rows = {(r["s"], r["p"], r["o_lex"], r["o_dt"]) for r in read_turtle(spark, str(p)).collect()}
     assert ("http://ex/a", "http://ex/knows", "http://ex/b", "iri") in rows
     assert ("http://ex/a", "http://www.w3.org/1999/02/22-rdf-syntax-ns#type", "http://ex/Person", "iri") in rows
     assert ("http://ex/a", "http://ex/age", "30", "long") in rows
