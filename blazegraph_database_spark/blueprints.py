@@ -161,9 +161,7 @@ class PropertyGraph:
 
     def _insert(self, rows: list[tuple]) -> None:
         before = len(self.store.versions) - 1
-        self.store.insert_data(
-            self.spark.createDataFrame(rows, ", ".join(f"{c} string" for c in TRIPLE_COLS))
-        )
+        self.store.insert_data(rows)
         self._notify(before)
 
     def insert_triples(self, triples: DataFrame) -> None:

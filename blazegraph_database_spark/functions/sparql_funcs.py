@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from blazegraph_database_spark.model.terms import sid_col
+from blazegraph_database_spark.model.terms import is_sid, sid_col, sid_fields, sid_parts
 
 
 def _c(x) -> Column:
@@ -407,19 +407,26 @@ def TRIPLE(s, p, o_lex, o_dt="string") -> Column:
 
 
 def ISTRIPLE(x) -> Column:
-    return _c(x).rlike(r"^<<[^|]*\|[^|]*\|.*\|[^|]*>>$")
+    return is_sid(_c(x))
+
+
+def _sid_term(x, i: int) -> Column:
+    """Field ``i`` of ``sid_fields`` for a statement term; unbound (NULL)
+    for any other term."""
+    c = _c(x)
+    return F.when(is_sid(c), sid_fields(sid_parts(c))[i])
 
 
 def SUBJECT(x) -> Column:
-    return F.regexp_extract(_c(x), r"^<<([^|]*)\|", 1)
+    return _sid_term(x, 0)
 
 
 def PREDICATE(x) -> Column:
-    return F.regexp_extract(_c(x), r"^<<[^|]*\|([^|]*)\|", 1)
+    return _sid_term(x, 1)
 
 
 def OBJECT(x) -> Column:
-    return F.regexp_extract(_c(x), r"^<<[^|]*\|[^|]*\|(.*)\|[^|]*>>$", 1)
+    return _sid_term(x, 2)
 
 
 # aggregates (ref: GroupByNode aggregate registry) ---------------------------

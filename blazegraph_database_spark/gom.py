@@ -260,13 +260,11 @@ class ObjectManager:
         transaction so readers see a single new version."""
         if not self._added and not self._removed:
             return
-        spark = self.store.current.spark
-        schema = "s string, p string, o_lex string, o_dt string"
         with self.store.transaction():
             if self._removed:
-                self.store.delete_data(spark.createDataFrame(self._removed, schema))
+                self.store.delete_data(self._removed)
             if self._added:
-                self.store.insert_data(spark.createDataFrame(self._added, schema))
+                self.store.insert_data(self._added)
         self._added, self._removed, self._dirty = [], [], set()
 
     def abort(self) -> None:

@@ -93,8 +93,10 @@ def sid_lex(s: str, p: str, o_lex: str, o_dt: str) -> str:
 
 
 def is_sid(col: Column) -> Column:
-    """True where the lexical column holds a statement id."""
-    return col.startswith("<<") & col.endswith(">>") & col.contains("|")
+    """True where the lexical column holds a statement id: ``<<…>>`` with
+    the four '|'-separated fields :func:`sid_lex` writes (more when the
+    object lexical holds a '|')."""
+    return col.startswith("<<") & col.endswith(">>") & (F.size(sid_parts(col)) >= 4)
 
 
 def sid_parts(col: Column) -> Column:

@@ -2607,16 +2607,17 @@ def instantiate_template(
     template: list[tuple],
     emit_g: bool = False,
     target_graph: str | None = None,
-    flags: list[bool] | None = None,
+    tagged: bool = False,
 ) -> DataFrame:
     """(s,p,o[,g]) template instantiation over a bindings DataFrame.
     Object-var datatypes come from `<var>__dt` companions when present;
     BIND-created vars without one default to 'string'. With ``emit_g`` a
     `g` column is added: an entry's explicit GRAPH wrapper wins, else
     ``target_graph`` (the UPDATE's WITH <g>), else NULL (default graph).
-    The triples are distinct, unless ``flags`` (one per entry) is given:
-    each row then carries its entry's flag as `__ins`, duplicates kept
-    (a DELETE…INSERT instantiates both templates in this one pass)."""
+    The triples are distinct, unless ``tagged``: each row then carries its
+    entry's index in ``template`` as `__i`, duplicates kept (a
+    DELETE…INSERT instantiates both templates, and the WHERE's own
+    pattern, in this one pass)."""
     parts = []
     for i, t in enumerate(template):
         s, p, o = t[0], t[1], t[2]
@@ -2647,15 +2648,15 @@ def instantiate_template(
         if emit_g:
             gc = F.col(g.name) if isinstance(g, Var) else F.lit(g)
             cols.append(gc.cast("string").alias("g"))
-        if flags is not None:
-            cols.append(F.lit(flags[i]).alias("__ins"))
+        if tagged:
+            cols.append(F.lit(i).alias("__i"))
         parts.append(F.struct(*cols))
     # ONE pass over the bindings: explode an array of per-template structs.
     # The union-of-selects alternative re-evaluates the WHERE join once per
     # template triple — an 8-entry CONSTRUCT (BSBM Explore Q12) paid the
     # join 8x; at 100 TB that's 8 full shuffles instead of one.
     out = sol.select(F.explode(F.array(*parts)).alias("__t")).select("__t.*")
-    return out if flags is not None else out.distinct()
+    return out if tagged else out.distinct()
 
 
 # reference describeMode enum → describe() args (ref: QueryHints.java:587

@@ -20,10 +20,10 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
+from blazegraph_database_spark.model.store import TRIPLE_COLS, rows_frame
 from blazegraph_database_spark.model.terms import DT_SID, Lit, Var, sid_lex
-from blazegraph_database_spark.operators.driver_tier import to_frame
 from blazegraph_database_spark.plans import algebra as A
 from blazegraph_database_spark.plans.sparql_parser import Parser
 from blazegraph_database_spark.update.update import UpdatableStore
@@ -346,7 +346,9 @@ class UpdateParser(Parser):
         return quads
 
 
-def _ground_triples_df(spark: SparkSession, quads: list[tuple], with_graph: bool) -> DataFrame:
+def _ground_rows(quads: list[tuple]) -> list[tuple]:
+    """Key rows of a parsed ground data block: (s, p, o_lex, o_dt), and g
+    after them for a triple in a named graph."""
     def lex_dt(term) -> tuple[str, str]:
         if isinstance(term, Lit):
             return term.lex, term.dt
@@ -362,11 +364,8 @@ def _ground_triples_df(spark: SparkSession, quads: list[tuple], with_graph: bool
         sl, _ = lex_dt(s)
         pl, _ = lex_dt(p)
         ol, odt = lex_dt(o)
-        rows.append((sl, pl, ol, odt, g) if with_graph else (sl, pl, ol, odt))
-    schema = "s string, p string, o_lex string, o_dt string" + (", g string" if with_graph else "")
-    # a local relation: the update's bounded collect reads it back with no
-    # Spark job
-    return to_frame(spark, rows, schema)
+        rows.append((sl, pl, ol, odt) if g is None else (sl, pl, ol, odt, g))
+    return rows
 
 
 def parse_update(src: str) -> list[dict]:
@@ -381,24 +380,25 @@ def apply_update(store: UpdatableStore, src: str, spark: SparkSession | None = N
     for op in parse_update(src):
         kind = op["op"]
         if kind in ("insert_data", "delete_data"):
-            # keep the g column whenever the data block names a graph — a
-            # triples-only store upgrades to quads rather than dropping it
+            # a data block naming a graph upgrades a triples-only store to
+            # quads (insert_data/delete_data see the g field)
             has_g = store.current.has_graphs or any(
                 q[3] is not None for q in op["quads"]
             )
-            data = _ground_triples_df(spark, op["quads"], with_graph=has_g)
+            rows = _ground_rows(op["quads"])
             if getattr(store, "tm_enabled", False) and not has_g:
                 # ENABLE ENTAILMENTS routes data ops through truth
                 # maintenance (ref: the reference's TM-configured SAIL
                 # connection; TM is triples-mode, like the reference's)
+                data = rows_frame(spark, rows, TRIPLE_COLS)
                 if kind == "insert_data":
                     store.insert_with_closure(data)
                 else:
                     store.delete_with_closure(data)
             elif kind == "insert_data":
-                store.insert_data(data)
+                store.insert_data(rows)
             else:
-                store.delete_data(data)
+                store.delete_data(rows)
         elif kind == "modify":
             where = op["where"]
             g = op.get("graph")

@@ -14,12 +14,16 @@ A version is ``(base, added, removed)`` (``model.store.DeltaStore``):
 ``base`` is the last compacted store, shared with its memo (lazy union,
 stats, virtual-index sources) by every version built on it, and
 ``added``/``removed`` are exact Δ row sets held on the driver, with
-``added ∩ base = ∅`` and ``removed ⊆ base``. INSERT DATA, DELETE DATA and
-DELETE/INSERT WHERE bring their rows to the driver through the driver
-tier's bounded collect, settle the rows the Δ does not already decide with
-ONE probe job against the base's per-predicate sources (rows of a predicate
-the base's stats rule out need none), and commit set algebra on the Δ.
-Reads then compose the Δ with the base instead of replaying a lineage.
+``added ∩ base = ∅`` and ``removed ⊆ base``. INSERT DATA and DELETE DATA
+take key rows the driver already holds (a DataFrame comes to the driver
+in the driver tier's bounded collect first); DELETE/INSERT WHERE brings
+its instantiated templates there the same way. A row the Δ does not
+decide is in the base iff it is in the current version: rows a one-pattern
+WHERE's own solutions decide need nothing more, and the rest are settled
+by ONE probe job against the base's per-predicate sources (rows of a
+predicate the base's stats rule out need none). The write then commits
+set algebra on the Δ. Reads compose the Δ with the base instead of
+replaying a lineage.
 
 Past the driver gate, and for the whole-store verbs (graph ops, LOAD,
 CLEAR, the quad upgrade, the truth-maintenance closure paths), a write
@@ -43,10 +47,20 @@ from blazegraph_database_spark.model.store import (
     TripleStore,
     key_join,
     key_rows,
+    rows_frame,
 )
-from blazegraph_database_spark.model.terms import sid_col
+from blazegraph_database_spark.model.terms import (
+    DT_BNODE,
+    DT_IRI,
+    Lit,
+    Var,
+    const_lex,
+    is_const,
+    sid_col,
+)
 from blazegraph_database_spark.operators import driver_tier
-from blazegraph_database_spark.plans.compiler import evaluate, instantiate_template
+from blazegraph_database_spark.plans import algebra as A
+from blazegraph_database_spark.plans.compiler import _pred_aliases, evaluate, instantiate_template
 
 # graph-ref sentinel for the default graph (COPY/MOVE/ADD ... DEFAULT); the
 # default graph is stored as g=NULL, matching the reference's null context
@@ -98,6 +112,62 @@ def _in_base(base: TripleStore, rows: set, keys: list[str]) -> set:
         out = out.unionByName(part)
     probe = key_rows(base.spark, rows, keys)
     return {tuple(r) for r in key_join(out, probe, "left_semi", keys).collect()}
+
+
+def _settling_pattern(where_plan):
+    """The WHERE's one triple pattern P when its solutions spell every
+    current triple matching P exactly as stored, else None. That fails for
+    a constant with two spellings (``_pred_aliases``: the solution carries
+    the pattern's spelling), an embedded statement, and a repeated variable
+    (``?x p ?x`` takes the object's companion type from the subject,
+    ``iri``). Callers leave quads out: a default-graph pattern is the merge
+    of the graphs."""
+    sp = where_plan
+    if isinstance(sp, A.BGP):
+        if sp.hints or len(sp.patterns) != 1:
+            return None
+        (sp,) = sp.patterns
+    if not isinstance(sp, A.SP) or sp.g is not None:
+        return None
+    terms = (sp.s, sp.p, sp.o)
+    names = [t.name for t in terms if isinstance(t, Var)]
+    if len(names) != len(set(names)):
+        return None
+    for t in terms:
+        if isinstance(t, Var):
+            continue
+        if not is_const(t) or not isinstance(t, Lit) and len(_pred_aliases(const_lex(t))) > 1:
+            return None
+    return sp
+
+
+def _term_key(t):
+    """(lexical, type) of a constant term; None for anything else."""
+    if not is_const(t):
+        return None
+    return const_lex(t), t.dt if isinstance(t, Lit) else DT_IRI
+
+
+def _may_match(sp: A.SP, entry: tuple) -> bool:
+    """False when a template entry's constants rule out every match of
+    ``sp``: its rows then need the probe, and P's rows are not worth
+    collecting."""
+    return all(
+        a is None or b is None or a == b
+        for a, b in zip(map(_term_key, entry[:3]), map(_term_key, (sp.s, sp.p, sp.o)))
+    )
+
+
+def _matches(sp: A.SP, row: tuple) -> bool:
+    """True when key row ``row`` is an instance of ``sp`` (each constant
+    equals the row's term) with no blank node: the `__dt` companion reads a
+    stored ``bnode`` tag as ``iri``, so such a row is left to the probe."""
+    s, p, o_lex, o_dt = row[:4]
+    if s.startswith("_:") or o_lex.startswith("_:") or o_dt == DT_BNODE:
+        return False
+    if any(not isinstance(t, Var) and const_lex(t) != lex for t, lex in ((sp.s, s), (sp.p, p))):
+        return False
+    return isinstance(sp.o, Var) or _term_key(sp.o) == (o_lex, o_dt)
 
 
 def _rows(delta: dict) -> frozenset:
@@ -303,9 +373,6 @@ class UpdatableStore:
         """``INSERT INTO %name SELECT ... WHERE {...}`` — evaluate WHERE,
         project, and REPLACE the named set (ref AST2BOpUpdate.java:891 +
         ISolutionSetManager.putSolutions "replace not append")."""
-        from blazegraph_database_spark.plans import algebra as A
-        from blazegraph_database_spark.plans.compiler import evaluate
-
         node = where
         if project:
             node = A.Project(node, tuple(project))
@@ -320,8 +387,6 @@ class UpdatableStore:
         project(INCLUDE %name MINUS where-solutions), replacing the set
         (ref AST2BOpUpdate.java:728-815: INCLUDE %set MINUS INCLUDE %temp
         with the delete clause's projection)."""
-        from blazegraph_database_spark.plans import algebra as A
-        from blazegraph_database_spark.plans.compiler import evaluate
         from blazegraph_database_spark.update.solutions import (
             SolutionSetDoesNotExistError,
         )
@@ -361,12 +426,14 @@ class UpdatableStore:
         version replays its lineage."""
         return self.commit(TripleStore(df.localCheckpoint(eager=False)))
 
-    def _write(self, deletes, inserts) -> TripleStore:
+    def _write(self, deletes, inserts, decided=frozenset(), present=frozenset()) -> TripleStore:
         """Commit "delete ``deletes``, then insert ``inserts``" (key-row
-        tuples) as a Δ on the current base. The rows the Δ does not already
-        decide are settled against the base by one probe; the result keeps
-        ``added ∩ base = ∅`` and ``removed ⊆ base``. A Δ past the driver gate
-        compacts into a new base."""
+        tuples) as a Δ on the current base. A row the Δ does not decide is
+        in the base iff it is in the current version: the rows of
+        ``decided`` are in the current version iff they are in ``present``,
+        and the rest are settled against the base by one probe. The result
+        keeps ``added ∩ base = ∅`` and ``removed ⊆ base``. A Δ past the
+        driver gate compacts into a new base."""
         base, added0, removed0 = _delta_of(self.current)
         keys = QUAD_COLS if base.has_graphs else TRIPLE_COLS
         # the edits below assume each row once: a repeated insert of a row
@@ -376,7 +443,8 @@ class UpdatableStore:
             r for r in (*deletes, *inserts)
             if r not in added0.get(r[1], ()) and r not in removed0.get(r[1], ())
         }
-        held = _in_base(base, open_rows, keys)
+        settled = open_rows & decided
+        held = (settled & present) | _in_base(base, open_rows - settled, keys)
         added, removed = dict(added0), dict(removed0)
 
         def edit(delta: dict, p: str) -> set:
@@ -448,39 +516,55 @@ class UpdatableStore:
         return txn()
 
     # ------------------------------------------------------------- verbs --
-    def insert_data(self, triples: DataFrame) -> TripleStore:
+    def insert_data(self, triples) -> TripleStore:
         """INSERT DATA: add ground triples (set semantics) as a Δ."""
         return self._data(triples, insert=True)
 
-    def delete_data(self, triples: DataFrame) -> TripleStore:
+    def delete_data(self, triples) -> TripleStore:
         """DELETE DATA: remove a ground triple set as a Δ. Quad stores match
         null-safely on g, so default-graph triples (g=NULL) actually delete
         (ADVICE round 2: NULL never equals NULL in a plain equi-join)."""
         return self._data(triples, insert=False)
 
-    def _data(self, triples: DataFrame, insert: bool) -> TripleStore:
-        # data carrying a graph column upgrades a triples-only store to
-        # quads (existing rows land in the default graph, g = NULL): a
-        # whole-store write
-        upgrade = "g" in triples.columns and not self.current.has_graphs
-        keys = QUAD_COLS if upgrade or self.current.has_graphs else TRIPLE_COLS
-        data = _aligned(triples, keys)
+    def _data(self, triples, insert: bool) -> TripleStore:
+        """``triples`` is key-row tuples (s, p, o_lex, o_dt[, g]) or a
+        DataFrame. A frame comes to the driver in the bounded collect; the
+        rows then go to :meth:`_write`, and only the paths that need a frame
+        (the quad upgrade, a write past the driver gate) build one."""
+        cur = self.current
+        if isinstance(triples, DataFrame):
+            # data carrying a graph column upgrades a triples-only store to
+            # quads (existing rows land in the default graph, g = NULL): a
+            # whole-store write
+            upgrade = "g" in triples.columns and not cur.has_graphs
+            keys = QUAD_COLS if upgrade or cur.has_graphs else TRIPLE_COLS
+            data = _aligned(triples, keys)
+            rows = None if upgrade else driver_tier.collect_rows(data, driver_tier.DRIVER_TIER_MAX_ROWS)
+            rows = None if rows is None else [tuple(r) for r in rows]
+        else:
+            rows = [tuple(r) for r in triples]
+            upgrade = not cur.has_graphs and any(len(r) > len(TRIPLE_COLS) for r in rows)
+            keys = QUAD_COLS if upgrade or cur.has_graphs else TRIPLE_COLS
+            # a triple written to a quad store lands in the default graph
+            rows = [r + (None,) * (len(keys) - len(r)) for r in rows]
+            data = None
+            if upgrade or len(rows) > driver_tier.DRIVER_TIER_MAX_ROWS:
+                data, rows = rows_frame(cur.spark, rows, keys), None
         inf = None
         if self._inferred is not None and "g" not in keys:
             # the Inferred partition stays a subset of the live store, and
             # explicitly asserting an inferred triple upgrades it to
             # Explicit (ref: StatementEnum.max on re-assertion) — it then
             # survives DROP ENTAILMENTS
-            inf = self._inferred.join(data, on=TRIPLE_COLS, how="left_anti")
-        rows = None if upgrade else driver_tier.collect_rows(data, driver_tier.DRIVER_TIER_MAX_ROWS)
+            side = data if rows is None else key_rows(cur.spark, rows, keys)
+            inf = key_join(self._inferred, side, "left_anti", keys, broadcast=False)
         if rows is not None:
-            rows = [tuple(r) for r in rows]
             st = self._write((), rows) if insert else self._write(rows, ())
         else:  # past the gate, or the quad upgrade
-            cur = _aligned(self.current.df, keys)
+            whole = _aligned(cur.df, keys)
             st = self._compact(
-                cur.unionByName(data).distinct() if insert
-                else key_join(cur, data, "left_anti", keys, broadcast=False)
+                whole.unionByName(data).distinct() if insert
+                else key_join(whole, data, "left_anti", keys, broadcast=False)
             )
         self._inferred = inf
         return st
@@ -497,6 +581,12 @@ class UpdatableStore:
         DeleteInsertGraph semantics — delete first, then insert). The
         instantiated triples come to the driver in one bounded collect and
         commit as a Δ, so the WHERE plan never becomes part of a version.
+
+        When the WHERE is one triple pattern P (:func:`_settling_pattern`),
+        its solutions are every current triple matching P, so a template
+        row that matches P is in the current version iff it is among P's
+        instantiated solutions: P is instantiated in the same pass, and
+        those rows need no probe.
 
         On quad stores the templates are graph-aware: an entry's explicit
         GRAPH wins, else ``with_graph`` (the UPDATE's WITH <g>), else the
@@ -523,15 +613,20 @@ class UpdatableStore:
         # (compute once, then modify the graph; review r5-4)
         sets = self.solutions.sets() if self.solutions is not None else {}
         bindings = evaluate(cur.view(track_dt=True, named_sets=sets), where_plan)
-        # one pass over the bindings instantiates both templates, each row
-        # flagged `__ins`; no distinct(): _write works on sets
+        # one pass over the bindings instantiates both templates (and P),
+        # each row tagged with its entry index `__i`; no distinct(): _write
+        # works on sets
         dels, ins = list(delete_template or ()), list(insert_template or ())
         if not dels and not ins:
             return self.commit(cur)
+        nd, nt = len(dels), len(dels) + len(ins)
+        sp = None if is_quads else _settling_pattern(where_plan)
+        if sp is not None and not any(_may_match(sp, t) for t in dels + ins):
+            sp = None
         both = instantiate_template(
-            bindings, dels + ins, emit_g=is_quads, target_graph=with_graph,
-            flags=[False] * len(dels) + [True] * len(ins),
-        ).select(*keys, "__ins")
+            bindings, dels + ins + ([(sp.s, sp.p, sp.o)] if sp else []),
+            emit_g=is_quads, target_graph=with_graph, tagged=True,
+        ).select(*keys, "__i")
         # a template triple with an unbound term is skipped (SPARQL 1.1
         # Update §3.1.3)
         both = both.filter(
@@ -539,15 +634,17 @@ class UpdatableStore:
         )
         rows = driver_tier.collect_rows(both, driver_tier.DRIVER_TIER_MAX_ROWS)
         if rows is not None:
-            return self._write(
-                [r[:-1] for r in rows if not r[-1]], [r[:-1] for r in rows if r[-1]]
-            )
+            deletes = [r[:-1] for r in rows if r[-1] < nd]
+            inserts = [r[:-1] for r in rows if nd <= r[-1] < nt]
+            decided = {r for r in (*deletes, *inserts) if _matches(sp, r)} if sp else set()
+            return self._write(deletes, inserts, decided, {r[:-1] for r in rows if r[-1] >= nt})
         df = cur.df  # past the gate: the whole-store rewrite, compacted
         if dels:
-            doomed = both.filter(~F.col("__ins")).select(*keys)
+            doomed = both.filter(F.col("__i") < nd).select(*keys)
             df = key_join(df, doomed, "left_anti", keys, broadcast=False)
         if ins:
-            df = df.unionByName(both.filter(F.col("__ins")).select(*keys)).distinct()
+            added = both.filter((F.col("__i") >= nd) & (F.col("__i") < nt)).select(*keys)
+            df = df.unionByName(added).distinct()
         return self._compact(df)
 
     # --------------------------------------------------------- graph ops --

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -37,6 +39,7 @@ SLOW_TESTS = (
     "test_tc_retract_equals_recompute_random",
     "test_rdfs_tm_equals_recompute_random",
     "test_native_typed_path_equals_lexical_random",
+    "test_one_pattern_where_delta_equals_set_model",
     # reference geo manifest families (the slow configurations; the
     # TestGeoSpatialDefaults family minus defaults05 stays in)
     "TestGeoSpatialServiceConfigurationCustomDatatype",
@@ -81,6 +84,39 @@ def spark() -> SparkSession:
         .getOrCreate()
     )
     yield s
+
+
+class SparkJobs:
+    """Counts the Spark jobs a test starts, by job group."""
+
+    def __init__(self, spark: SparkSession):
+        self._sc = spark.sparkContext
+        self._prefix = f"spark-jobs-{uuid.uuid4().hex[:8]}"
+        self._n = 0
+
+    def run(self, fn):
+        """``(fn(), jobs)``: the call's result and the number of jobs it
+        started, counted in a job group of its own."""
+        self._n += 1
+        group = f"{self._prefix}-{self._n}"
+        self._sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            self._sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, self.count(group)
+
+    def count(self, group: str) -> int:
+        """Jobs started so far in job group ``group`` (a REST query runs in
+        ``rest-query-<query id>``). Job starts reach the status tracker
+        through the listener bus, so it is drained first."""
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(self._sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def spark_jobs(spark) -> SparkJobs:
+    return SparkJobs(spark)
 
 
 @pytest.fixture()

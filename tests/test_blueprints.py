@@ -27,6 +27,18 @@ def test_vertices_edges_properties(spark):
     assert g.edge_properties("v:ann", "knows", "v:bob") == {"since": "2019"}
 
 
+def test_vertex_and_edge_writes_run_no_job(spark, spark_jobs):
+    """add_vertex and add_edge hand their rows to the store as rows: over a
+    base whose stats rule their predicates out they run no Spark job."""
+    store = _empty_store(spark)
+    store.stats()  # the stats build is the store's, not the write's
+    g = PropertyGraph(store)
+    assert spark_jobs.run(lambda: g.add_vertex("v:ann", name="Ann", age=34))[1] == 0
+    assert spark_jobs.run(lambda: g.add_edge("v:ann", "knows", "v:bob", since=2019))[1] == 0
+    assert g.vertex("v:ann") == {"name": "Ann", "age": "34"}
+    assert g.edge_properties("v:ann", "knows", "v:bob") == {"since": "2019"}
+
+
 def test_traversals_and_degrees(spark):
     g = PropertyGraph(_empty_store(spark))
     for v in ("v:a", "v:b", "v:c"):

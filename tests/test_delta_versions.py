@@ -214,15 +214,10 @@ def test_point_read_after_a_write_keeps_the_virtual_index(spark):
     ]
 
 
-def test_changelog_of_delta_commits_runs_no_job(spark):
+def test_changelog_of_delta_commits_runs_no_job(spark, spark_jobs):
     us = UpdatableStore.from_store(_relational(spark))
     apply_update(us, 'INSERT DATA { <customer:3> <urn:t#tag> "x" }', spark)
     apply_update(us, 'DELETE DATA { <customer:3> <urn:t#tag> "x" }', spark)
-    sc = spark.sparkContext
-    sc.setJobGroup("delta-changelog", "changelog")
-    try:
-        rows = us.changelog().collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("delta-changelog") == []
+    rows, jobs = spark_jobs.run(lambda: us.changelog().collect())
+    assert jobs == 0
     assert sorted((r["commit"], r["action"]) for r in rows) == [(1, "added"), (2, "removed")]

@@ -148,18 +148,11 @@ def test_over_gate_input_is_computed_once(spark, monkeypatch, run):
     assert computed.value == 10
 
 
-def test_driver_tier_bfs_runs_one_job(spark, edges):
+def test_driver_tier_bfs_runs_one_job(spark, spark_jobs, edges):
     """The driver tier reads the edges in one bounded collect: no
     checkpoint job and no separate count job before the result exists."""
-    sc = spark.sparkContext
-    group = "driver-tier-bfs-job-count"
-    sc.setJobGroup(group, "driver-tier bfs job count")
-    try:
-        out = gas.bfs(edges, ["a"], 3)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(jobs) == 1
+    out, jobs = spark_jobs.run(lambda: gas.bfs(edges, ["a"], 3))
+    assert jobs == 1
     assert sorted(tuple(r) for r in out.collect()) == [
         ("a", 0, None), ("b", 1, "a"), ("c", 2, "b"), ("d", 3, "c"),
     ]

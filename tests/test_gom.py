@@ -62,6 +62,20 @@ def test_gpo_mutations_commit_as_one_version(om):
     assert not fresh.is_bound("knows")
 
 
+def test_gpo_commit_of_new_predicates_runs_no_job(om, spark_jobs):
+    """A commit hands its buffered rows to the store as rows: with the
+    base's stats built, rows of predicates the base cannot hold, and rows
+    the Δ already decides, settle with no Spark job."""
+    om.store.current.stats()  # the stats build is the store's, not the commit's
+    a = om.get_gpo("a")
+    a.add_value("tag", "x")
+    a.add_value("tag", "y")
+    assert spark_jobs.run(om.commit)[1] == 0
+    a.remove_value("tag", "x", "string")
+    assert spark_jobs.run(om.commit)[1] == 0
+    assert ObjectManager(om.store).get_gpo("a").get_value("tag") == ("y", "string")
+
+
 def test_gpo_remove_object(om):
     om.get_gpo("a").remove()
     om.commit()

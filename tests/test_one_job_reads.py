@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blazegraph_database_spark.model.store import TripleStore
+from blazegraph_database_spark.operators import driver_tier
 from blazegraph_database_spark.plans import compiler
 from blazegraph_database_spark.plans.sparql_parser import parse_sparql_query
 from blazegraph_database_spark.plans.update_parser import apply_update
@@ -28,19 +29,6 @@ STAR = (
 )
 
 
-def _jobs(spark, group: str) -> int:
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-
-
-def _in_group(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        return fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
 def _rows(store, text):
     return [tuple(r) for r in compiler.evaluate(store, parse_sparql_query(text)[1]).collect()]
 
@@ -50,7 +38,7 @@ def rel_endpoint(spark):
     return SparqlEndpoint(spark, UpdatableStore.from_store(relational.cached_store(spark, SF_DIR)))
 
 
-def test_bound_subject_star_is_one_scan(spark, rel_endpoint):
+def test_bound_subject_star_is_one_scan(spark, spark_jobs, rel_endpoint):
     """A star on a constant subject compiles into ONE fused scan with no
     join, and over REST it is answered in one job."""
     store = relational.cached_store(spark, SF_DIR)
@@ -62,7 +50,7 @@ def test_bound_subject_star_is_one_scan(spark, rel_endpoint):
     rel_endpoint.query("kb", STAR, query_id="star-warm")  # counts a warm read
     status, _ctype, body = rel_endpoint.query("kb", STAR, query_id="star-1")
     assert status == 200 and b"Customer#000000003" in body
-    assert _jobs(spark, "rest-query-star-1") == 1
+    assert spark_jobs.count("rest-query-star-1") == 1
 
 
 def test_bound_subject_star_leaves_out_literal_and_delta_subjects(spark):
@@ -91,7 +79,7 @@ def test_bound_subject_star_leaves_out_literal_and_delta_subjects(spark):
     assert row[0] == "Customer#000000003" and row[2] == "BENCH"
 
 
-def test_fused_star_scan_is_memoized(spark):
+def test_fused_star_scan_is_memoized(spark, spark_jobs):
     """A second compile of a fused variable-subject star reads the scan from
     the store memo: no parquet schema job, no job at all."""
     store = relational.cached_store(spark, SF_DIR)
@@ -99,12 +87,12 @@ def test_fused_star_scan_is_memoized(spark):
         "SELECT ?c ?n ?s WHERE { ?c <customer#c_name> ?n ; <customer#c_mktsegment> ?s }"
     )[1]
     first = compiler.evaluate(store, q)
-    second = _in_group(spark, "star-memo", lambda: compiler.evaluate(store, q))
-    assert _jobs(spark, "star-memo") == 0
+    second, jobs = spark_jobs.run(lambda: compiler.evaluate(store, q))
+    assert jobs == 0
     assert sorted(map(tuple, first.collect())) == sorted(map(tuple, second.collect()))
 
 
-def test_multi_partition_answer_is_one_job(spark):
+def test_multi_partition_answer_is_one_job(spark, spark_jobs):
     """A 3-partition answer comes back in one job, where a per-partition
     stream paid one job per partition. The range's 30 rows are a known
     bound under the cap, so Catalyst drops the collect's limit."""
@@ -120,7 +108,7 @@ def test_multi_partition_answer_is_one_job(spark):
     assert compiler.evaluate(store, parse_sparql_query(q)[1]).rdd.getNumPartitions() == 3
     status, _ctype, body = ep.query("kb", q, query_id="three-parts")
     assert status == 200 and len(json.loads(body)["results"]["bindings"]) == 30
-    assert _jobs(spark, "rest-query-three-parts") == 1
+    assert spark_jobs.count("rest-query-three-parts") == 1
 
 
 def test_row_cap_fires_at_cap_plus_one(spark):
@@ -187,23 +175,22 @@ def test_bodies_match_the_per_partition_stream(spark, rel_endpoint, monkeypatch,
     ],
     ids=["count", "distinct_p", "group_count"],
 )
-def test_fast_scan_answers_run_no_job(spark, monkeypatch, query):
+def test_fast_scan_answers_run_no_job(spark, spark_jobs, monkeypatch, query):
     """Compiled directly and through the endpoint (which compiles with
     ``track_dt``), the answer runs no job; the endpoint's body is the one
     the compiled scan gives."""
     rows = [("a", "p", "b", "iri"), ("b", "p", "c", "iri"), ("a", "q", "1", "long")]
     store = TripleStore(spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string"))
     store.stats()  # the stats build is the store's, not the query's
-    group = f"fast-scan-{query}"
-    got = _in_group(
-        spark, group, lambda: compiler.evaluate(store, parse_sparql_query(query)[1]).collect()
+    got, jobs = spark_jobs.run(
+        lambda: compiler.evaluate(store, parse_sparql_query(query)[1]).collect()
     )
-    assert _jobs(spark, group) == 0
+    assert jobs == 0
     assert len(got) >= 1
     ep = SparqlEndpoint(spark, UpdatableStore.from_store(store))
     qid = f"fast-{abs(hash(query))}"
     status, _ctype, body = ep.query("kb", query, query_id=qid)
-    assert status == 200 and _jobs(spark, f"rest-query-{qid}") == 0
+    assert status == 200 and spark_jobs.count(f"rest-query-{qid}") == 0
     monkeypatch.setattr(compiler, "_fast_scan_rewrite", lambda store, node: None)
     assert ep.query("kb", query)[2] == body
 
@@ -249,41 +236,96 @@ def _bindings(body: bytes) -> list[tuple]:
     return sorted(tuple(b[v]["value"] for v in sorted(b)) for b in rows)
 
 
-def test_update_mix_cycle_job_counts(spark, rel_endpoint):
+def test_update_mix_cycle_job_counts(spark, spark_jobs, rel_endpoint):
     """The writes and reads of one update_mix cycle start Spark only for
     base data: INSERT/DELETE DATA of new predicates and the tag scan run no
     job, a BFS over Δ-only edges none, a warm DELETE…INSERT…WHERE one WHERE
-    pass plus one probe, and the point read of the rewritten triple two:
-    its removed row is a literal filter, not a broadcast job, and the take
-    reads the base scan's partition, then the added rows' one."""
-    sc = spark.sparkContext
+    pass (its one pattern settles the template rows, so no probe), and the
+    point read of the rewritten triple two: its removed row is a literal
+    filter, not a broadcast job, and the take reads the base scan's
+    partition, then the added rows' one."""
 
-    def update(text, group):
-        return _in_group(spark, group, lambda: rel_endpoint.update("kb", text))
+    def update(text):
+        return spark_jobs.run(lambda: rel_endpoint.update("kb", text))[1]
 
     edges = " ".join(
         f"<urn:bench:n{a}> <{LINK}> <urn:bench:n{b}> ." for a, b in ((0, 1), (0, 2), (1, 3))
     )
-    update(f"INSERT DATA {{ {edges} }}", "um-edges")
-    update(f'INSERT DATA {{ <customer:3> <{TAG}> "t1" . }}', "um-tag")
-    update(f'DELETE DATA {{ <urn:bench:n1> <{LINK}> <urn:bench:n3> . }}', "um-cut")
-    assert [_jobs(spark, g) for g in ("um-edges", "um-tag", "um-cut")] == [0, 0, 0]
+    assert [
+        update(f"INSERT DATA {{ {edges} }}"),
+        update(f'INSERT DATA {{ <customer:3> <{TAG}> "t1" . }}'),
+        update(f'DELETE DATA {{ <urn:bench:n1> <{LINK}> <urn:bench:n3> . }}'),
+    ] == [0, 0, 0]
     status, _ctype, body = rel_endpoint.query("kb", GAS_BFS, query_id="um-bfs")
-    assert status == 200 and _jobs(spark, "rest-query-um-bfs") == 0
+    assert status == 200 and spark_jobs.count("rest-query-um-bfs") == 0
     assert _bindings(body) == [("0", "urn:bench:n0"), ("1", "urn:bench:n1"), ("1", "urn:bench:n2")]
-    update(_rewrite(4, "WARM"), "um-rewrite-cold")  # pays the one-time schema read
-    update(_rewrite(5, "BENCH"), "um-rewrite")
-    assert _jobs(spark, "um-rewrite") <= 2
+    update(_rewrite(4, "WARM"))  # pays the one-time schema read
+    assert update(_rewrite(5, "BENCH")) == 1
     status, _ctype, body = rel_endpoint.query(
         "kb", f"SELECT ?c ?t WHERE {{ ?c <{TAG}> ?t }}", query_id="um-tags"
     )
-    assert _jobs(spark, "rest-query-um-tags") == 0 and _bindings(body) == [("customer:3", "t1")]
+    assert spark_jobs.count("rest-query-um-tags") == 0
+    assert _bindings(body) == [("customer:3", "t1")]
     status, _ctype, body = rel_endpoint.query(
         "kb", "SELECT ?seg WHERE { <customer:5> <customer#c_mktsegment> ?seg }", query_id="um-point"
     )
     assert status == 200 and _bindings(body) == [("BENCH",)]
-    assert _jobs(spark, "rest-query-um-point") == 2
-    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert spark_jobs.count("rest-query-um-point") == 2
+
+
+def test_data_verbs_probe_only_base_held_predicates(spark, spark_jobs):
+    """INSERT DATA and DELETE DATA hand their parsed rows straight to the Δ:
+    rows of a predicate the base holds cost the one probe job, rows of a
+    new predicate none."""
+    us = UpdatableStore.from_store(relational.cached_store(spark, SF_DIR))
+
+    def update(text):
+        return spark_jobs.run(lambda: apply_update(us, text, spark))[1]
+
+    seg = "<customer:7> <customer#c_mktsegment>"
+    update('INSERT DATA { <customer:1> <customer#c_mktsegment> "WARM" }')  # the schema read
+    assert update(f'INSERT DATA {{ {seg} "PROBED" }}') <= 1
+    assert update(f'DELETE DATA {{ {seg} "PROBED" }}') == 0  # the Δ decides it
+    assert update(f'DELETE DATA {{ {seg} "NOPE" }}') <= 1
+    assert update(f'INSERT DATA {{ <customer:7> <{TAG}> "new" }}') == 0
+    assert update(f'DELETE DATA {{ <customer:7> <{TAG}> "new" }}') == 0
+    assert update(f'DELETE DATA {{ <customer:7> <{TAG}> "never" }}') == 0
+    assert _rows(us.current, f"SELECT ?s WHERE {{ {seg} ?s }}") == [("HOUSEHOLD",)]
+
+
+def test_one_pattern_where_settles_without_a_probe(spark, spark_jobs):
+    """A warm DELETE…INSERT…WHERE whose WHERE is one triple pattern runs
+    its one WHERE job; a two-pattern WHERE still probes the base."""
+    us = UpdatableStore.from_store(relational.cached_store(spark, SF_DIR))
+
+    def update(text):
+        return spark_jobs.run(lambda: apply_update(us, text, spark))[1]
+
+    update(_rewrite(4, "WARM"))  # pays the one-time schema read
+    assert update(_rewrite(6, "ONE")) == 1
+    two = (
+        "DELETE { <customer:8> <customer#c_mktsegment> ?s } "
+        'INSERT { <customer:8> <customer#c_mktsegment> "TWO" } '
+        "WHERE { <customer:8> <customer#c_mktsegment> ?s ; <customer#c_name> ?n }"
+    )
+    update(two.replace("customer:8", "customer:9"))  # warms the two-pattern plan
+    where = parse_sparql_query(
+        "SELECT * WHERE { <customer:8> <customer#c_mktsegment> ?s ; <customer#c_name> ?n }"
+    )[1]
+    _, where_jobs = spark_jobs.run(lambda: driver_tier.collect_rows(
+        compiler.evaluate(us.current.view(track_dt=True), where), driver_tier.DRIVER_TIER_MAX_ROWS
+    ))
+    assert update(two) == where_jobs + 1  # the WHERE, then the probe
+    for k, seg in ((4, "WARM"), (6, "ONE"), (8, "TWO")):
+        q = f"SELECT ?s WHERE {{ <customer:{k}> <customer#c_mktsegment> ?s }}"
+        assert _rows(us.current, q) == [(seg,)]
+    # the Δ keeps removed ⊆ base and added ∩ base = ∅
+    seg = "customer#c_mktsegment"
+    assert {(r[0], r[2]) for r in us.current.removed[seg]} == {
+        ("customer:4", "MACHINERY"), ("customer:6", "BUILDING"),
+        ("customer:8", "FURNITURE"), ("customer:9", "BUILDING"),
+    }
+    assert {r[2] for r in us.current.added[seg]} == {"WARM", "ONE", "TWO"}
 
 
 def test_limit_over_a_three_partition_store(spark):

@@ -6,6 +6,8 @@ from __future__ import annotations
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+from blazegraph_database_spark.model.terms import Lit, Var, const_lex
+
 # hypothesis drives many examples; one shared Spark round-trip per example is
 # too slow, so serialization round-trips run through the plain-Python term
 # logic and a single batched Spark check covers the distributed path.
@@ -46,16 +48,17 @@ def test_literal_escape_roundtrip(lex):
 @given(s=_IRIISH, p=_IRIISH, lex=_LEX, dt=_DT)
 @settings(max_examples=100)
 def test_sid_encoding_accessors_roundtrip(s, p, lex, dt):
-    """The RDF-star sid encoding must be invertible by the accessor regexes
-    whenever the component terms are |-free (the documented constraint)."""
-    import re
+    """The RDF-star sid encoding is invertible the way ``terms.sid_parts``
+    and ``sid_fields`` decode it (split the inside on '|', re-join the
+    middle fields) whenever the subject, predicate and type are |-free (the
+    documented constraint); the object lexical may hold a '|'."""
+    from blazegraph_database_spark.model.terms import sid_lex
 
-    if "|" in s or "|" in p or "|" in lex or "|" in dt:
+    if "|" in s or "|" in p or "|" in dt:
         return
-    sid = f"<<{s}|{p}|{lex}|{dt}>>"
-    assert re.match(r"^<<([^|]*)\|", sid).group(1) == s
-    assert re.match(r"^<<[^|]*\|([^|]*)\|", sid).group(1) == p
-    assert re.match(r"^<<[^|]*\|[^|]*\|(.*)\|[^|]*>>$", sid, re.DOTALL).group(1) == lex
+    parts = sid_lex(s, p, lex, dt)[2:-2].split("|")
+    assert len(parts) >= 4
+    assert (parts[0], parts[1], "|".join(parts[2:-1]), parts[-1]) == (s, p, lex, dt)
 
 
 @given(
@@ -660,3 +663,178 @@ def test_paragraph_dedup_equals_python_reference(spark, paras):
         for r in paragraph_dedup(df).collect()
     }
     assert got == want
+
+
+# ---- one-pattern DELETE/INSERT WHERE: the Δ against a python set model ----
+_RDF_TYPE_FULL = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+_XSD = "http://www.w3.org/2001/XMLSchema#"
+_U_SUBJ = ["urn:s1", "urn:s2", "urn:s3"]
+_U_PRED = ["urn:p", "urn:q", "rdf:type", _RDF_TYPE_FULL]
+_U_OBJ = [
+    "urn:s1", "urn:C", ("5", "long"), ("5", "string"), ("2.5", "double"), ("urn:s2", "string"),
+]
+# always in the store: a blank-node object and a compact-spelled rdf:type
+_U_FIXED = [("urn:s1", "urn:p", "_:b1", "bnode"), ("urn:s2", "rdf:type", "urn:C", "iri")]
+
+
+def _u_term(t):
+    """A pool entry as a parser term: a (lex, dt) pair is a literal, a
+    string an IRI."""
+    return Lit(*t) if isinstance(t, tuple) else t
+
+
+def _u_key(t):
+    return (t, "iri") if isinstance(t, str) else t
+
+
+_U_ROW = st.tuples(
+    st.sampled_from(_U_SUBJ), st.sampled_from(_U_PRED), st.sampled_from(_U_OBJ),
+    st.sampled_from([None, None, "urn:g1"]),
+).map(lambda r: (r[0], r[1], *_u_key(r[2]), r[3]))
+
+
+@st.composite
+def _u_update(draw):
+    """(form, P, delete entries, insert entries, WITH graph): P is one
+    triple pattern, each position a variable or a constant (``?s p ?s``
+    repeats a variable); template entries take P's variables or
+    constants."""
+    pat = (
+        draw(st.sampled_from([Var("s"), *_U_SUBJ])),
+        draw(st.sampled_from([Var("p"), *_U_PRED])),
+        draw(st.sampled_from([Var("o"), Var("s"), *map(_u_term, _U_OBJ)])),
+    )
+    pvars = sorted({t for t in pat if isinstance(t, Var)}, key=lambda v: v.name)
+
+    def entry():
+        return tuple(
+            draw(st.sampled_from(pvars + pool))
+            for pool in (_U_SUBJ, _U_PRED, [*map(_u_term, _U_OBJ), _u_term(("new", "string"))])
+        )
+
+    form = draw(st.sampled_from(["delete_where", "delete", "insert", "delete_insert"]))
+    dels = [pat] if form == "delete_where" else []
+    if form in ("delete", "delete_insert"):
+        dels = [draw(st.sampled_from([pat, entry()]))]
+    ins = [entry()] if form in ("insert", "delete_insert") else []
+    with_g = None if form == "delete_where" else draw(st.sampled_from([None, None, "urn:g1"]))
+    return form, pat, dels, ins, with_g
+
+
+def _u_text(form, pat, dels, ins, with_g) -> str:
+    def term(t):
+        if isinstance(t, Var):
+            return "?" + t.name
+        if isinstance(t, Lit):
+            dt = {"long": "integer", "double": "double"}.get(t.dt)
+            return f'"{t.lex}"' + (f"^^<{_XSD}{dt}>" if dt else "")
+        return f"<{t}>"
+
+    def block(ts):
+        return "{ " + " ".join(" ".join(map(term, t)) + " ." for t in ts) + " }"
+
+    if form == "delete_where":
+        return "DELETE WHERE " + block([pat])
+    head = f"WITH <{with_g}> " if with_g else ""
+    if dels:
+        head += "DELETE " + block(dels) + " "
+    if ins:
+        head += "INSERT " + block(ins) + " "
+    return head + "WHERE " + block([pat])
+
+
+def _u_model(rows: set, quads: bool, form, pat, dels, ins, with_g):
+    """The engine's semantics on a python set: WITH upgrades a triples
+    store to quads; the WHERE ranges over WITH's graph, else every graph;
+    a constant predicate (or IRI object) matches its compact and full
+    spellings; a repeated variable compares lexicals; a variable bound at
+    the object carries the stored type with ``bnode`` read as ``iri``, one
+    bound at the subject or predicate the type ``iri``; templates write to
+    WITH's graph, else the default graph."""
+    from blazegraph_database_spark.plans.compiler import _pred_aliases
+
+    if with_g is not None and not quads:
+        rows, quads = {r + (None,) for r in rows}, True
+    scope = [r for r in rows if with_g is None or r[4] == with_g]
+    sols = []
+    for r in scope:
+        b, ok = {}, True
+        for pos, t in enumerate(pat):
+            lex = r[2] if pos == 2 else r[pos]
+            if isinstance(t, Var):
+                if t.name in b:
+                    ok = ok and b[t.name][0] == lex
+                else:
+                    dt = "iri" if pos < 2 or r[3] == "bnode" else r[3]
+                    b[t.name] = (lex, dt)
+            elif pos == 0:
+                ok = ok and lex == t
+            elif isinstance(t, Lit):
+                ok = ok and (t.lex, t.dt) == (r[2], r[3])
+            else:
+                ok = ok and lex in _pred_aliases(const_lex(t)) and (pos == 1 or r[3] == "iri")
+        if ok:
+            sols.append(b)
+
+    def inst(t, b):
+        s, p, o = (
+            b[x.name] if isinstance(x, Var) else (x.lex, x.dt) if isinstance(x, Lit) else (x, "iri")
+            for x in t
+        )
+        return (s[0], p[0], *o) + ((with_g,) if quads else ())
+
+    doomed = {inst(t, b) for t in dels for b in sols}
+    new = {inst(t, b) for t in ins for b in sols}
+    return (rows - doomed) | new, quads
+
+
+@given(
+    rows=st.lists(_U_ROW, min_size=2, max_size=12, unique=True),
+    quads=st.booleans(),
+    updates=st.lists(_u_update(), min_size=1, max_size=3),
+)
+# the value-replace idiom on a typed literal, DELETE WHERE over the
+# blank-node object, over the compact rdf:type spelling, and over a
+# repeated variable whose object is a literal spelled like the subject
+@example(
+    rows=[("urn:s3", "urn:q", "5", "long", None), ("urn:s2", "urn:q", "urn:s2", "string", None)],
+    quads=False,
+    updates=[
+        ("delete_insert", ("urn:s3", "urn:q", Var("o")),
+         [("urn:s3", "urn:q", Var("o"))], [("urn:s3", "urn:q", Lit("new"))], None),
+        ("delete_where", ("urn:s1", "urn:p", Var("o")), [("urn:s1", "urn:p", Var("o"))], [], None),
+        ("delete_where", (Var("s"), _RDF_TYPE_FULL, "urn:C"), [(Var("s"), _RDF_TYPE_FULL, "urn:C")], [], None),
+        ("delete_where", (Var("s"), "urn:q", Var("s")), [(Var("s"), "urn:q", Var("s"))], [], None),
+    ],
+)
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+def test_one_pattern_where_delta_equals_set_model(spark, rows, quads, updates):
+    """Random one-pattern DELETE/INSERT WHERE updates, each position a
+    constant or a variable, with and without WITH, on a triples and a quad
+    store holding typed literals, IRIs, a blank-node object and a
+    compact-spelled rdf:type: after each update the store equals a python
+    set model, its Δ keeps ``added ∩ base = ∅`` and ``removed ⊆ base``, and
+    its stats count what a full recount counts."""
+    from collections import Counter
+
+    from blazegraph_database_spark.model.store import QUAD_COLS, TRIPLE_COLS, DeltaStore, TripleStore
+    from blazegraph_database_spark.plans.update_parser import apply_update
+    from blazegraph_database_spark.update.update import UpdatableStore
+
+    model = {r if quads else r[:4] for r in rows} | {r + (None,) if quads else r for r in _U_FIXED}
+    cols = "s string, p string, o_lex string, o_dt string" + (", g string" if quads else "")
+    us = UpdatableStore.from_store(TripleStore(spark.createDataFrame(sorted(model, key=str), cols)))
+    for upd in updates:
+        apply_update(us, _u_text(*upd), spark)
+        model, quads = _u_model(model, quads, *upd)
+        cur = us.current
+        keys = QUAD_COLS if quads else TRIPLE_COLS
+        got = {tuple(r) for r in cur.df.select(*keys).collect()}
+        assert got == model, _u_text(*upd)
+        if isinstance(cur, DeltaStore):
+            base = {tuple(r) for r in cur.base.df.select(*keys).collect()}
+            added = set().union(*cur.added.values())
+            removed = set().union(*cur.removed.values())
+            assert not added & base and removed <= base, _u_text(*upd)
+        counts = {p: s.count for p, s in cur.stats().items() if s.count}
+        assert counts == Counter(r[1] for r in got), _u_text(*upd)

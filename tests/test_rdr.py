@@ -108,6 +108,54 @@ def test_star_functions(spark):
     assert len(rows) == 1 and rows[0]["subj"] == "bob"
 
 
+# (lexical, is a statement id, its (s, p, o_lex, o_dt) when it is)
+SID_FORMS = [
+    ("<<a|b>>", False, None),
+    ("<<a|p|x|y|string>>", True, ("a", "p", "x|y", "string")),  # a '|' in the object lexical
+    ("<<a|p|<<x|q|y|iri>>|sid>>", True, ("a", "p", "<<x|q|y|iri>>", "sid")),  # nested sid object
+]
+
+
+def test_sid_forms_classify_alike(spark):
+    """One recognizer: the SPARQL-star accessors, reification and both
+    writers take each subject form for a statement id or not alike, and the
+    accessors read the fields the codec decodes."""
+    from blazegraph_database_spark.functions import sparql_funcs as fn
+    from blazegraph_database_spark.model.terms import is_sid
+    from blazegraph_database_spark.operators.reification import reify
+    from blazegraph_database_spark.sources import rdf_writers
+
+    # row i carries the object "i", so every output line names its form
+    rows = [(lex, "urn:meta", str(i), "long") for i, (lex, _, _) in enumerate(SID_FORMS)]
+    df = spark.createDataFrame(rows, "s string, p string, o_lex string, o_dt string")
+    acc = {
+        r["o_lex"]: r
+        for r in df.select(
+            "o_lex", is_sid(F.col("s")).alias("sid"), fn.ISTRIPLE("s").alias("t"),
+            fn.SUBJECT("s").alias("ss"), fn.PREDICATE("s").alias("sp"), fn.OBJECT("s").alias("so"),
+        ).collect()
+    }
+    nodes = {
+        r["o_lex"]: r["s"] for r in reify(df).filter(F.col("p") == "urn:meta").collect()
+    }
+    nt = [r["value"] for r in ntriples.nt_lines(df).collect()]
+    nt_one = [r["v"] for r in df.select(ntriples.nt_line(df).alias("v")).collect()]
+    ttl = rdf_writers.turtle_doc(df).splitlines()
+
+    def line(lines, i):
+        (hit,) = [x for x in lines if f'"{i}"' in x]
+        return hit
+
+    for i, (lex, want, fields) in enumerate(SID_FORMS):
+        r = acc[str(i)]
+        assert (r["sid"], r["t"]) == (want, want), lex
+        assert (r["ss"], r["sp"], r["so"]) == (fields[:3] if want else (None, None, None)), lex
+        assert nodes[str(i)].startswith("_:st_") == want, lex
+        for lines in (nt, nt_one, ttl):
+            # a statement id renders as `<< s p o >>`, anything else as an IRI
+            assert line(lines, i).startswith("<< " if want else f"<{lex}>"), lex
+
+
 def test_read_ntriples_star(spark, tmp_path):
     doc = "\n".join([
         "<bob> <name> \"Bob\" .",
